@@ -29,8 +29,8 @@ object Checkpoint {
   val ReliableKey = "graft.checkpoint.reliable"
 
   def cut(df: DataFrame): DataFrame =
-    // case-insensitive, matching cutStatic: a capitalized "True" from a
-    // boolean-typed launcher set must not silently lose durability
+    // case-insensitive: a capitalized "True" from a boolean-typed
+    // launcher set must not silently lose durability
     if (df.sparkSession.conf.getOption(ReliableKey)
         .exists(_.equalsIgnoreCase("true"))) {
       require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
@@ -44,11 +44,12 @@ object Checkpoint {
     * explicit-count repartition, so the layout is exact), checkpoint, and
     * re-declare the partitioning on the resulting frame — checkpointing
     * under AQE otherwise reports `UnknownPartitioning` and every
-    * downstream join re-shuffles the frame. This is the static-side move
-    * for iterative loops: partition the O(m) edge frame by the per-round
-    * join key ONCE, and each round's join plans exchange-free on it —
-    * locally a shuffle per round saved, on a cluster the difference
-    * between shuffling the edge list k times and zero times. */
+    * downstream join re-shuffles the frame. Pays when the frame's
+    * consumers group or join on `keys` (the triangle probe's oriented
+    * edges); the iterative loops' static edge frames take a plain [[cut]]
+    * instead, which won every A/B against this layout for them, with and
+    * without broadcast joins (SCALING.md "Static frames and round
+    * shape"). */
   def cutBy(df: DataFrame, keys: String*): DataFrame = {
     require(keys.nonEmpty, "cutBy needs at least one partitioning key")
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
@@ -60,36 +61,9 @@ object Checkpoint {
       sorted = true)
   }
 
-  /** Session conf key opting iterative operators into [[cutBy]] layouts
-    * for their static frames. */
-  val CopartitionKey = "graft.copartition.static"
-
-  /** The static-frame cut for iterative loops: [[cutBy]] when
-    * `graft.copartition.static=true`, plain [[cut]] otherwise (default).
-    *
-    * Which is faster is a REGIME question, so it is a deployment switch
-    * rather than a hardcoded choice. When the per-round varying frame
-    * (rank / frontier / label) is small enough that AQE broadcasts it,
-    * the per-round join never needed the static side partitioned at all —
-    * cutBy's upfront repartition + sort is pure cost (measured at sf0.1
-    * local[32]: pagerank 3.7 s plain vs 5.4 s co-partitioned, BFS 3.0 vs
-    * 4.0, SSSP 2.7 vs 3.5). On a cluster where the varying frame is
-    * O(nodes) and NOT broadcastable, the regime flips: without the
-    * declared layout the O(m) static edge frame re-shuffles and re-sorts
-    * every round, and one upfront partition+sort amortized over k rounds
-    * wins — set the flag there. */
-  def cutStatic(df: DataFrame, keys: String*): DataFrame =
-    // case-insensitive: "TRUE"/"True" (boolean-typed sets via some
-    // launchers stringify capitalized) must not silently fall back
-    if (df.sparkSession.conf.getOption(CopartitionKey)
-        .exists(_.equalsIgnoreCase("true")))
-      cutBy(df, keys: _*)
-    else cut(df)
-
   /** Fluent syntax: `df.cut` ≡ `Checkpoint.cut(df)`. */
   implicit final class CutOps(private val df: DataFrame) extends AnyVal {
     def cut: DataFrame = Checkpoint.cut(df)
     def cutBy(keys: String*): DataFrame = Checkpoint.cutBy(df, keys: _*)
-    def cutStatic(keys: String*): DataFrame = Checkpoint.cutStatic(df, keys: _*)
   }
 }

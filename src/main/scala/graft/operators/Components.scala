@@ -14,8 +14,9 @@ import Checkpoint.CutOps
   * its own id; each round every vertex adopts the minimum label among
   * itself and its neighbors; fixpoint = each vertex holds the minimum id
   * reachable from it, i.e. its component. Each round is one equi-join
-  * (edges ⋈ labels on the source vertex) plus a min-aggregate — plain
-  * shuffles Catalyst plans like any join/agg, no driver-side graph state.
+  * (edges ⋈ labels on the source vertex), a min-aggregate, and a left
+  * join of that minimum back onto the labels — plain shuffles Catalyst
+  * plans like any join/agg, no driver-side graph state.
   *
   * Scale notes (100 TB):
   *  - rounds needed = graph diameter. Near-dup clusters are dense (most
@@ -37,32 +38,6 @@ import Checkpoint.CutOps
   */
 object Components {
 
-  /** Round-shape regime switch, same key as [[Checkpoint.cutStatic]]:
-    * the per-round "combine new values with the previous frame" step has
-    * two equivalent spellings whose winner depends on whether the
-    * VARYING frame (labels / ranks) is broadcastable.
-    *
-    *  - DEFAULT (flag off, the local/broadcastable regime): aggregate
-    *    the new values alone and LEFT-JOIN them back onto the previous
-    *    frame — AQE broadcasts the small side at runtime, so the O(V)
-    *    previous frame never re-shuffles (measured r16 sf0.1 `local[32]`,
-    *    min of 3 paired loops: cc 2.25 s vs 3.42 fused, pagerank 2.41 vs
-    *    3.45, lpa 2.31 vs 2.89 — the r15 driver regressions on
-    *    q_pagerank/q_communities were exactly this).
-    *  - FUSED (flag on, the cluster regime): union the previous frame
-    *    INTO the aggregate — one exchange and one join fewer per round
-    *    in the static plan (plans/r16/{cc,pr,lpa}_round_*.txt: 3 vs 4-5
-    *    exchanges, 2 vs 4 joins), which wins exactly when the varying
-    *    frame is too big to broadcast and the static side carries a
-    *    cutBy layout — the same regime that flips cutStatic.
-    *
-    * Both spellings produce identical values (min/sum/argmax over the
-    * union ≡ join + least/coalesce — r15 verdict's equivalence argument,
-    * oracle-verified in both rounds). */
-  private def fusedRounds(df: DataFrame): Boolean =
-    df.sparkSession.conf.getOption(Checkpoint.CopartitionKey)
-      .exists(_.equalsIgnoreCase("true"))
-
   /** Components of the undirected graph given by (srcCol, dstCol) integer
     * edge endpoints. Returns (id, comp): one row per vertex appearing in
     * any edge, comp = min vertex id in its component. Vertices with no
@@ -72,12 +47,8 @@ object Components {
       dstCol: String = "dst", maxIter: Int = 20): DataFrame = {
     val e = edges.select(col(srcCol).cast("long").as("s"),
       col(dstCol).cast("long").as("d"))
-    // static-frame cut on the per-round join key: plain materialization by
-    // default, opt-in co-partitioned layout via graft.copartition.static
-    // for the regime where the label frame is too big to broadcast — see
-    // [[Checkpoint.cutStatic]] for the measured tradeoff
     val sym = e.union(e.select(col("d").as("s"), col("s").as("d")))
-      .distinct().cutStatic("s")
+      .distinct().cut
     var labels = sym.select(col("s").as("id")).distinct()
       .withColumn("comp", col("id")).cut
     // decimal(38,0) sum: exact and unoverflowable for any vertex count ×
@@ -91,21 +62,17 @@ object Components {
     // a diameter-d graph needs d label-moving rounds plus ONE no-change
     // round to OBSERVE the fixpoint, so allow maxIter+1 total rounds:
     // maxIter == diameter must succeed, not spuriously report divergence
-    val fused = fusedRounds(labels)
     while (iter <= maxIter && !converged) {
-      // per-round combine, regime-switched (see [[fusedRounds]]): min
-      // over {own label} ∪ {neighbor labels}, either as one fused
-      // aggregate (cluster regime) or as msgs-min + broadcastable
-      // left-join + least/coalesce (default) — identical values (min is
-      // total over the union)
+      // min over {own label} ∪ {neighbor labels}: the neighbor min is
+      // aggregated alone and left-joined back onto the previous labels,
+      // the shape that won every A/B against unioning the labels into
+      // the aggregate (SCALING.md "Static frames and round shape")
       val msgs = sym.join(labels.withColumnRenamed("id", "s"), "s")
         .select(col("d").as("id"), col("comp"))
-      val next = (if (fused)
-        labels.union(msgs).groupBy("id").agg(min("comp").as("comp"))
-      else labels.join(
+      val next = labels.join(
           msgs.groupBy("id").agg(min("comp").as("nc")), Seq("id"), "left")
         .select(col("id"),
-          least(col("comp"), coalesce(col("nc"), col("comp"))).as("comp")))
+          least(col("comp"), coalesce(col("nc"), col("comp"))).as("comp"))
         .cut
       val s = labelSum(next)
       converged = s.compareTo(last) == 0
@@ -169,9 +136,7 @@ object Components {
     val e = edges.select(col(srcCol).cast("long").as("s"),
         col(dstCol).cast("long").as("d"), col(weightCol).cast("long").as("w"))
       .groupBy("s", "d").agg(min("w").as("w"))
-      // static-frame cut: co-partitioned layout only when
-      // graft.copartition.static=true (see Checkpoint.cutStatic)
-      .cutStatic("s")
+      .cut
     var dist = e.sparkSession.range(1)
       .select(lit(source).as("id"), lit(0L).as("dist"))
     for (_ <- 1 to hops) {
@@ -211,31 +176,20 @@ object Components {
     require(rounds >= 0, s"rounds must be >= 0 (got $rounds)")
     val e = edges.select(col(srcCol).cast("long").as("s"),
       col(dstCol).cast("long").as("d")).distinct()
-      // static-frame cut: co-partitioned layout only when
-      // graft.copartition.static=true (see Checkpoint.cutStatic)
-      .cutStatic("s")
+      .cut
     var labels = e.select(col("s").as("id")).union(e.select(col("d")))
       .distinct().withColumn("lbl", col("id")).cut
-    val fused = fusedRounds(labels)
     for (_ <- 1 to rounds) {
-      // TOTAL labeling, regime-switched (see [[fusedRounds]]): the
-      // zero-count own-label candidate makes the argmax aggregate absorb
-      // the keep-own fallback (fused, cluster regime); the default joins
-      // the votes argmax back with coalesce(vl, lbl) — a real vote
-      // carries c ≥ 1, so both spellings elect the same label
+      // TOTAL labeling: the votes argmax is joined back onto the full
+      // label frame and a vertex without votes keeps coalesce(vl, lbl)
       val votes = e.join(labels.withColumnRenamed("id", "s"), "s")
         .groupBy(col("d").as("id"), col("lbl"))
         .agg(count(lit(1)).as("c"))
-      labels = (if (fused)
-        votes.union(labels.select(col("id"), col("lbl"), lit(0L).as("c")))
-          .groupBy("id")
-          .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
-          .select(col("id"), (-col("m.nl")).as("lbl"))
-      else labels.join(
+      labels = labels.join(
           votes.groupBy("id")
             .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
             .select(col("id"), (-col("m.nl")).as("vl")), Seq("id"), "left")
-        .select(col("id"), coalesce(col("vl"), col("lbl")).as("lbl")))
+        .select(col("id"), coalesce(col("vl"), col("lbl")).as("lbl"))
         .cut
     }
     labels
@@ -260,9 +214,7 @@ object Components {
       maxIter: Int = 20): DataFrame = {
     val e = edges.select(col(srcCol).cast("long").as("s"),
       col(dstCol).cast("long").as("d")).distinct()
-      // static-frame cut: co-partitioned layout only when
-      // graft.copartition.static=true (see Checkpoint.cutStatic)
-      .cutStatic("s")
+      .cut
     val init = e.sparkSession.range(1)
       .select(lit(source).as("id"), lit(0L).as("dist"))
     Iterate.fixpoint(init, maxIter) { cur =>
@@ -330,11 +282,11 @@ object Components {
       .select(when(aFirst, col("a")).otherwise(col("b")).as("u"),
         when(aFirst, col("b")).otherwise(col("a")).as("w"))
       // u-layout for BOTH consumers (adjacency groupBy(u) + the probe's
-      // u-join). Unlike the iterative loops' static frames (cutStatic,
-      // off by default), this one is unconditional: A/B at sf0.1 showed
-      // u-clustering pays even locally (3.2 s vs 4.4-4.9 s plain cut) —
-      // co-locating u keys collapses the adjacency partial agg before
-      // its exchange — and cutBy also DECLARES the layout (a bare
+      // u-join). Unlike the iterative loops' static frames (plain cut),
+      // this one is laid out: A/B at sf0.1 showed u-clustering pays even
+      // locally (3.2 s vs 4.4-4.9 s plain cut) — co-locating u keys
+      // collapses the adjacency partial agg before its exchange — and
+      // cutBy also DECLARES the layout (a bare
       // repartition+localCheckpoint reports UnknownPartitioning under
       // AQE, forfeiting the probe join's exchange skip).
       .cutBy("u") // consumed by the adjacency agg AND the probe
@@ -425,31 +377,20 @@ object Components {
     // upstream (a join deriving the edges) would run for each consumer
     val e = edges.select(col(srcCol).cast("long").as("s"),
       col(dstCol).cast("long").as("d")).distinct().cut
-    val ew = e.join(e.groupBy("s").agg(count(lit(1)).as("deg")), "s")
-      // static-frame cut (see Checkpoint.cutStatic); pr comes out of
-      // each round's groupBy(id) already id-partitioned
-      .cutStatic("s")
+    val ew = e.join(e.groupBy("s").agg(count(lit(1)).as("deg")), "s").cut
     val nodes = e.select(col("s").as("id")).union(e.select(col("d").as("id")))
       .distinct().cut
     val base = (dampDen - dampNum) * (scale / dampDen)
     var pr = nodes.withColumn("rank", lit(scale))
-    val fused = fusedRounds(pr)
     for (_ <- 1 to iters) {
-      // per-round inflow sum, regime-switched (see [[fusedRounds]]):
-      // every node contributing a zero row to the aggregate (fused) and
-      // left-join + coalesce(m, 0) (default) are the same sum — inflow
-      // ids ⊆ nodes by construction, so the row set is identical
+      // inflow ids ⊆ nodes, so the left join + coalesce(m, 0) keeps every
+      // node and gives an inflow-free node the base rank
       val inflow = ew.join(pr, col("s") === col("id"))
         .select(col("d").as("id"), expr("rank div deg").as("c"))
-      pr = (if (fused)
-        inflow.union(nodes.select(col("id"), lit(0L).as("c")))
-          .groupBy("id").agg(sum("c").as("m"))
-          .select(col("id"),
-            (lit(base) + expr(s"($dampNum * m) div $dampDen")).as("rank"))
-      else nodes.join(
+      pr = nodes.join(
           inflow.groupBy("id").agg(sum("c").as("m")), Seq("id"), "left")
         .select(col("id"), (lit(base) +
-          expr(s"($dampNum * coalesce(m, 0L)) div $dampDen")).as("rank")))
+          expr(s"($dampNum * coalesce(m, 0L)) div $dampDen")).as("rank"))
         .cut
     }
     pr

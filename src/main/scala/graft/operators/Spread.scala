@@ -109,9 +109,6 @@ object Spread {
   def rebalanceForWrite(df: DataFrame, cols: String*): DataFrame = {
     val advisory = df.sparkSession.sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    if (sys.env.get("SPARK_GRAFT_DEBUG").contains("1"))
-      System.err.println(s"[spread] rebalanceForWrite bytes=" +
-        s"${fileBytes(df.queryExecution.analyzed)} advisory=$advisory")
     fileBytes(df.queryExecution.analyzed) match {
       case Some(bytes) if bytes <= advisory => df
       case _ =>

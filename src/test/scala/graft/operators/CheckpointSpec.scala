@@ -89,29 +89,6 @@ class CheckpointSpec extends SparkSpec {
     assert(joined.collect().map(_.toSeq).toSet === expect)
   }
 
-  test("cutStatic is a deployment switch: plain cut by default, cutBy " +
-      "layout under graft.copartition.static=true") {
-    import org.apache.spark.sql.functions._
-    val df = spark.range(1000).select((col("id") % 7).as("k"), col("id").as("v"))
-    // default: no declared layout — grouping on k must still exchange
-    val plainPlan = Checkpoint.cutStatic(df, "k").groupBy("k")
-      .agg(sum("v")).queryExecution.executedPlan.toString
-    assert(plainPlan.contains("Exchange"), s"default cutStatic declared a " +
-      s"layout it should not have:\n$plainPlan")
-    spark.conf.set(Checkpoint.CopartitionKey, "true")
-    try {
-      val coPlan = Checkpoint.cutStatic(df, "k").groupBy("k")
-        .agg(sum("v")).queryExecution.executedPlan.toString
-      assert(!coPlan.contains("Exchange"),
-        s"opted-in cutStatic still exchanges:\n$coPlan")
-      // and the opted-in layout stays truthful end-to-end in an operator
-      val m = Components.connectedComponents(
-        Seq((3L, 2L), (1L, 2L), (5L, 6L)).toDF("src", "dst"))
-        .as[(Long, Long)].collect().toMap
-      assert(m === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L))
-    } finally spark.conf.unset(Checkpoint.CopartitionKey)
-  }
-
   test("cutBy grouping on the cut key aggregates without an exchange") {
     import org.apache.spark.sql.functions._
     val df = spark.range(5000).select((col("id") % 13).as("k"), col("id").as("v"))

@@ -10,6 +10,15 @@ class ComponentsSpec extends SparkSpec {
     Components.connectedComponents(edges.toDF("src", "dst"), maxIter = maxIter)
       .as[(Long, Long)].collect().toMap
 
+  /** Seeded random digraph with self-loops and parallel edges, plus a
+    * source-only vertex (40 → 3) and a dangling sink (5 → 41): the rows
+    * where a keep-own-label or zero-inflow combine could go wrong. */
+  private lazy val seededGraph: Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(16)
+    Seq.fill(120)((rnd.nextInt(30).toLong, rnd.nextInt(30).toLong)) ++
+      Seq((40L, 3L), (5L, 41L))
+  }
+
   test("two components, direction-agnostic, min-id label") {
     // {1,2,3} linked as a path (3->2, 1->2: both edge directions) + {5,6}
     val m = comps(Seq((3L, 2L), (1L, 2L), (5L, 6L)))
@@ -51,10 +60,12 @@ class ComponentsSpec extends SparkSpec {
 
   test("random graphs match a local union-find (property, seeded)") {
     val rnd = new scala.util.Random(7)
-    for (density <- Seq(0.3, 1.0, 2.5)) {
-      val n = 60
-      val edges = Seq.fill((n * density).toInt)(
-        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+    val n = 60 // also bounds seededGraph's vertex ids
+    val inputs = Seq(0.3, 1.0, 2.5).map(density =>
+      s"density=$density" -> Seq.fill((n * density).toInt)(
+        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))) :+
+      ("seededGraph" -> seededGraph)
+    for ((input, edges) <- inputs) {
       // local ground truth: path-compressing union-find, min-id roots
       val parent = Array.tabulate(n)(identity)
       def find(x: Int): Int = {
@@ -72,7 +83,7 @@ class ComponentsSpec extends SparkSpec {
       // because unions always point the larger root at the smaller
       val expected = edges.flatMap(e => Seq(e._1, e._2)).distinct
         .map(v => v -> find(v.toInt).toLong).toMap
-      assert(comps(edges, maxIter = 64) === expected, s"density=$density")
+      assert(comps(edges, maxIter = 64) === expected, input)
     }
   }
 
@@ -118,12 +129,11 @@ class ComponentsSpec extends SparkSpec {
 
   test("pageRank: exact vs single-threaded recurrence on random digraphs") {
     val rnd = new scala.util.Random(11)
-    for (trial <- 0 until 3) {
-      val n = 12
-      val edges = Seq.fill(40)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter(e => e._1 != e._2).distinct
+    val trials = Seq.fill(3)(
+      Seq.fill(40)((rnd.nextInt(12).toLong, rnd.nextInt(12).toLong))
+        .filter(e => e._1 != e._2).distinct) :+ seededGraph
+    for ((edges, trial) <- trials.zipWithIndex)
       assert(pr(edges, 5) === refPr(edges, 5), s"trial=$trial")
-    }
   }
 
   test("pageRank: zero iterations returns uniform initial mass") {
@@ -400,35 +410,5 @@ class ComponentsSpec extends SparkSpec {
     val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L))
     val l = Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 9L)
     assert(modOf(e, l) === ((2L, 4L, -31250L)))
-  }
-
-  test("fused (copartition) and default round shapes agree bit-for-bit: " +
-      "cc, labelPropagation, pageRank (r16 regime switch)") {
-    // random graph incl. a source-only vertex (LPA keep-own fallback) and
-    // a dangling sink (pageRank zero-inflow row) — the rows where the two
-    // spellings could diverge if the equivalence argument were wrong
-    val rnd = new scala.util.Random(16)
-    val edges = (Seq.fill(120)(
-      (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong)) ++
-      Seq((40L, 3L), (5L, 41L))).toDF("src", "dst")
-    def run[T](flag: String)(body: => T): T = {
-      spark.conf.set(Checkpoint.CopartitionKey, flag)
-      try body finally spark.conf.unset(Checkpoint.CopartitionKey)
-    }
-    val ccD = run("false")(Components.connectedComponents(edges)
-      .as[(Long, Long)].collect().toSet)
-    val ccF = run("true")(Components.connectedComponents(edges)
-      .as[(Long, Long)].collect().toSet)
-    assert(ccD === ccF)
-    val lpD = run("false")(Components.labelPropagation(edges, rounds = 3)
-      .as[(Long, Long)].collect().toSet)
-    val lpF = run("true")(Components.labelPropagation(edges, rounds = 3)
-      .as[(Long, Long)].collect().toSet)
-    assert(lpD === lpF)
-    val prD = run("false")(Components.pageRank(edges, iters = 4)
-      .as[(Long, Long)].collect().toSet)
-    val prF = run("true")(Components.pageRank(edges, iters = 4)
-      .as[(Long, Long)].collect().toSet)
-    assert(prD === prF)
   }
 }
