@@ -1672,9 +1672,9 @@ object Queries {
     // JVM, and both a regenerated documents.parquet and a code-side
     // parameter change must invalidate the index rather than silently
     // serve incompatible band rows
-    val srcFile = new java.io.File(s"$sf/documents.parquet")
+    val (_, srcLen, srcMtime) = Tables.fileVersion(s, s"$sf/documents.parquet")
     val tag = sf.replaceAll("[^A-Za-z0-9.]", "_") +
-      s"_${srcFile.length}_${srcFile.lastModified}" +
+      s"_${srcLen}_$srcMtime" +
       s"_h${numHashes}b${bands}m$splitMod"
     // build-or-reuse through the atomic-rename protocol (Dedup.ensureLshIndex):
     // the dir existing ⇒ complete index; concurrent builders race safely

@@ -1,7 +1,11 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the driver testdata (TESTDATA.md): one parquet file per
   * table under `$sfDir/`.
@@ -23,6 +27,22 @@ import org.apache.spark.sql.functions._
   * way — `spark.read.parquet` on a directory of row-group-sized files with
   * hive-style partition columns enables partition pruning for free; nothing
   * here assumes a single file.
+  *
+  * Every table read goes through [[read]], which resolves a path's schema
+  * once per file version instead of on every call: a bare
+  * `spark.read.parquet` runs schema inference, a one-task Spark job that
+  * reads a footer, each time a query is wired. The process-wide cache is
+  * keyed by the qualified path, its Hadoop `FileStatus` length and
+  * modification time ([[fileVersion]]), and the session's values of the
+  * four confs that change how a parquet footer converts to Spark types
+  * ([[schemaConfs]]). A rewritten file, or a session that reads it
+  * differently, therefore misses and re-infers. A directory's version is
+  * the directory's own status, which moves whenever a file is added,
+  * removed or renamed in it. The cache holds only schemas (a few KB each),
+  * never a DataFrame, relation or file listing: each call still lists the
+  * path and builds a fresh relation with fresh exprIds, so a self-join of
+  * two reads analyzes as before. It needs no eviction, because its keys
+  * are bounded by sf dirs × 10 tables × file versions.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -46,7 +66,7 @@ object Tables {
     * (timestamp[us] with no zone — values are UTC wall clock, and the
     * session tz is pinned to UTC so the cast is value-preserving), or
     * already a zoned timestamp. */
-  private def normalizeTs(df: DataFrame): DataFrame =
+  private[sources] def normalizeTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
@@ -55,10 +75,40 @@ object Tables {
       case _ => df
     }
 
+  /** Parquet confs that change the schema inferred from a footer. */
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  private val schemas =
+    new ConcurrentHashMap[((String, Long, Long), Seq[String]), StructType]()
+
+  /** A file version: (qualified path, length, modification time) from the
+    * path's Hadoop `FileStatus` — a metadata call, no Spark job. */
+  def fileVersion(spark: SparkSession, path: String): (String, Long, Long) = {
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p)
+    (st.getPath.toString, st.getLen, st.getModificationTime)
+  }
+
+  /** `spark.read.parquet(path)`, with the schema inferred once per file
+    * version and session schema confs (see the object doc). */
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    ensureConfigured(spark)
+    val key = (fileVersion(spark, path), schemaConfs.map(spark.conf.get))
+    val schema = Option(schemas.get(key)).getOrElse {
+      val inferred = spark.read.parquet(path).schema
+      schemas.putIfAbsent(key, inferred)
+      inferred
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
   /** Read one table as a DataFrame (events gets the ts rebuild). */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    ensureConfigured(spark)
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = read(spark, s"$sfDir/$name.parquet")
     if (name == "events") normalizeTs(df) else df
   }
 
@@ -117,8 +167,7 @@ object Tables {
     * rebuilt column instead would defeat pushdown — a full scan at 100 TB. */
   def eventsSince(spark: SparkSession, sfDir: String,
       watermark: java.time.Instant): DataFrame = {
-    ensureConfigured(spark)
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = read(spark, s"$sfDir/events.parquet")
     val filtered = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.filter(col("ts") >=
