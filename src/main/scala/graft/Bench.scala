@@ -1,29 +1,24 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main. Two modes:
+/** Benchmark main. The parent holds no SparkSession; it partitions the
+  * suite into blocks and runs each block in a FRESH child JVM
+  * ([[BenchChild]]), aggregating per-query times from the children. The
+  * checkpoint-heavy iterative queries get a singleton block each;
+  * everything else runs in blocks of ~30. A block whose child fails twice
+  * runs in-process in the parent with the same discipline. Round 7's
+  * driver run showed why: identical code benched 153.9 s on a quiet
+  * host and 493.9 s on the driver's runner, with the inflation
+  * concentrated 6-30x in the iterative block — one shared JVM lets a
+  * heavy query's checkpoint blocks, codegen cache churn and G1
+  * concurrent-cycle debt leak into its alphabetical neighbors' timed
+  * windows, and under host contention that residue COMPOUNDS. A fresh JVM
+  * per block is the only isolation that survives a contended host: each
+  * block pays its own session startup OUTSIDE any timed window and can
+  * leak nothing into the next. Child startup/warmup cost is wall-clock
+  * only — the reported metric stays the sum of per-query timed windows.
   *
-  *  - FORK (default): the parent holds no SparkSession; it partitions the
-  *    suite into blocks and runs each block in a FRESH child JVM
-  *    ([[BenchChild]]), aggregating per-query times from the children.
-  *    The checkpoint-heavy iterative queries get a singleton block each;
-  *    everything else runs in blocks of ~30. Round 7's driver run showed
-  *    why this is the default: identical code benched 153.9 s on a quiet
-  *    host and 493.9 s on the driver's runner, with the inflation
-  *    concentrated 6-30x in the iterative block — one shared JVM lets a
-  *    heavy query's checkpoint blocks, codegen cache churn and G1
-  *    concurrent-cycle debt leak into its alphabetical neighbors' timed
-  *    windows, and under host contention that residue COMPOUNDS. A fresh
-  *    JVM per block is the only isolation that survives a contended
-  *    host: each block pays its own session startup OUTSIDE any timed
-  *    window and can leak nothing into the next. Child startup/warmup
-  *    cost is wall-clock only — the reported metric stays the sum of
-  *    per-query timed windows, same as in-process mode.
-  *  - IN-PROCESS (SPARK_GRAFT_FORK=0): the historical one-JVM path, one
-  *    warmup pass over every query at a small SF, then every query in
-  *    sorted name order — also the fallback if a child JVM fails twice.
-  *
-  * Either way: failures are reported in an explicit "errors" array and as
+  * Failures are reported in an explicit "errors" array and as
   * -1 in the per-query map — a broken query must never masquerade as
   * fast. Between timed windows the runner drains ALL persisted/checkpoint
   * storage and polls `getRDDStorageInfo` to empty (bounded wait), so a
@@ -32,7 +27,7 @@ import org.apache.spark.sql.SparkSession
   * "leaked" column rather than silently inflating a neighbor. */
 object Bench {
 
-  /** Queries that run in a singleton JVM in fork mode: the multi-round
+  /** Queries that run in a singleton child JVM: the multi-round
     * iterative family (per-round localCheckpoint blocks + barrier jobs)
     * plus every query the round-7 driver run inflated past 7 s — the
     * measured blowup set whose in-suite times must track their isolated
@@ -95,8 +90,6 @@ object Bench {
     * failure the stamp exists to prevent). Fork children inherit the
     * parent's env (ProcessBuilder default), so one parse per JVM yields
     * the same values fleet-wide. */
-  val warmTarget: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_WARM_TARGET", "1") != "0"
   val benchReps: Int =
     sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
   val soloWarms: Int =
@@ -137,6 +130,7 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
       // default codegen cache holds 100 generated classes — a 270-query
       // suite evicts everything long before a query's alphabetical turn,
       // so its timed window RE-COMPILES every fragment the warmup pass
@@ -184,15 +178,13 @@ object Bench {
     left
   }
 
-  /** Warm `names` at `warmDir` (JIT + codegen, never timed), then time
-    * each at `sfDir` with storage drained and a full GC before every
-    * window. Shared by the in-process path, [[BenchChild]], and the
-    * fork-failure fallback — ONE timing discipline everywhere.
+  /** Time each of `names` at `sfDir` with storage drained and a full GC
+    * before every window. Shared by [[BenchChild]] and the fork-failure
+    * fallback — ONE timing discipline everywhere.
     *
-    * By default each query ALSO runs once untimed at the TARGET SF
-    * immediately before its timed window (SPARK_GRAFT_WARM_TARGET=0
-    * disables). A fresh child JVM's first target-SF execution carries
-    * C2-compilation of Spark's scheduler/shuffle path itself — the
+    * Each query first runs untimed at the TARGET SF immediately before
+    * its timed window. A fresh child JVM's first target-SF execution
+    * carries C2-compilation of Spark's scheduler/shuffle path itself — the
     * round-8 fork rollout measured the iterative block ~1.5-2× its
     * shared-JVM steady state from exactly this (q_holt 2.4→5.3 s,
     * q_pagerank 3.6→5.7 s), because one small-SF pass compiles the
@@ -200,24 +192,8 @@ object Bench {
     * the second target-SF run measures the steady state the shared-JVM
     * suite always measured for late-alphabet queries, at wall-clock-only
     * cost (the metric still sums only timed windows). */
-  def runQueries(spark: SparkSession, names: Seq[String], sfDir: String,
-      warmDir: String): Seq[QResult] = {
-    if (!warmTarget) {
-      // small-SF warm pass (JIT + codegen) — only needed when the
-      // per-query target-SF warm below is disabled; generated code
-      // depends on the plan, not the data, so the target warm subsumes it
-      var warmFailures = 0
-      names.foreach { n =>
-        try SparkEntry.queries(n)(spark, warmDir).count()
-        catch { case scala.util.control.NonFatal(_) => warmFailures += 1 }
-      }
-      if (warmFailures > 0)
-        // a silently skipped warmup would re-introduce the first-query JIT
-        // artifact with zero signal — say so loudly
-        System.err.println(s"[bench] WARNING: $warmFailures/${names.size} " +
-          s"warmup queries failed against $warmDir; timings may absorb JIT")
-      drainStorage(spark) // warmup leftovers
-    }
+  def runQueries(spark: SparkSession, names: Seq[String],
+      sfDir: String): Seq[QResult] = {
     val settleMs = sys.env.getOrElse("SPARK_GRAFT_SETTLE_MS", "300").toLong
     // min over [[benchReps]] (default 2) timed windows: even in
     // an isolated JVM, a single window can land 2-5× its steady state
@@ -237,13 +213,12 @@ object Bench {
     // and keep 1 pass.
     names.map { name =>
       var failedWarms = 0
-      if (warmTarget)
-        // untimed steady-state warm at the target SF (see Scaladoc); its
-        // storage/garbage is drained below, charged to no timed window
-        (1 to (if (solo(name)) soloWarms else 1)).foreach { _ =>
-          try SparkEntry.queries(name)(spark, sfDir).count()
-          catch { case scala.util.control.NonFatal(_) => failedWarms += 1 }
-        }
+      // untimed steady-state warm at the target SF (see Scaladoc); its
+      // storage/garbage is drained below, charged to no timed window
+      (1 to (if (solo(name)) soloWarms else 1)).foreach { _ =>
+        try SparkEntry.queries(name)(spark, sfDir).count()
+        catch { case scala.util.control.NonFatal(_) => failedWarms += 1 }
+      }
       // GC isolation: a heavy query's garbage (millions of candidate-pair
       // rows) must be collected in ITS OWN window, not its successor's
       drainStorage(spark)
@@ -314,7 +289,7 @@ object Bench {
   /** Run one block in a fresh child JVM; parse its TSV result file.
     * Returns None if the child failed to produce a complete result. */
   private def runChildBlock(block: Seq[String], sfDir: String,
-      warmDir: String, cpus: String, idx: Int): Option[Seq[QResult]] = {
+      cpus: String, idx: Int): Option[Seq[QResult]] = {
     val javaBin = java.nio.file.Paths.get(
       System.getProperty("java.home"), "bin", "java").toString
     // run/fork := true in build.sbt, so java.class.path IS the real
@@ -328,10 +303,8 @@ object Bench {
     val xmn = sys.env.get("SPARK_GRAFT_XMN")
       .orElse(if (mem.isDefined) None else Some("2g"))
     val cmd: Seq[String] = Seq(javaBin) ++ jdk17AddOpens ++
-      Seq(s"-Xmx${mem.getOrElse("16g")}") ++ xmn.map(v => s"-Xmn$v") ++ Seq(
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-cp", cp, "graft.BenchChild",
-      out.toString, sfDir, warmDir, cpus) ++ block
+      Seq(s"-Xmx${mem.getOrElse("16g")}") ++ xmn.map(v => s"-Xmn$v") ++
+      Seq("-cp", cp, "graft.BenchChild", out.toString, sfDir, cpus) ++ block
     val pb = new ProcessBuilder(cmd: _*)
     // child stdout (Spark banners, stray prints) must never land near the
     // parent's final JSON line in the harness's stdout tail — and the
@@ -414,67 +387,62 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
-      "/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val fork = sys.env.getOrElse("SPARK_GRAFT_FORK", "1") != "0"
     val wallT0 = System.nanoTime()
     // measured BEFORE any Spark work so it reads the host, not the suite
     val canaryMs = hostCanaryMs()
     System.err.println(f"[bench] host canary: $canaryMs%.1f ms")
     val names = SparkEntry.queries.keys.toSeq.sorted
-    // lazy: in fork mode the parent only builds a session if a child
-    // fails twice and its block must run in-process as a fallback
+    // lazy: the parent only builds a session if a child fails twice and
+    // its block must run in-process as a fallback
     var parentSession: SparkSession = null
     def session(): SparkSession = {
       if (parentSession == null) parentSession = buildSession(cpus)
       parentSession
     }
-    val results: Seq[QResult] =
-      if (!fork) runQueries(session(), names, sfDir, warmDir)
-      else {
-        val blockSize = sys.env.getOrElse("SPARK_GRAFT_BLOCK", "30").toInt
-        blocks(names, blockSize).zipWithIndex.flatMap { case (b, i) =>
-          // per-block wall stamp (round-14 verdict #1's denominator work):
-          // the untimed fixed cost is ~all child-JVM startup + warm passes,
-          // and attributing it per block is what makes the wall budget
-          // diagnosable instead of a single opaque residue
-          val t0 = System.nanoTime()
-          val r = runChildBlock(b, sfDir, warmDir, cpus, i)
-            .orElse(runChildBlock(b, sfDir, warmDir, cpus, i)) // retry once
-            .getOrElse {
-              // a flaky fork must not turn into bench "errors": run the
-              // block in-process with the same timing discipline
-              System.err.println(s"[bench] block $i falling back in-process")
-              runQueries(session(), b, sfDir, warmDir)
-            }
-          val wall = (System.nanoTime() - t0) / 1e9
-          // ALL rows' windows, ok or not — the same denominator the JSON
-          // untimed_wall_s subtraction uses, so per-block walls reconcile
-          // with the final record even when a rep fails (r15 ADVICE)
-          val timed = r.map(_.allWindowsSec).sum
-          System.err.println(f"[bench] block $i%d (${b.size}%d queries, " +
-            f"first=${b.headOption.getOrElse("")}%s) wall $wall%.1f s, " +
-            f"timed-windows $timed%.1f s")
-          r
+    val blockSize = sys.env.getOrElse("SPARK_GRAFT_BLOCK", "30").toInt
+    val results = blocks(names, blockSize).zipWithIndex.flatMap { case (b, i) =>
+      // per-block wall stamp (round-14 verdict #1's denominator work): the
+      // untimed fixed cost is ~all child-JVM startup + warm passes, and
+      // attributing it per block is what makes the wall budget diagnosable
+      // instead of a single opaque residue
+      val t0 = System.nanoTime()
+      val r = runChildBlock(b, sfDir, cpus, i)
+        .orElse(runChildBlock(b, sfDir, cpus, i)) // retry once
+        .getOrElse {
+          // a flaky fork must not turn into bench "errors": run the block
+          // in-process with the same timing discipline
+          System.err.println(s"[bench] block $i falling back in-process")
+          runQueries(session(), b, sfDir)
         }
-      }
+      val wall = (System.nanoTime() - t0) / 1e9
+      // ALL rows' windows, ok or not — the same denominator the JSON
+      // untimed_wall_s subtraction uses, so per-block walls reconcile with
+      // the final record even when a rep fails (r15 ADVICE)
+      val timed = r.map(_.allWindowsSec).sum
+      System.err.println(f"[bench] block $i%d (${b.size}%d queries, " +
+        f"first=${b.headOption.getOrElse("")}%s) wall $wall%.1f s, " +
+        f"timed-windows $timed%.1f s")
+      r
+    }
     if (parentSession != null) parentSession.stop()
-    emit(results, sfDir, if (fork) "fork" else "inproc", canaryMs,
-      (System.nanoTime() - wallT0) / 1e9)
+    emit(results, sfDir, canaryMs, (System.nanoTime() - wallT0) / 1e9)
   }
 
-  /** Write BENCH_DETAIL.json (full per-query record + leaked column) and
-    * print the one harness-parsed JSON line (total + slowest queries —
-    * the harness keeps only the last ~2000 chars of stdout, and at 270
-    * queries the full map is ~2.4 KB, which truncated rounds 1-2 and 4). */
-  def emit(results: Seq[QResult], sfDir: String, mode: String,
-      canaryMs: Double = -1, wallS: Double = -1): Unit = {
+  /** Write `detailPath` (BENCH_DETAIL.json: full per-query record +
+    * leaked column) and print the one harness-parsed JSON line (total +
+    * slowest queries — the harness keeps only the last ~2000 chars of
+    * stdout, and at 270 queries the full map is ~2.4 KB, which truncated
+    * rounds 1-2 and 4). */
+  def emit(results: Seq[QResult], sfDir: String, canaryMs: Double = -1,
+      wallS: Double = -1, detailPath: String =
+        sys.env.getOrElse("SPARK_GRAFT_DETAIL", "BENCH_DETAIL.json")): Unit = {
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def entry(r: QResult): String =
       s""""${r.name}":${if (r.ok) f3(r.sec) else -1}"""
     val errors =
-      results.filterNot(_.ok).map("\"" + _.name + "\"").mkString("[", ",", "]")
+      results.filterNot(_.ok).map(r => jsonString(r.name))
+        .mkString("[", ",", "]")
     val total = results.filter(_.ok).map(_.sec).sum
     val sorted = results.sortBy(_.name)
     val leakedJson = sorted.filter(_.leaked > 0)
@@ -487,18 +455,17 @@ object Bench {
       .map(r => s""""${r.name}":${r.failedWarms}""").mkString("{", ",", "}")
     val failedJson = sorted.filter(_.failedReps > 0)
       .map(r => s""""${r.name}":${r.failedReps}""").mkString("{", ",", "}")
-    // the timing-discipline stamp: min-of-`reps` windows after
-    // `warm_target` untimed target-SF passes (`solo_warms` for singleton
-    // queries) — the object-level knobs the timing loop itself read.
-    // Cross-round comparisons need this to tell a steady-state record
-    // (r8+) from the cold-window totals of rounds 1-7.
+    // the timing-discipline stamp: min-of-`reps` windows after one
+    // untimed target-SF pass (`solo_warms` for singleton queries) — the
+    // object-level knobs the timing loop itself read. Cross-round
+    // comparisons need this to tell a steady-state record (r8+) from the
+    // cold-window totals of rounds 1-7. `mode` and `warm_target` are
+    // constants, kept so the record's schema matches earlier rounds.
     val detailJson =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${
         sorted.map(entry).mkString("{", ",", "}")
-      },"leaked":$leakedJson,"failed_warms":$failedWarmJson,"failed_reps":$failedJson,"mode":"$mode","warm_target":${
-        if (warmTarget) 1 else 0
-      },"solo_warms":$soloWarms,"reps":$benchReps,"roamer_reps":$roamerReps,"roamers":${
-        roamers.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+      },"leaked":$leakedJson,"failed_warms":$failedWarmJson,"failed_reps":$failedJson,"mode":"fork","warm_target":1,"solo_warms":$soloWarms,"reps":$benchReps,"roamer_reps":$roamerReps,"roamers":${
+        roamers.toSeq.sorted.map(jsonString).mkString("[", ",", "]")
       },"query_reps":${
         // per-query annotation (ADVICE r10): any query timed with a rep
         // count OTHER than the top-level `reps` is listed here, so
@@ -517,7 +484,7 @@ object Bench {
         // the fixed-cost denominator (VERDICT r13 #2): everything the
         // suite pays that NO timed window sees — child-JVM startup,
         // session builds, untimed target-SF warms, storage drains, GC
-        // settles. wall − Σ all timed windows is exact in fork mode
+        // settles. wall − Σ all timed windows is exact
         // (children run strictly sequentially); if suite growth pushes
         // this past the timed total's own growth, block sizing is the
         // lever, not the queries.
@@ -529,12 +496,7 @@ object Bench {
         sorted.filter(r => queryClass(r.name) != "default")
           .map(r => s""""${r.name}":"${queryClass(r.name)}"""")
           .mkString("{", ",", "}")
-      },"sf":"$sfDir","errors":$errors}"""
-    val detailPath = sys.env.getOrElse("SPARK_GRAFT_DETAIL", "BENCH_DETAIL.json")
-    // escaped where it is interpolated into the JSON line: a quote or
-    // backslash in the env-provided path must not yield an unparseable
-    // record (the exact failure this output format exists to avoid)
-    val detailPathJson = detailPath.replace("\\", "\\\\").replace("\"", "\\\"")
+      },"sf":${jsonString(sfDir)},"errors":$errors}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(detailPath), detailJson + "\n")
     catch { case scala.util.control.NonFatal(e) =>
@@ -543,25 +505,39 @@ object Bench {
     val qs = sorted // sorted name order; errors always included as -1
       .filter(r => !r.ok || slowSet(r.name))
       .map(entry).mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"host_canary_ms":${f3(canaryMs)},"sf":"$sfDir","errors":$errors,"detail":"$detailPathJson"}""")
+    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"host_canary_ms":${f3(canaryMs)},"sf":${jsonString(sfDir)},"errors":$errors,"detail":${jsonString(detailPath)}}""")
   }
+
+  /** `s` as a quoted JSON string: backslash, quote and ALL control chars
+    * (< 0x20) escaped. The env-provided sf dir and detail path, and
+    * builder-authored oracle SQL, go through it — a raw quote, backslash,
+    * tab or CR would make the record or `oracle_sql.json` unparseable. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }
 
-/** Child JVM entry for [[Bench]] fork mode: args = outFile sfDir warmDir
-  * cpus name... — builds a fresh session, runs its block through the
-  * shared [[Bench.runQueries]] discipline, writes one TSV row per query
-  * (name, seconds, ok, leaked, failedWarms, failedReps), and hard-exits
-  * (local-mode executor
-  * threads are non-daemon; a child that lingers after spark.stop() would
-  * serialize the whole suite behind its shutdown hooks). */
+/** Child JVM entry for one [[Bench]] block: args = outFile sfDir cpus
+  * name... — builds a fresh session, runs its block through the shared
+  * [[Bench.runQueries]] discipline, writes one TSV row per query (name,
+  * seconds, ok, leaked, failedWarms, failedReps, allWindowsSec), and
+  * hard-exits (local-mode executor threads are non-daemon; a child that
+  * lingers after spark.stop() would serialize the whole suite behind its
+  * shutdown hooks). */
 object BenchChild {
   def main(args: Array[String]): Unit = {
-    val Array(outFile, sfDir, warmDir, cpus) = args.take(4)
-    val names = args.drop(4).toSeq
+    val Array(outFile, sfDir, cpus) = args.take(3)
+    val names = args.drop(3).toSeq
     var code = 0
     try {
       val spark = Bench.buildSession(cpus)
-      val results = Bench.runQueries(spark, names, sfDir, warmDir)
+      val results = Bench.runQueries(spark, names, sfDir)
       def f3(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
       val tsv = results.map(r =>
         s"${r.name}\t${f3(r.sec)}\t${if (r.ok) 1 else 0}\t${r.leaked}\t${r.failedWarms}\t${r.failedReps}\t${f3(r.allWindowsSec)}")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.RunLog
 import graft.modules.CorpusModule
@@ -33,13 +33,9 @@ import graft.modules.CorpusModule
 object CorpusScaleBench {
   def main(args: Array[String]): Unit = {
     val coalesce = sys.env.getOrElse("GRAFT_CSB_COALESCE", "1") != "0"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        coalesce.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.buildSession("32")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
+      coalesce.toString)
     import spark.implicits._
 
     val outRoot = args.headOption.getOrElse("/tmp/graft_scale_corpus")

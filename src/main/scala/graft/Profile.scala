@@ -1,19 +1,17 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
-/** Dev tool: run named queries once (after a warm pass) and print every
-  * job/stage duration, so a slow row's time can be attributed to a stage
-  * instead of argued about. Not part of the driver contract. */
+/** Dev tool: `runMain graft.Profile q_a q_b` runs each named query once
+  * untimed at the target SF, prints its formatted physical plan, then
+  * times one run and prints every job/stage duration, so a slow row's
+  * time can be attributed to a plan node and a stage instead of argued
+  * about. Reads SPARK_GRAFT_SF_DIR and SPARK_GRAFT_CPUS with [[Bench]]'s
+  * defaults and builds [[Bench.buildSession]]'s session. Not part of the
+  * driver contract. */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.buildSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     @volatile var collect = false
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -28,7 +26,11 @@ object Profile {
       }
     })
     args.foreach { q =>
-      SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count() // warm
+      val warm = SparkEntry.queries(q)(spark, sfDir)
+      warm.count()
+      println(s"===== $q plan =====")
+      warm.explain("formatted")
+      Bench.drainStorage(spark)
       // listener events are posted asynchronously: drain the warm pass's
       // stragglers BEFORE arming the collector, and drain the timed run's
       // tail BEFORE disarming it (ADVICE r15 — the old order dropped the

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Rank
@@ -25,11 +24,7 @@ import graft.operators.Rank
   * path. Results + observed exponents go into SCALING.md. */
 object RankScaleBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.buildSession("32")
     import spark.implicits._
 
     val outRoot = args.headOption.getOrElse("/tmp/graft_rscale")

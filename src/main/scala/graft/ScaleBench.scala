@@ -61,11 +61,7 @@ object ScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.buildSession("32")
     import spark.implicits._
 
     val outRoot = args.headOption.getOrElse("/tmp/graft_scale")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling evidence for the declared streaming pipeline
@@ -20,12 +19,7 @@ import org.apache.spark.sql.functions._
   * as volume rises. */
 object StreamScaleBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.buildSession("32")
     import spark.implicits._
 
     val outRoot = args.headOption.getOrElse("/tmp/graft_sscale")

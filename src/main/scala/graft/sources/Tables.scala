@@ -51,9 +51,10 @@ object Tables {
 
   /** Session settings the readers depend on (nanos-as-long for the events
     * TIMESTAMP(NANOS) column, UTC so date/timestamp functions are
-    * engine-portable). Applied once per session — prefer setting these in
-    * the SparkSession builder; this guard exists so a bare session still
-    * reads correctly without per-read conf churn. */
+    * engine-portable). Applied once per session — prefer setting these
+    * when the session is built (`graft.Bench.buildSession` sets UTC); this
+    * guard exists so a bare session still reads correctly without
+    * per-read conf churn. */
   private def ensureConfigured(spark: SparkSession): Unit = {
     if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

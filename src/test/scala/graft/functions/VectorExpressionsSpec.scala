@@ -129,8 +129,8 @@ class VectorExpressionsSpec extends SparkSpec {
     val oldActive = SparkSession.getActiveSession
     // a fresh session on the SAME SparkContext via the programmatic
     // builder.withExtensions hook — the spark.sql.extensions STATIC conf
-    // only applies when the SparkContext is first created (the Verify/
-    // Bench/Time mains take that path in their own JVMs); on a shared
+    // only applies when the SparkContext is first created (the mains
+    // take that path in their own JVMs via Bench.buildSession); on a shared
     // test context it is silently ignored, so inject programmatically
     try {
       // inside the try: a construction failure must still restore the
