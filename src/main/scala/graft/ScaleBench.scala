@@ -362,10 +362,9 @@ object ScaleBench {
     // corpus document's signatures are never recomputed per batch.
     docSizes.foreach { n =>
       val corpus = spark.read.parquet(s"$outRoot/docs_$n")
-      Dedup.lshBands(corpus, "doc_id", "text", 8, 2)
-        .write.mode("overwrite").partitionBy("band_id").parquet(s"$outRoot/ix_$n/bands")
-      Dedup.tokenHashIndex(corpus, "doc_id", "text")
-        .write.mode("overwrite").parquet(s"$outRoot/ix_$n/tokens")
+      Dedup.writeLshIndex(Dedup.lshBands(corpus, "doc_id", "text", 8, 2),
+        Dedup.tokenHashIndex(corpus, "doc_id", "text"),
+        s"$outRoot/ix_$n", "overwrite")
     }
     Dedup.incrementalLshVerifiedPairs(
       spark.read.parquet(s"$outRoot/ix_5000/bands"),

@@ -35,16 +35,17 @@ object Dedup {
       .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("cnt"))
 
   /** MinHash signature: `numHashes` independent min-hashes of the distinct
-    * token set, hash i = md5("i:" ++ token). Returns (idCol, sig array). */
+    * token set, hash i = md5("i:" ++ token). Returns (idCol, sig array).
+    * Not spread: this build also feeds write-only index builds
+    * ([[writeLshIndex]]), where a spread costs more than it saves
+    * (measured r16: ~0.7 s on q_corpus_index_probe). Callers that feed a
+    * pair join spread their input with [[Spread.auto]] first. */
   def minHashSignature(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int): DataFrame = {
     val sig = array((0 until numHashes).map { i =>
       expr(s"array_min(transform(array_distinct(split($textCol, ' ')), w -> md5(concat('$i:', w))))")
     }: _*)
-    // numHashes md5 evaluations per distinct token are the dominant narrow
-    // cost — spread so an unsplittable-single-file corpus doesn't compute
-    // them on one core (identity on an already-wide scan)
-    Spread.auto(df).select(col(idCol), sig.as("sig"))
+    df.select(col(idCol), sig.as("sig"))
   }
 
   /** LSH band index of a corpus batch: one (idCol, band_id, bv) row per doc
@@ -73,10 +74,13 @@ object Dedup {
 
   /** LSH banding over MinHash signatures: signature is cut into `bands`
     * bands of `numHashes/bands` rows; docs sharing any (band, bandHash)
-    * bucket become candidate pairs. Returns distinct (da, db) with da<db. */
+    * bucket become candidate pairs. Returns distinct (da, db) with da<db.
+    * The input is spread: numHashes md5 evaluations per distinct token
+    * are the dominant narrow cost, and a single-file corpus would
+    * otherwise compute them on one core. */
   def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int, bands: Int): DataFrame = {
-    val banded = lshBands(df, idCol, textCol, numHashes, bands)
+    val banded = lshBands(Spread.auto(df), idCol, textCol, numHashes, bands)
     val a = banded.select(col(idCol).as("da"), col("band_id"), col("bv"))
     val b = banded.select(col(idCol).as("db"), col("band_id").as("band_id2"), col("bv").as("bv2"))
     a.join(b, col("band_id") === col("band_id2") && col("bv") === col("bv2") &&
@@ -307,9 +311,10 @@ object Dedup {
     * doc, th = sorted distinct int64 token hashes. Written once per ingest
     * batch next to the [[lshBands]] index; [[incrementalLshVerifiedPairs]]'s
     * indexed overload verifies candidates against these rows without ever
-    * re-tokenizing corpus documents. */
+    * re-tokenizing corpus documents. Not spread, like
+    * [[minHashSignature]]: it feeds write-only index builds too. */
   def tokenHashIndex(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    Spread.auto(df).select(col(idCol),
+    df.select(col(idCol),
         array_sort(array_distinct(transform(tokens(col(textCol)),
           w => xxhash64(w)))).as("th"))
       .withColumn("nt", size(col("th")))
@@ -332,25 +337,8 @@ object Dedup {
     if (!java.nio.file.Files.exists(target)) {
       val tmp = target.resolveSibling(target.getFileName.toString +
         s"_build_${ProcessHandle.current().pid()}_${buildSeq.incrementAndGet()}")
-      // The build feeds ONLY these writes, so the signature work is NOT
-      // spread (Spread.noSpread — measured r16: spreading a write-only
-      // build cost the probe row ~0.7 s in exchange + per-task files),
-      // and the writes get a CONDITIONAL rebalance (guide §6 output
-      // sizing, r15 verdict #1): when the corpus exceeds one advisory
-      // partition the AQE rebalance — keyed by band_id for the
-      // partitioned write, so files stay bounded per band — splits to
-      // advisory-sized files; below that the whole index fits one
-      // partition and the shuffle would cost more than the few small
-      // files it merges (measured: the unconditional hint + spread
-      // regressed q_corpus_index_probe 20% in r15)
-      Spread.noSpread {
-        Spread.rebalanceForWrite(
-            lshBands(corpus, idCol, textCol, numHashes, bands), "band_id")
-          .write.mode("overwrite").partitionBy("band_id")
-          .parquet(s"$tmp/bands")
-        Spread.rebalanceForWrite(tokenHashIndex(corpus, idCol, textCol))
-          .write.mode("overwrite").parquet(s"$tmp/tokens")
-      }
+      writeLshIndex(lshBands(corpus, idCol, textCol, numHashes, bands),
+        tokenHashIndex(corpus, idCol, textCol), tmp.toString, "overwrite")
       try java.nio.file.Files.move(tmp, target,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       catch {
@@ -371,6 +359,24 @@ object Dedup {
   // in-process uniquifier for concurrent ensureLshIndex scratch dirs
   // (cross-process uniqueness comes from the pid in the name)
   private val buildSeq = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** The persisted near-dup index layout: [[lshBands]] rows under
+    * `dir/bands` partitioned by band_id, [[tokenHashIndex]] rows under
+    * `dir/tokens`. Both writes get a CONDITIONAL rebalance (guide §6
+    * output sizing, r15 verdict #1): when the input exceeds one advisory
+    * partition the AQE rebalance — keyed by band_id for the partitioned
+    * write, so files stay bounded per band — splits to advisory-sized
+    * files; below that the whole index fits one partition and the
+    * shuffle would cost more than the few small files it merges
+    * (measured: the unconditional hint regressed q_corpus_index_probe 20%
+    * in r15). Pass unspread frames: an index write has no heavy consumer
+    * to feed. */
+  def writeLshIndex(bands: DataFrame, tokens: DataFrame, dir: String,
+      mode: String): Unit = {
+    Spread.rebalanceForWrite(bands, "band_id")
+      .write.mode(mode).partitionBy("band_id").parquet(s"$dir/bands")
+    Spread.rebalanceForWrite(tokens).write.mode(mode).parquet(s"$dir/tokens")
+  }
 
   /** The composed scale path: MinHash-LSH candidate generation followed by
     * exact token-Jaccard verification of only those candidates. Sub-quadratic
@@ -451,7 +457,7 @@ object Dedup {
     * corpus down to delta-touching pairs. */
   def incrementalLshVerifiedPairs(corpus: DataFrame, delta: DataFrame,
       idCol: String, textCol: String, numHashes: Int, bands: Int,
-      tau: Double): DataFrame =
+      tau: Double): DataFrame = {
     // In-memory convenience form: derives both index sides in-plan. Note
     // the delta is tokenized twice (band probe + verification) and its
     // band rows are referenced twice (probe side and unioned index), so
@@ -460,10 +466,14 @@ object Dedup {
     // delta-sized narrow work, never corpus-sized. The production path is
     // the indexed overload below, fed from parquet written by [[lshBands]]
     // / [[tokenHashIndex]], where nothing corpus-sized is ever recomputed.
+    // Both corpus index sides feed the pair join, so the corpus is spread
+    // once for both (the indexed overload spreads the delta).
+    val spread = Spread.auto(corpus)
     incrementalLshVerifiedPairs(
-      lshBands(corpus, idCol, textCol, numHashes, bands),
-      tokenHashIndex(corpus, idCol, textCol),
+      lshBands(spread, idCol, textCol, numHashes, bands),
+      tokenHashIndex(spread, idCol, textCol),
       delta, idCol, textCol, numHashes, bands, tau)
+  }
 
   /** Indexed (production) form of [[incrementalLshVerifiedPairs]]: the
     * corpus side arrives as the two PERSISTED index tables —
@@ -477,7 +487,8 @@ object Dedup {
       corpusTokens: DataFrame, delta: DataFrame,
       idCol: String, textCol: String, numHashes: Int, bands: Int,
       tau: Double): DataFrame = {
-    val deltaBands = lshBands(delta, idCol, textCol, numHashes, bands)
+    val spread = Spread.auto(delta)
+    val deltaBands = lshBands(spread, idCol, textCol, numHashes, bands)
     val probe = deltaBands.select(col(idCol).as("nid"), col("band_id"), col("bv"))
     val index = corpusBands.select(col(idCol), col("band_id"), col("bv"))
       .union(deltaBands.select(col(idCol), col("band_id"), col("bv")))
@@ -489,7 +500,7 @@ object Dedup {
         greatest(col("nid"), col("oid")).as("db"))
       .distinct()
     val idx = corpusTokens.select(col(idCol).as("id"), col("th"), col("nt"))
-      .union(tokenHashIndex(delta, idCol, textCol)
+      .union(tokenHashIndex(spread, idCol, textCol)
         .select(col(idCol).as("id"), col("th"), col("nt")))
     verifyPairsByTokenIndex(cands, idx, tau)
   }

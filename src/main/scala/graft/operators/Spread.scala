@@ -44,27 +44,6 @@ object Spread {
   private val enabled: Boolean =
     sys.env.getOrElse("SPARK_GRAFT_SPREAD", "1") != "0"
 
-  /** Scoped suppression for WRITE-ONLY consumers: a signature/token build
-    * whose only downstream is a small index write gains nothing from the
-    * fan-out — it pays the spread exchange plus one output file per task,
-    * and every later probe pays the extra file opens (measured r16:
-    * q_corpus_index_probe 3.2-3.7 s with the build spread vs 2.5-2.6 s
-    * without, across the rebalance on/off matrix — the spread, not the
-    * rebalance, was the r15 regression). Spread exists for compute-heavy
-    * narrow stages feeding heavy downstream consumers (pair joins,
-    * aggregations); inside this scope [[auto]] is the identity. At scale
-    * spread is the identity anyway, so the scope only removes local
-    * overhead. Thread-local: module graphs build their node frames on the
-    * calling thread. */
-  private val suppressed = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
-  }
-  def noSpread[T](body: => T): T = {
-    val prev = suppressed.get()
-    suppressed.set(java.lang.Boolean.TRUE)
-    try body finally suppressed.set(prev)
-  }
-
   /** True when the analyzed plan is narrow from scan to head: no node
     * that implies an exchange. Unions of narrow branches count as narrow. */
   private def isNarrow(plan: LogicalPlan): Boolean =
@@ -117,9 +96,28 @@ object Spread {
     }
   }
 
-  /** The adaptive spread: identity unless narrow + single-split-small. */
-  def auto(df: DataFrame): DataFrame = {
-    if (!enabled || suppressed.get()) return df
+  /** The adaptive spread: identity unless narrow + single-split-small.
+    * With no `keys` the spread is round-robin. With `keys` it is a HASH
+    * repartition by those keys with an explicit count, for aggregation
+    * mouths whose PER-GROUP work is heavy (quadratic pair emission from
+    * collected arrays, big array builds): (a) the following groupBy on
+    * the same keys satisfies its clustered distribution on this layout
+    * and plans NO second exchange, and (b) AQE cannot coalesce it
+    * (explicit-count repartitions are exact). Without it, AQE sizes the
+    * aggregate's post-shuffle side by shuffle BYTES — blind to downstream
+    * compute — and a small-bytes/heavy-CPU stage (q_triangles' per-order
+    * pair emission: measured 1.0 s on 4 of 32 cores) serializes. Keyed
+    * spreads are only for order-insensitive aggregates (sums/counts/
+    * sorted arrays): the layout changes which rows meet in a partition,
+    * never the grouped values.
+    *
+    * Placement is the caller's decision: spread the frame that feeds a
+    * heavy consumer (pair joins, aggregations), never a build whose only
+    * downstream is a small write (measured r16: spreading a write-only
+    * LSH index build cost q_corpus_index_probe ~0.7 s in exchange plus
+    * per-task files). */
+  def auto(df: DataFrame, keys: String*): DataFrame = {
+    if (!enabled) return df
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
     if (target < 4) return df
@@ -128,7 +126,8 @@ object Spread {
     fileBytes(plan) match {
       case Some(bytes)
           if bytes <= spark.sessionState.conf.filesMaxPartitionBytes =>
-        df.repartition(target)
+        if (keys.isEmpty) df.repartition(target)
+        else df.repartition(target, keys.map(col): _*)
       case _ => df
     }
   }
@@ -144,7 +143,7 @@ object Spread {
     * unprobeable or the batch is already wide (a block file landing with
     * enough row groups scans wide on its own). */
   def autoBatch(batch: DataFrame): DataFrame = {
-    if (!enabled || suppressed.get()) return batch
+    if (!enabled) return batch
     val spark = batch.sparkSession
     val target = spark.sparkContext.defaultParallelism
     if (target < 4) return batch
@@ -160,36 +159,5 @@ object Spread {
     if (parts.nonEmpty && parts.forall(_.isDefined) &&
         parts.flatten.sum * 2 <= target) batch.repartition(target)
     else batch
-  }
-
-  /** Keyed spread for aggregation mouths whose PER-GROUP work is heavy
-    * (quadratic pair emission from collected arrays, big array builds):
-    * same single-split-small gate as [[auto]], but the repartition is
-    * HASH by the groupBy keys with an explicit count, so (a) the
-    * following groupBy on the same keys satisfies its clustered
-    * distribution on this layout and plans NO second exchange, and
-    * (b) AQE cannot coalesce it (explicit-count repartitions are exact).
-    * Without it, AQE sizes the aggregate's post-shuffle side by shuffle
-    * BYTES — blind to downstream compute — and a small-bytes/heavy-CPU
-    * stage (q_triangles' per-order pair emission: measured 1.0 s on 4 of
-    * 32 cores) serializes. At scale the gate fails and the groupBy plans
-    * its own exchange, sized by AQE exactly as before — identity.
-    * Only for order-insensitive aggregates (sums/counts/sorted arrays):
-    * the partitioning this declares changes which rows meet in a
-    * partition, never the grouped values. */
-  def autoKeyed(df: DataFrame, keys: String*): DataFrame = {
-    require(keys.nonEmpty, "autoKeyed needs at least one grouping key")
-    if (!enabled || suppressed.get()) return df
-    val spark = df.sparkSession
-    val target = spark.sparkContext.defaultParallelism
-    if (target < 4) return df
-    val plan = df.queryExecution.analyzed
-    if (!isNarrow(plan)) return df
-    fileBytes(plan) match {
-      case Some(bytes)
-          if bytes <= spark.sessionState.conf.filesMaxPartitionBytes =>
-        df.repartition(target, keys.map(col): _*)
-      case _ => df
-    }
   }
 }

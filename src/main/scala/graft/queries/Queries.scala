@@ -1191,11 +1191,11 @@ object Queries {
     // cold for the edge build alone). Group size is the order's line
     // count — bounded small — so the per-group quadratic emission never
     // meets a hot key; no .distinct() here because triangles()
-    // canonicalizes and dedups internally. Spread.autoKeyed keeps the
+    // canonicalizes and dedups internally. The keyed Spread.auto keeps the
     // CPU-heavy per-group emission on every core when the input is one
     // split (AQE would coalesce the small-bytes shuffle to 3-4 tasks);
     // the groupBy reuses the declared hash layout — no extra exchange.
-    val e = Spread.autoKeyed(li, "o").groupBy("o")
+    val e = Spread.auto(li, "o").groupBy("o")
       .agg(sort_array(array_distinct(collect_list(col("p").cast("long"))))
         .as("ps"))
       .select(explode(expr(pairCombosExpr("ps", "a", "b"))).as("pr"))
@@ -2189,7 +2189,8 @@ object Queries {
     * driving q_neardup_lsh's banding". */
   private val qMinhashEst: Q = (s, sf) => {
     val d = t(s, sf, "documents").filter(col("doc_id") < 150)
-    val sig = Dedup.minHashSignature(d, "doc_id", "text", 8)
+    // the signatures feed two pair joins: spread them like lshCandidatePairs
+    val sig = Dedup.minHashSignature(Spread.auto(d), "doc_id", "text", 8)
     val pairs = Dedup.jaccardPairs(d, "doc_id", "lang", "text", 0.0)
     pairs
       .join(sig.select(col("doc_id").as("da"), col("sig").as("sa")), "da")
@@ -2659,7 +2660,7 @@ object Queries {
     // RAW projection feeds it — array_distinct dedups within the basket,
     // so the upstream global distinct (a full extra shuffle) is only
     // needed by the support/total aggregates.
-    Spread.autoKeyed(t(s, sf, "lineitem")
+    Spread.auto(t(s, sf, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")), "o")
       .groupBy("o")
       .agg(sort_array(array_distinct(collect_list(col("p")))).as("ps"))
@@ -4308,7 +4309,7 @@ object Queries {
     * so pair scores are bit-stable integers and the top-20 boundary is
     * total under (cn, aa, a, b). */
   private val qLinkpred: Q = (s, sf) => {
-    val byOrder = Spread.autoKeyed(t(s, sf, "lineitem"), "l_orderkey")
+    val byOrder = Spread.auto(t(s, sf, "lineitem"), "l_orderkey")
       .groupBy("l_orderkey")
       .agg(sort_array(array_distinct(collect_list(col("l_partkey").cast("long"))))
         .as("ps"))
@@ -4335,8 +4336,10 @@ object Queries {
     * double ratio rounded to 6, and the top-15 boundary tie-breaks on
     * node id. */
   private val qClusterCoeff: Q = (s, sf) => {
-    val canon = Spread.autoKeyed(t(s, sf, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")), "o")
+    // not spread: the keyed Spread.auto of q_linkpred won < 10% here in a
+    // 10-pair A/B at 4 cores (SPARK_GRAFT_SPREAD=0 vs on)
+    val canon = t(s, sf, "lineitem")
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .groupBy("o")
       .agg(sort_array(array_distinct(collect_list(col("p").cast("long"))))
         .as("ps"))
@@ -5105,21 +5108,12 @@ object Queries {
         Dedup.lshBands(m("docs"), "doc_id", "text", numHashes, bands)),
       Node("tokens", Seq("docs"), m =>
         Dedup.tokenHashIndex(m("docs"), "doc_id", "text"))))
-    // the ingest run builds frames that feed ONLY the index writes: no
-    // spread (write-only builds lose by fanning out — Spread.noSpread),
-    // and a conditional rebalance before each write (guide §6, r15
-    // verdict #1): advisory-sized files when the input is big, no extra
-    // shuffle when the whole index fits one advisory partition
-    Spread.noSpread {
-      ix.runIncremental(Map("docs" -> Seq("backlog" -> backlog)), log,
-        sink = out => {
-          Spread.rebalanceForWrite(out("bands"), "band_id")
-            .write.mode("append").partitionBy("band_id")
-            .parquet(s"$work/bands")
-          Spread.rebalanceForWrite(out("tokens")).write.mode("append")
-            .parquet(s"$work/tokens")
-        })
-    }
+    // the ingest run's frames feed ONLY the index writes, so they are
+    // unspread (the builders never spread) and written through the one
+    // index layout with its conditional rebalance
+    ix.runIncremental(Map("docs" -> Seq("backlog" -> backlog)), log,
+      sink = out =>
+        Dedup.writeLshIndex(out("bands"), out("tokens"), work, "append"))
     val probe = new Graph(Seq(
       Node("pairs", Seq("docs"), m =>
         Dedup.incrementalLshVerifiedPairs(

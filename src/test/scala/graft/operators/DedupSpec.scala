@@ -350,4 +350,27 @@ class DedupSpec extends SparkSpec {
       .toArray.map(_.toString).sorted.toSeq
     assert(after === before)
   }
+
+  test("ensureLshIndex never spreads its write-only build: one file per dir") {
+    // a single-file parquet corpus is exactly the input Spread.auto fans
+    // out to every core (a Seq.toDF corpus never spreads), so a spread
+    // left inside either builder would write one file per task
+    val root = java.nio.file.Files.createTempDirectory("lshix1")
+    (1L to 40L)
+      .map(i => (i, s"tok${i % 7} tok${i % 5} tok${i % 3} common"))
+      .toDF("doc_id", "text")
+      .coalesce(1).write.parquet(s"$root/corpus")
+    val corpus = spark.read.parquet(s"$root/corpus")
+    assert(corpus.rdd.getNumPartitions === 1)
+    val dir = s"$root/index"
+    Dedup.ensureLshIndex(corpus, "doc_id", "text", 8, 2, dir)
+    def dataFiles(d: java.io.File): Seq[String] =
+      d.listFiles().map(_.getName).filter(n => n.startsWith("part-") &&
+        n.endsWith(".parquet")).toSeq
+    assert(dataFiles(new java.io.File(s"$dir/tokens")).size === 1)
+    val bandDirs = new java.io.File(s"$dir/bands").listFiles()
+      .filter(_.getName.startsWith("band_id=")).toSeq
+    assert(bandDirs.map(_.getName).sorted === Seq("band_id=0", "band_id=1"))
+    bandDirs.foreach(d => assert(dataFiles(d).size === 1, d))
+  }
 }
