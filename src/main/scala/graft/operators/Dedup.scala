@@ -94,14 +94,26 @@ object Dedup {
     * Single source of truth for the gram construction — [[wordShingles]]
     * (distinct, decontamination) and `TextAnalysis.repetitionRatio`
     * (duplicate-fraction) both derive from it, so short-doc and
-    * empty-token edge semantics cannot drift apart. */
+    * empty-token edge semantics cannot drift apart.
+    *
+    * Split-once contract: the text is split exactly once per row. A
+    * derived Column referenced inside a higher-order-function lambda is
+    * inlined into the lambda body and re-evaluated on every element, so
+    * the token array is bound once through [[let]]; per-row cost stays
+    * linear in document length. */
   def wordGrams(text: Column, n: Int): Column = {
     require(n >= 1, s"gram width must be >= 1 (got $n)")
-    val ws = split(text, " ")
-    transform(
+    let(split(text, " "))(ws => transform(
       sequence(lit(1), greatest(size(ws) - (n - 1), lit(1))),
-      i => array_join(slice(ws, i, lit(n)), " "))
+      i => array_join(slice(ws, i, lit(n)), " ")))
   }
+
+  /** `body` applied to `value`, which is evaluated once per row and bound
+    * as a lambda variable. A Column is an expression tree, so using a
+    * derived Column twice evaluates it twice; wrapping it in a one-element
+    * array and transforming that array is the public-API way to name it. */
+  private[operators] def let(value: Column)(body: Column => Column): Column =
+    element_at(transform(array(value), body), 1)
 
   /** Word n-gram shingle SET (distinct [[wordGrams]]). The decontamination
     * unit: eval benchmarks leak into training corpora as verbatim runs of
@@ -393,6 +405,18 @@ object Dedup {
       df.select(col(idCol).as("id"), tokens(col(textCol)).as("toks")), tau)
   }
 
+  /** The consecutive `width`-token passages of a text, in order; the tail
+    * passage may be shorter and an empty text is one empty passage. The
+    * text is split once per row (see [[wordGrams]]). */
+  private[operators] def passages(text: Column, width: Int): Column = {
+    require(width >= 1, s"passage width must be >= 1 (got $width)")
+    let(split(text, " ")) { ws =>
+      val nchunks = greatest(ceil(size(ws).cast("double") / width).cast("int"), lit(1))
+      transform(sequence(lit(0), nchunks - lit(1)),
+        i => array_join(slice(ws, i * width + lit(1), lit(width)), " "))
+    }
+  }
+
   /** Passage-level exact dedup (the CCNet / Lee et al. 2022 move):
     * documents are cut into DISJOINT `width`-token passages; any passage
     * whose exact content occurs in more than `maxDf` distinct documents is
@@ -415,13 +439,8 @@ object Dedup {
     * decides whether to drop it. */
   def dropRepeatedPassages(df: DataFrame, idCol: String, textCol: String,
       width: Int, maxDf: Long): DataFrame = {
-    require(width >= 1, s"passage width must be >= 1 (got $width)")
-    val ws = split(col(textCol), " ")
-    val nchunks = greatest(ceil(size(ws).cast("double") / width).cast("int"), lit(1))
     val chunks = Spread.auto(df).select(col(idCol).as("id"),
-      posexplode(transform(sequence(lit(0), nchunks - lit(1)),
-        i => array_join(slice(ws, i * width + lit(1), lit(width)), " ")))
-        .as(Seq("pos", "chunk")))
+      posexplode(passages(col(textCol), width)).as(Seq("pos", "chunk")))
     val hot = chunks.groupBy("chunk").agg(countDistinct("id").as("df"))
       .filter(col("df") > maxDf)
       .select(col("chunk"), lit(true).as("__hot"))

@@ -170,12 +170,12 @@ object TextAnalysis {
     * the Gopher-style within-document repetition signal (high value ⇒
     * boilerplate/looping text). Floor-quantized to 4 dp on the binary
     * double so the score is bit-identical across engines. Narrow per-row
-    * expression — no shuffle. */
-  def repetitionRatio(text: Column, n: Int = 2): Column = {
-    val grams = Dedup.wordGrams(text, n) // shared gram construction
-    floor((lit(1.0) - size(array_distinct(grams)) / size(grams).cast("double"))
-      * 10000 + 0.5) / 10000
-  }
+    * expression — no shuffle; the grams are built once per row. */
+  def repetitionRatio(text: Column, n: Int = 2): Column =
+    // shared gram construction, bound once for both counts
+    Dedup.let(Dedup.wordGrams(text, n))(grams =>
+      floor((lit(1.0) - size(array_distinct(grams)) / size(grams).cast("double"))
+        * 10000 + 0.5) / 10000)
 
   /** Gopher-style rule filter (Rae et al. 2021, "Scaling Language Models:
     * Methods, Analysis & Insights from Training Gopher", Appendix A1.1):

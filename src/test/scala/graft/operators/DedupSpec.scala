@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.StringSplit
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -151,6 +153,59 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("text")).toMap
     assert(out(1L) == "a b c d") // tail "e" (df=3) dropped
     assert(out(2L) == "x y")
+  }
+
+  // The gram and passage kernels split each text once per row: a split
+  // referenced inside a transform lambda is re-evaluated per element,
+  // which makes the kernel quadratic in document length.
+  private def splitCount(c: Column): Int =
+    Seq("a b c").toDF("t").select(c).queryExecution.analyzed
+      .flatMap(_.expressions).map(_.collect { case s: StringSplit => s }.size).sum
+
+  test("gram and passage kernels split the text exactly once") {
+    val t = col("t")
+    assert(splitCount(Dedup.wordGrams(t, 2)) == 1)
+    assert(splitCount(Dedup.wordShingles(t, 5)) == 1)
+    assert(splitCount(TextAnalysis.repetitionRatio(t, 2)) == 1)
+    assert(splitCount(Dedup.passages(t, 8)) == 1)
+  }
+
+  // plain-Scala references; Spark's split(t, " ") is Java's split(" ", -1)
+  private def refTokens(t: String): Seq[String] = t.split(" ", -1).toSeq
+  private def refGrams(t: String, n: Int): Seq[String] =
+    if (t == null) Seq(null) else {
+      val ws = refTokens(t)
+      (0 until math.max(ws.size - (n - 1), 1)).map(i => ws.slice(i, i + n).mkString(" "))
+    }
+  private def refRatio(t: String, n: Int): Double = {
+    val g = refGrams(t, n)
+    math.floor((1.0 - g.distinct.size / g.size.toDouble) * 10000 + 0.5) / 10000
+  }
+  private def refPassages(t: String, w: Int): Seq[String] =
+    if (t == null) Seq(null) else {
+      val ws = refTokens(t)
+      (0 until math.max(math.ceil(ws.size.toDouble / w).toInt, 1))
+        .map(i => ws.slice(i * w, i * w + w).mkString(" "))
+    }
+
+  private val edgeTexts: Seq[String] = Seq("", null, "solo", "a b c d",
+    " lead", "trail ", "a  b", "  x  y  ", "x x y x x y",
+    (0 until 200).map(i => s"w${i % 37}").mkString(" "))
+
+  test("wordGrams, wordShingles, repetitionRatio and passages match a plain-Scala reference") {
+    val df = edgeTexts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("i", "t")
+    for (n <- Seq(1, 2, 5)) {
+      val rows = df.orderBy("i").select(Dedup.wordGrams(col("t"), n),
+          Dedup.wordShingles(col("t"), n), TextAnalysis.repetitionRatio(col("t"), n),
+          Dedup.passages(col("t"), n))
+        .collect()
+      rows.zip(edgeTexts).foreach { case (r, t) =>
+        assert(r.getSeq[String](0) == refGrams(t, n), s"wordGrams n=$n t=$t")
+        assert(r.getSeq[String](1) == refGrams(t, n).distinct, s"wordShingles n=$n t=$t")
+        assert(r.getDouble(2) == refRatio(t, n), s"repetitionRatio n=$n t=$t")
+        assert(r.getSeq[String](3) == refPassages(t, n), s"passages width=$n t=$t")
+      }
+    }
   }
 
   test("incrementalLshVerifiedPairs ≡ full run filtered to delta-touching pairs") {
