@@ -27,15 +27,6 @@ object Streams {
       .agg(count(lit(1)).as("c"), sum("value").as("s"))
       .select(col("window.start").as("ws"), col("event_type"), col("c"), col("s"))
 
-  /** Sliding-window counts (each event in duration/slide windows).
-    * Batch-equivalent: q_slide. */
-  def slidingCounts(events: DataFrame, tsCol: String, duration: String,
-      slide: String, watermarkDelay: String): DataFrame =
-    events.withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), duration, slide))
-      .agg(count(lit(1)).as("c"))
-      .select(col("window.start").as("ws"), col("c"))
-
   /** Native session windows with an inactivity gap, per user.
     * Batch-equivalent: the lag/break/running-sum form (q_sessionize). */
   def sessionStats(events: DataFrame, tsCol: String, gap: String,
@@ -297,8 +288,8 @@ object Streams {
     // `docs` is consumed ONLY on the first invocation per srcDir: a
     // complete landing is immutable (see below), so a caller reusing
     // srcDir with different docs content streams the ORIGINAL landing —
-    // that is the resume contract (CorpusScaleBench's resume row passes
-    // the same docs and relies on not re-landing). The landing manifest
+    // that is the resume contract (ScaleBench's corpus_stream resume row
+    // passes the same docs and relies on not re-landing). The landing manifest
     // written by landBlocks pins the landing's SHAPE: a reuse whose
     // nBlocks disagrees (or whose landing predates the manifest, i.e.
     // was written by something other than landBlocks) fails loudly here
