@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.queries.{QueryDef, Registry}
 
 /** Benchmark main. The parent holds no SparkSession; it partitions the
   * suite into blocks and runs each block in a FRESH child JVM
@@ -27,33 +28,11 @@ import org.apache.spark.sql.SparkSession
   * "leaked" column rather than silently inflating a neighbor. */
 object Bench {
 
-  /** Queries that run in a singleton child JVM: the multi-round
-    * iterative family (per-round localCheckpoint blocks + barrier jobs)
-    * plus every query the round-7 driver run inflated past 7 s — the
-    * measured blowup set whose in-suite times must track their isolated
-    * medians for the bench to be robust. */
-  val solo: Set[String] = Set(
-    "q_pagerank", "q_communities", "q_bfs", "q_sssp", "q_kcore",
-    "q_triangles", "q_tree_depth", "q_2hop", "q_bpe_train",
-    "q_random_walk", "q_hits", "q_dedup_cluster", "q_semdedup",
-    "q_neardup_lsh", "q_snapshot", "q_cluster_coeff", "q_linkpred",
-    "q_holt", "q_backtest", "q_holt_grouped", "q_rcte_decay",
-    "q_rcte_reach", "q_video_neardup", "q_dedup_apply", "q_stream_pipeline",
-    "q_corpus_neardup", "q_corpus_incr_neardup", "q_corpus_index_probe",
-    "q_corpus_stream", "q_corpus_stream_neardup",
-    // round 11: the two iterative additions (driver-loop Lloyd rounds;
-    // LPA + the modularity joins) — the CC-shaped family is solo by the
-    // round-9 rule
-    "q_kmeans", "q_modularity",
-    // round 12: q_cosine_ivf now TRAINS its coarse quantizer (2 Lloyd
-    // driver rounds) before probing — joins the iterative family
-    "q_cosine_ivf",
-    // round 16: q_keep_best runs jaccardPairs + the iterative
-    // connectedComponents loop (keepClusterKeepers) — the r15 driver
-    // printed 5.9 s for it inside a shared 30-query block at 32 cores vs
-    // 1.6-1.8 s isolated (BenchChild) and 1.6 s at 8 cores, the exact
-    // shared-block inflation profile the solo rule exists for
-    "q_keep_best")
+  /** Queries timed alone in their own child JVM ([[QueryDef.Solo]] and
+    * [[QueryDef.Roamer]] rows). Lazy, like [[roamers]]: [[buildSession]]
+    * and [[hostCanaryMs]] callers need no query inventory. */
+  lazy val solo: Set[String] =
+    Registry.all.filter(_.run != QueryDef.Shared).map(_.name).toSet
 
   /** One timed query: seconds, success, how many RDD storage blocks were
     * still registered after the post-query drain (0 = clean), and how
@@ -69,52 +48,31 @@ object Bench {
       leaked: Int, failedWarms: Int = 0, failedReps: Int = 0,
       allWindowsSec: Double = 0.0)
 
-  /** Fixed-cost class per query (round-14 verdict #3): `stream` rows time
-    * real Structured-Streaming orchestration (landing + checkpoint + two
-    * micro-batches), `codec` rows time in-plan media encode/decode, `solo`
-    * rows are the singleton-JVM iterative family, everything else is
-    * `default`. Stamped into BENCH_DETAIL so regression sweeps can filter
-    * the fixed-cost rows mechanically instead of re-litigating them. */
-  def queryClass(name: String): String =
-    if (name == "q_corpus_stream" || name == "q_corpus_stream_neardup")
-      "stream"
-    else if (name == "q_video_neardup" || name == "q_audio_neardup") "codec"
-    else if (solo(name)) "solo"
-    else "default"
+  /** Fixed-cost class per query, stamped into BENCH_DETAIL: `stream` and
+    * `codec` from [[QueryDef.Cls]], `solo` for the other singleton-JVM
+    * rows, everything else `default`. */
+  def queryClass(name: String): String = Registry.byName(name).cls match {
+    case QueryDef.Stream => "stream"
+    case QueryDef.Codec => "codec"
+    case QueryDef.Default => if (solo(name)) "solo" else "default"
+  }
 
-  /** Timing-discipline knobs, parsed ONCE at object init and read by
-    * BOTH the timing loop ([[runQueries]]) and the BENCH_DETAIL stamp
-    * ([[emit]]) — two independent env parses with duplicated default
-    * literals could silently diverge after an edit, making the stamp
-    * misreport the discipline that produced the numbers (the exact
-    * failure the stamp exists to prevent). Fork children inherit the
-    * parent's env (ProcessBuilder default), so one parse per JVM yields
-    * the same values fleet-wide. */
+  /** Timed windows per query (min taken), from `SPARK_GRAFT_BENCH_REPS`,
+    * parsed once at object init and read by both the timing loop
+    * ([[runQueries]]) and the BENCH_DETAIL stamp ([[emit]]), so the stamp
+    * cannot misreport the discipline that produced the numbers. Fork
+    * children inherit the parent's env, so every JVM agrees. */
   val benchReps: Int =
     sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-  val soloWarms: Int =
-    sys.env.getOrElse("SPARK_GRAFT_SOLO_WARMS", "3").toInt.max(1)
+  /** Untimed target-SF passes before a solo query's windows (1 otherwise). */
+  val soloWarms: Int = 3
+  /** Timed windows for a [[QueryDef.Roamer]] row, when above [[benchReps]]. */
+  val roamerReps: Int = 3
+  /** G1 settle pause before each solo window. */
+  private val settleMs = 300L
 
-  /** Measured roamers: fixed-cost queries whose single window has
-    * printed 3-6× their stable isolated median under host contention
-    * even as singleton JVMs (r9 driver: q_stream_pipeline 12.94 s vs a
-    * 2.0-2.5 s four-run reference, q_tree_depth 3.76 s vs 1.41 s —
-    * code unchanged since r7 in both). They take min-of-[[roamerReps]]
-    * timed windows instead of [[benchReps]]: one roaming window cannot
-    * survive two quiet ones, and at ~2 s steady state the extra window
-    * costs ~4 s of untimed wall clock total.
-    *
-    * Round 14 adds the UnionLoop recursion pair + the random-walk row:
-    * the r13 driver printed q_rcte_decay 11.18 s and q_holt_grouped
-    * 10.21 s against 3.8-4.9 s quiet references (code untouched since
-    * r12) — 27 sequential recursion micro-rounds make these the most
-    * scheduling-noise-sensitive plans in the suite, exactly the roamer
-    * profile; q_random_walk (driver-loop iterative, +2.9 s same round,
-    * same zero-diff) joins by the same rule. */
-  val roamers: Set[String] = Set("q_stream_pipeline", "q_tree_depth",
-    "q_rcte_decay", "q_holt_grouped", "q_random_walk")
-  val roamerReps: Int =
-    sys.env.getOrElse("SPARK_GRAFT_ROAMER_REPS", "3").toInt.max(1)
+  lazy val roamers: Set[String] =
+    Registry.all.filter(_.run == QueryDef.Roamer).map(_.name).toSet
 
   /** Effective timed-window count for one query — the SINGLE source both
     * the timing loop and the BENCH_DETAIL stamp read, so the per-query
@@ -194,7 +152,6 @@ object Bench {
     * cost (the metric still sums only timed windows). */
   def runQueries(spark: SparkSession, names: Seq[String],
       sfDir: String): Seq[QResult] = {
-    val settleMs = sys.env.getOrElse("SPARK_GRAFT_SETTLE_MS", "300").toLong
     // min over [[benchReps]] (default 2) timed windows: even in
     // an isolated JVM, a single window can land 2-5× its steady state
     // when a host-level CPU/IO spike crosses it (measured: q_rcte_decay
@@ -203,8 +160,8 @@ object Bench {
     // independent windows; the min is the plan's cost, which is what the
     // cross-round record attributes regressions against.
     //
-    // Solo queries get a DEEPER untimed warm ([[soloWarms]], default 3
-    // target-SF passes vs 1): a fresh singleton child's single warm pass
+    // Solo queries get a DEEPER untimed warm ([[soloWarms]] target-SF
+    // passes vs 1): a fresh singleton child's single warm pass
     // does not replace a shared JVM's suite-long JIT warmth for short
     // multi-job queries — the round-8 artifact reported 8 solo queries
     // at ~2× their shared-JVM reference from exactly this (q_kcore
@@ -226,7 +183,7 @@ object Bench {
       val times = (1 to reps).map { r =>
         if (r > 1) drainStorage(spark)
         System.gc()
-        if (solo(name) && settleMs > 0) {
+        if (solo(name)) {
           // let G1's concurrent cycle settle before an iterative query
           Thread.sleep(settleMs)
           System.gc()

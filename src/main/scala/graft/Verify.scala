@@ -7,7 +7,7 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     // optional extra args: restrict to these query names (local iteration)
-    val only = args.drop(2).toSet
+    val only = selected(args.drop(2).toSeq)
     // the bench's session, so the library's deployment surface
     // (GraftExtensions: codegen'd graft_* SQL functions and the
     // size(array_intersect) rewrite) is active exactly as a cluster
@@ -28,5 +28,14 @@ object Verify {
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** The names a run is restricted to (empty = all). A name that is not
+    * registered fails here, before a session is built, instead of
+    * silently writing no output. */
+  private[graft] def selected(names: Seq[String]): Set[String] = {
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown query: ${unknown.mkString(", ")}")
+    names.toSet
   }
 }

@@ -10,8 +10,8 @@ import graft.modules.CorpusModule
 import graft.sources.Layout
 
 /** The declared query inventory (SURVEY.md §2) as idiomatic DataFrame-API
-  * plans. Each entry is `(spark, sfDir) => DataFrame` and has a matching
-  * DuckDB oracle in [[OracleSql]] unless noted.
+  * plans. Each plan is `(spark, sfDir) => DataFrame`; [[Registry]] names
+  * it and pairs it with its DuckDB oracle.
   *
   * Correctness conventions (SURVEY §7.4): every query either ends in a
   * total ORDER BY (tie-broken down to a unique key) or is a tiny aggregate;
@@ -28,7 +28,7 @@ object Queries {
 
   /** The maxDf-style pivot hub cap shared by q_linkpred and
     * q_cluster_coeff (a pivot's pair emission is quadratic in its
-    * width). ONE definition, interpolated into the [[OracleSql]] texts
+    * width). ONE definition, interpolated into the [[Registry]] oracle texts
     * for both queries, so the engine and its oracle can never silently
     * diverge on the query definition (a mismatch would otherwise be
     * invisible on narrow-basket data, where the cap is a no-op). */
@@ -62,27 +62,27 @@ object Queries {
 
   // ---------------------------------------------------------------- scans
 
-  private val qScan: Q = (s, sf) =>
+  private[queries] val qScan: Q = (s, sf) =>
     t(s, sf, "lineitem").agg(count(lit(1)).as("n"))
 
   /** The event table, grouped — proves the ts-normalizing read (the
     * physical ts type has varied across testdata generations: int64
     * nanos, then timestamp[us]; Tables.normalizeTs absorbs both). */
-  private val qScanEvents: Q = (s, sf) =>
+  private[queries] val qScanEvents: Q = (s, sf) =>
     t(s, sf, "events").groupBy("event_type")
       .agg(count(lit(1)).as("c"))
       .orderBy("event_type")
 
   // ------------------------------------------------- projection / filter
 
-  private val qProject: Q = (s, sf) =>
+  private[queries] val qProject: Q = (s, sf) =>
     t(s, sf, "lineitem")
       .select(col("l_orderkey"),
         (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("net"))
       .orderBy("l_orderkey", "net")
       .limit(100)
 
-  private val qFilter: Q = (s, sf) =>
+  private[queries] val qFilter: Q = (s, sf) =>
     t(s, sf, "lineitem")
       .filter(col("l_shipdate") >= lit("1994-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1995-01-01").cast("timestamp") &&
@@ -92,7 +92,7 @@ object Queries {
 
   // ---------------------------------------------------------------- joins
 
-  private val qJoinInner: Q = (s, sf) =>
+  private[queries] val qJoinInner: Q = (s, sf) =>
     t(s, sf, "orders")
       .join(t(s, sf, "customer"), col("o_custkey") === col("c_custkey"))
       .join(broadcast(t(s, sf, "nation")), col("c_nationkey") === col("n_nationkey"))
@@ -100,7 +100,7 @@ object Queries {
       .agg(round(sum("o_totalprice"), 2).as("s"), count(lit(1)).as("c"))
       .orderBy("n_name")
 
-  private val qJoinOuter: Q = (s, sf) =>
+  private[queries] val qJoinOuter: Q = (s, sf) =>
     t(s, sf, "customer")
       .join(t(s, sf, "orders"), col("c_custkey") === col("o_custkey"), "left")
       .groupBy("c_custkey")
@@ -108,17 +108,17 @@ object Queries {
       .orderBy(col("c").desc, col("c_custkey"))
       .limit(50)
 
-  private val qJoinSemi: Q = (s, sf) =>
+  private[queries] val qJoinSemi: Q = (s, sf) =>
     t(s, sf, "customer")
       .join(t(s, sf, "orders"), col("c_custkey") === col("o_custkey"), "left_semi")
       .agg(count(lit(1)).as("n"))
 
-  private val qJoinAnti: Q = (s, sf) =>
+  private[queries] val qJoinAnti: Q = (s, sf) =>
     t(s, sf, "customer")
       .join(t(s, sf, "orders"), col("c_custkey") === col("o_custkey"), "left_anti")
       .agg(count(lit(1)).as("n"))
 
-  private val qJoinRange: Q = (s, sf) =>
+  private[queries] val qJoinRange: Q = (s, sf) =>
     t(s, sf, "lineitem")
       .join(t(s, sf, "orders"),
         col("l_orderkey") === col("o_orderkey") && col("l_shipdate") > col("o_orderdate"))
@@ -129,7 +129,7 @@ object Queries {
     * binning (here: 1-hour bins = the interval length), so the plan is an
     * ordinary shuffle hash/sort-merge join; exact µs-epoch arithmetic on
     * both engines. Views are counted per platform-wide error window. */
-  private val qJoinInterval: Q = (s, sf) => {
+  private[queries] val qJoinInterval: Q = (s, sf) => {
     val us = 3600L * 1000000
     val ev = t(s, sf, "events")
     val w = ev.filter(col("event_type") === "error")
@@ -142,7 +142,7 @@ object Queries {
       .orderBy("wid").limit(100)
   }
 
-  private val qCase: Q = (s, sf) =>
+  private[queries] val qCase: Q = (s, sf) =>
     t(s, sf, "orders")
       .groupBy(
         when(col("o_totalprice") >= 300000, "high")
@@ -152,7 +152,7 @@ object Queries {
       .agg(count(lit(1)).as("c"))
       .orderBy("band", "st")
 
-  private val qDistinct: Q = (s, sf) =>
+  private[queries] val qDistinct: Q = (s, sf) =>
     t(s, sf, "customer")
       .select("c_mktsegment", "c_nationkey")
       .distinct()
@@ -161,14 +161,14 @@ object Queries {
   /** Fact ⋈ small-dim with an explicit broadcast hint; the plan is asserted
     * broadcast in tests — at 100 TB the 20k-row part dim must never shuffle
     * the 600M-row lineitem side. */
-  private val qJoinBcast: Q = (s, sf) =>
+  private[queries] val qJoinBcast: Q = (s, sf) =>
     t(s, sf, "lineitem")
       .join(broadcast(t(s, sf, "part")), col("l_partkey") === col("p_partkey"))
       .groupBy("p_brand")
       .agg(round(sum("l_extendedprice"), 2).as("s"), count(lit(1)).as("c"))
       .orderBy("p_brand")
 
-  private val qJoinFull: Q = (s, sf) => {
+  private[queries] val qJoinFull: Q = (s, sf) => {
     val c = t(s, sf, "customer").groupBy(col("c_nationkey").as("ck"))
       .agg(count(lit(1)).as("cc"))
     val su = t(s, sf, "supplier").groupBy(col("s_nationkey").as("sk"))
@@ -180,7 +180,7 @@ object Queries {
       .orderBy("k")
   }
 
-  private val qJoinCross: Q = (s, sf) =>
+  private[queries] val qJoinCross: Q = (s, sf) =>
     t(s, sf, "region")
       .crossJoin(t(s, sf, "nation"))
       .groupBy("r_name")
@@ -189,7 +189,7 @@ object Queries {
 
   // ----------------------------------------------------------- aggregation
 
-  private val qAggGroup: Q = (s, sf) =>
+  private[queries] val qAggGroup: Q = (s, sf) =>
     t(s, sf, "lineitem")
       .groupBy("l_returnflag", "l_linestatus")
       .agg(round(sum("l_quantity"), 2).as("sq"),
@@ -198,26 +198,26 @@ object Queries {
         count(lit(1)).as("c"))
       .orderBy("l_returnflag", "l_linestatus")
 
-  private val qAggDistinct: Q = (s, sf) =>
+  private[queries] val qAggDistinct: Q = (s, sf) =>
     t(s, sf, "customer")
       .groupBy("c_mktsegment")
       .agg(countDistinct(col("c_nationkey")).as("dn"))
       .orderBy("c_mktsegment")
 
-  private val qRollup: Q = (s, sf) =>
+  private[queries] val qRollup: Q = (s, sf) =>
     t(s, sf, "lineitem")
       .rollup("l_returnflag", "l_linestatus")
       .agg(count(lit(1)).as("c"))
       .orderBy(col("l_returnflag").asc_nulls_first,
         col("l_linestatus").asc_nulls_first, col("c"))
 
-  private val qCube: Q = (s, sf) =>
+  private[queries] val qCube: Q = (s, sf) =>
     t(s, sf, "customer")
       .cube("c_mktsegment", "c_nationkey")
       .agg(round(sum("c_acctbal"), 2).as("s"))
       .orderBy(col("c_mktsegment").asc_nulls_first, col("c_nationkey").asc_nulls_first)
 
-  private val qGroupingSets: Q = (s, sf) => {
+  private[queries] val qGroupingSets: Q = (s, sf) => {
     val li = t(s, sf, "lineitem")
     li.groupingSets(
         Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus")), Seq.empty),
@@ -232,7 +232,7 @@ object Queries {
   /** event_type → columns. The value list is explicit so the plan needs no
     * distinct-collect pass and the output schema is static (required at
     * scale: pivot without values collects the distinct set to the driver). */
-  private val qPivot: Q = (s, sf) =>
+  private[queries] val qPivot: Q = (s, sf) =>
     t(s, sf, "events")
       .groupBy((col("user_id") % 10).as("ub"))
       .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
@@ -244,7 +244,7 @@ object Queries {
     * balance) through the SQL runtime — Catalyst decorrelates it to an
     * aggregate + join, no per-row subquery execution. The mean is rounded
     * before comparing so the threshold is engine-portable. */
-  private val qCorrelated: Q = (s, sf) =>
+  private[queries] val qCorrelated: Q = (s, sf) =>
     withViews(s, "customer" -> t(s, sf, "customer")) { case Seq(c) =>
       s"""SELECT c_nationkey, count(*) AS c FROM $c c1
           WHERE c_acctbal > (SELECT round(avg(c_acctbal), 2)
@@ -256,7 +256,7 @@ object Queries {
   /** CTE pipeline through the SQL runtime: monthly revenue then
     * month-over-month delta. The window is over the ~80-row aggregate
     * output, not raw orders, so the single-partition sort is trivial. */
-  private val qCte: Q = (s, sf) =>
+  private[queries] val qCte: Q = (s, sf) =>
     withViews(s, "orders" -> t(s, sf, "orders")) { case Seq(o) =>
       s"""WITH mo AS (SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS m,
                  round(sum(o_totalprice), 2) AS rev
@@ -268,7 +268,7 @@ object Queries {
 
   /** Correlated LATERAL subquery: top-2 nations per region without a
     * window — the lateral per-row subquery surface of the SQL runtime. */
-  private val qLateral: Q = (s, sf) =>
+  private[queries] val qLateral: Q = (s, sf) =>
     withViews(s, "region" -> t(s, sf, "region"),
         "nation" -> t(s, sf, "nation")) { case Seq(r, n) =>
       s"""SELECT r_name, n_name
@@ -283,7 +283,7 @@ object Queries {
     * built as an array, then rendered as a joined string for output: the
     * compare driver normalizes cells via pandas sort, which cannot hash
     * array cells (round-2 ADVICE) — scalars are the portable surface. */
-  private val qAggList: Q = (s, sf) =>
+  private[queries] val qAggList: Q = (s, sf) =>
     t(s, sf, "customer")
       .groupBy("c_mktsegment")
       .agg(array_sort(collect_set(col("c_nationkey"))).as("nation_arr"),
@@ -296,7 +296,7 @@ object Queries {
 
   /** String aggregation: sorted distinct values joined per group (the
     * listagg/string_agg shape, ordered for determinism). */
-  private val qStringAgg: Q = (s, sf) =>
+  private[queries] val qStringAgg: Q = (s, sf) =>
     t(s, sf, "customer")
       .groupBy("c_nationkey")
       .agg(array_join(array_sort(collect_set(col("c_mktsegment"))), ",").as("segs"),
@@ -306,7 +306,7 @@ object Queries {
   /** Struct construction + struct-ordering argmax: max(struct(p, k)) is
     * the lexicographic top row per group (the argmax idiom without a
     * window), then nested-field access unpacks it. */
-  private val qStructAgg: Q = (s, sf) =>
+  private[queries] val qStructAgg: Q = (s, sf) =>
     t(s, sf, "orders")
       .groupBy("o_orderpriority")
       .agg(max(struct(col("o_totalprice").as("p"), col("o_orderkey").as("k"))).as("top"))
@@ -315,7 +315,7 @@ object Queries {
 
   /** Unpivot (melt): measures back to (metric, value) rows — the inverse
     * of q_pivot, static schema, narrow reshape after the aggregate. */
-  private val qUnpivot: Q = (s, sf) =>
+  private[queries] val qUnpivot: Q = (s, sf) =>
     t(s, sf, "orders")
       .groupBy("o_orderpriority")
       .agg(round(sum("o_totalprice"), 2).as("total"),
@@ -327,7 +327,7 @@ object Queries {
   /** Exact interpolated percentiles (DuckDB quantile_cont ≡ Spark
     * percentile). At scale the approx_percentile sketch replaces this;
     * exact needs the full sorted group. */
-  private val qPercentile: Q = (s, sf) =>
+  private[queries] val qPercentile: Q = (s, sf) =>
     t(s, sf, "lineitem")
       .groupBy("l_returnflag")
       .agg(round(expr("percentile(l_quantity, 0.5)"), 4).as("p50"),
@@ -336,7 +336,7 @@ object Queries {
       .orderBy("l_returnflag")
 
   /** Statistical aggregates (merge-order-sensitive floats → rounded). */
-  private val qStats: Q = (s, sf) =>
+  private[queries] val qStats: Q = (s, sf) =>
     t(s, sf, "lineitem")
       .groupBy("l_linestatus")
       .agg(round(stddev_samp(col("l_quantity")), 4).as("sd"),
@@ -347,7 +347,7 @@ object Queries {
 
   // --------------------------------------------------------------- windows
 
-  private val qWindowRank: Q = (s, sf) => {
+  private[queries] val qWindowRank: Q = (s, sf) => {
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
     t(s, sf, "orders")
@@ -358,7 +358,7 @@ object Queries {
       .limit(100)
   }
 
-  private val qWindowRunning: Q = (s, sf) => {
+  private[queries] val qWindowRunning: Q = (s, sf) => {
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     t(s, sf, "events")
@@ -368,7 +368,7 @@ object Queries {
       .limit(100)
   }
 
-  private val qWindowLag: Q = (s, sf) => {
+  private[queries] val qWindowLag: Q = (s, sf) => {
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     t(s, sf, "events")
       .select(col("user_id"), col("event_id"),
@@ -377,7 +377,7 @@ object Queries {
       .limit(100)
   }
 
-  private val qWindowNtile: Q = (s, sf) => {
+  private[queries] val qWindowNtile: Q = (s, sf) => {
     val w = Window.partitionBy("o_orderpriority")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
     t(s, sf, "orders")
@@ -388,7 +388,7 @@ object Queries {
       .limit(100)
   }
 
-  private val qWindowRange: Q = (s, sf) => {
+  private[queries] val qWindowRange: Q = (s, sf) => {
     val w = Window.partitionBy("o_custkey").orderBy(col("o_orderkey"))
       .rangeBetween(-100L, Window.currentRow)
     t(s, sf, "orders")
@@ -398,7 +398,7 @@ object Queries {
       .limit(100)
   }
 
-  private val qWindowFirstLast: Q = (s, sf) => {
+  private[queries] val qWindowFirstLast: Q = (s, sf) => {
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_orderdate"), col("o_orderkey"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -412,39 +412,39 @@ object Queries {
 
   // -------------------------------------------------- sort / limit / sets
 
-  private val qSortLimit: Q = (s, sf) =>
+  private[queries] val qSortLimit: Q = (s, sf) =>
     t(s, sf, "orders")
       .select("o_orderkey", "o_totalprice")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       .limit(10)
 
-  private val qSetops: Q = (s, sf) =>
+  private[queries] val qSetops: Q = (s, sf) =>
     t(s, sf, "customer").select(col("c_nationkey").as("k"))
       .intersect(t(s, sf, "supplier").select(col("s_nationkey").as("k")))
       .orderBy("k")
 
   /** UNION ALL + agg — also the shape of dags block accumulation. */
-  private val qUnionAll: Q = (s, sf) =>
+  private[queries] val qUnionAll: Q = (s, sf) =>
     t(s, sf, "customer").select(col("c_nationkey").as("k"))
       .unionByName(t(s, sf, "supplier").select(col("s_nationkey").as("k")))
       .groupBy("k")
       .agg(count(lit(1)).as("c"))
       .orderBy("k")
 
-  private val qUnionDistinct: Q = (s, sf) =>
+  private[queries] val qUnionDistinct: Q = (s, sf) =>
     t(s, sf, "customer").select(col("c_nationkey").as("k"))
       .union(t(s, sf, "supplier").select(col("s_nationkey").as("k")))
       .distinct()
       .orderBy("k")
 
-  private val qExcept: Q = (s, sf) =>
+  private[queries] val qExcept: Q = (s, sf) =>
     t(s, sf, "customer").select(col("c_nationkey").as("k"))
       .except(t(s, sf, "supplier").select(col("s_nationkey").as("k")))
       .orderBy("k")
 
   // ------------------------------------------------------ scalar functions
 
-  private val qString: Q = (s, sf) =>
+  private[queries] val qString: Q = (s, sf) =>
     t(s, sf, "part")
       .filter(col("p_name").like("%a%"))
       .groupBy(upper(substring(col("p_name"), 1, 3)).as("pre"))
@@ -452,25 +452,25 @@ object Queries {
       .orderBy(col("c").desc, col("pre"))
       .limit(20)
 
-  private val qDate: Q = (s, sf) =>
+  private[queries] val qDate: Q = (s, sf) =>
     t(s, sf, "orders")
       .groupBy(date_trunc("month", col("o_orderdate")).cast("date").as("m"))
       .agg(count(lit(1)).as("c"), round(sum("o_totalprice"), 2).as("s"))
       .orderBy("m")
 
-  private val qJson: Q = (s, sf) =>
+  private[queries] val qJson: Q = (s, sf) =>
     t(s, sf, "events")
       .groupBy((get_json_object(col("props"), "$.k").cast("int") % 10).as("kb"))
       .agg(count(lit(1)).as("c"))
       .orderBy("kb")
 
-  private val qRegex: Q = (s, sf) =>
+  private[queries] val qRegex: Q = (s, sf) =>
     t(s, sf, "part")
       .groupBy(regexp_extract(col("p_type"), "^(\\w+)", 1).as("tok"))
       .agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("tok"))
 
-  private val qMath: Q = (s, sf) =>
+  private[queries] val qMath: Q = (s, sf) =>
     t(s, sf, "orders")
       .groupBy("o_orderpriority")
       .agg(round(sum(abs(col("o_totalprice") - 150000)), 2).as("sa"),
@@ -480,7 +480,7 @@ object Queries {
 
   /** Array higher-order functions over the embedding column; the sum
     * accumulates float→double left-to-right, matching DuckDB list_sum. */
-  private val qArray: Q = (s, sf) =>
+  private[queries] val qArray: Q = (s, sf) =>
     t(s, sf, "embeddings")
       .select(col("vec_id"),
         size(col("embedding")).as("d"),
@@ -489,7 +489,7 @@ object Queries {
       .orderBy("vec_id")
       .limit(100)
 
-  private val qMap: Q = (s, sf) =>
+  private[queries] val qMap: Q = (s, sf) =>
     t(s, sf, "events")
       .select(explode(expr("from_json(props, 'map<string,int>')")).as(Seq("mk", "mv")))
       .groupBy("mk")
@@ -499,7 +499,7 @@ object Queries {
   // ------------------------------------- dags-signature incremental ops
 
   /** dedupe-unique-keep-newest-row — the reference's flagship pipe. */
-  private val qDedupe: Q = (s, sf) => {
+  private[queries] val qDedupe: Q = (s, sf) => {
     val w = Window.partitionBy("user_id")
       .orderBy(col("ts").desc, col("event_id").desc)
     t(s, sf, "events")
@@ -510,7 +510,7 @@ object Queries {
 
   /** Block accumulation + keep-newest dedupe = the reference's DataSet
     * materialization, over two event "blocks" (split on event_id parity). */
-  private val qAccumulate: Q = (s, sf) => {
+  private[queries] val qAccumulate: Q = (s, sf) => {
     val ev = t(s, sf, "events")
     val blocks = Seq(ev.filter(col("event_id") % 2 === 0),
       ev.filter(col("event_id") % 2 === 1))
@@ -520,7 +520,7 @@ object Queries {
   }
 
   /** Schema "implements": customer projected onto a generic Entity shape. */
-  private val qSchemaCast: Q = (s, sf) =>
+  private[queries] val qSchemaCast: Q = (s, sf) =>
     Incremental.schemaCast(t(s, sf, "customer"), Seq(
         ("c_custkey", "id", "bigint"),
         ("c_name", "name", "string"),
@@ -532,13 +532,13 @@ object Queries {
     * Uses the raw-nanos pushdown reader — the predicate reaches the parquet
     * scan (plan-asserted in PlanSpec), unlike a filter on the rebuilt
     * timestamp column. */
-  private val qIncremental: Q = (s, sf) =>
+  private[queries] val qIncremental: Q = (s, sf) =>
     Tables.eventsSince(s, sf, java.time.Instant.parse("2024-01-15T00:00:00Z"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("s"))
 
   /** As-of join: each event matched to the customer's most recent order at
     * or before the event time (union-tag + window — no range blowup). */
-  private val qJoinAsof: Q = (s, sf) => {
+  private[queries] val qJoinAsof: Q = (s, sf) => {
     val ev = t(s, sf, "events").select("event_id", "user_id", "ts")
     val ord = t(s, sf, "orders")
     AsOfJoin.asOf(ev, ord, "user_id", "o_custkey", "ts", "o_orderdate",
@@ -550,7 +550,7 @@ object Queries {
 
   // -------------------------------------------------- time-series / text
 
-  private val qTumble: Q = (s, sf) =>
+  private[queries] val qTumble: Q = (s, sf) =>
     t(s, sf, "events")
       .groupBy(date_trunc("hour", col("ts")).as("w"), col("event_type"))
       .agg(count(lit(1)).as("c"), round(sum("value"), 2).as("s"))
@@ -560,7 +560,7 @@ object Queries {
   /** 1-hour windows sliding every 30 minutes (each event lands in 2
     * windows). Spark's `window()` works in batch GROUP BY too; streaming
     * uses the identical expression plus a watermark (graft.streaming). */
-  private val qSlide: Q = (s, sf) =>
+  private[queries] val qSlide: Q = (s, sf) =>
     t(s, sf, "events")
       .groupBy(window(col("ts"), "1 hour", "30 minutes"))
       .agg(count(lit(1)).as("c"), round(sum("value"), 2).as("s"))
@@ -578,7 +578,7 @@ object Queries {
     * observed days — bounded by the span, fine for any real resample; a
     * span too large to hold per key is the cue to fall back to the
     * calendar⋈daily equi-join. */
-  private val qGapfill: Q = (s, sf) => {
+  private[queries] val qGapfill: Q = (s, sf) => {
     val daily = t(s, sf, "events")
       .filter(col("user_id") < 5)
       .groupBy(col("user_id"), to_date(col("ts")).as("day"))
@@ -602,7 +602,7 @@ object Queries {
     * observation forward. No leading nulls by construction: the span
     * starts at each user's first observed day. Window partitions by the
     * high-cardinality user key — shards cleanly at scale. */
-  private val qLocf: Q = (s, sf) => {
+  private[queries] val qLocf: Q = (s, sf) => {
     val daily = t(s, sf, "events")
       .filter(col("user_id") < 5)
       .groupBy(col("user_id"), to_date(col("ts")).as("day"))
@@ -626,7 +626,7 @@ object Queries {
     * not-null, referential integrity, unique key) declared as plans and
     * unioned into one (check, violations) frame — each check is a
     * filter/anti-join/aggregate Catalyst plans like any query. */
-  private val qValidate: Q = (s, sf) => {
+  private[queries] val qValidate: Q = (s, sf) => {
     val li = t(s, sf, "lineitem")
     graft.operators.Validate.report(Seq(
       graft.operators.Validate.expect(li, "qty<=30", col("l_quantity") <= 30),
@@ -645,7 +645,7 @@ object Queries {
     * assert_true enforces it IN-PLAN — an out-of-bound sketch turns the
     * row into an execution error the driver records, never a silent
     * rows>0 pass. */
-  private val qApproxDistinct: Q = (s, sf) => {
+  private[queries] val qApproxDistinct: Q = (s, sf) => {
     val rsd = 0.05
     t(s, sf, "events")
       .groupBy("event_type")
@@ -660,7 +660,7 @@ object Queries {
 
   /** Distribution window functions: cume_dist + percent_rank per segment —
     * both are integer-count ratios, so values are engine-identical. */
-  private val qWindowDist: Q = (s, sf) => {
+  private[queries] val qWindowDist: Q = (s, sf) => {
     val w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal")
     t(s, sf, "customer")
       .select(col("c_custkey"), col("c_mktsegment"),
@@ -671,7 +671,7 @@ object Queries {
   /** Fixed-width histogram: floor-binning is the portable width_bucket
     * (floor rounds toward −∞ in both engines, so negative balances bin
     * correctly). One partial-agg shuffle — histograms of 100 TB are cheap. */
-  private val qHistogram: Q = (s, sf) =>
+  private[queries] val qHistogram: Q = (s, sf) =>
     t(s, sf, "customer")
       .groupBy(floor(col("c_acctbal") / 1000).cast("bigint").as("bin"))
       .agg(count(lit(1)).as("c"), round(avg("c_acctbal"), 2).as("m"))
@@ -684,7 +684,7 @@ object Queries {
     * users whose first stage-k event follows their first stage-(k−1)
     * event. At 100 TB this is the shape you want: no per-user event-list
     * collection, no window sort — conditional aggregates only. */
-  private val qFunnel: Q = (s, sf) => {
+  private[queries] val qFunnel: Q = (s, sf) => {
     val firsts = t(s, sf, "events")
       .groupBy("user_id")
       .agg(
@@ -705,7 +705,7 @@ object Queries {
     * cohort join and the final count are over the compacted activity set
     * and the last agg is a plain count, not a count-distinct expansion:
     * the shape that survives 100 TB of events. */
-  private val qRetention: Q = (s, sf) => {
+  private[queries] val qRetention: Q = (s, sf) => {
     val wk = t(s, sf, "events")
       .select(col("user_id"), date_trunc("week", col("ts")).cast("date").as("wk"))
       .distinct()
@@ -721,7 +721,7 @@ object Queries {
     * shuffle, partial-aggregable moments, the distributed OLS-by-group
     * primitive. R² here is ≈0: the synthetic price is independent of
     * quantity, which the near-zero slope/R² correctly report. */
-  private val qRegression: Q = (s, sf) =>
+  private[queries] val qRegression: Q = (s, sf) =>
     t(s, sf, "lineitem")
       .groupBy("l_returnflag")
       .agg(
@@ -739,7 +739,7 @@ object Queries {
     * across engines — so the distance histogram is a strong oracle. Same
     * shape as the LSH near-dup pipeline: blocking bounds the pair space,
     * the scorer verifies. */
-  private val qFuzzy: Q = (s, sf) => {
+  private[queries] val qFuzzy: Q = (s, sf) => {
     val c = t(s, sf, "customer").filter(col("c_custkey") < 100)
       .select(col("c_custkey").as("ck"), col("c_name").as("nm"),
         expr("substr(c_name, 1, length(c_name) - 2)").as("blk"))
@@ -762,7 +762,7 @@ object Queries {
     * Greenwald–Khanna contract itself, ±1 for floor/ceil conventions —
     * and assert_true enforces it in-plan: a sketch outside its documented
     * bound becomes an execution error the driver records. */
-  private val qApproxPercentile: Q = (s, sf) => {
+  private[queries] val qApproxPercentile: Q = (s, sf) => {
     val eps = 1.0 / 10000
     val pcts = t(s, sf, "lineitem")
       .groupBy("l_returnflag")
@@ -805,7 +805,7 @@ object Queries {
   /** Scalar subquery in the SELECT list (uncorrelated): each row carries
     * the corpus-wide aggregate — planned as a broadcast of one value, not
     * a per-row execution. */
-  private val qScalarSubq: Q = (s, sf) =>
+  private[queries] val qScalarSubq: Q = (s, sf) =>
     withViews(s, "customer" -> t(s, sf, "customer")) { case Seq(c) =>
       s"""SELECT c_mktsegment,
             round(avg(c_acctbal), 2) seg_avg,
@@ -815,7 +815,7 @@ object Queries {
 
   /** Sessionize with a 30-minute inactivity gap: lag → break flag →
     * running sum = session id → distinct sessions per user. */
-  private val qSessionize: Q = (s, sf) => {
+  private[queries] val qSessionize: Q = (s, sf) => {
     val byTime = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val running = byTime.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val prevTs = lag(col("ts"), 1).over(byTime)
@@ -830,7 +830,7 @@ object Queries {
       .limit(100)
   }
 
-  private val qTopkTerms: Q = (s, sf) =>
+  private[queries] val qTopkTerms: Q = (s, sf) =>
     t(s, sf, "documents")
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")
@@ -839,7 +839,7 @@ object Queries {
       .orderBy(col("c").desc, col("w"))
       .limit(10)
 
-  private val qTextStats: Q = (s, sf) =>
+  private[queries] val qTextStats: Q = (s, sf) =>
     t(s, sf, "documents")
       .groupBy("lang")
       .agg(count(lit(1)).as("c"),
@@ -849,7 +849,7 @@ object Queries {
 
   /** Multimodal row: document text joined with its embedding vector plus
     * derived vector metadata — the docs⋈vectors co-location join. */
-  private val qMultimodalJoin: Q = (s, sf) =>
+  private[queries] val qMultimodalJoin: Q = (s, sf) =>
     t(s, sf, "documents")
       .join(t(s, sf, "embeddings"), col("doc_id") === col("vec_id"))
       .select(col("doc_id"), col("lang"),
@@ -862,17 +862,17 @@ object Queries {
     * the 1-row query vector is broadcast and the dot product runs as a
     * codegen'd higher-order function per row — no posexplode blowup, no
     * shuffle except the final top-k (see [[Similarity.cosineTopK]]). */
-  private val qCosineTopk: Q = (s, sf) =>
+  private[queries] val qCosineTopk: Q = (s, sf) =>
     Similarity.cosineTopK(t(s, sf, "embeddings"), "vec_id", "embedding", 0L, 10)
 
   /** ANN variant: same ranking restricted to the query's sign-bit bucket —
     * the read-one-bucket scale path. */
-  private val qAnnLsh: Q = (s, sf) =>
+  private[queries] val qAnnLsh: Q = (s, sf) =>
     Similarity.annBucketTopK(t(s, sf, "embeddings"), "vec_id", "embedding", 0L, 10)
 
   /** Multi-probe ANN (query bucket + Hamming-1 probes): recall strictly ≥
     * the single-probe path at (1+bits)/2^bits of the data read. */
-  private val qAnnMultiprobe: Q = (s, sf) =>
+  private[queries] val qAnnMultiprobe: Q = (s, sf) =>
     Similarity.annMultiProbeTopK(t(s, sf, "embeddings"), "vec_id", "embedding", 0L, 10)
 
   /** IVF ANN with a TRAINED coarse quantizer, probing the 2 nearest of 8
@@ -882,7 +882,7 @@ object Queries {
     * train→assign→probe→rank path is bit-reproducible in SQL and this row
     * is oracle-checked end to end — train + probe was the last ANN path
     * without a green correctness row (no-oracle in rounds ≤ 11). */
-  private val qCosineIvf: Q = (s, sf) =>
+  private[queries] val qCosineIvf: Q = (s, sf) =>
     Ivf.searchKMeansTrained(t(s, sf, "embeddings"), "vec_id", "embedding",
       queryId = 0L, k = 10, cells = 8, nprobe = 2, iters = 2)
 
@@ -890,7 +890,7 @@ object Queries {
     * and SQL-expressible, so unlike the Lloyd-trained q_cosine_ivf this
     * variant is oracle-checked end to end. Same physical shape: narrow
     * argmax assignment, probe-pruned candidates, top-k cosine. */
-  private val qAnnIvfFixed: Q = (s, sf) =>
+  private[queries] val qAnnIvfFixed: Q = (s, sf) =>
     Ivf.searchFixed(t(s, sf, "embeddings"), "vec_id", "embedding",
       queryId = 0L, k = 10, cells = 8, nprobe = 2)
 
@@ -899,7 +899,7 @@ object Queries {
     * table, exact cosine re-rank of the 50-row shortlist. The oracle
     * verifies the code Hamming from the raw floats (per-dim sign
     * disagreements) — a different formulation of the same integer. */
-  private val qAnnPq: Q = (s, sf) =>
+  private[queries] val qAnnPq: Q = (s, sf) =>
     Pq.searchPq(t(s, sf, "embeddings"), "vec_id", "embedding",
       queryId = 0L, k = 10, m = 8, subDim = 8, shortlist = 50)
 
@@ -909,7 +909,7 @@ object Queries {
     * is ~64× smaller than all-pairs and every stage is a plain shuffle —
     * the shape that survives 100 TB. Exact all-pairs scoring stays
     * available as Similarity.cosinePairsExact for candidate verification. */
-  private val qEmbedNeardup: Q = (s, sf) =>
+  private[queries] val qEmbedNeardup: Q = (s, sf) =>
     Similarity.cosinePairs(t(s, sf, "embeddings"), "vec_id", "embedding", 0.4)
       .agg(count(lit(1)).as("pairs"),
         sum(col("da") + col("db")).as("chk"),
@@ -917,16 +917,16 @@ object Queries {
 
   // ----------------------------------------------------- dedup / text ops
 
-  private val qDedupExact: Q = (s, sf) =>
+  private[queries] val qDedupExact: Q = (s, sf) =>
     Dedup.exactGroups(t(s, sf, "documents"), "doc_id", "text")
       .agg(count(lit(1)).as("g"), sum("cnt").as("n"), sum("keeper").as("chk"))
 
-  private val qFingerprint: Q = (s, sf) =>
+  private[queries] val qFingerprint: Q = (s, sf) =>
     TextAnalysis.fingerprints(t(s, sf, "documents"), "doc_id", "text")
       .orderBy("doc_id")
       .limit(100)
 
-  private val qTokenCount: Q = (s, sf) =>
+  private[queries] val qTokenCount: Q = (s, sf) =>
     t(s, sf, "documents")
       .select(col("doc_id"),
         TextAnalysis.wsTokenCount(col("text")).as("wt"),
@@ -938,7 +938,7 @@ object Queries {
     * .duplicateSpans]], the Lee et al. 2022 exact-substring semantic):
     * maximal token spans whose 8-token windows all repeat corpus-wide.
     * One word-count shuffle + a per-document merge window. */
-  private val qDupSpans: Q = (s, sf) =>
+  private[queries] val qDupSpans: Q = (s, sf) =>
     Dedup.duplicateSpans(t(s, sf, "documents"), "doc_id", "text", 8)
       .orderBy("doc_id", "sp")
 
@@ -946,7 +946,7 @@ object Queries {
     * .removeDuplicateWindows]]): docs changed + token totals before and
     * after scrubbing every cross-doc duplicated 8-window outside its
     * keeper document. */
-  private val qDupScrub: Q = (s, sf) => {
+  private[queries] val qDupScrub: Q = (s, sf) => {
     val clean = Dedup.removeDuplicateWindows(
       t(s, sf, "documents"), "doc_id", "text", 8)
     clean.select(
@@ -964,7 +964,7 @@ object Queries {
     * ([[operators.TextAnalysis.cdcChunkRows]]): boundaries are local
     * hash decisions, so chunk fingerprints are stable under edits —
     * the storage/corpus-dedup pre-chunker. */
-  private val qCdcChunk: Q = (s, sf) =>
+  private[queries] val qCdcChunk: Q = (s, sf) =>
     TextAnalysis.cdcChunkRows(
         t(s, sf, "documents").filter(col("doc_id") < 10), "doc_id", "text")
       .orderBy("doc_id", "i")
@@ -974,7 +974,7 @@ object Queries {
     * `lang = 'en'` slice standing in for the curated target corpus.
     * Both model tables are ≤128 rows and broadcast; scoring is a narrow
     * join — the train-once/score-many shape. */
-  private val qDsir: Q = (s, sf) =>
+  private[queries] val qDsir: Q = (s, sf) =>
     Sampling.dsirWeights(t(s, sf, "documents"), "doc_id", "text",
         "lang", "en", buckets = 128)
       .orderBy(col("w").desc, col("doc_id"))
@@ -983,14 +983,14 @@ object Queries {
   /** Tokenizer induction: top-10 BPE merge candidates (adjacent symbol
     * pairs by corpus frequency) — one explode + one pair-key shuffle,
     * [[operators.TextAnalysis.bpeMergeCandidates]]. */
-  private val qBpeMerges: Q = (s, sf) =>
+  private[queries] val qBpeMerges: Q = (s, sf) =>
     TextAnalysis.bpeMergeCandidates(t(s, sf, "documents"), "text", 10)
 
   /** Tokenizer APPLY ([[operators.TextAnalysis.bpeSegment]]): per-doc
     * token counts under the top-3 corpus merges from q_bpe_merges
     * (er, in, ow — baked as literals, the trained-artifact pattern).
     * nbpe < nchar exactly where merges bind. */
-  private val qBpeApply: Q = (s, sf) => {
+  private[queries] val qBpeApply: Q = (s, sf) => {
     val (nc, nb) = TextAnalysis.bpeTokenCounts("text",
       Seq(("e", "r"), ("i", "n"), ("o", "w")))
     t(s, sf, "documents")
@@ -1003,14 +1003,14 @@ object Queries {
     * first 3 learned merges with their counts — each round's argmax
     * feeds the next round's segmentation. Oracle unrolls the identical
     * 3 rounds with scalar-subquery merges. */
-  private val qBpeTrain: Q = (s, sf) =>
+  private[queries] val qBpeTrain: Q = (s, sf) =>
     TextAnalysis.bpeTrain(t(s, sf, "documents"), "text", iters = 3)
       .orderBy("rank")
 
   /** Model-scoring plumbing: a linear quality classifier (fastText-filter
     * shape) with literal trained weights, sigmoid score, threshold gate.
     * Narrow per-row scan — the weights live in the plan. */
-  private val qClassify: Q = (s, sf) =>
+  private[queries] val qClassify: Q = (s, sf) =>
     t(s, sf, "documents")
       .select(col("doc_id"),
         TextAnalysis.classifierScore("text", bias = -2.0, wLnWc = 0.6,
@@ -1019,13 +1019,13 @@ object Queries {
       .orderBy("doc_id")
       .limit(100)
 
-  private val qQuality: Q = (s, sf) =>
+  private[queries] val qQuality: Q = (s, sf) =>
     t(s, sf, "documents")
       .select(col("doc_id"), TextAnalysis.qualityScore("text", "n_chars").as("score"))
       .orderBy("doc_id")
       .limit(100)
 
-  private val qLangId: Q = (s, sf) =>
+  private[queries] val qLangId: Q = (s, sf) =>
     t(s, sf, "documents")
       .groupBy(col("lang"), TextAnalysis.languageId("text").as("pred"))
       .agg(count(lit(1)).as("c"))
@@ -1037,7 +1037,7 @@ object Queries {
     * mid-similarity pairs (which dominate this 31-word-vocab corpus) are
     * filtered in the bucket hash, not in a post-join. Output is the pair
     * count + checksum. */
-  private val qMinhashLsh: Q = (s, sf) =>
+  private[queries] val qMinhashLsh: Q = (s, sf) =>
     Dedup.lshCandidatePairs(t(s, sf, "documents"), "doc_id", "text", 8, 2)
       .agg(count(lit(1)).as("pairs"), sum(col("da") + col("db")).as("chk"))
 
@@ -1046,7 +1046,7 @@ object Queries {
     * vocabulary, so *every* doc pair is a near-candidate and the exact
     * inverted-index join is inherently quadratic on it; at scale exact
     * Jaccard runs only on LSH candidates (q_minhash_lsh). */
-  private val qNeardup: Q = (s, sf) =>
+  private[queries] val qNeardup: Q = (s, sf) =>
     Dedup.jaccardPairs(t(s, sf, "documents").filter(col("doc_id") < 1000),
         "doc_id", "lang", "text", 0.8)
       .agg(count(lit(1)).as("pairs"),
@@ -1057,7 +1057,7 @@ object Queries {
     * the n-gram variant of q_neardup. Bounded corpus: frequent shingles in
     * this 31-word vocabulary make the inverted index quadratic here; the
     * scale path hashes shingles into MinHash bands first. */
-  private val qNgramNeardup: Q = (s, sf) =>
+  private[queries] val qNgramNeardup: Q = (s, sf) =>
     Dedup.ngramJaccardPairs(t(s, sf, "documents").filter(col("doc_id") < 200),
         "doc_id", "lang", "text", 0.9)
       .agg(count(lit(1)).as("pairs"),
@@ -1066,7 +1066,7 @@ object Queries {
 
   /** Corpus TF-IDF term ranking: one token shuffle + broadcast corpus
     * count; ordering on the rounded score so ranking is engine-portable. */
-  private val qTfidf: Q = (s, sf) =>
+  private[queries] val qTfidf: Q = (s, sf) =>
     TextAnalysis.tfIdfTopTerms(t(s, sf, "documents"), "doc_id", "text", 15)
 
   /** BM25 ranked retrieval: every doc scored against a literal query
@@ -1074,7 +1074,7 @@ object Queries {
     * discrimination is visible), top 15. Corpus stats are one partial-agg
     * pass broadcast back; scoring is a narrow scan — the corpus never
     * shuffles (plan-asserted). */
-  private val qBm25: Q = (s, sf) =>
+  private[queries] val qBm25: Q = (s, sf) =>
     TextAnalysis.bm25Scores(t(s, sf, "documents"), "doc_id", "text",
       Seq("dup", "vector", "the"))
       .orderBy(col("score").desc, col("doc_id"))
@@ -1088,7 +1088,7 @@ object Queries {
     * oracle computes the same depths with an actual WITH RECURSIVE —
     * pinning that the log-round engine form ≡ the row-at-a-time
     * recursive semantics. */
-  private val qTreeDepth: Q = (s, sf) => {
+  private[queries] val qTreeDepth: Q = (s, sf) => {
     val nodes = t(s, sf, "documents")
       .select(col("doc_id"), expr("doc_id div 2").as("parent"))
     Iterate.treeDepth(nodes, "doc_id", "parent")
@@ -1123,7 +1123,7 @@ object Queries {
     * five chained CTEs with `//` — must match bit for bit: the iterative
     * engine loop is pinned against a straight-line relational spelling
     * with no float tolerance at all. */
-  private val qPagerank: Q = (s, sf) =>
+  private[queries] val qPagerank: Q = (s, sf) =>
     Components.pageRank(tradeEdges(s, sf), "s", "d", iters = 5)
       .orderBy(col("rank").desc, col("id"))
       .limit(20)
@@ -1135,7 +1135,7 @@ object Queries {
     * oscillate), so the oracle unrolls the same 3 rounds with the ANSI
     * row_number argmax while the engine uses the partial-aggregable
     * max(struct(count, -label)) — integer labels, bit-exact. */
-  private val qCommunities: Q = (s, sf) =>
+  private[queries] val qCommunities: Q = (s, sf) =>
     Components.labelPropagation(tradeEdges(s, sf), "s", "d", rounds = 3)
       .orderBy("id")
       .limit(100)
@@ -1145,7 +1145,7 @@ object Queries {
     * rounds ([[operators.Components.cheapestPaths]] — the hop budget is
     * the semantic, which is what keeps the oracle straight-line). Integer
     * costs, bit-exact against the unrolled relaxation. */
-  private val qSssp: Q = (s, sf) => {
+  private[queries] val qSssp: Q = (s, sf) => {
     val pc = t(s, sf, "orders")
       .join(t(s, sf, "lineitem"), col("o_orderkey") === col("l_orderkey"))
       .groupBy((col("o_custkey") * 2).as("s"), (col("l_suppkey") * 2 + 1).as("d"))
@@ -1162,7 +1162,7 @@ object Queries {
     * [[operators.Components.bfsDistances]]'s fixpoint min-relaxation.
     * The oracle unrolls the same relaxation 6 rounds (> the measured
     * eccentricity 4 at every shipped SF): integer distances, bit-exact. */
-  private val qBfs: Q = (s, sf) =>
+  private[queries] val qBfs: Q = (s, sf) =>
     Components.bfsDistances(tradeEdges(s, sf), "s", "d", source = 2L)
       .groupBy("dist").agg(count(lit(1)).as("c"), sum("id").as("chk"))
       .orderBy("dist")
@@ -1182,7 +1182,7 @@ object Queries {
     * skew); the oracle is the naive a<b<c triple self-join. Counts are
     * orientation-invariant, so the two different enumeration strategies
     * must agree exactly. */
-  private val qTriangles: Q = (s, sf) => {
+  private[queries] val qTriangles: Q = (s, sf) => {
     val li = t(s, sf, "lineitem")
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
     // co-occurrence pairs via ONE groupBy + in-array combination emission,
@@ -1212,7 +1212,7 @@ object Queries {
     * importance sampling for curation, deterministic under the md5
     * uniform. Ranking uses the raw key (bit-identical cross-engine);
     * the emitted key is rounded for display only. */
-  private val qWeightedSample: Q = (s, sf) =>
+  private[queries] val qWeightedSample: Q = (s, sf) =>
     t(s, sf, "documents")
       .select(col("doc_id"), col("n_chars"),
         Sampling.weightedKey(col("doc_id"), col("n_chars")).as("k"))
@@ -1224,7 +1224,7 @@ object Queries {
     * key order ([[operators.Sampling.stratifiedSample]]) — the mergeable
     * TopKAgg keeps the shuffle at k·|strata| rows however big the corpus
     * is; the ANSI row_number spelling stays as the oracle. */
-  private val qStratified: Q = (s, sf) =>
+  private[queries] val qStratified: Q = (s, sf) =>
     Sampling.stratifiedSample(t(s, sf, "documents"), "doc_id", 10,
         Seq("lang", "source"))
       .orderBy("lang", "source", "r")
@@ -1234,7 +1234,7 @@ object Queries {
     * per-document window (partition cardinality = corpus size — the
     * scale-safe window shape). Quantize-then-rank makes the tie order
     * engine-identical. */
-  private val qKeywords: Q = (s, sf) =>
+  private[queries] val qKeywords: Q = (s, sf) =>
     TextAnalysis.keywords(t(s, sf, "documents"), "doc_id", "text", 3)
       .orderBy("doc_id", "r")
 
@@ -1244,7 +1244,7 @@ object Queries {
     * the five known languages (an aggregate SUM's float order is
     * engine-dependent; the expression tree reproduces bit-identically,
     * so the oracle matches at 4 dp with no tolerance games). */
-  private val qDrift: Q = (s, sf) =>
+  private[queries] val qDrift: Q = (s, sf) =>
     Validate.klDrift(t(s, sf, "documents"), "source", "lang",
         Seq("en", "zh", "es", "de", "fr"))
       .select(col("source"), round(col("kl"), 4).as("kl"))
@@ -1260,7 +1260,7 @@ object Queries {
     * HAVING. (This 31-word corpus fits inside k, making the sketch
     * degenerate-exact here; the eviction/merge machinery is
     * property-tested on skewed streams in MisraGriesAggSpec.) */
-  private val qHeavyHitters: Q = (s, sf) => {
+  private[queries] val qHeavyHitters: Q = (s, sf) => {
     val mg = udaf(new graft.functions.MisraGriesAgg(64),
       org.apache.spark.sql.Encoders.STRING)
     val tok = t(s, sf, "documents")
@@ -1287,7 +1287,7 @@ object Queries {
     * (counters only over-count; property-tested in CmsAggSpec); the
     * deliberately narrow 64-cell grid forces real collisions here so the
     * overcount path is exercised, not just the happy case. */
-  private val qCms: Q = (s, sf) => {
+  private[queries] val qCms: Q = (s, sf) => {
     val cms = udaf(new graft.functions.CmsAgg(3, 64),
       org.apache.spark.sql.Encoders.STRING)
     val tok = t(s, sf, "documents")
@@ -1313,7 +1313,7 @@ object Queries {
     * lang×source broadcast back onto a narrow scan; the doubles derive
     * from exact sums with fixed association, so the oracle matches with
     * no float tolerance. */
-  private val qAnomaly: Q = (s, sf) =>
+  private[queries] val qAnomaly: Q = (s, sf) =>
     Validate.zOutliers(t(s, sf, "documents"), "n_chars", 1.5,
         Seq("lang", "source"))
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
@@ -1323,7 +1323,7 @@ object Queries {
   /** Winsorized event values ([[operators.Validate.winsorize]]): clip
     * per-type values to exact [p05, p95], compare means before/after.
     * Broadcast quantile table + narrow clip — no data shuffle. */
-  private val qWinsorize: Q = (s, sf) => {
+  private[queries] val qWinsorize: Q = (s, sf) => {
     val ev = t(s, sf, "events").select(col("event_type"), col("value"))
     val raw = ev.groupBy("event_type")
       .agg(round(avg("value"), 3).as("avg_raw"))
@@ -1348,7 +1348,7 @@ object Queries {
     * in-plan assert); wins_ok = the clipped mean lies in [plo, phi] (true
     * for ANY clip, so a broken clip stage fails the hash, not just a
     * broken sketch). n and avg_raw stay exact-oracled. */
-  private val qWinsorizeApprox: Q = (s, sf) => {
+  private[queries] val qWinsorizeApprox: Q = (s, sf) => {
     val eps = 1.0 / 10000
     val ev = t(s, sf, "events").select(col("event_type"), col("value"))
     val cut = ev.groupBy("event_type")
@@ -1379,7 +1379,7 @@ object Queries {
 
   /** Epoch upsampling ([[operators.Sampling.upsample]]): en ×3, de ×2,
     * rest ×1 — census per (lang, epoch) proves exact copy counts. */
-  private val qUpsample: Q = (s, sf) =>
+  private[queries] val qUpsample: Q = (s, sf) =>
     Sampling.upsample(t(s, sf, "documents"), "lang",
         Map("en" -> 3, "de" -> 2))
       .groupBy("lang", "epoch")
@@ -1389,7 +1389,7 @@ object Queries {
   /** Deterministic corpus shuffle (training order): the first 20 docs of
     * the md5(seed:id) order. Epoch reshuffles = seed bump; the probe is a
     * TakeOrdered, the full materialization one range-partitioned sort. */
-  private val qShuffle: Q = (s, sf) =>
+  private[queries] val qShuffle: Q = (s, sf) =>
     t(s, sf, "documents")
       .select(col("doc_id"), Sampling.shuffleKey(col("doc_id"), "ep1").as("sk"))
       .orderBy("sk")
@@ -1398,7 +1398,7 @@ object Queries {
   /** Deterministic train/val/test assignment from an md5 key hash — stable
     * across runs, retries, engines, and corpus growth (a row's split never
     * changes when new rows arrive), unlike rand()-based splits. */
-  private val qSplitAssign: Q = (s, sf) =>
+  private[queries] val qSplitAssign: Q = (s, sf) =>
     Sampling.assignSplits(t(s, sf, "documents"), "doc_id",
         Seq("train" -> 90, "val" -> 5, "test" -> 5))
       .groupBy("split")
@@ -1407,7 +1407,7 @@ object Queries {
 
   /** Context-window chunking: 200-char chunks every 150 chars (50-char
     * overlap) — narrow per-row expression, scan-speed at 100 TB. */
-  private val qChunk: Q = (s, sf) =>
+  private[queries] val qChunk: Q = (s, sf) =>
     t(s, sf, "documents")
       .select(col("doc_id"),
         posexplode(TextAnalysis.chunks(col("text"), 200, 150)).as(Seq("ci", "chunk")))
@@ -1417,7 +1417,7 @@ object Queries {
   /** Weighted corpus mix: 80% of English docs + 20% of the rest, by
     * deterministic hash sample — the reproducible source-weighting step
     * of a training mix. */
-  private val qMix: Q = (s, sf) => {
+  private[queries] val qMix: Q = (s, sf) => {
     val docs = t(s, sf, "documents")
     Sampling.mixByWeight(Seq(
         docs.filter(col("lang") === "en") -> 80,
@@ -1431,7 +1431,7 @@ object Queries {
     * the smallest source is kept whole, larger ones hash-downsampled at
     * rate √(n_min/n_g) — per-source counts broadcast back onto the
     * corpus, membership a narrow scan-speed filter. */
-  private val qTemperatureMix: Q = (s, sf) =>
+  private[queries] val qTemperatureMix: Q = (s, sf) =>
     Sampling.temperatureMix(t(s, sf, "documents"), "doc_id", "source", 0.5)
       .groupBy("source")
       .agg(count(lit(1)).as("kept"), sum("doc_id").as("chk"))
@@ -1446,7 +1446,7 @@ object Queries {
     * entries per group per map task, so the shuffle carries k·|langs| rows
     * regardless of corpus size. Same rows as the ANSI window oracle; the
     * doc_id tie-break keeps quantized scores deterministic. */
-  private val qQuota: Q = (s, sf) => {
+  private[queries] val qQuota: Q = (s, sf) => {
     val topk = udaf(new graft.functions.TopKAgg(20),
       org.apache.spark.sql.Encoders.product[graft.functions.Scored])
     t(s, sf, "documents")
@@ -1468,7 +1468,7 @@ object Queries {
     * partitions. Instead the means are a partial-aggregable groupBy whose
     * tiny (|segments|-row) result broadcast-joins back onto the stream —
     * scan-speed at 100 TB. */
-  private val qImpute: Q = (s, sf) => {
+  private[queries] val qImpute: Q = (s, sf) => {
     val withNulls = t(s, sf, "customer")
       .withColumn("bal", when(col("c_custkey") % 10 === 0, lit(null))
         .otherwise(col("c_acctbal")))
@@ -1488,7 +1488,7 @@ object Queries {
     * (what the testdata offers); in production the shard/file, i.e.
     * thousands of parallel window partitions (the ≥32-domain case is
     * exercised in SamplingSpec). */
-  private val qPack: Q = (s, sf) =>
+  private[queries] val qPack: Q = (s, sf) =>
     Sampling.packSequences(
       t(s, sf, "documents")
         .select(col("lang"), col("doc_id"),
@@ -1502,7 +1502,7 @@ object Queries {
     * fingerprinting each training sequence's materialized text (docs
     * joined by newline in id order, md5-prefixed) — the artifact a
     * pipeline actually writes, pinned byte-identical cross-engine. */
-  private val qPackText: Q = (s, sf) =>
+  private[queries] val qPackText: Q = (s, sf) =>
     Sampling.packSequences(
         t(s, sf, "documents").select(col("lang"), col("doc_id"), col("text"),
           TextAnalysis.wsTokenCount(col("text")).as("tk")),
@@ -1524,7 +1524,7 @@ object Queries {
     * count tables back onto the bigram stream — at real vocabulary sizes
     * the model tables broadcast and scoring runs at scan speed, the
     * train-once / score-many shape of production quality filters. */
-  private val qBigramLm: Q = (s, sf) => {
+  private[queries] val qBigramLm: Q = (s, sf) => {
     // bigrams via zip_with over two length-guarded slices: a doc with < 2
     // tokens yields empty slices and no bigrams — a sequence(1, size-1)
     // formulation would go DESCENDING ([1,0]) on 1-token docs and throw
@@ -1551,7 +1551,7 @@ object Queries {
     * count, mean word length, alphabetic fraction, stopword floor) with
     * thresholds calibrated to the synthetic corpus so every rule binds.
     * Narrow per-row — the 100 TB shape is scan → filter(pass). */
-  private val qGopher: Q = (s, sf) =>
+  private[queries] val qGopher: Q = (s, sf) =>
     t(s, sf, "documents")
       .select(col("doc_id") +: TextAnalysis.gopherRules("text",
         minWords = 40, maxWords = 120, minMwl = 4.2, maxMwl = 5.0): _*)
@@ -1564,7 +1564,7 @@ object Queries {
     * rows regardless of corpus size — the window form (q_quota) shuffles
     * and sorts every row. Same result set as the ANSI window oracle;
     * id tie-break makes the quantized scores deterministic. */
-  private val qTopkGroup: Q = (s, sf) => {
+  private[queries] val qTopkGroup: Q = (s, sf) => {
     val topk = udaf(new graft.functions.TopKAgg(5),
       org.apache.spark.sql.Encoders.product[graft.functions.Scored])
     t(s, sf, "documents")
@@ -1581,7 +1581,7 @@ object Queries {
   /** Benchmark decontamination: training docs sharing any 5-token shingle
     * with the (stand-in) benchmark set — docs 0..19 — are dropped before
     * training. Bench shingles broadcast; the corpus never shuffles. */
-  private val qDecontaminate: Q = (s, sf) => {
+  private[queries] val qDecontaminate: Q = (s, sf) => {
     val docs = t(s, sf, "documents")
     Dedup.decontaminate(
       docs.filter(col("doc_id") >= 20),
@@ -1593,7 +1593,7 @@ object Queries {
   /** PII scrub: emails/phones (planted deterministically — the corpus
     * itself is synthetic words) redacted with typed placeholders; output
     * is the audit counters plus a fingerprint of the scrubbed text. */
-  private val qPiiScrub: Q = (s, sf) => {
+  private[queries] val qPiiScrub: Q = (s, sf) => {
     val dirty = concat(
       substring(col("text"), 1, 40),
       lit(" email u"), col("doc_id").cast("string"),
@@ -1610,7 +1610,7 @@ object Queries {
 
   /** Within-document repetition: duplicate-bigram fraction per doc (the
     * boilerplate/looping-text quality signal). */
-  private val qRepetition: Q = (s, sf) =>
+  private[queries] val qRepetition: Q = (s, sf) =>
     t(s, sf, "documents")
       .select(col("doc_id"),
         TextAnalysis.repetitionRatio(col("text"), 2).as("rep"))
@@ -1618,7 +1618,7 @@ object Queries {
 
   /** Salted hot-key join: results must equal the plain join (the oracle IS
     * the plain join) — salting only changes the physical row routing. */
-  private val qSkewJoin: Q = (s, sf) =>
+  private[queries] val qSkewJoin: Q = (s, sf) =>
     Skew.saltedJoin(t(s, sf, "customer"), t(s, sf, "nation"),
         "c_nationkey", "n_nationkey", 8)
       .groupBy("n_name")
@@ -1629,7 +1629,7 @@ object Queries {
     * candidates (sub-quadratic banding) verified by exact token Jaccard —
     * the form that replaces the bounded exact queries at scale. No corpus
     * bound: the pair space is the LSH buckets', not n². */
-  private val qNeardupLsh: Q = (s, sf) =>
+  private[queries] val qNeardupLsh: Q = (s, sf) =>
     Dedup.lshVerifiedPairs(t(s, sf, "documents"), "doc_id", "text", 8, 2, 0.8)
       .agg(count(lit(1)).as("pairs"),
         sum(col("da") + col("db")).as("chk"),
@@ -1640,7 +1640,7 @@ object Queries {
     * doc are found by probing the delta's band rows against the full band
     * index — old×old pairs are never re-scored. nn counts new×new pairs
     * (both sides in the delta). */
-  private val qNeardupIncr: Q = (s, sf) => {
+  private[queries] val qNeardupIncr: Q = (s, sf) => {
     val docs = t(s, sf, "documents")
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
     val delta = docs.filter(col("doc_id") % 10 === 0)
@@ -1660,7 +1660,7 @@ object Queries {
     * no corpus signature, band hash, or token hash is ever recomputed, so
     * per-batch cost is O(|delta| + matched candidates). Output is
     * identical to [[qNeardupIncr]] (same oracle). */
-  private val qNeardupIncrIndexed: Q = (s, sf) => {
+  private[queries] val qNeardupIncrIndexed: Q = (s, sf) => {
     val numHashes = 8
     val bands = 2
     val splitMod = 10 // doc_id % splitMod == 0 plays the delta batch
@@ -1695,7 +1695,7 @@ object Queries {
     * benchmark; train vectors within cosine ≥ 0.3 of any bench vector are
     * dropped (paraphrase-level leakage the n-gram filter can't see).
     * Bench side broadcast, corpus never shuffles. */
-  private val qEmbedDecontaminate: Q = (s, sf) => {
+  private[queries] val qEmbedDecontaminate: Q = (s, sf) => {
     val emb = t(s, sf, "embeddings")
     val bench = emb.filter(col("vec_id") % 50 === 0)
     val train = emb.filter(col("vec_id") % 50 =!= 0)
@@ -1706,7 +1706,7 @@ object Queries {
   /** Passage-level boilerplate removal: disjoint 8-token passages occurring
     * verbatim in more than 2 distinct docs are dropped from every doc; the
     * md5 of the stitched-back text pins the surviving content exactly. */
-  private val qPassageDedup: Q = (s, sf) =>
+  private[queries] val qPassageDedup: Q = (s, sf) =>
     Dedup.dropRepeatedPassages(t(s, sf, "documents"), "doc_id", "text", 8, 2L)
       .select(col("doc_id"),
         col("kept_passages").as("kept_c"),
@@ -1721,7 +1721,7 @@ object Queries {
     * comp is the cluster keeper (min doc_id), sz the cluster size. At
     * corpus scale the edges come from [[Dedup.lshVerifiedPairs]] instead;
     * the closure is threshold-agnostic. */
-  private val qDedupCluster: Q = (s, sf) => {
+  private[queries] val qDedupCluster: Q = (s, sf) => {
     val pairs = Dedup.jaccardPairs(
       t(s, sf, "documents").filter(col("doc_id") < 200),
       "doc_id", "lang", "text", 0.9)
@@ -1735,7 +1735,7 @@ object Queries {
     * transitively closed by distributed hash-min propagation. Output is
     * the cluster census: how many clusters, how many vectors clustered,
     * the largest cluster, and an id checksum. */
-  private val qSemdedup: Q = (s, sf) =>
+  private[queries] val qSemdedup: Q = (s, sf) =>
     Similarity.semanticDupClusters(t(s, sf, "embeddings"), "vec_id", "embedding", 0.4)
       .agg(countDistinct("comp").as("clusters"),
         count(lit(1)).as("clustered"),
@@ -1748,7 +1748,7 @@ object Queries {
     * on each doc's RAREST tokens only, so corpus-wide hot tokens never
     * enter the pair join. The exact-semantics scale path; LSH remains the
     * cheaper approximation. */
-  private val qNeardupPrefix: Q = (s, sf) =>
+  private[queries] val qNeardupPrefix: Q = (s, sf) =>
     Dedup.prefixFilteredPairs(t(s, sf, "documents").filter(col("doc_id") < 1000),
         "doc_id", "lang", "text", 0.8)
       .agg(count(lit(1)).as("pairs"),
@@ -1761,7 +1761,7 @@ object Queries {
     * module's near-dup stage uses; the anti-join is AQE-sized, so the
     * tiny loser set broadcasts at runtime without a forced driver-side
     * collect). Pairs → clusters → cleaned corpus, end to end. */
-  private val qDedupApply: Q = (s, sf) => {
+  private[queries] val qDedupApply: Q = (s, sf) => {
     val docs = t(s, sf, "documents").filter(col("doc_id") < 200)
     val pairs = Dedup.jaccardPairs(docs, "doc_id", "lang", "text", 0.9)
     Components.keepClusterKeepers(docs, "doc_id", pairs, "da", "db")
@@ -1770,7 +1770,7 @@ object Queries {
   }
 
   /** SimHash signature buckets: most-populated 16-bit signatures. */
-  private val qSimhash: Q = (s, sf) =>
+  private[queries] val qSimhash: Q = (s, sf) =>
     Dedup.simHash16(t(s, sf, "documents"), "doc_id", "text")
       .groupBy("sig")
       .agg(count(lit(1)).as("c"))
@@ -1792,7 +1792,7 @@ object Queries {
     * what gets hashed); the decimal types themselves are pinned in
     * EntrySpec. avg is integer-cents floor division — a fixed,
     * engine-portable rounding contract. */
-  private val qDecimal: Q = (s, sf) =>
+  private[queries] val qDecimal: Q = (s, sf) =>
     t(s, sf, "lineitem")
       .select(col("l_returnflag"), col("l_linestatus"),
         col("l_extendedprice").cast("decimal(12,2)").as("price"),
@@ -1818,7 +1818,7 @@ object Queries {
     * The real decode→dHash path stays unit-tested (MultimodalSpec — binary
     * payloads are not oracle-able); THIS row pins the join: band
     * extraction, pigeonhole blocking, xor-popcount verify, histogram. */
-  private val qImageNeardup: Q = (s, sf) => {
+  private[queries] val qImageNeardup: Q = (s, sf) => {
     val hashes = t(s, sf, "documents").filter(col("doc_id") < 500)
       .select(col("doc_id").as("id"),
         expr("CAST(conv(substr(md5(CAST(doc_id div 5 AS STRING)), 1, 15), " +
@@ -1842,7 +1842,7 @@ object Queries {
     * bands, pigeonhole-exact for Hamming ≤ 3, never all-pairs. Payload
     * synthesis/decoding is a narrow per-row map — WAV bytes never
     * shuffle; only (id, 64-bit fingerprint) reaches the join. */
-  private val qAudioNeardup: Q = (s, sf) => {
+  private[queries] val qAudioNeardup: Q = (s, sf) => {
     import s.implicits._
     val pats = t(s, sf, "documents").filter(col("doc_id") < 500)
       .select(col("doc_id").as("id"),
@@ -1875,7 +1875,7 @@ object Queries {
     * docs × 64 tiny frames keep codec cost trivial and parallel (narrow
     * mapPartitions; AVI bytes never shuffle); the pair stage is the
     * shared banded Hamming join. */
-  private val qVideoNeardup: Q = (s, sf) => {
+  private[queries] val qVideoNeardup: Q = (s, sf) => {
     import s.implicits._
     val pats = t(s, sf, "documents").filter(col("doc_id") < 300)
       .select(col("doc_id").as("id"),
@@ -1933,7 +1933,7 @@ object Queries {
   private val scratchCleanup =
     scala.collection.mutable.Set.empty[java.nio.file.Path]
 
-  private val qSnapshot: Q = (s, sf) => {
+  private[queries] val qSnapshot: Q = (s, sf) => {
     val ev = t(s, sf, "events")
     val blk = (0 to 2).map(i => s"b$i" -> ev.filter(col("event_id") % 3 === i)).toMap
     val dir = scratchDir("snap")
@@ -1971,7 +1971,7 @@ object Queries {
     * checkpoint stay fresh per invocation so every run still executes
     * the full AvailableNow stream from batch 0. */
   private val streamSrcLanded = scala.collection.mutable.Map.empty[String, String]
-  private val qStreamPipeline: Q = (s, sf) => {
+  private[queries] val qStreamPipeline: Q = (s, sf) => {
     val dir = scratchDir("stream") // delta + ckpt: fresh every invocation
     val src = streamSrcLanded.synchronized {
       // the cache is per-process but the dir lives in scratch — anything
@@ -2001,7 +2001,7 @@ object Queries {
     * is physical pruning only — no false negatives exist and the exact
     * join removes false positives). At 100 TB the probe drops
     * non-matching fact rows at scan speed before the shuffle. */
-  private val qBloomJoin: Q = (s, sf) =>
+  private[queries] val qBloomJoin: Q = (s, sf) =>
     Bloom.filteredSemiJoin(t(s, sf, "customer"), t(s, sf, "orders"),
         "c_custkey", "o_custkey")
       .groupBy("c_mktsegment")
@@ -2013,7 +2013,7 @@ object Queries {
     * windows, w=4 selection windows). Portable 60-bit md5 hashes make the
     * selection — not just its size — oracle-checkable (min/max pin the
     * actual fingerprint values). */
-  private val qWinnow: Q = (s, sf) =>
+  private[queries] val qWinnow: Q = (s, sf) =>
     Dedup.winnowFingerprints(t(s, sf, "documents"), "doc_id", "text", 4, 4)
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_fp"), min("fp").as("fp_min"),
@@ -2025,7 +2025,7 @@ object Queries {
     * that Jaccard misses when sizes differ. Bounded corpus like
     * q_neardup (same 31-word-vocabulary caveat; the scale path feeds LSH
     * candidates). Census output. */
-  private val qContainment: Q = (s, sf) =>
+  private[queries] val qContainment: Q = (s, sf) =>
     Dedup.containmentPairs(t(s, sf, "documents").filter(col("doc_id") < 1000),
         "doc_id", "lang", "text", 0.9)
       .agg(count(lit(1)).as("pairs"), sum(col("da") + col("db")).as("chk"),
@@ -2035,7 +2035,7 @@ object Queries {
     * diversity quality signal. Integer-quantized log terms make the
     * per-doc sum order-independent (the q_drift playbook, but for an
     * aggregate with unbounded group count). */
-  private val qEntropy: Q = (s, sf) =>
+  private[queries] val qEntropy: Q = (s, sf) =>
     TextAnalysis.tokenEntropy(t(s, sf, "documents"), "doc_id", "text")
       .orderBy("doc_id").limit(100)
 
@@ -2044,7 +2044,7 @@ object Queries {
     * multi-dimensional layout key behind [[Layout.zorderBy]]'s file
     * clustering. Pure bitwise built-ins, spelled identically in the
     * oracle, so the interleave itself is what's checked. */
-  private val qZorder: Q = (s, sf) =>
+  private[queries] val qZorder: Q = (s, sf) =>
     t(s, sf, "orders")
       .select(shiftright(Layout.zValue(
         pmod(col("o_custkey"), lit(65536)),
@@ -2063,7 +2063,7 @@ object Queries {
     * the operator's trade (write once, join shuffle-free forever), the
     * move that turns the dominant 100 TB fact⋈fact exchange into a local
     * merge. */
-  private val qBucketJoin: Q = (s, sf) => {
+  private[queries] val qBucketJoin: Q = (s, sf) => {
     val dir = scratchDir("bucket")
     s.sql("DROP TABLE IF EXISTS g6_orders")
     s.sql("DROP TABLE IF EXISTS g6_lineitem")
@@ -2091,7 +2091,7 @@ object Queries {
     * scan). The oracle is the same join from the raw table: pruning is
     * physical, values identical. Timed cost deliberately includes the
     * partitioned write (the q_bucket_join amortized-layout convention). */
-  private val qDppPrune: Q = (s, sf) => {
+  private[queries] val qDppPrune: Q = (s, sf) => {
     val dir = scratchDir("dpp")
     graft.sources.Tables.writeEventsPartitioned(s, sf, s"$dir/events")
     // dim: the distinct event dates with an engine-agnostic day-number
@@ -2115,7 +2115,7 @@ object Queries {
     * median of absolute deviations. At 100 TB swap `approx_percentile`
     * into both passes (the q_winsorize note); the clip/join shape is
     * identical. */
-  private val qMad: Q = (s, sf) => {
+  private[queries] val qMad: Q = (s, sf) => {
     val li = t(s, sf, "lineitem")
     val med = li.groupBy("l_returnflag")
       .agg(expr("percentile(l_quantity, 0.5)").as("med"))
@@ -2135,7 +2135,7 @@ object Queries {
     * family: q_drift is the KL view, this is the distribution-free test.
     * Integer cumulative counts divided by integer totals make every
     * |ΔF| term bit-reproducible; 6-dp floor-quantized. */
-  private val qKs: Q = (s, sf) => {
+  private[queries] val qKs: Q = (s, sf) => {
     val ev = t(s, sf, "events").select(col("event_type"),
       floor(col("value")).cast("long").as("g"))
     val ca = ev.filter(col("event_type") === "click")
@@ -2156,7 +2156,7 @@ object Queries {
   /** posexplode (UDTF-with-ordinality surface): token + its position —
     * the explode-family generator with the ordinal the ANSI spelling
     * needs `WITH ORDINALITY` / `generate_subscripts` for. */
-  private val qPosexplode: Q = (s, sf) =>
+  private[queries] val qPosexplode: Q = (s, sf) =>
     t(s, sf, "documents").filter(col("doc_id") < 10)
       .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("i", "w")))
       .orderBy("doc_id", "i")
@@ -2169,7 +2169,7 @@ object Queries {
     * pinning that the pipe abstraction adds NOTHING to the semantics
     * (and, since it is all one lazy plan, nothing to the execution
     * either: filters still push down through the view boundary). */
-  private val qSqlNode: Q = (s, sf) => {
+  private[queries] val qSqlNode: Q = (s, sf) => {
     val g = new Graph(Seq(
       Node.sql("big", Seq("orders"),
         "SELECT o_custkey, o_totalprice FROM orders WHERE o_totalprice > 100000"),
@@ -2187,7 +2187,7 @@ object Queries {
     * family, so est — not just its error — is deterministic and the MAE
     * census is oracle-exact. The in-plan form of "how good is the sketch
     * driving q_neardup_lsh's banding". */
-  private val qMinhashEst: Q = (s, sf) => {
+  private[queries] val qMinhashEst: Q = (s, sf) => {
     val d = t(s, sf, "documents").filter(col("doc_id") < 150)
     // the signatures feed two pair joins: spread them like lshCandidatePairs
     val sig = Dedup.minHashSignature(Spread.auto(d), "doc_id", "text", 8)
@@ -2209,7 +2209,7 @@ object Queries {
     * missing columns null-filled — the dags accumulate semantic when a
     * source adds a column mid-history (GraphSpec exercises the engine
     * path; this row pins the value semantics). */
-  private val qUnionSchema: Q = (s, sf) => {
+  private[queries] val qUnionSchema: Q = (s, sf) => {
     val o = t(s, sf, "orders")
     val a = o.select(col("o_orderkey").as("k"), col("o_totalprice").as("price"))
     val b = o.select(col("o_orderkey").as("k"), col("o_orderpriority").as("prio"))
@@ -2221,7 +2221,7 @@ object Queries {
   /** explode_outer: row-preserving explode — a doc with NO matching
     * tokens still emits one null row (the LEFT JOIN semantics of the
     * generator family), vs explode which drops it. */
-  private val qExplodeOuter: Q = (s, sf) =>
+  private[queries] val qExplodeOuter: Q = (s, sf) =>
     t(s, sf, "documents").filter(col("doc_id") < 50)
       .select(col("doc_id"),
         explode_outer(expr("filter(split(text, ' '), w -> w = 'key')")).as("w"))
@@ -2238,7 +2238,7 @@ object Queries {
     * and fusion is a union + hash agg — nothing corpus-sized past the
     * retrievers themselves. Ranks are computed on the already-rounded
     * scores with id tie-breaks, so they are engine-stable. */
-  private val qRrf: Q = (s, sf) => {
+  private[queries] val qRrf: Q = (s, sf) => {
     val bm = TextAnalysis.bm25Scores(t(s, sf, "documents"), "doc_id", "text",
         Seq("dup", "vector", "the"))
       .orderBy(col("score").desc, col("doc_id")).limit(50)
@@ -2255,7 +2255,7 @@ object Queries {
   /** NDCG@10 of the exact-cosine retriever, relevance = label match —
     * the retrieval-quality eval loop over the labeled embedding table.
     * Query set (5 vectors) broadcasts; corpus scans once. */
-  private val qNdcg: Q = (s, sf) =>
+  private[queries] val qNdcg: Q = (s, sf) =>
     Retrieval.ndcgAtK(t(s, sf, "embeddings"), "vec_id", "embedding",
         "label", Seq(0L, 1L, 2L, 3L, 4L), 10)
       .orderBy("qid")
@@ -2266,7 +2266,7 @@ object Queries {
     * (all 6 pairs of src0..src3) — the symmetric bounded drift measure
     * completing KL (q_drift) and KS (q_ks). One tokenize pass, one
     * vocab-sized outer join per pair. */
-  private val qJsd: Q = (s, sf) =>
+  private[queries] val qJsd: Q = (s, sf) =>
     Validate.jsDivergencePairs(t(s, sf, "documents"), "source", "text",
         Seq(("src0", "src1"), ("src0", "src2"), ("src0", "src3"),
           ("src1", "src2"), ("src1", "src3"), ("src2", "src3")))
@@ -2275,7 +2275,7 @@ object Queries {
   /** Token co-occurrence PMI over the top-20 vocabulary (≥5 shared
     * docs) — collocation mining with the pair domain capped by a
     * broadcast topM join ([[TextAnalysis.cooccurPmi]]). */
-  private val qCooccur: Q = (s, sf) =>
+  private[queries] val qCooccur: Q = (s, sf) =>
     TextAnalysis.cooccurPmi(t(s, sf, "documents"), "doc_id", "text",
         topM = 20, minPairs = 5L)
       .orderBy(col("pmi").desc, col("wa"), col("wb")).limit(30)
@@ -2286,7 +2286,7 @@ object Queries {
     * lag over (ts, event_id) order, transition counts and per-source
     * row probabilities. The window shuffles by user once; the
     * transition-pair aggregate is |types|² small. */
-  private val qNextEvent: Q = (s, sf) => {
+  private[queries] val qNextEvent: Q = (s, sf) => {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     t(s, sf, "events")
       .select(col("user_id"), col("event_type").as("nxt"), col("ts"),
@@ -2305,7 +2305,7 @@ object Queries {
     * over the user window (frame ends 1 PRECEDING — a purchase never
     * attributes to itself or later touches); revenue then aggregates by
     * channel. One shuffle by user, one tiny channel agg. */
-  private val qAttribution: Q = (s, sf) => {
+  private[queries] val qAttribution: Q = (s, sf) => {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     t(s, sf, "events")
@@ -2322,7 +2322,7 @@ object Queries {
 
   /** percent_rank + cume_dist (the relative-rank window surface) over a
     * UNIQUE ordering (acctbal, custkey) so both are engine-stable. */
-  private val qPercentRank: Q = (s, sf) => {
+  private[queries] val qPercentRank: Q = (s, sf) => {
     val w = Window.partitionBy("c_nationkey")
       .orderBy(col("c_acctbal"), col("c_custkey"))
     t(s, sf, "customer")
@@ -2334,7 +2334,7 @@ object Queries {
 
   /** Bitwise aggregate surface (bit_or/bit_and/bit_xor + popcount sum)
     * — the flag-mask / feature-bitmap rollup, all partial-aggregable. */
-  private val qBitagg: Q = (s, sf) =>
+  private[queries] val qBitagg: Q = (s, sf) =>
     t(s, sf, "lineitem").groupBy("l_returnflag")
       .agg(expr("bit_or(l_orderkey)").as("bo"),
         expr("bit_and(l_orderkey)").as("ba"),
@@ -2345,7 +2345,7 @@ object Queries {
   /** Multiset INTERSECT ALL (each nation kept min(#customer, #supplier)
     * times — the bag semantics ANSI adds over plain INTERSECT), counted
     * per key to pin the multiplicities. */
-  private val qIntersectAll: Q = (s, sf) =>
+  private[queries] val qIntersectAll: Q = (s, sf) =>
     t(s, sf, "customer").select(col("c_nationkey").as("nk"))
       .intersectAll(t(s, sf, "supplier").select(col("s_nationkey").as("nk")))
       .groupBy("nk").agg(count(lit(1)).as("c"))
@@ -2353,7 +2353,7 @@ object Queries {
 
   /** Multiset EXCEPT ALL (customer nation multiplicities minus supplier
     * multiplicities, floored at zero), counted per key. */
-  private val qExceptAll: Q = (s, sf) =>
+  private[queries] val qExceptAll: Q = (s, sf) =>
     t(s, sf, "customer").select(col("c_nationkey").as("nk"))
       .exceptAll(t(s, sf, "supplier").select(col("s_nationkey").as("nk")))
       .groupBy("nk").agg(count(lit(1)).as("c"))
@@ -2365,7 +2365,7 @@ object Queries {
     * degrees. The fixed round count is the semantic (the
     * [[qCommunities]] contract), so the oracle unrolls the same 3
     * peels as chained CTEs: integer degrees, bit-exact. */
-  private val qKcore: Q = (s, sf) =>
+  private[queries] val qKcore: Q = (s, sf) =>
     Components.kCorePeel(tradeEdges(s, sf), "s", "d", k = 3, rounds = 3)
       .orderBy("id").limit(100)
 
@@ -2373,7 +2373,7 @@ object Queries {
     * on any graph (skew check: a heavy tail here is what forces the
     * degree-ordered orientation in [[qTriangles]] and salting in joins).
     * Two hash aggregates, fully partial-aggregable. */
-  private val qDegreeDist: Q = (s, sf) =>
+  private[queries] val qDegreeDist: Q = (s, sf) =>
     tradeEdges(s, sf).groupBy("s").agg(count(lit(1)).as("deg"))
       .groupBy("deg").agg(count(lit(1)).as("n"), sum("s").as("chk"))
       .orderBy("deg")
@@ -2384,7 +2384,7 @@ object Queries {
     * variants plain md5(text) misses. Narrow per-row expressions,
     * scan-speed at 100 TB; the hash makes the whole normalized STRING
     * oracle-checked without shipping it. */
-  private val qNormalize: Q = (s, sf) => {
+  private[queries] val qNormalize: Q = (s, sf) => {
     val norm = trim(regexp_replace(
       regexp_replace(lower(col("text")), "[^a-z0-9 ]", " "), " +", " "))
     t(s, sf, "documents")
@@ -2399,7 +2399,7 @@ object Queries {
     * (near-identical docs from one domain must not straddle train/test).
     * Same md5 bucket family, so the assignment is stable under corpus
     * growth and engine changes. */
-  private val qGroupSplit: Q = (s, sf) =>
+  private[queries] val qGroupSplit: Q = (s, sf) =>
     Sampling.assignSplits(
         t(s, sf, "documents")
           .withColumn("grp", concat_ws(":", col("source"), col("lang"))),
@@ -2414,7 +2414,7 @@ object Queries {
     * ≤ 20k — the budget-allocation step that turns a mixing ratio into
     * an actual doc selection. One window cumsum per source partition;
     * integer tokens so the cut point is exact. */
-  private val qTokenBudget: Q = (s, sf) => {
+  private[queries] val qTokenBudget: Q = (s, sf) => {
     val tok = TextAnalysis.wsTokenCount(col("text"))
     val w = Window.partitionBy("source")
       .orderBy(col("tok").desc, col("doc_id"))
@@ -2436,7 +2436,7 @@ object Queries {
     * deterministic row_number windows + one aggregate join (Spark's
     * max_by is tie-arbitrary, so windows with total orders are the
     * portable argmax — the [[qDedupe]] playbook per column). */
-  private val qSurvivor: Q = (s, sf) => {
+  private[queries] val qSurvivor: Q = (s, sf) => {
     val o = t(s, sf, "orders")
     val wLast = Window.partitionBy("o_custkey")
       .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)
@@ -2461,7 +2461,7 @@ object Queries {
     * row open-ended, cur = 1) — the standard warehouse dimension
     * history, as two window passes (change detection via lag, interval
     * closure via lead over the surviving change rows). */
-  private val qScd2: Q = (s, sf) => {
+  private[queries] val qScd2: Q = (s, sf) => {
     val wSeq = Window.partitionBy("o_custkey")
       .orderBy(col("dt"), col("o_orderkey"))
     val changes = t(s, sf, "orders")
@@ -2485,7 +2485,7 @@ object Queries {
     * doc/distinct-text counts (exact dup rate), token mass, length and
     * language spread. One hash aggregate; every metric partial-
     * aggregable (countDistinct via Spark's expand, exact). */
-  private val qDatasetCard: Q = (s, sf) => {
+  private[queries] val qDatasetCard: Q = (s, sf) => {
     val tok = TextAnalysis.wsTokenCount(col("text"))
     t(s, sf, "documents")
       .select(col("source"), col("lang"), col("n_chars"),
@@ -2505,7 +2505,7 @@ object Queries {
     * to the final division is exact — bit-reproducible cross-engine (the
     * q_ks playbook for rank statistics). The global window runs over the
     * bounded score grid (≤ 10⁴ cells), never the corpus rows. */
-  private val qAuc: Q = (s, sf) => {
+  private[queries] val qAuc: Q = (s, sf) => {
     val g = t(s, sf, "documents")
       .select(TextAnalysis.qualityScore("text", "n_chars").as("sc"),
         (col("lang") === "en").cast("int").as("y"))
@@ -2525,7 +2525,7 @@ object Queries {
     * lang='en': decile bins of the sigmoid score vs observed positive
     * rate — over- vs under-confidence per bin. One hash aggregate over
     * a 10-cell key space; every metric partial-aggregable. */
-  private val qCalibration: Q = (s, sf) =>
+  private[queries] val qCalibration: Q = (s, sf) =>
     t(s, sf, "documents")
       .select(TextAnalysis.classifierScore("text", bias = -2.0, wLnWc = 0.6,
           wMwl = -0.4, wStop = 8.0, wUniq = 1.5).as("sc"),
@@ -2541,7 +2541,7 @@ object Queries {
     * against lang='en': tp/fp/fn/tn + precision/recall/F1 — the
     * eval-suite summary next to [[qAuc]]'s ranking view. Integer cell
     * counts (exact), one conditional aggregate, metrics rounded. */
-  private val qConfusion: Q = (s, sf) => {
+  private[queries] val qConfusion: Q = (s, sf) => {
     val cell = (p: Column, a: Column) =>
       sum(when(p && a, 1).otherwise(0))
     t(s, sf, "documents")
@@ -2567,7 +2567,7 @@ object Queries {
     * all four classes are non-empty at every SF. One equi full-outer
     * join on the key + a 4-cell aggregate; value compare is by column
     * here — hash the row (`md5(concat_ws)`) for wide tables. */
-  private val qTableDiff: Q = (s, sf) => {
+  private[queries] val qTableDiff: Q = (s, sf) => {
     val o = t(s, sf, "orders")
     val vOld = o.filter(col("o_orderkey") % 10 =!= 0)
       .select(col("o_orderkey").as("k"), col("o_orderpriority").as("vo"))
@@ -2593,7 +2593,7 @@ object Queries {
     * [[qTriangles]]' orientation avoids); seeding keeps the hop join
     * O(seeds · deg²) however large the graph. Two equi joins + one
     * anti join, never cartesian. */
-  private val q2hop: Q = (s, sf) => {
+  private[queries] val q2hop: Q = (s, sf) => {
     val e = tradeEdges(s, sf)
     e.as("x").filter(col("x.s") < 200)
       .join(e.as("y"), col("x.d") === col("y.s"))
@@ -2615,7 +2615,7 @@ object Queries {
     * two-pass distributed spelling: the per-customer grain is an UNBOUNDED
     * entity frame, so a partition-less window here would serialize every
     * customer through one task at 100×. */
-  private val qPareto: Q = (s, sf) => {
+  private[queries] val qPareto: Q = (s, sf) => {
     val cents = round(col("o_totalprice") * 100).cast("long")
     val sp = t(s, sf, "orders").groupBy("o_custkey")
       .agg(sum(cents).as("c"))
@@ -2630,7 +2630,7 @@ object Queries {
   /** Period-over-period revenue: monthly totals with MoM delta and growth
     * rate — the BI trend surface (lag over the bounded month series, not
     * the fact rows; the month aggregate is the only fact shuffle). */
-  private val qPop: Q = (s, sf) => {
+  private[queries] val qPop: Q = (s, sf) => {
     val w = Window.orderBy("mo")
     t(s, sf, "orders")
       .groupBy(date_trunc("month", col("o_orderdate")).cast("date").as("mo"))
@@ -2648,7 +2648,7 @@ object Queries {
     * O(k²) in BASKET size (≤ a few lineitems), so pair work stays linear
     * in orders however large the fact table — the a-priori counting
     * shape. Part supports and the order total attach by broadcast. */
-  private val qBasket: Q = (s, sf) => {
+  private[queries] val qBasket: Q = (s, sf) => {
     val li = t(s, sf, "lineitem")
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
     val supp = li.groupBy("p").agg(count(lit(1)).as("np"))
@@ -2685,7 +2685,7 @@ object Queries {
     * toward, then one distinct-count per day — linear in user-days, no
     * per-day rescan of the corpus, the standard distributed rolling-
     * distinct shape (an HLL sketch drops in for approximate at 100 TB). */
-  private val qActiveUsers: Q = (s, sf) => {
+  private[queries] val qActiveUsers: Q = (s, sf) => {
     val ud = t(s, sf, "events")
       .select(col("user_id"), col("ts").cast("date").as("d")).distinct()
     val days = ud.select(col("d")).distinct()
@@ -2703,7 +2703,7 @@ object Queries {
     * consecutive gaps in exact µs (unix_micros ≡ epoch_us), bucketed to
     * whole minutes capped at 60 — one user-partitioned lag window + a
     * bounded histogram aggregate. */
-  private val qGapDist: Q = (s, sf) => {
+  private[queries] val qGapDist: Q = (s, sf) => {
     val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
     t(s, sf, "events")
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
@@ -2719,7 +2719,7 @@ object Queries {
     * q_funnel's unbounded ordering can't express. First-view aggregate,
     * one conditional join for the first posterior click, exact-µs delay
     * stats. */
-  private val qFunnelDeadline: Q = (s, sf) => {
+  private[queries] val qFunnelDeadline: Q = (s, sf) => {
     val ev = t(s, sf, "events")
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
     val v1 = ev.filter(col("event_type") === "view")
@@ -2748,7 +2748,7 @@ object Queries {
     * state is one bounded path string built by a partial-aggregable
     * collect + sort — no per-user window over the corpus, no driver
     * state (the MATCH_RECOGNIZE workload in its distributable form). */
-  private val qSeqMatch: Q = (s, sf) => {
+  private[queries] val qSeqMatch: Q = (s, sf) => {
     val path = array_join(transform(
       array_sort(collect_list(struct(col("us"), col("event_id"),
         col("event_type")))), x => x.getField("event_type")), " ")
@@ -2767,7 +2767,7 @@ object Queries {
     * of the observation window (midpoint from the corpus min/max epoch —
     * broadcast 1-row frame, exact integer µs). Top-20 decliners among
     * users with ≥ 5 first-half events; integer counts, bit-exact. */
-  private val qChurn: Q = (s, sf) => {
+  private[queries] val qChurn: Q = (s, sf) => {
     val ev = t(s, sf, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("us"))
     // integer floor-div midpoint (a double /2 would round differently
@@ -2788,7 +2788,7 @@ object Queries {
     * doc_id tie-break) instead of the min id — what a production corpus
     * actually keeps. One broadcast-scored join onto the cluster frame +
     * a per-cluster row_number argmax (deterministic, engine-portable). */
-  private val qKeepBest: Q = (s, sf) => {
+  private[queries] val qKeepBest: Q = (s, sf) => {
     val docs = t(s, sf, "documents").filter(col("doc_id") < 200)
     val cc = Components.dupClusters(
       Dedup.jaccardPairs(docs, "doc_id", "lang", "text", 0.9), "da", "db")
@@ -2808,7 +2808,7 @@ object Queries {
     * (the [[qShuffle]] key) — the imbalance-correction step before
     * training. Per-class window over the hash order; the min size is a
     * broadcast 1-row frame. */
-  private val qBalance: Q = (s, sf) => {
+  private[queries] val qBalance: Q = (s, sf) => {
     val docs = t(s, sf, "documents")
       .select(col("doc_id"), col("lang"),
         Sampling.shuffleKey(col("doc_id"), "bal1").as("sk"))
@@ -2833,7 +2833,7 @@ object Queries {
     * 100 TB the delta side is typically small enough for AQE to turn its
     * exchange into a broadcast). Output: per-segment census of the merged
     * dimension, integer-cents exact. */
-  private val qMergeUpsert: Q = (s, sf) => {
+  private[queries] val qMergeUpsert: Q = (s, sf) => {
     val tgt = t(s, sf, "customer").select(col("c_custkey").as("key"),
       col("c_acctbal").as("bal"), col("c_mktsegment").as("seg"))
     val delta = t(s, sf, "orders")
@@ -2873,7 +2873,7 @@ object Queries {
     * NULL groups MATCH — the dimension-conform join SQL equality silently
     * drops rows from. Spark plans EqualNullSafe as a true equi-join key
     * (hash/sort-merge, never a nested loop) — plan-asserted. */
-  private val qJoinNullsafe: Q = (s, sf) => {
+  private[queries] val qJoinNullsafe: Q = (s, sf) => {
     val ev = t(s, sf, "events")
     val a = ev.groupBy(nullif(col("user_id") % 7, lit(3)).as("k"))
       .agg(count(lit(1)).as("c1"))
@@ -2891,7 +2891,7 @@ object Queries {
     * single shuffle by term, and at 100 TB the postings for each term
     * land hash-partitioned exactly where a query-serving bucket-file
     * writer wants them. Top 50 terms by document frequency. */
-  private val qInvertedIndex: Q = (s, sf) =>
+  private[queries] val qInvertedIndex: Q = (s, sf) =>
     t(s, sf, "documents")
       .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("p", "term")))
       .filter(col("term") =!= "")
@@ -2910,7 +2910,7 @@ object Queries {
     * sensitivity-1 count query, is the real mechanism). u ∈ (0,1) comes
     * from [[Sampling.hashKey]] shifted by 0.5 ulp so |u−0.5| < 0.5 exactly
     * — ln(1−2|u−0.5|) can never hit −∞. */
-  private val qDpCounts: Q = (s, sf) => {
+  private[queries] val qDpCounts: Q = (s, sf) => {
     val u = (Sampling.hashKey(concat_ws(":", lit("dp1"), col("lang")))
       .cast("double") + 0.5) / 4294967296.0
     val noise = -signum(u - 0.5) * log(lit(1.0) - lit(2.0) * abs(u - 0.5))
@@ -2929,7 +2929,7 @@ object Queries {
     * integer-quantized (×10⁴, the q_entropy trick) so the final 8-term
     * sum is exact long arithmetic — bit-identical across engines and
     * row orders. Top 10 docs. */
-  private val qMaxsim: Q = (s, sf) => {
+  private[queries] val qMaxsim: Q = (s, sf) => {
     val sub = t(s, sf, "embeddings")
       .select(col("vec_id"), posexplode(expr(
         "transform(sequence(0, 7), i -> slice(embedding, i*8 + 1, 8))"))
@@ -2954,7 +2954,7 @@ object Queries {
     * top-100 (only 100 rows ever see a window — the vocab frame itself
     * is millions of rows at 100 TB, too big for a partition-less rank),
     * and the totals broadcast from a plain aggregate. */
-  private val qVocabCoverage: Q = (s, sf) => {
+  private[queries] val qVocabCoverage: Q = (s, sf) => {
     val tok = t(s, sf, "documents")
       .select(explode(split(col("text"), " ")).as("term"))
       .filter(col("term") =!= "")
@@ -2976,7 +2976,7 @@ object Queries {
     * from per-user lead windows in exact (ts, event_id) order — the
     * product-analytics "common paths" report. User-partitioned window
     * (parallel by user), one count shuffle by trigram. */
-  private val qPathMining: Q = (s, sf) => {
+  private[queries] val qPathMining: Q = (s, sf) => {
     val w = Window.partitionBy("user_id")
       .orderBy(col("us"), col("event_id"))
     t(s, sf, "events")
@@ -2996,7 +2996,7 @@ object Queries {
     * expected log₁₀(1+1/d) first-significant-digit distribution of order
     * totals. The digit comes from the INTEGER cents rendered as a string
     * — no log/pow on doubles near power-of-10 boundaries can flip it. */
-  private val qBenford: Q = (s, sf) => {
+  private[queries] val qBenford: Q = (s, sf) => {
     val cents = round(col("o_totalprice") * 100).cast("long")
     val digits = t(s, sf, "orders")
       .select(cents.as("c")).filter(col("c") > 0)
@@ -3019,7 +3019,7 @@ object Queries {
     * globally and no pair join exists. A part survives iff nothing at a
     * strictly smaller size is ≤ its price (mp) and nothing at its own
     * size is strictly cheaper (== per-size min). */
-  private val qSkyline: Q = (s, sf) => {
+  private[queries] val qSkyline: Q = (s, sf) => {
     val p = t(s, sf, "part")
       .select(col("p_partkey"), col("p_size"), col("p_retailprice"))
     val grid = p.groupBy("p_size").agg(min("p_retailprice").as("mn"))
@@ -3040,7 +3040,7 @@ object Queries {
     * Money goes through integer cents so both engines aggregate exactly;
     * the only doubles are the final shared-spelling division. Global
     * stats are a broadcast 1-row frame (the q_churn shape). */
-  private val qTargetEncode: Q = (s, sf) => {
+  private[queries] val qTargetEncode: Q = (s, sf) => {
     val o = t(s, sf, "orders").select(col("o_orderpriority").as("cat"),
       round(col("o_totalprice") * 100).cast("long").as("c"))
     val g = o.agg(sum("c").as("gs"), count(lit(1)).as("gn"))
@@ -3058,7 +3058,7 @@ object Queries {
     * weight multiply, so Σ v·gap is an exact int64 sum on both engines
     * (a double product sum would be addition-order-dependent); gaps are
     * integer epoch-microsecond diffs from a per-user lead. */
-  private val qTimeWeighted: Q = (s, sf) => {
+  private[queries] val qTimeWeighted: Q = (s, sf) => {
     val w = Window.partitionBy("user_id").orderBy("us", "event_id")
     t(s, sf, "events")
       .select(col("user_id"), col("event_id"),
@@ -3090,7 +3090,7 @@ object Queries {
       .groupBy(col("o_orderdate").cast("date").as("dy"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("c"))
 
-  private val qChangepoint: Q = (s, sf) => {
+  private[queries] val qChangepoint: Q = (s, sf) => {
     val d = dailyRevenueCents(s, sf)
     val tot = d.agg(sum("c").as("tc"), count(lit(1)).as("nd"))
     val w = Window.orderBy("dy")
@@ -3107,7 +3107,7 @@ object Queries {
     * o_orderpriority?): LHS groups with >1 distinct RHS are violations —
     * the schema-inference / data-contract check. One exact
     * count_distinct aggregate per LHS, then a 1-row rollup. */
-  private val qFdCheck: Q = (s, sf) =>
+  private[queries] val qFdCheck: Q = (s, sf) =>
     t(s, sf, "orders").groupBy("o_custkey")
       .agg(countDistinct("o_orderpriority").as("nd"), count(lit(1)).as("n"))
       .agg(count(lit(1)).as("lhs_keys"),
@@ -3120,7 +3120,7 @@ object Queries {
     * gate before a demographic release (Sweeney '02). One grouped count
     * + a 1-row rollup; k* (the dataset's actual anonymity level) is the
     * min group size. */
-  private val qKanon: Q = (s, sf) =>
+  private[queries] val qKanon: Q = (s, sf) =>
     t(s, sf, "customer").groupBy("c_nationkey", "c_mktsegment")
       .agg(count(lit(1)).as("n"))
       .agg(count(lit(1)).as("n_groups"),
@@ -3134,7 +3134,7 @@ object Queries {
     * counts); the only doubles are the shared-spelling final formula, so
     * r is bit-stable. Degree table is O(nodes) and broadcast to the edge
     * scan — edges never shuffle. */
-  private val qAssortativity: Q = (s, sf) => {
+  private[queries] val qAssortativity: Q = (s, sf) => {
     val e = tradeEdges(s, sf)
     val deg = e.groupBy("s").agg(count(lit(1)).as("dg"))
     val ed = e.join(broadcast(deg), "s")
@@ -3155,7 +3155,7 @@ object Queries {
     * back, each document classified by ≤-comparison — no global sort of
     * the corpus, state O(cutpoints) (at 100 TB swap approx_percentile
     * into the cutpoint agg; the classify join is unchanged). */
-  private val qQuantileBin: Q = (s, sf) => {
+  private[queries] val qQuantileBin: Q = (s, sf) => {
     val scored = t(s, sf, "documents").select(col("doc_id"),
       TextAnalysis.qualityScore("text", "n_chars").as("score"))
     val cuts = scored.agg(
@@ -3176,7 +3176,7 @@ object Queries {
     * 100 — a shared integer rounding spelling), the lagged pairing is an
     * equi self-join on add_months over the ~80-row month grid, and every
     * moment sum is exact int64; only the final r is double. */
-  private val qAutocorr: Q = (s, sf) => {
+  private[queries] val qAutocorr: Q = (s, sf) => {
     val m = t(s, sf, "orders")
       .groupBy(date_trunc("month", col("o_orderdate")).cast("date").as("mo"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cc"))
@@ -3209,7 +3209,7 @@ object Queries {
     * traversal), so walks are reproducible across runs, partitionings,
     * and engines. Each step is one equi-join of the O(seeds) frontier
     * against the edge list + a min-struct argmin — never a cartesian. */
-  private val qRandomWalk: Q = (s, sf) => {
+  private[queries] val qRandomWalk: Q = (s, sf) => {
     val e = tradeEdges(s, sf).localCheckpoint(true) // 3 step joins
     def step(fr: DataFrame, carried: Seq[String], i: Int): DataFrame = {
       val prev = carried.last
@@ -3232,7 +3232,7 @@ object Queries {
     * smallest value on count ties): the grouped argmax spelled as a
     * shared-window row_number so both engines resolve ties identically —
     * mode() builtins are tie-UNDEFINED in both Spark and DuckDB. */
-  private val qMode: Q = (s, sf) => {
+  private[queries] val qMode: Q = (s, sf) => {
     val c = t(s, sf, "events").groupBy("user_id", "event_type")
       .agg(count(lit(1)).as("n"))
     val w = Window.partitionBy("user_id")
@@ -3246,7 +3246,7 @@ object Queries {
     * event_id − row_number() (constant within a consecutive run, the
     * classic integer trick — no self-join, one per-user window), then
     * two aggregates up: per-island lengths, per-user island stats. */
-  private val qGapsIslands: Q = (s, sf) => {
+  private[queries] val qGapsIslands: Q = (s, sf) => {
     val w = Window.partitionBy("user_id").orderBy("event_id")
     t(s, sf, "events")
       .select(col("user_id"), col("event_id"))
@@ -3265,7 +3265,7 @@ object Queries {
     * rows (per-user window, exact int64), merged-interval id = running
     * sum of the open flags, then one aggregate per merged interval and
     * one per user. Sort is per user, never global. */
-  private val qIntervalCoalesce: Q = (s, sf) => {
+  private[queries] val qIntervalCoalesce: Q = (s, sf) => {
     val e = t(s, sf, "events").select(col("user_id"), col("event_id"),
       unix_micros(col("ts")).as("st"),
       (unix_micros(col("ts")) +
@@ -3290,7 +3290,7 @@ object Queries {
     * regressors are integers, so all five moment sums are exact int64
     * partial aggregates; slope/intercept are the only doubles and use
     * one shared spelling. */
-  private val qGroupedRegression: Q = (s, sf) => {
+  private[queries] val qGroupedRegression: Q = (s, sf) => {
     val d = t(s, sf, "documents").select(col("lang"),
       size(split(col("text"), " ")).cast("long").as("x"),
       col("n_chars").cast("long").as("y"))
@@ -3315,7 +3315,7 @@ object Queries {
     * PSI = Σ (p_a − p_e)·ln(p_a / p_e) over bins where both sides have
     * mass. Counts aggregate exactly; doubles appear only in the shared
     * final formula (the q_drift posture); state is O(bins). */
-  private val qPsi: Q = (s, sf) => {
+  private[queries] val qPsi: Q = (s, sf) => {
     val ev = t(s, sf, "events").select(col("event_type"),
       floor(col("value")).cast("long").as("g"))
     val a = ev.filter(col("event_type") === "click")
@@ -3340,7 +3340,7 @@ object Queries {
     * sums in integer cents (the q_decimal discipline): a distributed
     * double sum is partition-order-dependent; the int64 sum is bit-stable
     * by construction, divided back to dollars once at the end. */
-  private val qValuesJoin: Q = (s, sf) => {
+  private[queries] val qValuesJoin: Q = (s, sf) => {
     import s.implicits._
     val sla = Seq(("1-URGENT", 1), ("2-HIGH", 3), ("3-MEDIUM", 7),
       ("4-NOT SPECIFIED", 14), ("5-LOW", 30)).toDF("pri", "sla_days")
@@ -3358,7 +3358,7 @@ object Queries {
     * of the same user (the recovery-time pairing) — [[AsOfJoin.asOf]]
     * with direction="forward", the time-flipped mirror of q_join_asof's
     * backward union+window plan (one shuffle by key, no range join). */
-  private val qAsofFwd: Q = (s, sf) => {
+  private[queries] val qAsofFwd: Q = (s, sf) => {
     val ev = t(s, sf, "events")
     val err = ev.filter(col("event_type") === "error")
       .select(col("user_id"), col("ts"), col("event_id"))
@@ -3376,7 +3376,7 @@ object Queries {
     * span i starting at md5(doc,i) mod (tokens−8) — the [[Sampling]]
     * hash discipline, so the plan is reproducible across engines and
     * retries. One explode of a per-doc integer sequence, no UDFs. */
-  private val qSpanMask: Q = (s, sf) => {
+  private[queries] val qSpanMask: Q = (s, sf) => {
     val d = t(s, sf, "documents")
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("tk"))
       .filter(col("tk") > lit(48))
@@ -3414,7 +3414,7 @@ object Queries {
         sum(when(!col("arma"), col("k"))).as("kb"))
   }
 
-  private val qAbtest: Q = (s, sf) =>
+  private[queries] val qAbtest: Q = (s, sf) =>
     armCounts(s, sf)
       .select(col("na"), col("nb"),
         round(col("ka") / col("na").cast("double"), 6).as("pa"),
@@ -3434,7 +3434,7 @@ object Queries {
     * The rank comes from [[Rank.rowNumbered]] — the two-pass distributed
     * rank (per-partition counts + offset join) over the per-customer
     * entity grain; the formula is unchanged. */
-  private val qGini: Q = (s, sf) => {
+  private[queries] val qGini: Q = (s, sf) => {
     val sp = t(s, sf, "orders").groupBy("o_custkey")
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cc"))
       .select(col("o_custkey"), expr("(cc + 50) DIV 100").as("x"))
@@ -3452,7 +3452,7 @@ object Queries {
     * windows over the per-supplier aggregate; an item pair's first
     * common depth is max(r_rev, r_cnt), so overlap@d is one cumulative
     * count — the whole metric runs on a ≤20-row grid. */
-  private val qRbo: Q = (s, sf) => {
+  private[queries] val qRbo: Q = (s, sf) => {
     val li = t(s, sf, "lineitem").groupBy("l_suppkey")
       .agg(sum(round(col("l_extendedprice") * 100).cast("long")).as("rev"),
         count(lit(1)).as("cnt"))
@@ -3479,7 +3479,7 @@ object Queries {
   /** Day-of-week revenue profile (Monday=0): share and index vs the
     * uniform week — the seasonality fingerprint. Integer-cents sums;
     * broadcast total; doubles only in the two shared ratios. */
-  private val qDowProfile: Q = (s, sf) => {
+  private[queries] val qDowProfile: Q = (s, sf) => {
     val d = t(s, sf, "orders")
       .groupBy(weekday(col("o_orderdate")).as("dow"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("c"))
@@ -3495,7 +3495,7 @@ object Queries {
     * contingency grid, then V = √(χ²/(n·min(r−1,c−1)))). Observed and
     * marginal counts are exact; expected frequencies and χ² are doubles
     * on the tiny grid only. */
-  private val qCramersV: Q = (s, sf) => {
+  private[queries] val qCramersV: Q = (s, sf) => {
     val c = t(s, sf, "customer")
     val obs = c.groupBy("c_nationkey", "c_mktsegment")
       .agg(count(lit(1)).as("o")).localCheckpoint(true)
@@ -3530,7 +3530,7 @@ object Queries {
     * the same k-th element by full sort — different algorithm, same
     * answer. Lower median ((n+1) DIV 2, event_id tie-break) so the
     * selected element is unique and engine-independent. */
-  private val qExactMedian: Q = (s, sf) => {
+  private[queries] val qExactMedian: Q = (s, sf) => {
     val e = t(s, sf, "events").select(col("value").as("v"), col("event_id"))
       .localCheckpoint(true) // grid agg + total count + bin filter
     val grid = e.groupBy(floor(col("v")).cast("long").as("g"))
@@ -3560,7 +3560,7 @@ object Queries {
     * is EQUI on (customer, integer band) so candidates only form inside
     * same-band groups; the date window is a residual filter. Never
     * cartesian at any scale. */
-  private val qDupPayments: Q = (s, sf) => {
+  private[queries] val qDupPayments: Q = (s, sf) => {
     val o = t(s, sf, "orders").select(col("o_orderkey").as("ok"),
       col("o_custkey").as("ck"),
       expr("CAST(round(o_totalprice * 100) AS BIGINT) DIV 1000000").as("c"),
@@ -3579,7 +3579,7 @@ object Queries {
     * per-user min, one per-day count, one window over the bounded day
     * grid. The naive per-day COUNT(DISTINCT ... WHERE ts <= day) rescans
     * the corpus per day; this is linear + O(days) state. */
-  private val qCumUniques: Q = (s, sf) => {
+  private[queries] val qCumUniques: Q = (s, sf) => {
     val f = t(s, sf, "events")
       .groupBy("user_id").agg(min(to_date(col("ts"))).as("d0"))
     val daily = f.groupBy("d0").agg(count(lit(1)).as("nu"))
@@ -3597,7 +3597,7 @@ object Queries {
     * the share denominator costs no second pass. Both engines assign
     * ntile remainders to the leading buckets identically given the same
     * total order. */
-  private val qLorenz: Q = (s, sf) => {
+  private[queries] val qLorenz: Q = (s, sf) => {
     val sp = t(s, sf, "orders").groupBy("o_custkey")
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cc"))
       .select(col("o_custkey"), expr("(cc + 50) DIV 100").as("x"))
@@ -3617,7 +3617,7 @@ object Queries {
     * floats, and rounds-as-semantic is what makes it oracle-able, the
     * [[qPagerank]] posture). Top-20 authorities with their scores. Per
     * round one equi join + one partial agg — the pagerank shuffle shape. */
-  private val qHits: Q = (s, sf) => {
+  private[queries] val qHits: Q = (s, sf) => {
     val e = t(s, sf, "orders")
       .join(t(s, sf, "lineitem"), col("o_orderkey") === col("l_orderkey"))
       .select((col("o_custkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
@@ -3634,7 +3634,7 @@ object Queries {
     * quantity domain is a BOUNDED grid, so the cumulative-weight scan is
     * a window over ≤50 grid rows after one partial agg: selection
     * without sorting the facts, exact int64 throughout. */
-  private val qWeightedMedian: Q = (s, sf) => {
+  private[queries] val qWeightedMedian: Q = (s, sf) => {
     val g = t(s, sf, "lineitem")
       .groupBy(col("l_quantity").cast("long").as("q"))
       .agg(sum(round(col("l_extendedprice") * 100).cast("long")).as("w"))
@@ -3651,7 +3651,7 @@ object Queries {
     * report): two bounded ranking windows over the per-nation-year
     * aggregate, joined on nation — rank deltas in one pass over facts.
     * Integer cents; ranks total-ordered by (revenue desc, nation). */
-  private val qRankChange: Q = (s, sf) => {
+  private[queries] val qRankChange: Q = (s, sf) => {
     val r = t(s, sf, "orders")
       .join(t(s, sf, "customer"), col("o_custkey") === col("c_custkey"))
       .filter(year(col("o_orderdate")).between(1996, 1997))
@@ -3672,7 +3672,7 @@ object Queries {
     * board: each order classifies by whether its month is the customer's
     * FIRST order month (one per-customer min, broadcast-joined back;
     * facts never self-join). Integer cents. */
-  private val qNewVsReturning: Q = (s, sf) => {
+  private[queries] val qNewVsReturning: Q = (s, sf) => {
     val o = t(s, sf, "orders").select(col("o_custkey"),
       date_trunc("month", col("o_orderdate")).cast("date").as("mo"),
       round(col("o_totalprice") * 100).cast("long").as("c"))
@@ -3693,7 +3693,7 @@ object Queries {
     * hash buckets, each leave-one-out mean is algebra over the SAME
     * per-bucket partial sums a single aggregate produces). Sums are
     * exact integer cents; only the B-term SE formula is double. */
-  private val qJackknife: Q = (s, sf) => {
+  private[queries] val qJackknife: Q = (s, sf) => {
     val o = t(s, sf, "orders").select(
       pmod(conv(substring(md5(concat_ws(":", lit("jk"), col("o_orderkey"))),
         1, 15), 16, 10).cast("long"), lit(32L)).as("b"),
@@ -3729,7 +3729,7 @@ object Queries {
     * (click vs purchase) — the estimator ops teams use to size a
     * population neither capture covers fully. Exact distinct counts;
     * one shared double formula. */
-  private val qCaptureRecapture: Q = (s, sf) => {
+  private[queries] val qCaptureRecapture: Q = (s, sf) => {
     val e = t(s, sf, "events")
     // capture = "seen >= 10 times": plain distinct-per-type is degenerate
     // on this corpus (every user has every type, na = nb = m and the
@@ -3754,7 +3754,7 @@ object Queries {
     * information). Same bounded contingency grid as [[qCramersV]];
     * p·ln(p/(pᵢpⱼ)) terms quantize to integer nano-units before the sum
     * (the [[qPsi]] discipline). */
-  private val qMutualInfo: Q = (s, sf) => {
+  private[queries] val qMutualInfo: Q = (s, sf) => {
     val obs = t(s, sf, "customer")
       .groupBy("c_nationkey", "c_mktsegment")
       .agg(count(lit(1)).as("o")).localCheckpoint(true)
@@ -3777,7 +3777,7 @@ object Queries {
     * dominate. Weights quantize to integer milli-units; the squared-sum
     * accumulates in decimal(38,0) (an int64 Σw² would wrap at ~2e9 rows
     * of max-weight data; DuckDB's HUGEINT sum is the same posture). */
-  private val qEss: Q = (s, sf) => {
+  private[queries] val qEss: Q = (s, sf) => {
     val w = t(s, sf, "events")
       .select(round(col("value") * 1000).cast("long").as("w"))
       .filter(col("w") > 0)
@@ -3795,7 +3795,7 @@ object Queries {
     * each pair by floor(jac·10), then a 3-row cumulative over the
     * bucket grid. The curve that picks a dedup threshold without
     * re-running the pair join per candidate τ. */
-  private val qDedupCurve: Q = (s, sf) => {
+  private[queries] val qDedupCurve: Q = (s, sf) => {
     val pairs = Dedup.jaccardPairs(
       t(s, sf, "documents").filter(col("doc_id") < 200),
       "doc_id", "lang", "text", 0.7)
@@ -3815,7 +3815,7 @@ object Queries {
     * running occupancy, and its max is the user's peak concurrency.
     * Output = the peak-concurrency histogram (capacity planning). All
     * integer, windows per user, never global. */
-  private val qConcurrency: Q = (s, sf) => {
+  private[queries] val qConcurrency: Q = (s, sf) => {
     val e = t(s, sf, "events").select(col("user_id"), col("event_id"),
       unix_micros(col("ts")).as("st"),
       (unix_micros(col("ts")) +
@@ -3836,7 +3836,7 @@ object Queries {
     * distribution WITHOUT log: the bucket is the DIGIT COUNT of integer
     * cents (exact, no float log that can misbucket at power-of-10
     * boundaries — the q_benford digit discipline applied to magnitude). */
-  private val qMagnitudeHist: Q = (s, sf) => {
+  private[queries] val qMagnitudeHist: Q = (s, sf) => {
     val c = round(col("o_totalprice") * 100).cast("long")
     t(s, sf, "orders").select(c.as("c")).filter(col("c") > 0)
       .groupBy(length(col("c").cast("string")).as("digits"))
@@ -3848,7 +3848,7 @@ object Queries {
     * frame over the INTEGER day index of the bounded day grid — days
     * with no orders correctly widen the window (a ROWS frame would
     * not), and the window state is O(days), the facts never sort. */
-  private val qRollingRev: Q = (s, sf) => {
+  private[queries] val qRollingRev: Q = (s, sf) => {
     val d = dailyRevenueCents(s, sf)
       .localCheckpoint(true) // window branch + min-day branch
     val d0 = d.agg(min("dy").as("d0"))
@@ -3865,7 +3865,7 @@ object Queries {
     * effect size): the OR itself is a ratio of exact integer products;
     * only the Woolf log-SE and CI bounds are doubles, in one shared
     * spelling. */
-  private val qOddsRatio: Q = (s, sf) => {
+  private[queries] val qOddsRatio: Q = (s, sf) => {
     val g = armCounts(s, sf)
     val or = (col("ka") * (col("nb") - col("kb"))).cast("double") /
       (col("kb") * (col("na") - col("ka"))).cast("double")
@@ -3886,7 +3886,7 @@ object Queries {
     * serializes at scale — which also carries the base-rate totals
     * (Σy, n) so no second pass over the user frame. Exact counts, one
     * shared double ratio. */
-  private val qLift: Q = (s, sf) => {
+  private[queries] val qLift: Q = (s, sf) => {
     val u = t(s, sf, "events").groupBy("user_id")
       .agg(sum(round(col("value") * 1000).cast("long")).as("sc"),
         max((col("event_type") === "purchase").cast("long")).as("y"))
@@ -3909,7 +3909,7 @@ object Queries {
     * can flip a day at the boundary; window state is O(days) on the
     * bounded grid (RANGE frame ending 1 PRECEDING: the day never
     * baselines itself). */
-  private val qAnomalyDays: Q = (s, sf) => {
+  private[queries] val qAnomalyDays: Q = (s, sf) => {
     val d = dailyRevenueCents(s, sf)
       .select(col("dy"), expr("(c + 50000) DIV 100000").as("c"))
     val d0 = d.agg(min("dy").as("d0"))
@@ -3930,7 +3930,7 @@ object Queries {
   /** Reach & frequency histogram (the advertising readout): how many
     * users saw 1–5, 6–10, … events — one per-user count, one bounded
     * bucket agg ((n−1) DIV 5, exact). */
-  private val qFreqHist: Q = (s, sf) => {
+  private[queries] val qFreqHist: Q = (s, sf) => {
     val u = t(s, sf, "events").groupBy("user_id")
       .agg(count(lit(1)).as("n"))
     u.groupBy(expr("(n - 1) DIV 5").as("bucket"))
@@ -3942,7 +3942,7 @@ object Queries {
     * types, how many users use BOTH — the cross-sell / co-adoption
     * board. The pair join is over the DISTINCT (user, type) frame
     * (≤ users × 5 rows), equi on user, canonical a < b ordering. */
-  private val qAdoptionOverlap: Q = (s, sf) => {
+  private[queries] val qAdoptionOverlap: Q = (s, sf) => {
     val ut = t(s, sf, "events")
       .select(col("user_id"), col("event_type")).distinct()
       .localCheckpoint(true) // both sides of the pair join
@@ -3973,7 +3973,7 @@ object Queries {
     * kills row recursion at 100 TB — materialize the bounded frame once
     * (measured here: 7.5 s → 2.9 s at sf0.1; the rest is the ~0.1 s/round
     * fixed UnionLoop scheduling cost, amortized at real per-step volume). */
-  private val qRcteDecay: Q = (s, sf) => {
+  private[queries] val qRcteDecay: Q = (s, sf) => {
     val grid = t(s, sf, "orders")
       .groupBy((year(col("o_orderdate")) * 4 + quarter(col("o_orderdate")))
         .cast("long").as("q"))
@@ -4002,7 +4002,7 @@ object Queries {
     * does, so the per-node min depth is oracle-exact. The engine-loop
     * form of this workload is [[operators.Components.bfsDistances]]
     * (q_bfs); this row pins the user-facing SQL syntax. */
-  private val qRcteReach: Q = (s, sf) =>
+  private[queries] val qRcteReach: Q = (s, sf) =>
     withViews(s, "g_rcte_edges" -> tradeEdges(s, sf)) { case Seq(e) =>
       s"""WITH RECURSIVE reach(node, depth) AS (
          |  SELECT DISTINCT s, CAST(0 AS BIGINT) FROM $e WHERE s < 20
@@ -4024,7 +4024,7 @@ object Queries {
     * integer identity (2·avg over a consecutive run), so the rank sum
     * R2a = Σ ca·(min+max) is bit-stable int64 and only the final z is a
     * double, in one shared spelling with the tie-corrected variance. */
-  private val qMannwhitney: Q = (s, sf) => {
+  private[queries] val qMannwhitney: Q = (s, sf) => {
     val u = t(s, sf, "events").groupBy("user_id")
       .agg(sum(round(col("value") * 1000).cast("long")).as("sc"))
       .withColumn("a", (col("user_id") % 2 === 0).cast("long"))
@@ -4049,7 +4049,7 @@ object Queries {
     * int64 to ~2.9e9 rows — beyond that, swap the moment columns to
     * DECIMAL(38,0) like [[Validate]]'s z-pass) and ONE shared double
     * spelling for mean/variance/t/df, each rounded. */
-  private val qWelch: Q = (s, sf) => {
+  private[queries] val qWelch: Q = (s, sf) => {
     val m = t(s, sf, "events").select(
         (col("user_id") % 2 === 0).as("arma"),
         round(col("value") * 100).cast("long").as("v"))
@@ -4088,7 +4088,7 @@ object Queries {
     * engines. Lifetimes use floor-second epochs DIV 3600 — the one hour
     * arithmetic Spark's long cast and DuckDB's date_diff('second') agree
     * on exactly. */
-  private val qSurvival: Q = (s, sf) => {
+  private[queries] val qSurvival: Q = (s, sf) => {
     val e = t(s, sf, "events")
     val per = e.groupBy("user_id").agg(min(col("ts")).as("t0"),
       min(when(col("event_type") === "purchase", col("ts"))).as("tp"))
@@ -4124,7 +4124,7 @@ object Queries {
     * the 5-row type-total dimension and the 1-row user total attach
     * broadcast. Counts exact; the three ratios are shared double
     * spellings, rounded. */
-  private val qAssocRules: Q = (s, sf) => {
+  private[queries] val qAssocRules: Q = (s, sf) => {
     val ut = t(s, sf, "events")
       .select(col("user_id"), col("event_type")).distinct()
       .localCheckpoint(true) // pair join sides + totals share it
@@ -4162,7 +4162,7 @@ object Queries {
     * n·(2n)² passes int64 around n≈2²¹ — far below 100 TB's customer
     * count — and only the final ratio is a double, rounded where both
     * engines agree bit-for-bit on exact integer inputs. */
-  private val qSpearman: Q = (s, sf) => {
+  private[queries] val qSpearman: Q = (s, sf) => {
     val f = t(s, sf, "orders").groupBy(col("o_custkey").as("c"))
       .agg(count(lit(1)).as("x"),
         sum(round(col("o_totalprice") * 100).cast("long")).as("y"))
@@ -4196,7 +4196,7 @@ object Queries {
     * customers) and each segment's total stays int64 (safe to ~10¹⁸
     * total cents ≈ $10 quadrillion). One equi-join orders→customer, two
     * hash aggregates — every stage map-side partial, no window at all. */
-  private val qHhi: Q = (s, sf) => {
+  private[queries] val qHhi: Q = (s, sf) => {
     val cust = t(s, sf, "customer")
       .select(col("c_custkey"), col("c_mktsegment").as("seg"))
     val per = t(s, sf, "orders")
@@ -4226,7 +4226,7 @@ object Queries {
     * The matched timestamp rides along as a duplicated carry column
     * (vts2) because the operator returns carry fields only. Δt is exact
     * µs-epoch arithmetic (unix_micros ≡ DuckDB epoch_us). */
-  private val qAsofNearest: Q = (s, sf) => {
+  private[queries] val qAsofNearest: Q = (s, sf) => {
     val ev = t(s, sf, "events")
     val err = ev.filter(col("event_type") === "error")
       .select(col("user_id"), col("ts"), col("event_id"))
@@ -4267,7 +4267,7 @@ object Queries {
     * means quantize to integer milli-cents before the cross-replicate
     * moments (the q_jackknife discipline); squared sums ride decimal ≡
     * HUGEINT. */
-  private val qBootstrap: Q = (s, sf) => {
+  private[queries] val qBootstrap: Q = (s, sf) => {
     val B = 32
     val o = t(s, sf, "orders")
       .select(col("o_orderkey"),
@@ -4308,7 +4308,7 @@ object Queries {
     * 1e-9-quantized to int64 BEFORE summing (the q_survival discipline),
     * so pair scores are bit-stable integers and the top-20 boundary is
     * total under (cn, aa, a, b). */
-  private val qLinkpred: Q = (s, sf) => {
+  private[queries] val qLinkpred: Q = (s, sf) => {
     val byOrder = Spread.auto(t(s, sf, "lineitem"), "l_orderkey")
       .groupBy("l_orderkey")
       .agg(sort_array(array_distinct(collect_list(col("l_partkey").cast("long"))))
@@ -4335,7 +4335,7 @@ object Queries {
     * labeling lesson). tri and deg are exact ints; cc is one shared
     * double ratio rounded to 6, and the top-15 boundary tie-breaks on
     * node id. */
-  private val qClusterCoeff: Q = (s, sf) => {
+  private[queries] val qClusterCoeff: Q = (s, sf) => {
     // not spread: the keyed Spread.auto of q_linkpred won < 10% here in a
     // 10-pair A/B at 4 cores (SPARK_GRAFT_SPREAD=0 vs on)
     val canon = t(s, sf, "lineitem")
@@ -4375,7 +4375,7 @@ object Queries {
     * which truncates toward zero in BOTH engines (Spark `div` ≡ DuckDB
     * `//`, verified on negative detrended values), so the decomposition
     * is bit-exact with no float anywhere. */
-  private val qStl: Q = (s, sf) => {
+  private[queries] val qStl: Q = (s, sf) => {
     val g = t(s, sf, "orders")
       .groupBy(date_trunc("month", col("o_orderdate")).cast("date").as("mon"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("rev"))
@@ -4411,7 +4411,7 @@ object Queries {
     * monthly spelling cost 24 s at ANY sf — grid length, not data volume,
     * is what a recursive query pays for). forecast_next is the
     * one-step-ahead point forecast lvl+tr. */
-  private val qHolt: Q = (s, sf) =>
+  private[queries] val qHolt: Q = (s, sf) =>
     withViews(s, "g_holt_quarterly" -> holtQuarterlyGrid(s, sf)) {
       case Seq(g) => holtRecursionSql(g) +
         " SELECT m, lvl, tr, lvl + tr AS forecast_next FROM h ORDER BY m"
@@ -4433,7 +4433,7 @@ object Queries {
     * [[holtRecursionSql]] (DIV truncates toward zero in both engines,
     * verified on negative trend states); grid checkpointed once (the
     * UnionLoop re-scan amplification documented at q_rcte_decay). */
-  private val qHoltGrouped: Q = (s, sf) => {
+  private[queries] val qHoltGrouped: Q = (s, sf) => {
     val rev = t(s, sf, "orders")
       .join(t(s, sf, "customer"), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment").as("seg"),
@@ -4507,7 +4507,7 @@ object Queries {
     * double spelling. Plan: posexplode → (label, dim) partial aggregate →
     * broadcast centroid join → per-vector aggregate; the only shuffles
     * carry dims × labels and vectors, never pairs. */
-  private val qEmbedOutlier: Q = (s, sf) => {
+  private[queries] val qEmbedOutlier: Q = (s, sf) => {
     val comp = t(s, sf, "embeddings")
       .select(col("vec_id"), col("label"),
         posexplode(col("embedding")).as(Seq("i", "v")))
@@ -4542,7 +4542,7 @@ object Queries {
     * pinned by RankSpec). Output is the bounded 125-cell (r,f,m) census
     * with exact counts and cents. The reference date is the global max
     * order date, attached as a broadcast scalar. */
-  private val qRfm: Q = (s, sf) => {
+  private[queries] val qRfm: Q = (s, sf) => {
     val o = t(s, sf, "orders")
     val maxd = o.agg(max(col("o_orderdate")).as("maxd"))
     val per = o.groupBy("o_custkey")
@@ -4573,7 +4573,7 @@ object Queries {
     * regression moments accumulate exactly — Σx/Σy in int64, the
     * products in decimal(38,0) ≡ HUGEINT. Slope and intercept are one
     * shared double ratio each. */
-  private val qZipf: Q = (s, sf) => {
+  private[queries] val qZipf: Q = (s, sf) => {
     val freq = t(s, sf, "documents")
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")
@@ -4610,7 +4610,7 @@ object Queries {
     * predicted frame is checkpointed once and feeds all three aggregates
     * (totals, row marginals, column marginals); the marginal join is
     * |labels|², a few rows at any scale. */
-  private val qKappa: Q = (s, sf) => {
+  private[queries] val qKappa: Q = (s, sf) => {
     def dec(c: Column) = c.cast("decimal(38,0)")
     val base = t(s, sf, "documents")
       .select(col("lang"), TextAnalysis.languageId("text").as("pred"))
@@ -4643,7 +4643,7 @@ object Queries {
     * sides of a .xx5 midpoint (sf0.1 cohort 23971 age 11:
     * 635250.45499… → .46 vs .45, caught by the round-10 strict gate).
     * floor on the same double is the q_embed_outlier playbook. */
-  private val qCohortLtv: Q = (s, sf) => {
+  private[queries] val qCohortLtv: Q = (s, sf) => {
     val o = t(s, sf, "orders")
       .select(col("o_custkey"),
         (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
@@ -4675,7 +4675,7 @@ object Queries {
     * [[operators.TextAnalysis.bpeTokenCounts]]; word/piece sums are
     * exact int64 per language (a 5-row aggregate), fertility is the one
     * shared rounded ratio. */
-  private val qFertility: Q = (s, sf) => {
+  private[queries] val qFertility: Q = (s, sf) => {
     val (_, nb) = TextAnalysis.bpeTokenCounts("text",
       Seq(("e", "r"), ("i", "n"), ("o", "w")))
     t(s, sf, "documents")
@@ -4702,7 +4702,7 @@ object Queries {
     * pathological broken-split case SRM exists to flag — must still
     * contribute its (0 − n·w)² cell rather than silently dropping it.
     * srm flags chi2 > 13.816 (χ²₀.₉₉₉, df=2). */
-  private val qSrm: Q = (s, sf) => {
+  private[queries] val qSrm: Q = (s, sf) => {
     def dec(c: Column) = c.cast("decimal(38,0)")
     val dim = s.createDataFrame(
       Seq(("train", 90L), ("val", 5L), ("test", 5L))).toDF("split", "w")
@@ -4739,7 +4739,7 @@ object Queries {
     * horizon. One distinct pass over events, one per-user window
     * (entity-PARTITIONED — as many concurrent tasks as users hash to),
     * then a bounded day-grid census. All counts exact. */
-  private val qGrowthAccounting: Q = (s, sf) => {
+  private[queries] val qGrowthAccounting: Q = (s, sf) => {
     val um = t(s, sf, "events")
       .select(col("user_id"),
         datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("m"))
@@ -4772,7 +4772,7 @@ object Queries {
     * q_growth_accounting): one distinct (user, day) pass, then day- and
     * week-grid aggregates; avg_dau and stickiness are exact-integer
     * ratios with one shared double spelling each. */
-  private val qStickiness: Q = (s, sf) => {
+  private[queries] val qStickiness: Q = (s, sf) => {
     val wk = expr("datediff(dy, date'1970-01-01') div 7")
     val ud = t(s, sf, "events")
       .select(col("user_id"), to_date(col("ts")).as("dy"))
@@ -4800,7 +4800,7 @@ object Queries {
     * family). All three rankings share the deterministic top-10 boundary
     * (ORDER BY rounded cos, vec_id), so the intersection counts are
     * exact; the 10-row result frames join trivially. */
-  private val qAnnRecall: Q = (s, sf) => {
+  private[queries] val qAnnRecall: Q = (s, sf) => {
     val emb = t(s, sf, "embeddings")
     val exact = Similarity.cosineTopK(emb, "vec_id", "embedding", 0L, 10)
       .select(col("vec_id"))
@@ -4834,7 +4834,7 @@ object Queries {
     * int64 around 10⁵ parts). One fact aggregate, one self-equi-join on
     * part against the broadcast-scalar base year, three shared double
     * ratios. */
-  private val qPriceIndex: Q = (s, sf) => {
+  private[queries] val qPriceIndex: Q = (s, sf) => {
     def dec(c: Column) = c.cast("decimal(38,0)")
     val py = t(s, sf, "lineitem")
       .groupBy(col("l_partkey").as("pk"), year(col("l_shipdate")).as("y"))
@@ -4879,7 +4879,7 @@ object Queries {
     * execution error instead. The event frame is checkpointed once for
     * its two consumers (treatment flags, outcome sums); the universe
     * count reads the flag checkpoint. */
-  private val qDid: Q = (s, sf) => {
+  private[queries] val qDid: Q = (s, sf) => {
     val d0 = t(s, sf, "events").agg(min(to_date(col("ts"))).as("d0"))
     val ev = t(s, sf, "events")
       .crossJoin(broadcast(d0))
@@ -4934,7 +4934,7 @@ object Queries {
     * identical in both engines) so the averages are exact-int ratios,
     * and mase = Σholt/Σnaive < 1 means the model beats carry-forward.
     * Same checkpointed quarter grid + UnionLoop recursion as q_holt. */
-  private val qBacktest: Q = (s, sf) =>
+  private[queries] val qBacktest: Q = (s, sf) =>
     withViews(s, "g_backtest_quarterly" -> holtQuarterlyGrid(s, sf)) {
       case Seq(g) => holtRecursionSql(g) +
       s""",
@@ -4967,7 +4967,7 @@ object Queries {
     * TakeOrdered — the 100 TB shape; the id filter pushes to the scan,
     * the label exclusion evaluates against the broadcast query row
     * during the scan-side join. */
-  private val qHardNegatives: Q = (s, sf) =>
+  private[queries] val qHardNegatives: Q = (s, sf) =>
     Similarity.cosineTopK(t(s, sf, "embeddings"), "vec_id", "embedding",
       0L, 10, excludeLabel = Some("label"))
 
@@ -4987,7 +4987,7 @@ object Queries {
     * volume. Quality and repetition are the module's floor-quantized
     * scores (bit-identical cross-engine; same spellings as
     * q_quality/q_repetition). */
-  private val qCorpusPipeline: Q = (s, sf) =>
+  private[queries] val qCorpusPipeline: Q = (s, sf) =>
     CorpusModule.graph(minQuality = 0.5, maxRepetition = 0.9,
         langs = Seq("en"))
       .run(Map("docs" -> t(s, sf, "documents")))("kept")
@@ -5008,7 +5008,7 @@ object Queries {
     * new day's scan, never the backlog's, and the per-delta plans are
     * the same scan-speed narrow stages + one dedupe shuffle as the batch
     * row. */
-  private val qCorpusIncr: Q = (s, sf) => {
+  private[queries] val qCorpusIncr: Q = (s, sf) => {
     val docs = t(s, sf, "documents")
     val blk = Map(
       "b0" -> docs.filter(col("doc_id") % 2 === 0),
@@ -5038,7 +5038,7 @@ object Queries {
     * threshold is an integer-ratio compare (inter/(na+nb−inter), same
     * int64 counts both engines), so the edge set — and hence the cluster
     * keepers — are bit-identical cross-engine. */
-  private val qCorpusNeardup: Q = (s, sf) => {
+  private[queries] val qCorpusNeardup: Q = (s, sf) => {
     val docs = t(s, sf, "documents").filter(col("doc_id") < 200)
     CorpusModule.graph(minQuality = 0.5, maxRepetition = 0.9,
       langs = Seq("en"), nearDupJaccard = Some(0.9))
@@ -5061,7 +5061,7 @@ object Queries {
     * oracle's pair CTE is all-pairs and the synthetic corpus is
     * pathologically near-dup; the engine path is the same sub-quadratic
     * ladder as the batch row. */
-  private val qCorpusIncrNeardup: Q = (s, sf) => {
+  private[queries] val qCorpusIncrNeardup: Q = (s, sf) => {
     val docs = t(s, sf, "documents").filter(col("doc_id") < 400)
     val blk = Map(
       "b0" -> docs.filter(col("doc_id") % 2 === 0),
@@ -5095,7 +5095,7 @@ object Queries {
     * the operator's result exactly. At 100 TB this is the production
     * ingest shape: the index append costs the new block's scan, the
     * probe costs O(delta + matches) through band-partitioned files. */
-  private val qCorpusIndexProbe: Q = (s, sf) => {
+  private[queries] val qCorpusIndexProbe: Q = (s, sf) => {
     val numHashes = 8
     val bands = 2
     val docs = t(s, sf, "documents")
@@ -5146,7 +5146,7 @@ object Queries {
     * parse-once/binary-encoded — N path accesses cost N cheap binary
     * probes instead of N full JSON string re-parses, and the shape stays
     * narrow + codegen'd (no shuffle before the final aggregate). */
-  private val qVariant: Q = (s, sf) => {
+  private[queries] val qVariant: Q = (s, sf) => {
     val doc = to_json(struct(
       col("event_type").as("t"),
       struct(col("user_id").as("u"), col("value").as("v")).as("m"),
@@ -5190,7 +5190,7 @@ object Queries {
     * binds it query-scoped and drops it after the eager analysis
     * (round-9 ADVICE: a session-global `lineitem` view would capture
     * whichever SF ran last for any later catalog resolver). */
-  private val qSqlPipe: Q = (s, sf) =>
+  private[queries] val qSqlPipe: Q = (s, sf) =>
     withViews(s, "lineitem_pipe" -> t(s, sf, "lineitem")) { case Seq(v) =>
       s"""FROM $v
           |> WHERE l_quantity > 10
@@ -5211,7 +5211,7 @@ object Queries {
     * (legitimately nondeterministic under parallelism — same reason
     * first() isn't in any oracle); the oracle mirrors with explicit
     * lower() grouping. One hash aggregate, map-side partials intact. */
-  private val qCollation: Q = (s, sf) =>
+  private[queries] val qCollation: Q = (s, sf) =>
     t(s, sf, "part")
       .select(
         when(col("p_partkey") % 2 === 0, upper(col("p_brand")))
@@ -5228,7 +5228,7 @@ object Queries {
     * here as array_join(array_sort(collect_set(...))) ([[qStringAgg]]).
     * DISTINCT + the explicit WITHIN GROUP order make the concatenation
     * deterministic under any partitioning/merge order. */
-  private val qListagg: Q = (s, sf) =>
+  private[queries] val qListagg: Q = (s, sf) =>
     t(s, sf, "orders")
       .groupBy("o_orderpriority")
       .agg(expr("listagg(DISTINCT o_orderstatus, '|') " +
@@ -5271,7 +5271,7 @@ object Queries {
         Option(m("n_chars_sum")).map(_.asInstanceOf[Long]))
     }
 
-  private val qCorpusObserved: Q = (s, sf) => {
+  private[queries] val qCorpusObserved: Q = (s, sf) => {
     import s.implicits._
     val (g, h) = Observed.instrument(
       CorpusModule.graph(minQuality = 0.5, maxRepetition = 0.9,
@@ -5298,7 +5298,7 @@ object Queries {
     * proves per-run observability is exact, not sampled. 100 TB: one
     * pass per run (gauges are accumulator-merged on the delta's job),
     * and a run costs its fresh block's scan, never the backlog's. */
-  private val qCorpusIncrObserved: Q = (s, sf) => {
+  private[queries] val qCorpusIncrObserved: Q = (s, sf) => {
     import s.implicits._
     val docs = t(s, sf, "documents")
     val blk = Seq(
@@ -5347,7 +5347,7 @@ object Queries {
       .orderBy("id").limit(100)
   }
 
-  private val qCorpusStream: Q = (s, sf) => streamCell("corpusstream",
+  private[queries] val qCorpusStream: Q = (s, sf) => streamCell("corpusstream",
     CorpusModule.graph(minQuality = 0.5, maxRepetition = 0.9),
     t(s, sf, "documents"))
 
@@ -5366,7 +5366,7 @@ object Queries {
     * bound as that row (the oracle's pair closure is an all-pairs
     * recursive CTE; the engine side is the sub-quadratic indexed
     * ladder). */
-  private val qCorpusStreamNeardup: Q = (s, sf) =>
+  private[queries] val qCorpusStreamNeardup: Q = (s, sf) =>
     streamCell("corpusstreamnd",
       CorpusModule.graph(minQuality = 0.5, maxRepetition = 0.9,
         nearDupJaccard = Some(0.9)),
@@ -5386,7 +5386,7 @@ object Queries {
     * Scale: per round one narrow codegen'd assignment scan + one
     * k·dim-row shuffle; centroids are bounded driver state (k·dim
     * longs, the [[operators.Ivf.train]] pattern). */
-  private val qKmeans: Q = (s, sf) => {
+  private[queries] val qKmeans: Q = (s, sf) => {
     val emb = t(s, sf, "embeddings")
     val cent = KMeans.train(emb, "vec_id", "embedding", k = 4, iters = 3)
     KMeans.census(emb, "vec_id", "embedding", cent).orderBy("cell")
@@ -5401,7 +5401,7 @@ object Queries {
     * cross-multiplied away. The oracle re-derives the same labeling
     * with q_communities' unrolled LPA rounds, then spells the same
     * integer identity. */
-  private val qModularity: Q = (s, sf) => {
+  private[queries] val qModularity: Q = (s, sf) => {
     val oi = tradeOriented(s, sf) // ONE graph definition with q_communities
     val e = oi.union(oi.select(col("d"), col("s")))
     val labels = Components.labelPropagation(e, "s", "d", rounds = 3)
@@ -5417,7 +5417,7 @@ object Queries {
     * operator's file-count guarantee (output files ≤ ceil(bytes/target),
     * true at EVERY scale) into the oracled row. Timed cost deliberately
     * includes the rewrite: the amortized write IS the operator. */
-  private val qCompact: Q = (s, sf) => {
+  private[queries] val qCompact: Q = (s, sf) => {
     val dir = scratchDir("compact")
     // fixture: ~64 small files, but from a CAPPED writer pool —
     // maxRecordsPerFile rolls each of the 8 writer tasks over every
@@ -5466,7 +5466,7 @@ object Queries {
     * into part-NNNNN-…c000/c001 siblings, and a run of equal keys can
     * then straddle two files of the SAME partition), so the per-file
     * spelling would oracle an accident of writer config. */
-  private val qSortedLayout: Q = (s, sf) => {
+  private[queries] val qSortedLayout: Q = (s, sf) => {
     val dir = scratchDir("sorted")
     Layout.sortedBy(t(s, sf, "lineitem")
         .select("l_orderkey", "l_linestatus", "l_quantity"),
@@ -5508,7 +5508,7 @@ object Queries {
     * distinct counts plus `est_ok` — the sketch estimate's 5%-or-±3
     * bound as a VALUE (oracle says literal TRUE), so a drifting sketch
     * merge fails the hash compare, not just an in-plan assert. */
-  private val qHllRollup: Q = (s, sf) => {
+  private[queries] val qHllRollup: Q = (s, sf) => {
     val ev = t(s, sf, "events")
     val daySketch = ev
       .groupBy(to_date(col("ts")).as("day"))
@@ -5536,7 +5536,7 @@ object Queries {
     * (2 + dim + dim²)-long buffer per map task, never a re-keyed corpus
     * row; the 64×64 matrix and the power rounds are bounded driver
     * state, so at 100 TB this costs one aggregation pass. */
-  private val qEmbedPc1: Q = (s, sf) =>
+  private[queries] val qEmbedPc1: Q = (s, sf) =>
     Pca.dominantDirection(t(s, sf, "embeddings"), "vec_id", "embedding",
       iters = 3).orderBy("i")
 
@@ -5599,7 +5599,7 @@ object Queries {
       .selectExpr("week", "est_users",
         "(rho * est_u) div nu AS est_overlap")
 
-  private val qKmvOverlap: Q = (s, sf) => {
+  private[queries] val qKmvOverlap: Q = (s, sf) => {
     val k = kmvK
     val kmv = udaf(new graft.functions.KmvAgg(k),
       org.apache.spark.sql.Encoders.scalaLong)
@@ -5666,7 +5666,7 @@ object Queries {
     * of items/weights/n/err through a file and back into
     * QSketchMergeAgg) is exactly the path a deployment runs, so it is
     * in the oracled row, not just a unit test. */
-  private val qQuantileRollup: Q = (s, sf) => {
+  private[queries] val qQuantileRollup: Q = (s, sf) => {
     val cap = 128
     val skAgg = udaf(new graft.functions.QSketchAgg(cap),
       org.apache.spark.sql.Encoders.scalaDouble)
@@ -5733,7 +5733,7 @@ object Queries {
     * ORDER-BY-LIMIT rebuild per (week, horizon); exact riders along.
     * 100 TB: the artifact write is amortized once; the horizon fan-out
     * multiplies sketch-table rows (days × horizons), never event rows. */
-  private val qKmvHorizons: Q = (s, sf) => {
+  private[queries] val qKmvHorizons: Q = (s, sf) => {
     val kmv = udaf(new graft.functions.KmvAgg(kmvK),
       org.apache.spark.sql.Encoders.scalaLong)
     val dir = scratchDir("kmvhz")
@@ -5782,7 +5782,7 @@ object Queries {
     * count; exact_p95 rides for the oracle. 100 TB: the artifact write
     * is amortized once; every window is a merge of ≤ 28 sketch rows —
     * the event log is touched only by the oracle riders. */
-  private val qQuantileRolling: Q = (s, sf) => {
+  private[queries] val qQuantileRolling: Q = (s, sf) => {
     val cap = 128
     val skAgg = udaf(new graft.functions.QSketchAgg(cap),
       org.apache.spark.sql.Encoders.scalaDouble)
@@ -5857,7 +5857,7 @@ object Queries {
     * DuckDB's ORDER-BY-LIMIT rebuild of the same integer arithmetic.
     * The exact columns ride along for the oracle (the q_hll_rollup
     * convention); at scale only the sketch table is touched. */
-  private val qKmvRetention: Q = (s, sf) => {
+  private[queries] val qKmvRetention: Q = (s, sf) => {
     val k = kmvK
     val kmv = udaf(new graft.functions.KmvAgg(k),
       org.apache.spark.sql.Encoders.scalaLong)
@@ -5940,7 +5940,7 @@ object Queries {
     * of ≤ 28 k-long arrays per anchor, driver-bounded metadata scale.
     * All estimates BIT-EXACT against DuckDB's ORDER-BY-LIMIT rebuild of
     * the same windows; exact columns ride along for the oracle. */
-  private val qKmvRolling: Q = (s, sf) => {
+  private[queries] val qKmvRolling: Q = (s, sf) => {
     val kmv = udaf(new graft.functions.KmvAgg(kmvK),
       org.apache.spark.sql.Encoders.scalaLong)
     val dir = scratchDir("kmvroll")
@@ -5971,305 +5971,4 @@ object Queries {
         coalesce(col("exact_overlap_28d"), lit(0L)).as("exact_overlap_28d"))
       .orderBy("week")
   }
-
-  // ---------------------------------------------------------------- map
-
-  val all: Map[String, Q] = Map(
-    "q_kmv_overlap" -> qKmvOverlap,
-    "q_kmv_retention" -> qKmvRetention,
-    "q_kmv_rolling" -> qKmvRolling,
-    "q_kmv_horizons" -> qKmvHorizons,
-    "q_quantile_rollup" -> qQuantileRollup,
-    "q_quantile_rolling" -> qQuantileRolling,
-    "q_sorted_layout" -> qSortedLayout,
-    "q_embed_pc1" -> qEmbedPc1,
-    "q_kmeans" -> qKmeans,
-    "q_modularity" -> qModularity,
-    "q_compact" -> qCompact,
-    "q_hll_rollup" -> qHllRollup,
-    "q_variant" -> qVariant,
-    "q_sql_pipe" -> qSqlPipe,
-    "q_collation" -> qCollation,
-    "q_listagg" -> qListagg,
-    "q_corpus_observed" -> qCorpusObserved,
-    "q_corpus_incr_observed" -> qCorpusIncrObserved,
-    "q_corpus_stream" -> qCorpusStream,
-    "q_corpus_stream_neardup" -> qCorpusStreamNeardup,
-    "q_corpus_pipeline" -> qCorpusPipeline,
-    "q_corpus_incr" -> qCorpusIncr,
-    "q_corpus_neardup" -> qCorpusNeardup,
-    "q_corpus_incr_neardup" -> qCorpusIncrNeardup,
-    "q_corpus_index_probe" -> qCorpusIndexProbe,
-    "q_hard_negatives" -> qHardNegatives,
-    "q_backtest" -> qBacktest,
-    "q_did" -> qDid,
-    "q_price_index" -> qPriceIndex,
-    "q_ann_recall" -> qAnnRecall,
-    "q_srm" -> qSrm,
-    "q_growth_accounting" -> qGrowthAccounting,
-    "q_stickiness" -> qStickiness,
-    "q_fertility" -> qFertility,
-    "q_kappa" -> qKappa,
-    "q_cohort_ltv" -> qCohortLtv,
-    "q_embed_outlier" -> qEmbedOutlier,
-    "q_rfm" -> qRfm,
-    "q_zipf" -> qZipf,
-    "q_stl" -> qStl,
-    "q_holt" -> qHolt,
-    "q_holt_grouped" -> qHoltGrouped,
-    "q_linkpred" -> qLinkpred,
-    "q_cluster_coeff" -> qClusterCoeff,
-    "q_bootstrap" -> qBootstrap,
-    "q_spearman" -> qSpearman,
-    "q_hhi" -> qHhi,
-    "q_asof_nearest" -> qAsofNearest,
-    "q_rcte_decay" -> qRcteDecay,
-    "q_rcte_reach" -> qRcteReach,
-    "q_mannwhitney" -> qMannwhitney,
-    "q_welch" -> qWelch,
-    "q_survival" -> qSurvival,
-    "q_assoc_rules" -> qAssocRules,
-    "q_anomaly_days" -> qAnomalyDays,
-    "q_freq_hist" -> qFreqHist,
-    "q_adoption_overlap" -> qAdoptionOverlap,
-    "q_rolling_rev" -> qRollingRev,
-    "q_odds_ratio" -> qOddsRatio,
-    "q_lift" -> qLift,
-    "q_concurrency" -> qConcurrency,
-    "q_magnitude_hist" -> qMagnitudeHist,
-    "q_jackknife" -> qJackknife,
-    "q_capture_recapture" -> qCaptureRecapture,
-    "q_mutual_info" -> qMutualInfo,
-    "q_ess" -> qEss,
-    "q_dedup_curve" -> qDedupCurve,
-    "q_hits" -> qHits,
-    "q_weighted_median" -> qWeightedMedian,
-    "q_rank_change" -> qRankChange,
-    "q_new_vs_returning" -> qNewVsReturning,
-    "q_exact_median" -> qExactMedian,
-    "q_dup_payments" -> qDupPayments,
-    "q_cum_uniques" -> qCumUniques,
-    "q_lorenz" -> qLorenz,
-    "q_abtest" -> qAbtest,
-    "q_gini" -> qGini,
-    "q_rbo" -> qRbo,
-    "q_dow_profile" -> qDowProfile,
-    "q_cramers_v" -> qCramersV,
-    "q_mode" -> qMode,
-    "q_gaps_islands" -> qGapsIslands,
-    "q_interval_coalesce" -> qIntervalCoalesce,
-    "q_grouped_regression" -> qGroupedRegression,
-    "q_psi" -> qPsi,
-    "q_values_join" -> qValuesJoin,
-    "q_asof_fwd" -> qAsofFwd,
-    "q_span_mask" -> qSpanMask,
-    "q_skyline" -> qSkyline,
-    "q_target_encode" -> qTargetEncode,
-    "q_time_weighted" -> qTimeWeighted,
-    "q_changepoint" -> qChangepoint,
-    "q_fd_check" -> qFdCheck,
-    "q_kanon" -> qKanon,
-    "q_assortativity" -> qAssortativity,
-    "q_quantile_bin" -> qQuantileBin,
-    "q_autocorr" -> qAutocorr,
-    "q_random_walk" -> qRandomWalk,
-    "q_maxsim" -> qMaxsim,
-    "q_vocab_coverage" -> qVocabCoverage,
-    "q_path_mining" -> qPathMining,
-    "q_benford" -> qBenford,
-    "q_merge_upsert" -> qMergeUpsert,
-    "q_join_nullsafe" -> qJoinNullsafe,
-    "q_inverted_index" -> qInvertedIndex,
-    "q_dp_counts" -> qDpCounts,
-    "q_seq_match" -> qSeqMatch,
-    "q_churn" -> qChurn,
-    "q_keep_best" -> qKeepBest,
-    "q_balance" -> qBalance,
-    "q_pareto" -> qPareto,
-    "q_pop" -> qPop,
-    "q_basket" -> qBasket,
-    "q_active_users" -> qActiveUsers,
-    "q_gap_dist" -> qGapDist,
-    "q_funnel_deadline" -> qFunnelDeadline,
-    "q_auc" -> qAuc,
-    "q_calibration" -> qCalibration,
-    "q_confusion" -> qConfusion,
-    "q_table_diff" -> qTableDiff,
-    "q_2hop" -> q2hop,
-    "q_kcore" -> qKcore,
-    "q_degree_dist" -> qDegreeDist,
-    "q_normalize" -> qNormalize,
-    "q_group_split" -> qGroupSplit,
-    "q_token_budget" -> qTokenBudget,
-    "q_survivor" -> qSurvivor,
-    "q_scd2" -> qScd2,
-    "q_dataset_card" -> qDatasetCard,
-    "q_decimal" -> qDecimal,
-    "q_audio_neardup" -> qAudioNeardup,
-    "q_image_neardup" -> qImageNeardup,
-    "q_video_neardup" -> qVideoNeardup,
-    "q_snapshot" -> qSnapshot,
-    "q_stream_pipeline" -> qStreamPipeline,
-    "q_bloom_join" -> qBloomJoin,
-    "q_winnow" -> qWinnow,
-    "q_containment" -> qContainment,
-    "q_entropy" -> qEntropy,
-    "q_zorder" -> qZorder,
-    "q_intersect_all" -> qIntersectAll,
-    "q_except_all" -> qExceptAll,
-    "q_bucket_join" -> qBucketJoin,
-    "q_dpp_prune" -> qDppPrune,
-    "q_mad" -> qMad,
-    "q_ks" -> qKs,
-    "q_posexplode" -> qPosexplode,
-    "q_sql_node" -> qSqlNode,
-    "q_minhash_est" -> qMinhashEst,
-    "q_union_schema" -> qUnionSchema,
-    "q_explode_outer" -> qExplodeOuter,
-    "q_rrf" -> qRrf,
-    "q_ndcg" -> qNdcg,
-    "q_jsd" -> qJsd,
-    "q_cooccur" -> qCooccur,
-    "q_next_event" -> qNextEvent,
-    "q_attribution" -> qAttribution,
-    "q_percent_rank" -> qPercentRank,
-    "q_bitagg" -> qBitagg,
-    "q_scan" -> qScan,
-    "q_scan_events" -> qScanEvents,
-    "q_project" -> qProject,
-    "q_filter" -> qFilter,
-    "q_case" -> qCase,
-    "q_distinct" -> qDistinct,
-    "q_join_bcast" -> qJoinBcast,
-    "q_join_full" -> qJoinFull,
-    "q_join_cross" -> qJoinCross,
-    "q_grouping_sets" -> qGroupingSets,
-    "q_pivot" -> qPivot,
-    "q_unpivot" -> qUnpivot,
-    "q_percentile" -> qPercentile,
-    "q_stats" -> qStats,
-    "q_window_ntile" -> qWindowNtile,
-    "q_window_range" -> qWindowRange,
-    "q_window_firstlast" -> qWindowFirstLast,
-    "q_union_all" -> qUnionAll,
-    "q_union_distinct" -> qUnionDistinct,
-    "q_except" -> qExcept,
-    "q_regex" -> qRegex,
-    "q_math" -> qMath,
-    "q_array" -> qArray,
-    "q_map" -> qMap,
-    "q_agg_group" -> qAggGroup,
-    "q_agg_list" -> qAggList,
-    "q_struct_agg" -> qStructAgg,
-    "q_string_agg" -> qStringAgg,
-    "q_correlated" -> qCorrelated,
-    "q_cte" -> qCte,
-    "q_lateral" -> qLateral,
-    "q_agg_distinct" -> qAggDistinct,
-    "q_rollup" -> qRollup,
-    "q_cube" -> qCube,
-    "q_join_inner" -> qJoinInner,
-    "q_join_outer" -> qJoinOuter,
-    "q_join_semi" -> qJoinSemi,
-    "q_join_anti" -> qJoinAnti,
-    "q_join_range" -> qJoinRange,
-    "q_join_interval" -> qJoinInterval,
-    "q_window_rank" -> qWindowRank,
-    "q_window_running" -> qWindowRunning,
-    "q_window_lag" -> qWindowLag,
-    "q_sort_limit" -> qSortLimit,
-    "q_setops" -> qSetops,
-    "q_string" -> qString,
-    "q_date" -> qDate,
-    "q_json" -> qJson,
-    "q_dedupe" -> qDedupe,
-    "q_accumulate" -> qAccumulate,
-    "q_schema_cast" -> qSchemaCast,
-    "q_incremental" -> qIncremental,
-    "q_join_asof" -> qJoinAsof,
-    "q_slide" -> qSlide,
-    "q_approx_distinct" -> qApproxDistinct,
-    "q_text_stats" -> qTextStats,
-    "q_multimodal_join" -> qMultimodalJoin,
-    "q_sessionize" -> qSessionize,
-    "q_tumble" -> qTumble,
-    "q_topk_terms" -> qTopkTerms,
-    "q_cosine_topk" -> qCosineTopk,
-    "q_ann_lsh" -> qAnnLsh,
-    "q_ann_multiprobe" -> qAnnMultiprobe,
-    "q_cosine_ivf" -> qCosineIvf,
-    "q_ann_ivf_fixed" -> qAnnIvfFixed,
-    "q_ann_pq" -> qAnnPq,
-    "q_embed_neardup" -> qEmbedNeardup,
-    "q_dedup_exact" -> qDedupExact,
-    "q_fingerprint" -> qFingerprint,
-    "q_token_count" -> qTokenCount,
-    "q_quality" -> qQuality,
-    "q_classify" -> qClassify,
-    "q_bpe_merges" -> qBpeMerges,
-    "q_bpe_apply" -> qBpeApply,
-    "q_bpe_train" -> qBpeTrain,
-    "q_dsir" -> qDsir,
-    "q_cdc_chunk" -> qCdcChunk,
-    "q_dup_spans" -> qDupSpans,
-    "q_dup_scrub" -> qDupScrub,
-    "q_lang_id" -> qLangId,
-    "q_minhash_lsh" -> qMinhashLsh,
-    "q_neardup_lsh" -> qNeardupLsh,
-    "q_neardup_incr" -> qNeardupIncr,
-    "q_neardup_incr_indexed" -> qNeardupIncrIndexed,
-    "q_passage_dedup" -> qPassageDedup,
-    "q_embed_decontaminate" -> qEmbedDecontaminate,
-    "q_tfidf" -> qTfidf,
-    "q_bm25" -> qBm25,
-    "q_split_assign" -> qSplitAssign,
-    "q_tree_depth" -> qTreeDepth,
-    "q_pagerank" -> qPagerank,
-    "q_triangles" -> qTriangles,
-    "q_bfs" -> qBfs,
-    "q_sssp" -> qSssp,
-    "q_communities" -> qCommunities,
-    "q_stratified" -> qStratified,
-    "q_weighted_sample" -> qWeightedSample,
-    "q_keywords" -> qKeywords,
-    "q_anomaly" -> qAnomaly,
-    "q_winsorize" -> qWinsorize,
-    "q_winsorize_approx" -> qWinsorizeApprox,
-    "q_upsample" -> qUpsample,
-    "q_pack_text" -> qPackText,
-    "q_heavy_hitters" -> qHeavyHitters,
-    "q_cms" -> qCms,
-    "q_drift" -> qDrift,
-    "q_shuffle" -> qShuffle,
-    "q_chunk" -> qChunk,
-    "q_mix" -> qMix,
-    "q_temperature_mix" -> qTemperatureMix,
-    "q_quota" -> qQuota,
-    "q_neardup" -> qNeardup,
-    "q_ngram_neardup" -> qNgramNeardup,
-    "q_approx_percentile" -> qApproxPercentile,
-    "q_scalar_subq" -> qScalarSubq,
-    "q_window_dist" -> qWindowDist,
-    "q_histogram" -> qHistogram,
-    "q_gapfill" -> qGapfill,
-    "q_locf" -> qLocf,
-    "q_validate" -> qValidate,
-    "q_funnel" -> qFunnel,
-    "q_retention" -> qRetention,
-    "q_regression" -> qRegression,
-    "q_fuzzy" -> qFuzzy,
-    "q_topk_group" -> qTopkGroup,
-    "q_gopher" -> qGopher,
-    "q_impute" -> qImpute,
-    "q_bigram_lm" -> qBigramLm,
-    "q_pack" -> qPack,
-    "q_decontaminate" -> qDecontaminate,
-    "q_pii_scrub" -> qPiiScrub,
-    "q_repetition" -> qRepetition,
-    "q_skew_join" -> qSkewJoin,
-    "q_simhash" -> qSimhash,
-    "q_dedup_cluster" -> qDedupCluster,
-    "q_semdedup" -> qSemdedup,
-    "q_dedup_apply" -> qDedupApply,
-    "q_neardup_prefix" -> qNeardupPrefix)
 }

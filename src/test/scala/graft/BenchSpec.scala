@@ -3,9 +3,8 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bench bookkeeping that needs no Spark session: block layout, the
-  * solo/roamer name sets, class stamps, rep counts and the JSON record's
-  * string escaping. */
+/** Bench bookkeeping that needs no Spark session: block layout, class
+  * stamps, rep counts and the JSON record's string escaping. */
 class BenchSpec extends AnyFunSuite {
   private val names = SparkEntry.queries.keys.toSeq.sorted
   private val mapper = new ObjectMapper()
@@ -17,12 +16,6 @@ class BenchSpec extends AnyFunSuite {
     val rest = bs.filterNot(_.exists(Bench.solo))
     rest.foreach(b => assert(b.nonEmpty && b.size <= 30, b))
     assert(rest.flatten == names.filterNot(Bench.solo))
-  }
-
-  test("every solo and roamer name is a declared query") {
-    val declared = SparkEntry.queries.keySet
-    assert((Bench.solo -- declared).isEmpty)
-    assert((Bench.roamers -- declared).isEmpty)
   }
 
   test("queryClass stamps stream, codec, solo and default rows") {

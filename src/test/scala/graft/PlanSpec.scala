@@ -1,14 +1,12 @@
 package graft
 
-import graft.queries.Queries
-
 /** Physical-plan assertions (SURVEY §4, §5.2.4): the scale-critical
   * properties — filter pushdown to parquet, broadcast of small dims,
   * top-k as TakeOrdered — must hold, not just correctness. */
 class PlanSpec extends SparkSpec {
 
   private def plan(q: String): String =
-    Queries.all(q)(spark, sf001).queryExecution.executedPlan.toString
+    SparkEntry.queries(q)(spark, sf001).queryExecution.executedPlan.toString
 
   test("q_filter pushes predicates into the parquet scan") {
     val p = plan("q_filter")
@@ -54,7 +52,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_scan prunes columns: count reads no data columns") {
-    val p = Queries.all("q_scan")(spark, sf001).queryExecution.optimizedPlan
+    val p = SparkEntry.queries("q_scan")(spark, sf001).queryExecution.optimizedPlan
     // count(*) over parquet must not require any column in the scan schema
     val scans = p.collect {
       case r: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -386,7 +384,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_bucket_join reads pre-bucketed tables: no exchange below the join") {
-    val df = Queries.all("q_bucket_join")(spark, sf001)
+    val df = SparkEntry.queries("q_bucket_join")(spark, sf001)
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("SortMergeJoin") || p.contains("BroadcastHashJoin"), p)
     if (p.contains("SortMergeJoin")) {
@@ -600,7 +598,7 @@ class PlanSpec extends SparkSpec {
     // exactly one Join NODE (the grid attach — a pair-join skyline would
     // show 2+), counted on the optimized plan: substring-counting "join"
     // in the plan string would miscount on any alias containing it
-    val joins = Queries.all("q_skyline")(spark, sf001)
+    val joins = SparkEntry.queries("q_skyline")(spark, sf001)
       .queryExecution.optimizedPlan.collect {
         case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
     assert(joins.size == 1, p)
@@ -641,7 +639,7 @@ class PlanSpec extends SparkSpec {
   test("q_concurrency sweep line windows per user, never globally") {
     // inspect the Window NODE's partition spec — a plan-string contains()
     // on "user_id" is vacuously true for any plan reading events
-    val p = Queries.all("q_concurrency")(spark, sf001)
+    val p = SparkEntry.queries("q_concurrency")(spark, sf001)
       .queryExecution.optimizedPlan
     val w = p.collect {
       case n: org.apache.spark.sql.catalyst.plans.logical.Window => n }
@@ -665,7 +663,7 @@ class PlanSpec extends SparkSpec {
     // weighted median: the window runs on the checkpointed GRID (a
     // LogicalRDD after the lineage cut), never on the lineitem scan —
     // no file relation may appear under the Window
-    val p = Queries.all("q_weighted_median")(spark, sf001)
+    val p = SparkEntry.queries("q_weighted_median")(spark, sf001)
       .queryExecution.optimizedPlan
     val w = p.collect {
       case n: org.apache.spark.sql.catalyst.plans.logical.Window => n }
@@ -680,7 +678,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_gini ranks the per-customer aggregate, not the fact rows") {
-    val p = Queries.all("q_gini")(spark, sf001).queryExecution.optimizedPlan
+    val p = SparkEntry.queries("q_gini")(spark, sf001).queryExecution.optimizedPlan
     // the Window must sit ABOVE the aggregate in the tree: facts
     // aggregate first, only ~customers rows are sorted
     val w = p.collect {
@@ -735,7 +733,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_growth_accounting windows per user; census aggregates partial") {
-    val p = Queries.all("q_growth_accounting")(spark, sf001)
+    val p = SparkEntry.queries("q_growth_accounting")(spark, sf001)
       .queryExecution.optimizedPlan
     val w = p.collect {
       case n: org.apache.spark.sql.catalyst.plans.logical.Window => n }
@@ -800,7 +798,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_spearman tie-group windows partition by the tied value") {
-    val p = Queries.all("q_spearman")(spark, sf001)
+    val p = SparkEntry.queries("q_spearman")(spark, sf001)
       .queryExecution.optimizedPlan
     val w = p.collect {
       case n: org.apache.spark.sql.catalyst.plans.logical.Window => n }
@@ -898,8 +896,8 @@ class PlanSpec extends SparkSpec {
           a.groupingExpressions.flatMap(_.references.map(_.name)).toSet ==
             Set("_gr_pid") => a
       }.nonEmpty
-    val flagged = Queries.all.keys.toSeq.sorted.flatMap { name =>
-      val plan = Queries.all(name)(spark, sf001).queryExecution.optimizedPlan
+    val flagged = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+      val plan = SparkEntry.queries(name)(spark, sf001).queryExecution.optimizedPlan
       val bad = plan.collect {
         case w: LWindow if w.partitionSpec.isEmpty && !bounded(w) => w }
       if (bad.nonEmpty && !boundedGrid.contains(name)) Some(name) else None
@@ -920,8 +918,8 @@ class PlanSpec extends SparkSpec {
     // name collides) and assert the catalog is empty AFTER EACH build,
     // so a violation names its query instead of the sweep's tail.
     val s = spark.newSession()
-    val leakers = Queries.all.keys.toSeq.sorted.flatMap { name =>
-      Queries.all(name)(s, sf001)
+    val leakers = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+      SparkEntry.queries(name)(s, sf001)
       // temp views only: the catalog also lists the PERSISTENT bucketed
       // tables (g6_*, spark-warehouse) that q_bucket_join depends on —
       // durable by design, not per-query residue

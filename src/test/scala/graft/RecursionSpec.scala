@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.catalyst.plans.logical.UnionLoop
-import graft.queries.Queries
 
 /** The recursive-CTE surface (q_rcte_decay / q_rcte_reach): Spark 4's
   * UnionLoop vs independent Scala reference computations, plus the plan
@@ -11,7 +10,7 @@ import graft.queries.Queries
 class RecursionSpec extends SparkSpec {
 
   test("q_rcte_decay matches the recurrence folded on the driver") {
-    val out = Queries.all("q_rcte_decay")(spark, sf001)
+    val out = SparkEntry.queries("q_rcte_decay")(spark, sf001)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(out.nonEmpty)
     // independent reference: quarterly integer-cents revenue, folded
@@ -33,7 +32,7 @@ class RecursionSpec extends SparkSpec {
   }
 
   test("q_rcte_reach matches a driver-side BFS on the collected graph") {
-    val out = Queries.all("q_rcte_reach")(spark, sf001)
+    val out = SparkEntry.queries("q_rcte_reach")(spark, sf001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(out.nonEmpty)
     val oi = spark.read.parquet(s"$sf001/orders.parquet")
@@ -53,7 +52,7 @@ class RecursionSpec extends SparkSpec {
   }
 
   test("q_holt matches the two-state recurrence folded on the driver") {
-    val out = Queries.all("q_holt")(spark, sf001)
+    val out = SparkEntry.queries("q_holt")(spark, sf001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(out.nonEmpty)
     val quarterly = spark.read.parquet(s"$sf001/orders.parquet")
@@ -76,7 +75,7 @@ class RecursionSpec extends SparkSpec {
   }
 
   test("q_holt_grouped matches the per-segment recurrence folded on the driver") {
-    val out = Queries.all("q_holt_grouped")(spark, sf001)
+    val out = SparkEntry.queries("q_holt_grouped")(spark, sf001)
       .collect()
       .map(r => ((r.getString(0), r.getLong(1)),
         (r.getLong(2), r.getLong(3), r.getLong(4))))
@@ -116,7 +115,7 @@ class RecursionSpec extends SparkSpec {
   }
 
   test("q_backtest: skill metrics agree with a driver-side recompute") {
-    val r = Queries.all("q_backtest")(spark, sf001).collect()(0)
+    val r = SparkEntry.queries("q_backtest")(spark, sf001).collect()(0)
     // recompute from the same fold RecursionSpec already trusts for
     // q_holt: forecasts vs next-quarter actuals, naive = carry-forward
     val quarterly = spark.read.parquet(s"$sf001/orders.parquet")
@@ -155,7 +154,7 @@ class RecursionSpec extends SparkSpec {
   }
 
   test("q_stl: rev = trend + seasonal + resid wherever trend is defined") {
-    val rows = Queries.all("q_stl")(spark, sf001).collect()
+    val rows = SparkEntry.queries("q_stl")(spark, sf001).collect()
     assert(rows.length > 12)
     val full = rows.filter(!_.isNullAt(2))
     assert(full.nonEmpty)
@@ -170,7 +169,7 @@ class RecursionSpec extends SparkSpec {
   test("all recursive queries plan a UnionLoop, never a cartesian") {
     for (name <- Seq("q_rcte_decay", "q_rcte_reach", "q_holt", "q_backtest",
         "q_holt_grouped")) {
-      val qe = Queries.all(name)(spark, sf001).queryExecution
+      val qe = SparkEntry.queries(name)(spark, sf001).queryExecution
       val loops = qe.optimizedPlan.collect { case u: UnionLoop => u }
       assert(loops.nonEmpty, s"$name lost its UnionLoop")
       assert(!qe.executedPlan.toString.contains("CartesianProduct"), name)
@@ -180,7 +179,7 @@ class RecursionSpec extends SparkSpec {
   test("the reach recursion dedups inside the loop (frontier <= nodes)") {
     // the scale guard: the recursive term must re-DISTINCT each step, or
     // path multiplicity compounds as degree^depth
-    val qe = Queries.all("q_rcte_reach")(spark, sf001).queryExecution
+    val qe = SparkEntry.queries("q_rcte_reach")(spark, sf001).queryExecution
     val loop = qe.optimizedPlan.collect { case u: UnionLoop => u }.head
     val dedups = loop.recursion.collect {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a

@@ -1,6 +1,5 @@
 package graft
 
-import graft.queries.Queries
 
 /** Statistical-identity checks for the round-7 inference queries —
   * properties that must hold regardless of the data, complementing the
@@ -9,7 +8,7 @@ import graft.queries.Queries
 class StatTestsSpec extends SparkSpec {
 
   test("q_mannwhitney: U_a + U_b = na*nb (rank-sum identity)") {
-    val r = Queries.all("q_mannwhitney")(spark, sf001).collect().head
+    val r = SparkEntry.queries("q_mannwhitney")(spark, sf001).collect().head
     val (na, nb, ua) = (r.getLong(0), r.getLong(1), r.getDouble(2))
     assert(na > 0 && nb > 0)
     // R_a + R_b = N(N+1)/2 forces U_a + U_b = na*nb; recover U_b from the
@@ -23,7 +22,7 @@ class StatTestsSpec extends SparkSpec {
   }
 
   test("q_welch: t sign matches the mean difference; df within bounds") {
-    val r = Queries.all("q_welch")(spark, sf001).collect().head
+    val r = SparkEntry.queries("q_welch")(spark, sf001).collect().head
     val (na, nb) = (r.getLong(0), r.getLong(1))
     val (ma, mb, t, df) = (r.getDouble(2), r.getDouble(3), r.getDouble(4),
       r.getDouble(5))
@@ -33,7 +32,7 @@ class StatTestsSpec extends SparkSpec {
   }
 
   test("q_survival: S is a monotone non-increasing curve in (0, 1]") {
-    val rows = Queries.all("q_survival")(spark, sf001).collect()
+    val rows = SparkEntry.queries("q_survival")(spark, sf001).collect()
     assert(rows.nonEmpty)
     val surv = rows.map(_.getDouble(3))
     assert(surv.forall(s => s > 0 - 1e-12 && s <= 1.0))
@@ -46,7 +45,7 @@ class StatTestsSpec extends SparkSpec {
   }
 
   test("q_assoc_rules: metrics are consistent with the raw counts") {
-    val rows = Queries.all("q_assoc_rules")(spark, sf001).collect()
+    val rows = SparkEntry.queries("q_assoc_rules")(spark, sf001).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (nboth, ca, cb) = (r.getLong(2), r.getLong(3), r.getLong(4))
@@ -59,14 +58,14 @@ class StatTestsSpec extends SparkSpec {
   }
 
   test("q_spearman: rho lies in [-1, 1] over a real frame") {
-    val r = Queries.all("q_spearman")(spark, sf001).collect().head
+    val r = SparkEntry.queries("q_spearman")(spark, sf001).collect().head
     val (n, rho) = (r.getLong(0), r.getDouble(1))
     assert(n > 0)
     assert(rho >= -1.0 - 1e-9 && rho <= 1.0 + 1e-9)
   }
 
   test("q_hhi: 1/n <= hhi <= 1 and top_share^2 <= hhi per segment") {
-    val rows = Queries.all("q_hhi")(spark, sf001).collect()
+    val rows = SparkEntry.queries("q_hhi")(spark, sf001).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (n, hhi, top) = (r.getLong(1), r.getDouble(2), r.getDouble(3))
@@ -80,7 +79,7 @@ class StatTestsSpec extends SparkSpec {
   }
 
   test("q_bootstrap: 32 replicates, positive mean, non-negative SE") {
-    val r = Queries.all("q_bootstrap")(spark, sf001).collect().head
+    val r = SparkEntry.queries("q_bootstrap")(spark, sf001).collect().head
     val (nb, mean, se) = (r.getLong(0), r.getDouble(1), r.getDouble(2))
     assert(nb == 32)
     assert(mean > 0)
@@ -91,7 +90,7 @@ class StatTestsSpec extends SparkSpec {
   }
 
   test("q_asof_nearest: dt is the min of the directional passes, >= 0") {
-    val rows = Queries.all("q_asof_nearest")(spark, sf001).collect()
+    val rows = SparkEntry.queries("q_asof_nearest")(spark, sf001).collect()
     assert(rows.nonEmpty)
     rows.filter(!_.isNullAt(3)).foreach { r =>
       assert(r.getLong(3) >= 0L) // |Δt| by construction

@@ -1,9 +1,8 @@
 package graft.engine
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import graft.modules.CorpusModule
-import graft.queries.Queries
 
 /** Per-node observability ([[Observed]]): metric exactness on the
   * single materializing action, the placement trade-off on scan
@@ -109,7 +108,7 @@ class ObservedSpec extends SparkSpec {
   }
 
   test("q_corpus_incr_observed: per-run gauges equal each delta's direct run") {
-    val got = Queries.all("q_corpus_incr_observed")(spark, sf001).collect()
+    val got = SparkEntry.queries("q_corpus_incr_observed")(spark, sf001).collect()
     assert(got.length === 12) // 2 runs x 6 stages
     val docs = graft.sources.Tables.table(spark, sf001, "documents")
     (1 to 2).foreach { run =>
@@ -128,7 +127,7 @@ class ObservedSpec extends SparkSpec {
   }
 
   test("q_corpus_observed equals a direct per-stage recomputation") {
-    val got = Queries.all("q_corpus_observed")(spark, sf001).collect()
+    val got = SparkEntry.queries("q_corpus_observed")(spark, sf001).collect()
     assert(got.map(_.getString(1)).toSeq ===
       Seq("normalized", "gated", "scrubbed", "deduped", "scored", "kept"))
     val stages = CorpusModule.graph(minQuality = 0.5, maxRepetition = 0.9,

@@ -1,7 +1,6 @@
 package graft.modules
 
-import graft.SparkSpec
-import graft.queries.Queries
+import graft.{SparkEntry, SparkSpec}
 
 /** The declared q_corpus_pipeline row (the CorpusModule DAG run through
   * Graph.run): plan-level scale assertions — the language gate declared
@@ -12,7 +11,7 @@ class CorpusPipelineSpec extends SparkSpec {
   import spark.implicits._
 
   test("q_corpus_pipeline pushes the lang gate into the parquet scan") {
-    val df = Queries.all("q_corpus_pipeline")(spark, sf001)
+    val df = SparkEntry.queries("q_corpus_pipeline")(spark, sf001)
     val p = df.queryExecution.executedPlan.toString
     // the gate predicate, declared one node ABOVE the scan, must reach it
     assert(p.contains("PushedFilters: [IsNotNull(lang), EqualTo(lang,en)]"),
@@ -26,7 +25,7 @@ class CorpusPipelineSpec extends SparkSpec {
   }
 
   test("q_corpus_pipeline output honors the module's gates") {
-    val rows = Queries.all("q_corpus_pipeline")(spark, sf001).collect()
+    val rows = SparkEntry.queries("q_corpus_pipeline")(spark, sf001).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[String]("lang") == "en")
@@ -57,7 +56,7 @@ class CorpusPipelineSpec extends SparkSpec {
   }
 
   test("q_corpus_incr: block-scoped dedupe, full parity coverage") {
-    val rows = Queries.all("q_corpus_incr")(spark, sf001).collect()
+    val rows = SparkEntry.queries("q_corpus_incr")(spark, sf001).collect()
     assert(rows.nonEmpty)
     val ids = rows.map(_.getAs[Long]("id")).toSeq
     assert(ids == ids.sorted)
@@ -106,7 +105,7 @@ class CorpusPipelineSpec extends SparkSpec {
   }
 
   test("q_corpus_incr_neardup: near-dedupe scopes per delta") {
-    val rows = Queries.all("q_corpus_incr_neardup")(spark, sf001).collect()
+    val rows = SparkEntry.queries("q_corpus_incr_neardup")(spark, sf001).collect()
     assert(rows.nonEmpty)
     val ids = rows.map(_.getAs[Long]("id")).toSeq
     assert(ids == ids.sorted)
@@ -138,16 +137,16 @@ class CorpusPipelineSpec extends SparkSpec {
     // persist, delta-only probe run) must preserve the operator's result
     // EXACTLY — both rows share one oracle text, so cross-checking the
     // two engine paths against each other pins the composition layer
-    val viaModule = Queries.all("q_corpus_index_probe")(spark, sf001)
+    val viaModule = SparkEntry.queries("q_corpus_index_probe")(spark, sf001)
       .collect().map(_.toSeq).toSeq
-    val standalone = Queries.all("q_neardup_incr_indexed")(spark, sf001)
+    val standalone = SparkEntry.queries("q_neardup_incr_indexed")(spark, sf001)
       .collect().map(_.toSeq).toSeq
     assert(viaModule == standalone)
     assert(viaModule.head.head.asInstanceOf[Long] > 0) // pairs found
   }
 
   test("q_corpus_pipeline has a single shuffle: the dedupe window") {
-    val df = Queries.all("q_corpus_pipeline")(spark, sf001)
+    val df = SparkEntry.queries("q_corpus_pipeline")(spark, sf001)
     val p = df.queryExecution.executedPlan.toString
     // narrow stages (gate/scrub/score) must not add exchanges: the only
     // repartitioning is the dedupe window's hash by fingerprint (the

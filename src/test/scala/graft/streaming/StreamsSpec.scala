@@ -291,7 +291,7 @@ class StreamsSpec extends SparkSpec {
     // queries then run unchanged over the accumulated layout and must
     // equal their run over the original table. This is the production
     // micro-batch shape: stream in, land blocks, batch semantics hold.
-    import graft.queries.Queries
+    import graft.SparkEntry
     val dir = java.nio.file.Files.createTempDirectory("graftevblocks").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graftevckpt").toString
     val acc = java.nio.file.Files.createTempDirectory("graftevacc").toString
@@ -324,8 +324,8 @@ class StreamsSpec extends SparkSpec {
       case (x, y) => x == y
     }
     for (name <- Seq("q_tumble", "q_slide", "q_sessionize")) {
-      val streamed = Queries.all(name)(spark, acc).collect()
-      val batch = Queries.all(name)(spark, sf001).collect()
+      val streamed = SparkEntry.queries(name)(spark, acc).collect()
+      val batch = SparkEntry.queries(name)(spark, sf001).collect()
       assert(streamed.length == batch.length, s"$name row count")
       streamed.zip(batch).foreach { case (s, b) =>
         assert(s.length == b.length &&

@@ -2,6 +2,7 @@
 """Local replica of the driver's DuckDB-oracle gate.
 
 Usage: check.py <sfDir> <verifyOut>
+       check.py --same <verifyOutA> <verifyOutB>
        check.py --selftest
 Loads each verifyOut/<name> parquet (Spark result), runs oracle_sql.json[name]
 in DuckDB over views on sfDir parquet, normalizes (sort cols by name, sort
@@ -10,6 +11,10 @@ dtype-sensitive (float64 0.0 != int64 0), so before value compare we also
 compare per-column dtype CLASSES (int/float/bool/ts/str) — the %.6g
 stringification alone rendered 0.0 and 0 identically and let a q_pack
 float64-vs-int64 divergence through in round 3.
+
+--same compares two Verify dumps row for row under the same rules, over
+every query directory in either (the no-oracle rows included): the
+parity gate for a refactor, or for one build run at two core counts.
 """
 import sys, json, glob, os
 import pandas as pd
@@ -81,6 +86,68 @@ def _norm(df: pd.DataFrame) -> pd.DataFrame:
     return s.sort_values(by=list(s.columns)).reset_index(drop=True)
 
 
+def frame_diff(a_df: pd.DataFrame, b_df: pd.DataFrame, a_name="spark",
+               b_name="duck"):
+    """None when the two results agree under the gate's rules, else why not."""
+    a, b = _norm(a_df), _norm(b_df)
+    if list(a.columns) != list(b.columns):
+        return f"COLS {a_name}={list(a.columns)} {b_name}={list(b.columns)}"
+    bad_types = dtype_diff(a_df, b_df)
+    if bad_types:
+        return "DTYPE " + "; ".join(bad_types)
+    if len(a) != len(b):
+        return f"ROWS {a_name}={len(a)} {b_name}={len(b)}"
+    if not a.equals(b):
+        diff = (a != b).any(axis=1)
+        if not diff.any():
+            if len(a) == 0:
+                # two genuinely matching zero-row results can still differ
+                # in post-norm index/dtype details; dtype CLASSES were
+                # already checked by dtype_diff above, so empty == empty
+                return None
+            # equals() false with no cell-level diff on non-empty frames:
+            # index/dtype-only mismatch — idxmax on the empty mask throws
+            return (f"UNEQUAL with no cell diff (rows={len(a)}; likely "
+                    f"dtype/index mismatch on an all-equal frame)")
+        i = diff.idxmax()
+        return (f"VALUES first diff row {i}:\n  {a_name}={a.loc[i].to_dict()}"
+                f"\n  {b_name}={b.loc[i].to_dict()}")
+    return None
+
+
+def load(out: str, name: str):
+    """The Verify dump of one query, or None when it wrote no parquet."""
+    files = glob.glob(f"{out}/{name}/*.parquet")
+    return pd.concat([pd.read_parquet(f) for f in files]) if files else None
+
+
+def report(fails, n: int, word: str) -> int:
+    print()
+    if fails:
+        for name, msg in fails: print(f"FAIL {name}: {msg}")
+        print(f"\n{n-len(fails)}/{n} {word}")
+        return 1
+    print(f"ALL {n}/{n} {word.upper()}")
+    return 0
+
+
+def same(out_a: str, out_b: str) -> int:
+    names = sorted({os.path.basename(d) for o in (out_a, out_b)
+                    for d in glob.glob(f"{o}/*") if os.path.isdir(d)})
+    fails = []
+    for name in names:
+        a_df, b_df = load(out_a, name), load(out_b, name)
+        if a_df is None or b_df is None:
+            fails.append((name, f"NO OUTPUT in {out_a if a_df is None else out_b}"))
+            continue
+        msg = frame_diff(a_df, b_df, "a", "b")
+        if msg:
+            fails.append((name, msg))
+        else:
+            print(f"  SAME {name} ({len(a_df)} rows)")
+    return report(fails, len(names), "identical")
+
+
 def selftest() -> int:
     a = pd.DataFrame({"k": [1, 2], "v": np.array([0, 1], dtype="int64")})
     b = pd.DataFrame({"k": [1, 2], "v": np.array([0.0, 1.0], dtype="float64")})
@@ -114,6 +181,8 @@ def selftest() -> int:
 
 if len(sys.argv) == 2 and sys.argv[1] == "--selftest":
     sys.exit(selftest())
+if len(sys.argv) == 4 and sys.argv[1] == "--same":
+    sys.exit(same(sys.argv[2], sys.argv[3]))
 
 import duckdb
 
@@ -125,49 +194,18 @@ for t in ["region","nation","customer","supplier","part","orders","lineitem",
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
 
-norm = _norm
-
 fails = []
 for name in sorted(oracle):
-    files = glob.glob(f"{out}/{name}/*.parquet")
-    if not files:
+    spark_df = load(out, name)
+    if spark_df is None:
         fails.append((name, "NO SPARK OUTPUT")); continue
-    spark_df = pd.concat([pd.read_parquet(f) for f in files])
     try:
         duck_df = con.execute(oracle[name]).fetchdf()
     except Exception as e:
         fails.append((name, f"ORACLE SQL ERROR: {e}")); continue
-    a, b = norm(spark_df), norm(duck_df)
-    if list(a.columns) != list(b.columns):
-        fails.append((name, f"COLS spark={list(a.columns)} duck={list(b.columns)}")); continue
-    bad_types = dtype_diff(spark_df, duck_df)
-    if bad_types:
-        fails.append((name, "DTYPE " + "; ".join(bad_types))); continue
-    if len(a) != len(b):
-        fails.append((name, f"ROWS spark={len(a)} duck={len(b)}")); continue
-    if not a.equals(b):
-        diff = (a != b).any(axis=1)
-        if not diff.any():
-            if len(a) == 0:
-                # two genuinely matching zero-row results can still differ
-                # in post-norm index/dtype details; dtype CLASSES were
-                # already checked by dtype_diff above, so empty == empty
-                print(f"  OK  {name} (0 rows)")
-                continue
-            # equals() false with no cell-level diff on non-empty frames:
-            # index/dtype-only mismatch — idxmax on the empty mask throws
-            fails.append((name, f"UNEQUAL with no cell diff "
-                          f"(rows={len(a)}; likely dtype/index mismatch on "
-                          f"an all-equal frame)"))
-            continue
-        i = diff.idxmax()
-        fails.append((name, f"VALUES first diff row {i}:\n  spark={a.loc[i].to_dict()}\n  duck ={b.loc[i].to_dict()}"))
-        continue
-    print(f"  OK  {name} ({len(a)} rows)")
+    msg = frame_diff(spark_df, duck_df)
+    if msg:
+        fails.append((name, msg)); continue
+    print(f"  OK  {name} ({len(spark_df)} rows)")
 
-print()
-if fails:
-    for n, msg in fails: print(f"FAIL {n}: {msg}")
-    print(f"\n{len(oracle)-len(fails)}/{len(oracle)} match")
-    sys.exit(1)
-print(f"ALL {len(oracle)}/{len(oracle)} MATCH")
+sys.exit(report(fails, len(oracle), "match"))
