@@ -4,10 +4,11 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDown
 
 /** Dev tool: `runMain graft.Profile q_a q_b` runs each named query once
   * untimed at the target SF, prints its formatted physical plan, then
-  * times one run and prints every stage's duration, task count and
-  * executor CPU (the sum of its tasks' `executorCpuTime`), so a slow row's
-  * time can be attributed to a plan node and a stage instead of argued
-  * about: a stage whose CPU is close to its duration runs on one core. Reads
+  * times one run and prints every stage's duration, task count, executor
+  * CPU (the sum of its tasks' `executorCpuTime`) and shuffle write bytes,
+  * so a slow row's time can be attributed to a plan node and a stage
+  * instead of argued about: a stage whose CPU is close to its duration
+  * runs on one core, and a wider exchange shows as more bytes. Reads
   * SPARK_GRAFT_SF_DIR and SPARK_GRAFT_CPUS with [[Bench]]'s defaults and
   * builds [[Bench.buildSession]]'s session. Not part of the driver
   * contract. */
@@ -39,8 +40,10 @@ object Profile {
           val ms = (for {s <- si.submissionTime; c <- si.completionTime}
             yield c - s).getOrElse(-1L)
           val cpu = si.taskMetrics.executorCpuTime / 1e9
+          val shw = si.taskMetrics.shuffleWriteMetrics.bytesWritten / 1e6
           stages.add(f"stage ${si.stageId}%4d ${ms / 1000.0}%7.2f s  " +
-            f"cpu ${cpu}%7.2f s  tasks=${si.numTasks}%4d  ${si.name.take(110)}%s")
+            f"cpu ${cpu}%7.2f s  shw ${shw}%8.2f MB  tasks=${si.numTasks}%4d  " +
+            si.name.take(110))
         }
       }
     })

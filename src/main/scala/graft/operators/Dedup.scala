@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Document-deduplication operators for training-data pipelines: exact
@@ -212,7 +213,6 @@ object Dedup {
     val tok = maxDf match {
       case None => base
       case Some(cap) =>
-        import org.apache.spark.sql.expressions.Window
         base
           .withColumn("__df", count(lit(1)).over(Window.partitionBy("grp", "w")))
           .filter(col("__df") <= cap)
@@ -541,22 +541,6 @@ object Dedup {
           .reduce(_ + _).as("sig"))
   }
 
-  /** Duplicate text SPANS at arbitrary alignment (the exact-substring
-    * dedup of Lee et al., "Deduplicating Training Data Makes Language
-    * Models Better", ACL 2022 — there via a suffix array; here the
-    * Spark-shaped equivalent): hash every `k`-token sliding window, keep
-    * windows whose hash occurs more than once in the corpus (including
-    * within one document), and merge each document's overlapping-or-
-    * touching duplicated windows into MAXIMAL spans. Complements
-    * [[passageDedup]] (delimiter-aligned passages) and the Jaccard
-    * near-dup family (whole-document similarity): this finds the
-    * verbatim 8-gram-and-longer repeats wherever they start.
-    *
-    * Scale shape: one window-hash shuffle (word-count), one equi-join of
-    * positions against the >1 hash set, and a per-DOCUMENT window for
-    * the span merge (partition cardinality = corpus size — the
-    * q_keywords shape, never a few-partition funnel). Returns
-    * (idCol, sp, ln): span start token offset and token length. */
   /** (idCol, p, h): md5 of every `k`-token sliding window — the shared
     * windowing of [[duplicateSpans]] and [[removeDuplicateWindows]], in
     * one place so the two Lee-et-al companions can never disagree on
@@ -589,7 +573,6 @@ object Dedup {
   def winnowFingerprints(df: DataFrame, idCol: String, textCol: String,
       k: Int, w: Int): DataFrame = {
     require(k > 0 && w > 0, s"need positive window sizes (got k=$k w=$w)")
-    import org.apache.spark.sql.expressions.Window
     val hv = windowHashes(df, idCol, textCol, k)
       .select(col(idCol), col("p"),
         expr("CAST(conv(substr(h, 1, 15), 16, 10) AS BIGINT)").as("hv"))
@@ -602,14 +585,32 @@ object Dedup {
       .select(col(idCol), col("fp")).distinct()
   }
 
+  /** Duplicate text SPANS at arbitrary alignment (the exact-substring
+    * dedup of Lee et al., "Deduplicating Training Data Makes Language
+    * Models Better", ACL 2022 — there via a suffix array; here the
+    * Spark-shaped equivalent): hash every `k`-token sliding window, keep
+    * windows whose hash occurs more than once in the corpus (including
+    * within one document), and merge each document's overlapping-or-
+    * touching duplicated windows into MAXIMAL spans. Complements
+    * [[dropRepeatedPassages]] (delimiter-aligned passages) and the Jaccard
+    * near-dup family (whole-document similarity): this finds the
+    * verbatim 8-gram-and-longer repeats wherever they start.
+    *
+    * Scale shape: every window is hashed once and shuffled once by hash;
+    * its occurrence count is a window aggregate over the hash partition,
+    * not a duplicate-hash set joined back (that shape hashes every window
+    * twice). The span merge is a per-DOCUMENT window (partition
+    * cardinality = corpus size — the q_keywords shape). Trade-off: all
+    * windows cross the hash shuffle, where the join-back shape broadcast
+    * only the small duplicate set at small scale, and one very frequent
+    * hash lands in one window partition, which spills. Returns
+    * (idCol, sp, ln): span start token offset and token length. */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame = {
-    val win = windowHashes(df, idCol, textCol, k)
-    val dup = win.groupBy("h").agg(count(lit(1)).as("n")).where(col("n") > 1)
-    import org.apache.spark.sql.expressions.Window
     val byDoc = Window.partitionBy(idCol).orderBy("p")
-    win.join(dup, "h")
-      .select(col(idCol), col("p"))
+    windowHashes(df, idCol, textCol, k)
+      .select(col(idCol), col("p"), count(lit(1)).over(Window.partitionBy("h")).as("n"))
+      .where(col("n") > 1)
       // a window at p extends coverage to p + k; the next duplicated
       // window starts a NEW span only if it begins past that coverage
       .withColumn("brk",
@@ -630,14 +631,15 @@ object Dedup {
     * document keeps its text whole (within-doc repeats survive — one
     * copy per hash is the contract, and it lives there).
     *
-    * Scale shape: the window-hash word-count, a keeper aggregate, one
-    * equi-join back, then a NARROW per-row rebuild (each doc's cut set
-    * rides along as a small array; the index-aware `transform` drops
-    * covered tokens in one pass). Returns every input row with `clean`
-    * (rebuilt text) alongside the original columns. */
+    * Scale shape: as in [[duplicateSpans]], one hash pass and one hash
+    * shuffle, with the count and the keeper as window aggregates over the
+    * hash partition; then each doc's cut set joins back by id and the
+    * rebuild is NARROW (the index-aware `transform` drops covered tokens
+    * in one pass). Returns every input row with `clean` (rebuilt text)
+    * alongside the original columns. */
   def removeDuplicateWindows(df: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame = {
-    val win = windowHashes(df, idCol, textCol, k)
+    val byHash = Window.partitionBy("h")
     // one integer orders (doc, p) lexicographically. The encoding needs
     // p < 100000 and 0 <= id <= (Long.MaxValue - 99999)/100000 (the bound
     // must leave headroom for the largest position: id*100000 + 99999 has
@@ -647,18 +649,14 @@ object Dedup {
     // rather than silently electing a keeper that holds no occurrence;
     // integer div, not `/` (double division loses exactness past 2^53)
     val maxId = (Long.MaxValue - 99999L) / 100000
-    val keepers = win
-      .groupBy("h")
-      .agg(count(lit(1)).as("n"),
-        expr(s"CAST(min(IF(p >= 100000 OR $idCol < 0 OR $idCol > ${maxId}L, " +
-          s"CAST(raise_error('removeDuplicateWindows: keeper encoding " +
-          s"needs 0 <= $idCol <= ${maxId} and token position < 100000') " +
-          s"AS BIGINT), " +
-          s"CAST($idCol AS BIGINT) * 100000 + p)) div 100000 AS BIGINT)")
-          .as("kdoc"))
-      .where(col("n") > 1)
-    val cuts = win.join(keepers, "h")
-      .where(col(idCol) =!= col("kdoc"))
+    val key = expr(s"min(IF(p >= 100000 OR $idCol < 0 OR $idCol > ${maxId}L, " +
+      s"CAST(raise_error('removeDuplicateWindows: keeper encoding " +
+      s"needs 0 <= $idCol <= ${maxId} and token position < 100000') AS BIGINT), " +
+      s"CAST($idCol AS BIGINT) * 100000 + p))")
+    val cuts = windowHashes(df, idCol, textCol, k)
+      .select(col(idCol), col("p"), count(lit(1)).over(byHash).as("n"),
+        key.over(byHash).as("kmin"))
+      .where(col("n") > 1 && col(idCol) =!= expr("kmin div 100000"))
       .groupBy(idCol).agg(collect_set(col("p")).as("__cut"))
     df.join(cuts, Seq(idCol), "left")
       .withColumn("clean",

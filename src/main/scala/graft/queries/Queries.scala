@@ -937,7 +937,7 @@ object Queries {
   /** Arbitrary-alignment duplicate spans ([[operators.Dedup
     * .duplicateSpans]], the Lee et al. 2022 exact-substring semantic):
     * maximal token spans whose 8-token windows all repeat corpus-wide.
-    * One word-count shuffle + a per-document merge window. */
+    * One hash-partition count window + a per-document merge window. */
   private[queries] val qDupSpans: Q = (s, sf) =>
     Dedup.duplicateSpans(t(s, sf, "documents"), "doc_id", "text", 8)
       .orderBy("doc_id", "sp")
@@ -1898,17 +1898,6 @@ object Queries {
       .orderBy("ham")
   }
 
-  /** DataSet TIME TRAVEL ([[Snapshot.asOf]]): replay a 3-block ingest
-    * history through [[Graph.runIncremental]] (one block per run, lineage
-    * recorded in a [[RunLog]]), then reconstruct the dedupe DataSet AS OF
-    * run 2 — the union of exactly the blocks consumed by then, with the
-    * keep-newest pipe re-applied. Deterministic: the block split is
-    * event_id mod 3 and run 2 has consumed residues {0, 1}, which is the
-    * subset the oracle spells directly. No stored snapshots — lineage +
-    * block parquet IS the history. */
-  /** One fixed scratch dir per purpose, wiped at each query start: a
-    * fresh createTempDirectory per invocation would accumulate orphaned
-    * data across bench warmup + timed + verify runs indefinitely. */
   /** Process-scoped scratch path: the pid in the name keeps concurrent
     * Bench/Verify/Time processes on one host from wiping each other's
     * live run state mid-query (a shared fixed path made q_snapshot's
@@ -1933,6 +1922,14 @@ object Queries {
   private val scratchCleanup =
     scala.collection.mutable.Set.empty[java.nio.file.Path]
 
+  /** DataSet TIME TRAVEL ([[Snapshot.asOf]]): replay a 3-block ingest
+    * history through [[Graph.runIncremental]] (one block per run, lineage
+    * recorded in a [[RunLog]]), then reconstruct the dedupe DataSet AS OF
+    * run 2 — the union of exactly the blocks consumed by then, with the
+    * keep-newest pipe re-applied. Deterministic: the block split is
+    * event_id mod 3 and run 2 has consumed residues {0, 1}, which is the
+    * subset the oracle spells directly. No stored snapshots — lineage +
+    * block parquet IS the history. */
   private[queries] val qSnapshot: Q = (s, sf) => {
     val ev = t(s, sf, "events")
     val blk = (0 to 2).map(i => s"b$i" -> ev.filter(col("event_id") % 3 === i)).toMap

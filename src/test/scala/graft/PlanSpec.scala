@@ -358,13 +358,20 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("windowspecdefinition(doc_id"), p)
   }
 
-  test("q_dup_scrub joins on hash/id only: no pair explosion, no window") {
+  test("q_dup_scrub joins on id only: no pair explosion, windows only by hash") {
     val p = plan("q_dup_scrub")
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
-    // rebuild is a narrow per-row transform (the operator NAME appears in
-    // a raise_error literal, so match the window-function node, not "Window")
-    assert(!p.contains("windowspecdefinition"), p)
+    // rebuild is a narrow per-row transform: no per-document window (the
+    // operator NAME appears in a raise_error literal, so match the
+    // window-function node, not "Window")
+    assert(!p.contains("windowspecdefinition(doc_id"), p)
+    // the count and keeper are window aggregates over the hash partition
+    // alone, unordered and unbounded
+    val specs = "windowspecdefinition\\(([^)]*)".r.findAllMatchIn(p).map(_.group(1)).toSeq
+    assert(specs.nonEmpty, p)
+    assert(specs.forall(_.matches("h#\\d+, specifiedwindowframe\\(RowFrame, " +
+      "unboundedpreceding\\$\\(")), p)
   }
 
   test("q_winsorize broadcasts the quantile table; data never shuffles to clip") {

@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.StringSplit
+import org.apache.spark.sql.catalyst.plans.logical.Generate
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -322,6 +323,79 @@ class DedupSpec extends SparkSpec {
     val ok = Seq((maxOk, s"a1 $phrase"), (1L, s"b1 $phrase"))
       .toDF("doc_id", "text")
     assert(Dedup.removeDuplicateWindows(ok, "doc_id", "text", 3).count() == 2)
+  }
+
+  // Each span operator hashes every window once: its optimized plan holds
+  // one Generate (the window posexplode). An aggregate joined back onto
+  // the window frame would plan the frame, and so the hashing, twice.
+  private def generates(df: DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect { case g: Generate => g }.size
+
+  test("duplicateSpans and removeDuplicateWindows hash each window once") {
+    assert(generates(Dedup.duplicateSpans(docs, "doc_id", "text", 3)) == 1)
+    assert(generates(Dedup.removeDuplicateWindows(docs, "doc_id", "text", 3)) == 1)
+  }
+
+  // plain-Scala references for the span operators, keyed on the window
+  // text itself (md5 collisions aside, the same equivalence as its hash)
+  private def refWindows(docs: Seq[(Long, String)], k: Int): Seq[(Long, Int, String)] =
+    for {
+      (id, t) <- docs if t != null
+      ws = refTokens(t) if ws.size >= k
+      p <- 0 to ws.size - k
+    } yield (id, p, ws.slice(p, p + k).mkString(" "))
+  private def refSpans(docs: Seq[(Long, String)], k: Int): Set[(Long, Int, Int)] = {
+    val win = refWindows(docs, k)
+    val n = win.groupBy(_._3).map { case (h, v) => h -> v.size }
+    win.filter(w => n(w._3) > 1).groupBy(_._1).toSeq.flatMap { case (id, v) =>
+      v.map(_._2).sorted.foldLeft(List.empty[(Int, Int)]) {
+        case ((sp, last) :: rest, p) if p <= last + k => (sp, p) :: rest
+        case (acc, p) => (p, p) :: acc
+      }.map { case (sp, last) => (id, sp, last + k - sp) }
+    }.toSet
+  }
+  private def refScrub(docs: Seq[(Long, String)], k: Int): Map[Long, String] = {
+    val win = refWindows(docs, k)
+    val byHash = win.groupBy(_._3)
+    val keeper = byHash.map { case (h, v) => h -> v.map(w => (w._1, w._2)).min._1 }
+    val cuts = win.filter(w => byHash(w._3).size > 1 && w._1 != keeper(w._3))
+      .groupBy(_._1).map { case (id, v) => id -> v.map(_._2) }
+    docs.map { case (id, t) =>
+      id -> cuts.get(id).fold(t) { c =>
+        refTokens(t).zipWithIndex.collect {
+          case (tok, i) if !c.exists(p => i >= p && i < p + k) => tok
+        }.mkString(" ")
+      }
+    }.toMap
+  }
+
+  test("duplicateSpans and removeDuplicateWindows match a plain-Scala reference") {
+    val rnd = new scala.util.Random(20220527)
+    val vocab = Seq("a", "b", "c", "d", "e", "f", "g")
+    val phrase = (1 to 10).map(i => s"p$i")
+    def noise(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size)))
+    val planted = (0 until 12).map { _ =>
+      val from = rnd.nextInt(4)
+      (noise(rnd.nextInt(5)) ++ phrase.slice(from, from + 4 + rnd.nextInt(7)) ++
+        noise(rnd.nextInt(5))).mkString(" ")
+    }
+    val p = phrase.mkString(" ")
+    val texts = Seq("", null, "solo", "a b",   // empty, null, shorter than k
+      p, p,                                     // byte-identical docs
+      s"x1 $p x2 $p",                           // within-doc repeat
+      s"$p $p",                                 // touching repeats
+      "y1 y2 y3 y1 y2 y3 y1 y2 y3 y1 y2 y3") ++ // overlapping repeats
+      planted ++ (0 until 30).map(_ => noise(rnd.nextInt(14)).mkString(" "))
+    val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong * 3, t) }
+    val df = rows.toDF("doc_id", "text")
+    for (k <- Seq(1, 3, 8)) {
+      val spans = Dedup.duplicateSpans(df, "doc_id", "text", k)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
+      assert(spans == refSpans(rows, k), s"duplicateSpans k=$k")
+      val clean = Dedup.removeDuplicateWindows(df, "doc_id", "text", k)
+        .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
+      assert(clean == refScrub(rows, k), s"removeDuplicateWindows k=$k")
+    }
   }
 
   test("containmentPairs catches a subsumed doc that Jaccard misses") {
