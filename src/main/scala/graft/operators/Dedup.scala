@@ -393,9 +393,11 @@ object Dedup {
   /** The composed scale path: MinHash-LSH candidate generation followed by
     * exact token-Jaccard verification of only those candidates. Sub-quadratic
     * end to end — the pair space is the LSH buckets' (the S-curve prunes
-    * low-similarity pairs before any token join), and the verify stage is
-    * two equi-joins on doc id attaching the token sets plus a narrow
-    * `array_intersect`. This is the form to run on a full corpus; exact
+    * low-similarity pairs before any token join), and the verify stage
+    * ([[verifyPairsByHashedTokens]]) is two equi-joins on doc id attaching
+    * each doc's sorted int64-hashed token set plus, per pair, the
+    * two-pointer merge count `graft_intersect_size_sorted`. This is the
+    * form to run on a full corpus; exact
     * [[jaccardPairs]] over everything is for small groups or `maxDf`-capped
     * token sets. Returns (da, db, jac) with jac ≥ tau. */
   def lshVerifiedPairs(df: DataFrame, idCol: String, textCol: String,

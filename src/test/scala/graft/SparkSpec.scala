@@ -13,4 +13,21 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   def sf001 = "/root/testdata/sf0.001"
+
+  /** Runs `f` with the given SQL confs set, then restores each one's prior
+    * value (or unsets it). */
+  def withConfs[T](confs: (String, String)*)(f: => T): T = {
+    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Runs `f` with whole-stage codegen off and expressions interpreted:
+    * the interpreted half of a codegen-vs-interpreted parity check. */
+  def withCodegenDisabled[T](f: => T): T =
+    withConfs("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(f)
 }

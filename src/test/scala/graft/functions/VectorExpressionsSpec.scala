@@ -1,6 +1,8 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
 class VectorExpressionsSpec extends SparkSpec {
@@ -38,6 +40,41 @@ class VectorExpressionsSpec extends SparkSpec {
     val r = spark.sql("SELECT id, graft_dot(a, b) d FROM vs ORDER BY id")
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
     assert(r(1L) == 32.0)
+    resolvesEveryFunction(spark)
+  }
+
+  /** Every name in the one function table resolves, by name, to the
+    * expression that carries it as its `prettyName`. */
+  private def resolvesEveryFunction(session: SparkSession): Unit = {
+    assert(VectorFunctions.sqlFunctions.size == 7)
+    VectorFunctions.sqlFunctions.foreach { case (id, _, _) =>
+      val e = session.sessionState.functionRegistry
+        .lookupFunction(id, Seq(Literal(null), Literal(null)))
+      assert(e.prettyName == id.funcName, id)
+    }
+  }
+
+  test("every graft_* function runs as generated code that calls its kernel") {
+    VectorFunctions.register(spark)
+    val dir = java.nio.file.Files.createTempDirectory("kernels").toString
+    Seq((Seq(1.0f, 2.0f), Seq("a", "b"), Seq(1L, 3L))).toDF("f", "s", "l")
+      .write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir).createOrReplaceTempView("kernel_args")
+    val df = spark.sql("SELECT graft_dot(f, f), graft_intersect_size(s, s), " +
+      "graft_intersect_size_sorted(l, l), graft_intersect_sorted(l, l), " +
+      "graft_nearest_cell(array(l), l), graft_nearest_dist2(array(l), l), " +
+      "graft_nearest_cell_f(array(f), f) FROM kernel_args")
+    // no fallback: generated code that does not compile fails the query
+    val r = withConfs("spark.sql.codegen.fallback" -> "false",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(df.collect().head)
+    assert(r.getDouble(0) == 5.0 && r.getInt(1) == 2 && r.getInt(2) == 2)
+    assert(r.getSeq[Long](3) == Seq(1L, 3L))
+    assert(r.getInt(4) == 0 && r.getLong(5) == 0L && r.getInt(6) == 0)
+    val code = org.apache.spark.sql.execution.debug
+      .codegenString(df.queryExecution.executedPlan)
+    val calls = s"${java.util.regex.Pattern.quote(VectorKernels.className)}\\.(\\w+)\\("
+      .r.findAllMatchIn(code).map(_.group(1)).toSet
+    assert(calls.size == 7, calls)
   }
 
   test("codegen and interpreted paths agree") {
@@ -124,7 +161,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects functions AND the rewrite via spark.sql.extensions") {
-    import org.apache.spark.sql.SparkSession
     val oldDefault = SparkSession.getDefaultSession
     val oldActive = SparkSession.getActiveSession
     // a fresh session on the SAME SparkContext via the programmatic
@@ -151,6 +187,7 @@ class VectorExpressionsSpec extends SparkSpec {
       // and the injected SQL functions resolve by name
       assert(ext.sql("SELECT graft_intersect_size(array('x','y'), array('y')) n")
         .collect().head.getInt(0) == 1)
+      resolvesEveryFunction(ext)
     } finally {
       SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
       oldDefault.foreach(SparkSession.setDefaultSession)
@@ -205,15 +242,30 @@ class VectorExpressionsSpec extends SparkSpec {
     }
   }
 
-  private def withCodegenDisabled[T](f: => T): T = {
-    val key = "spark.sql.codegen.wholeStage"
-    val factoryKey = "spark.sql.codegen.factoryMode"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    spark.conf.set(factoryKey, "NO_CODEGEN")
-    try f finally {
-      spark.conf.set(key, old)
-      spark.conf.set(factoryKey, "FALLBACK")
-    }
+  test("graft_intersect_sorted ≡ array_sort(array_intersect) on sorted input, " +
+      "codegen and interpreted") {
+    val rnd = new scala.util.Random(11)
+    // duplicates (30 values, up to 40 draws), empty sides, both extremes
+    def side(): Seq[Long] = (Seq.fill(rnd.nextInt(40))(rnd.nextInt(30) - 15L) ++
+      Seq(Long.MinValue, Long.MaxValue).filter(_ => rnd.nextInt(3) == 0)).sorted
+    val rows = (1 to 200).map(i => (i.toLong, side(), side())) ++ Seq(
+      (900L, Seq.empty[Long], Seq(1L, 2L)),
+      (901L, Seq(1L, 1L, 2L), Seq.empty[Long]),
+      (902L, Seq.empty[Long], Seq.empty[Long]),
+      (903L, Seq(Long.MinValue, Long.MinValue, 0L, Long.MaxValue),
+        Seq(Long.MinValue, Long.MaxValue, Long.MaxValue)))
+    // a projection straight over a local relation is folded on the driver
+    // by the interpreted path; the shuffle makes the codegen run real
+    val df = rows.toDF("id", "ta", "tb").repartition(2)
+    def run() = df.select(col("id"),
+        VectorFunctions.sortedIntersect(col("ta"), col("tb")).as("fast"),
+        array_sort(array_intersect(col("ta"), col("tb"))).as("builtin"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Long](2)))
+      .toSeq.sortBy(_._1)
+    val fast = run()
+    assert(fast.size == 204)
+    fast.foreach { case (id, f, b) => assert(f == b, s"id=$id") }
+    assert(fast.exists(_._2.nonEmpty))
+    assert(withCodegenDisabled(run()) == fast)
   }
 }

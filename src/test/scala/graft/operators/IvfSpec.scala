@@ -73,15 +73,7 @@ class IvfSpec extends SparkSpec {
     val fast = run()
     fast.foreach { case (id, c, cr) => assert(c === cr, s"id=$id") }
     assert(fast.find(_._1 == 100L).get._2 === 0) // tie kept the first cell
-    val key = "spark.sql.codegen.wholeStage"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try assert(run() === fast)
-    finally {
-      spark.conf.set(key, old)
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
+    withCodegenDisabled(assert(run() === fast))
   }
 
   test("train rejects a ragged corpus by name (no avg-null NPE)") {

@@ -149,15 +149,7 @@ class KMeansSpec extends SparkSpec {
     }
     assert(fast.find(_._1 == 100L).get._2 === 0) // tie kept the first cell
     // interpreted path of the custom expressions agrees with codegen
-    val key = "spark.sql.codegen.wholeStage"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try assert(run() === fast)
-    finally {
-      spark.conf.set(key, old)
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
+    withCodegenDisabled(assert(run() === fast))
   }
 
   test("census covers every cell, n sums to corpus, inertia is the " +
