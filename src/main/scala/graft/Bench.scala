@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries.{QueryDef, Registry}
 
 /** Benchmark main. The parent holds no SparkSession; it partitions the
@@ -136,6 +136,15 @@ object Bench {
     left
   }
 
+  /** Run `df`'s whole plan and discard its rows. `count()` would let
+    * Catalyst prune every column a row count does not need, and on a row
+    * that ends in a global aggregate that is the whole operator
+    * (q_dup_scrub planned 2 stages and 0.01 s of CPU that way, against
+    * 6–8 stages when its rows are written). The noop sink keeps every
+    * output column, so the timed window sees the plan Verify writes. */
+  def execute(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
   /** Time each of `names` at `sfDir` with storage drained and a full GC
     * before every window. Shared by [[BenchChild]] and the fork-failure
     * fallback — ONE timing discipline everywhere.
@@ -173,7 +182,7 @@ object Bench {
       // untimed steady-state warm at the target SF (see Scaladoc); its
       // storage/garbage is drained below, charged to no timed window
       (1 to (if (solo(name)) soloWarms else 1)).foreach { _ =>
-        try SparkEntry.queries(name)(spark, sfDir).count()
+        try execute(SparkEntry.queries(name)(spark, sfDir))
         catch { case scala.util.control.NonFatal(_) => failedWarms += 1 }
       }
       // GC isolation: a heavy query's garbage (millions of candidate-pair
@@ -190,7 +199,7 @@ object Bench {
         }
         val t0 = System.nanoTime()
         val ok =
-          try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+          try { execute(SparkEntry.queries(name)(spark, sfDir)); true }
           catch { case scala.util.control.NonFatal(_) => false }
         ((System.nanoTime() - t0) / 1e9, ok)
       }
@@ -418,10 +427,12 @@ object Bench {
     // comparisons need this to tell a steady-state record (r8+) from the
     // cold-window totals of rounds 1-7. `mode` and `warm_target` are
     // constants, kept so the record's schema matches earlier rounds.
+    // `action` names how a window runs its row ([[execute]]): records
+    // before it timed `count()`, which pruned whole operators.
     val detailJson =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${
         sorted.map(entry).mkString("{", ",", "}")
-      },"leaked":$leakedJson,"failed_warms":$failedWarmJson,"failed_reps":$failedJson,"mode":"fork","warm_target":1,"solo_warms":$soloWarms,"reps":$benchReps,"roamer_reps":$roamerReps,"roamers":${
+      },"leaked":$leakedJson,"failed_warms":$failedWarmJson,"failed_reps":$failedJson,"mode":"fork","warm_target":1,"action":"noop","solo_warms":$soloWarms,"reps":$benchReps,"roamer_reps":$roamerReps,"roamers":${
         roamers.toSeq.sorted.map(jsonString).mkString("[", ",", "]")
       },"query_reps":${
         // per-query annotation (ADVICE r10): any query timed with a rep

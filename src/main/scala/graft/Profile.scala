@@ -4,9 +4,10 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDown
 
 /** Dev tool: `runMain graft.Profile q_a q_b` runs each named query once
   * untimed at the target SF, prints its formatted physical plan, then
-  * times one run and prints every stage's duration, task count, executor
-  * CPU (the sum of its tasks' `executorCpuTime`) and shuffle write bytes,
-  * so a slow row's time can be attributed to a plan node and a stage
+  * times one run ([[Bench.execute]], the bench's whole-plan action) and
+  * prints every stage's duration, task count, executor CPU (the sum of
+  * its tasks' `executorCpuTime`) and shuffle write bytes, so a slow
+  * row's time can be attributed to a plan node and a stage
   * instead of argued about: a stage whose CPU is close to its duration
   * runs on one core, and a wider exchange shows as more bytes. Reads
   * SPARK_GRAFT_SF_DIR and SPARK_GRAFT_CPUS with [[Bench]]'s defaults and
@@ -54,18 +55,18 @@ object Profile {
     }
     args.foreach { q =>
       val warm = SparkEntry.queries(q)(spark, sfDir)
-      warm.count()
+      Bench.execute(warm)
       println(s"===== $q plan =====")
       warm.explain("formatted")
       Bench.drainStorage(spark)
       stages.clear(); closed = new CountDownLatch(1)
       fence("start")
       val t0 = System.nanoTime()
-      val n = SparkEntry.queries(q)(spark, sfDir).count()
+      Bench.execute(SparkEntry.queries(q)(spark, sfDir))
       val sec = (System.nanoTime() - t0) / 1e9
       fence("end")
       require(closed.await(30, TimeUnit.SECONDS), "end marker never arrived")
-      println(s"===== $q ${"%.2f".format(sec)} s ($n rows) =====")
+      println(s"===== $q ${"%.2f".format(sec)} s =====")
       stages.forEach(s => println(s))
     }
     spark.stop()

@@ -39,8 +39,11 @@ object Dedup {
     * token set, hash i = md5("i:" ++ token). Returns (idCol, sig array).
     * Not spread: this build also feeds write-only index builds
     * ([[writeLshIndex]]), where a spread costs more than it saves
-    * (measured r16: ~0.7 s on q_corpus_index_probe). Callers that feed a
-    * pair join spread their input with [[Spread.auto]] first. */
+    * (measured r16: ~0.7 s on q_corpus_index_probe). The corpus-sized
+    * pair-join feeds ([[lshCandidatePairs]] and the in-memory
+    * [[incrementalLshVerifiedPairs]]) spread their input with
+    * [[Spread.auto]] first; a small one (a delta, q_minhash_est's 150
+    * docs) does not, since spreading it won under 10%. */
   def minHashSignature(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int): DataFrame = {
     val sig = array((0 until numHashes).map { i =>
@@ -441,7 +444,7 @@ object Dedup {
     * decides whether to drop it. */
   def dropRepeatedPassages(df: DataFrame, idCol: String, textCol: String,
       width: Int, maxDf: Long): DataFrame = {
-    val chunks = Spread.auto(df).select(col(idCol).as("id"),
+    val chunks = df.select(col(idCol).as("id"),
       posexplode(passages(col(textCol), width)).as(Seq("pos", "chunk")))
     val hot = chunks.groupBy("chunk").agg(countDistinct("id").as("df"))
       .filter(col("df") > maxDf)
@@ -488,7 +491,7 @@ object Dedup {
     // the indexed overload below, fed from parquet written by [[lshBands]]
     // / [[tokenHashIndex]], where nothing corpus-sized is ever recomputed.
     // Both corpus index sides feed the pair join, so the corpus is spread
-    // once for both (the indexed overload spreads the delta).
+    // once for both.
     val spread = Spread.auto(corpus)
     incrementalLshVerifiedPairs(
       lshBands(spread, idCol, textCol, numHashes, bands),
@@ -508,8 +511,7 @@ object Dedup {
       corpusTokens: DataFrame, delta: DataFrame,
       idCol: String, textCol: String, numHashes: Int, bands: Int,
       tau: Double): DataFrame = {
-    val spread = Spread.auto(delta)
-    val deltaBands = lshBands(spread, idCol, textCol, numHashes, bands)
+    val deltaBands = lshBands(delta, idCol, textCol, numHashes, bands)
     val probe = deltaBands.select(col(idCol).as("nid"), col("band_id"), col("bv"))
     val index = corpusBands.select(col(idCol), col("band_id"), col("bv"))
       .union(deltaBands.select(col(idCol), col("band_id"), col("bv")))
@@ -521,7 +523,7 @@ object Dedup {
         greatest(col("nid"), col("oid")).as("db"))
       .distinct()
     val idx = corpusTokens.select(col(idCol).as("id"), col("th"), col("nt"))
-      .union(tokenHashIndex(spread, idCol, textCol)
+      .union(tokenHashIndex(delta, idCol, textCol)
         .select(col(idCol).as("id"), col("th"), col("nt")))
     verifyPairsByTokenIndex(cands, idx, tau)
   }
@@ -530,8 +532,7 @@ object Dedup {
     * md5 (portable hex→int), bit b of the signature set iff the +1/−1 vote
     * sum at bit b is positive. Returns (idCol, sig). */
   def simHash16(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tok = Spread.auto(df).select(col(idCol),
-        explode(tokens(col(textCol))).as("w"))
+    val tok = df.select(col(idCol), explode(tokens(col(textCol))).as("w"))
       .withColumn("h", expr("CAST(conv(substr(md5(w), 1, 15), 16, 10) AS BIGINT)"))
     val votes = (0 until 16).map { b =>
       sum(when(expr(s"(h div ${1L << b}) % 2") === 1, 1).otherwise(-1)).as(s"s$b")

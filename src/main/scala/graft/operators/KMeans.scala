@@ -111,13 +111,7 @@ object KMeans {
   def train(emb: DataFrame, idCol: String, embCol: String, k: Int,
       iters: Int, scale: Int = 1000): Array[Array[Long]] = {
     require(k >= 1 && iters >= 0, s"need k >= 1, iters >= 0 (got $k, $iters)")
-    // spread: the per-round assignment argmin (k × dim integer distance
-    // per row) is the dominant narrow work and would run on the scan's
-    // split count — one core on a single-file input. Integer sums are
-    // merge-order-independent, so the trained centroids are bit-identical
-    // under any partitioning (unlike Ivf.train's float path, which stays
-    // unspread on purpose).
-    val q = Spread.auto(emb).select(col(idCol).cast("long").as("id"),
+    val q = emb.select(col(idCol).cast("long").as("id"),
       quantize(col(embCol), scale).as("q"))
     var cent: Array[Array[Long]] = q.orderBy("id").limit(k)
       .orderBy("id").collect()
@@ -162,7 +156,7 @@ object KMeans {
     * coordinate into the oracle compare. */
   def census(emb: DataFrame, idCol: String, embCol: String,
       centroids: Array[Array[Long]], scale: Int = 1000): DataFrame = {
-    val q = Spread.auto(emb).select(col(idCol).cast("long").as("id"),
+    val q = emb.select(col(idCol).cast("long").as("id"),
       quantize(col(embCol), scale).as("q"))
     val chk = centroids.zipWithIndex.map { case (c, cell) =>
       (cell, c.zipWithIndex.map { case (v, i) => v * (i + 1) }.sum)

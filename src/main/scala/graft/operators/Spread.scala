@@ -5,37 +5,41 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-/** Scale-adaptive parallelism floor for narrow, compute-heavy stages
-  * (optimization guide §2.5 "input skew": one small/unsplittable file).
+/** Parallelism floor for narrow, compute-heavy stages (optimization
+  * guide §2.5 "input skew": one small/unsplittable file).
   *
   * The driver testdata ships each table as ONE parquet file with ONE row
-  * group, so every scan plans a single input split and all scan-adjacent
-  * narrow work — md5/minhash signatures, tokenization regexes, codec
-  * encode/decode, per-row vector math — runs on ONE core of the
-  * local[32] session until the first exchange. At 100 TB the same scan
-  * has thousands of row-group splits and needs no help; an unconditional
-  * `repartition` there would add a full payload shuffle (guide §8: never
-  * move heavy bytes to fix a placement problem). So the spread is
-  * CONDITIONAL on the measured shape, and the probe is METADATA-ONLY:
-  * it walks the ANALYZED plan (already computed eagerly for every
-  * Dataset, so this forces no extra analysis, optimization, or physical
-  * planning — an earlier `df.rdd.getNumPartitions` probe re-planned the
-  * frame per call and measurably slowed the module-graph rows that wire
-  * plans several times per run) and spreads exactly when
+  * group, so every scan plans a single input split and the narrow work
+  * next to it runs on ONE core until the first exchange. At 100 TB the
+  * same scan has thousands of row-group splits and needs no help; an
+  * unconditional `repartition` there would add a full payload shuffle
+  * (guide §8: never move heavy bytes to fix a placement problem). So the
+  * spread is CONDITIONAL on the measured shape, and the probe is
+  * METADATA-ONLY: it walks the ANALYZED plan (already computed eagerly
+  * for every Dataset, so this forces no extra planning) and spreads
+  * exactly when
   *
   *  - the plan is NARROW scan→head (no join/agg/window/sort/limit —
   *    anything above an exchange is already wide), and
   *  - every leaf is a file relation, and
-  *  - their total size fits in ONE scan split (≤ maxPartitionBytes), so
-  *    Spark would plan single-digit tasks for it, and
+  *  - their total size fits in ONE scan split (≤ maxPartitionBytes), and
   *  - the session actually has parallelism to win (defaultParallelism ≥ 4).
   *
   * At any real scale the size test fails and this is the identity — no
-  * shuffle is ever added on a big input. Values are unaffected in all
-  * cases: every consumer below a spread is key-based (joins/aggregates)
-  * or totally ordered, and round-robin repartition sorts records within
-  * input partitions first (SPARK-23207), so retried tasks reproduce the
-  * same assignment. */
+  * shuffle is ever added on a big input. Values are unaffected: every
+  * consumer below a spread is key-based (joins/aggregates) or totally
+  * ordered, and round-robin repartition sorts records within input
+  * partitions first (SPARK-23207), so retried tasks reproduce the same
+  * assignment.
+  *
+  * A call site stays only where it fires on a workload and its rows win
+  * ≥10% on the median of a 10-pair `SPARK_GRAFT_SPREAD=0` A/B at 4 cores
+  * (SCALING.md "Spread sites: census and A/B"): the md5/minhash frames
+  * that feed pair joins, the JPEG codec map, and the tokenizers whose
+  * per-token work is heavy (BPE, BM25, DSIR, token entropy,
+  * decontamination n-grams, window hashes). Where the narrow work is light next to the shuffle
+  * after it, the added exchange costs more than the parallelism saves,
+  * and those sites were deleted. */
 object Spread {
 
   /** A/B kill switch (env, read once per JVM): SPARK_GRAFT_SPREAD=0 turns
@@ -96,27 +100,14 @@ object Spread {
     }
   }
 
-  /** The adaptive spread: identity unless narrow + single-split-small.
-    * With no `keys` the spread is round-robin. With `keys` it is a HASH
-    * repartition by those keys with an explicit count, for aggregation
-    * mouths whose PER-GROUP work is heavy (quadratic pair emission from
-    * collected arrays, big array builds): (a) the following groupBy on
-    * the same keys satisfies its clustered distribution on this layout
-    * and plans NO second exchange, and (b) AQE cannot coalesce it
-    * (explicit-count repartitions are exact). Without it, AQE sizes the
-    * aggregate's post-shuffle side by shuffle BYTES — blind to downstream
-    * compute — and a small-bytes/heavy-CPU stage (q_triangles' per-order
-    * pair emission: measured 1.0 s on 4 of 32 cores) serializes. Keyed
-    * spreads are only for order-insensitive aggregates (sums/counts/
-    * sorted arrays): the layout changes which rows meet in a partition,
-    * never the grouped values.
+  /** The adaptive spread: a round-robin repartition to the session's
+    * cores when the gate above passes, else the identity.
     *
     * Placement is the caller's decision: spread the frame that feeds a
-    * heavy consumer (pair joins, aggregations), never a build whose only
-    * downstream is a small write (measured r16: spreading a write-only
-    * LSH index build cost q_corpus_index_probe ~0.7 s in exchange plus
-    * per-task files). */
-  def auto(df: DataFrame, keys: String*): DataFrame = {
+    * heavy narrow consumer, never a build whose only downstream is a
+    * small write (measured r16: spreading a write-only LSH index build
+    * cost q_corpus_index_probe ~0.7 s in exchange plus per-task files). */
+  def auto(df: DataFrame): DataFrame = {
     if (!enabled) return df
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
@@ -126,38 +117,8 @@ object Spread {
     fileBytes(plan) match {
       case Some(bytes)
           if bytes <= spark.sessionState.conf.filesMaxPartitionBytes =>
-        if (keys.isEmpty) df.repartition(target)
-        else df.repartition(target, keys.map(col): _*)
+        df.repartition(target)
       case _ => df
     }
-  }
-
-  /** Spread for foreachBatch micro-batch frames, METADATA-ONLY like
-    * [[auto]] (r15 ADVICE: the `batch.rdd.getNumPartitions` probe it
-    * replaces forced full physical planning of every micro-batch). A
-    * micro-batch's leaves differ by source version: a LogicalRDD already
-    * HOLDS its RDD (partition count is a field read, no planning), and a
-    * file-relation leaf carries its byte size like any scan. Spread when
-    * the probed parallelism is under half the session's cores — tiny
-    * one-file trigger batches — and stay the identity when any leaf is
-    * unprobeable or the batch is already wide (a block file landing with
-    * enough row groups scans wide on its own). */
-  def autoBatch(batch: DataFrame): DataFrame = {
-    if (!enabled) return batch
-    val spark = batch.sparkSession
-    val target = spark.sparkContext.defaultParallelism
-    if (target < 4) return batch
-    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    val parts = batch.queryExecution.analyzed.collectLeaves().map {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        Some(r.rdd.getNumPartitions)
-      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-        Some(math.max(1,
-          math.ceil(fs.location.sizeInBytes.toDouble / maxSplit).toInt))
-      case _ => None
-    }
-    if (parts.nonEmpty && parts.forall(_.isDefined) &&
-        parts.flatten.sum * 2 <= target) batch.repartition(target)
-    else batch
   }
 }

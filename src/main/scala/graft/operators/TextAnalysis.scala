@@ -61,7 +61,7 @@ object TextAnalysis {
     * ROUNDED score (tie-broken by term) so ranking is engine-portable. */
   def tfIdfTopTerms(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    val tok = Spread.auto(df).select(col(idCol).as("id"),
+    val tok = df.select(col(idCol).as("id"),
         explode(split(col(textCol), " ")).as("w"))
       .filter(col("w") =!= "")
     val stats = tok.groupBy("w")
@@ -87,7 +87,7 @@ object TextAnalysis {
     * in any engine. Returns (idCol, r, w, score). */
   def keywords(df: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame = {
-    val tok = Spread.auto(df).select(col(idCol).as("id"),
+    val tok = df.select(col(idCol).as("id"),
         explode(split(col(textCol), " ")).as("w"))
       .filter(col("w") =!= "")
     val tf = tok.groupBy("id", "w").agg(count(lit(1)).as("tf"))
@@ -392,8 +392,8 @@ object TextAnalysis {
       topM: Int, minPairs: Long): DataFrame = {
     require(topM > 1 && minPairs >= 1,
       s"need topM > 1, minPairs >= 1 (got $topM, $minPairs)")
-    val docTok = Spread.auto(df)
-      .select(col(idCol).as("d"), explode(split(col(textCol), " ")).as("w"))
+    val docTok = df.select(col(idCol).as("d"),
+        explode(split(col(textCol), " ")).as("w"))
       .where(col("w") =!= "").distinct()
     val top = docTok.groupBy("w").agg(count(lit(1)).as("df"))
       .orderBy(col("df").desc, col("w")).limit(topM)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
-import graft.operators.{AsOfJoin, Bloom, Components, Dedup, Incremental, IntervalJoin, Iterate, Ivf, KMeans, Multimodal, Pca, Pq, Rank, Retrieval, Sampling, Similarity, Skew, Spread, TextAnalysis, Validate}
+import graft.operators.{AsOfJoin, Bloom, Components, Dedup, Incremental, IntervalJoin, Iterate, Ivf, KMeans, Multimodal, Pca, Pq, Rank, Retrieval, Sampling, Similarity, Skew, TextAnalysis, Validate}
 import graft.engine.{Graph, Node, Observed, RunLog, Snapshot}
 import graft.modules.CorpusModule
 import graft.sources.Layout
@@ -1191,11 +1191,8 @@ object Queries {
     // cold for the edge build alone). Group size is the order's line
     // count — bounded small — so the per-group quadratic emission never
     // meets a hot key; no .distinct() here because triangles()
-    // canonicalizes and dedups internally. The keyed Spread.auto keeps the
-    // CPU-heavy per-group emission on every core when the input is one
-    // split (AQE would coalesce the small-bytes shuffle to 3-4 tasks);
-    // the groupBy reuses the declared hash layout — no extra exchange.
-    val e = Spread.auto(li, "o").groupBy("o")
+    // canonicalizes and dedups internally.
+    val e = li.groupBy("o")
       .agg(sort_array(array_distinct(collect_list(col("p").cast("long"))))
         .as("ps"))
       .select(explode(expr(pairCombosExpr("ps", "a", "b"))).as("pr"))
@@ -2186,8 +2183,7 @@ object Queries {
     * driving q_neardup_lsh's banding". */
   private[queries] val qMinhashEst: Q = (s, sf) => {
     val d = t(s, sf, "documents").filter(col("doc_id") < 150)
-    // the signatures feed two pair joins: spread them like lshCandidatePairs
-    val sig = Dedup.minHashSignature(Spread.auto(d), "doc_id", "text", 8)
+    val sig = Dedup.minHashSignature(d, "doc_id", "text", 8)
     val pairs = Dedup.jaccardPairs(d, "doc_id", "lang", "text", 0.0)
     pairs
       .join(sig.select(col("doc_id").as("da"), col("sig").as("sa")), "da")
@@ -2657,8 +2653,8 @@ object Queries {
     // RAW projection feeds it — array_distinct dedups within the basket,
     // so the upstream global distinct (a full extra shuffle) is only
     // needed by the support/total aggregates.
-    Spread.auto(t(s, sf, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")), "o")
+    t(s, sf, "lineitem")
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .groupBy("o")
       .agg(sort_array(array_distinct(collect_list(col("p")))).as("ps"))
       .select(explode(expr(pairCombosExpr("ps", "pa", "pb"))).as("pr"))
@@ -4306,7 +4302,7 @@ object Queries {
     * so pair scores are bit-stable integers and the top-20 boundary is
     * total under (cn, aa, a, b). */
   private[queries] val qLinkpred: Q = (s, sf) => {
-    val byOrder = Spread.auto(t(s, sf, "lineitem"), "l_orderkey")
+    val byOrder = t(s, sf, "lineitem")
       .groupBy("l_orderkey")
       .agg(sort_array(array_distinct(collect_list(col("l_partkey").cast("long"))))
         .as("ps"))
@@ -4333,8 +4329,6 @@ object Queries {
     * double ratio rounded to 6, and the top-15 boundary tie-breaks on
     * node id. */
   private[queries] val qClusterCoeff: Q = (s, sf) => {
-    // not spread: the keyed Spread.auto of q_linkpred won < 10% here in a
-    // 10-pair A/B at 4 cores (SPARK_GRAFT_SPREAD=0 vs on)
     val canon = t(s, sf, "lineitem")
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .groupBy("o")

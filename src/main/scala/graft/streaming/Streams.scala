@@ -347,19 +347,13 @@ object Streams {
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         nBatches.incrementAndGet()
-        // a maxFilesPerTrigger=1 micro-batch scans ONE file, so the whole
-        // module chain (scrub regexes, fingerprints, scoring) would run
-        // on one core however many the session has — the Spread.auto
-        // input-skew rule. Spread.autoBatch probes the batch's ANALYZED
-        // plan (a LogicalRDD leaf holds its RDD — a field read, not the
-        // full physical planning the former batch.rdd probe forced per
-        // trigger, r15 ADVICE). Identity when the block file lands with
-        // enough row groups to scan wide.
-        val spread = graft.operators.Spread.autoBatch(batch)
+        // not spread: a maxFilesPerTrigger=1 micro-batch scans one
+        // file, but spreading it before the module chain won under 10%
+        // in a 10-pair A/B at 4 cores (SCALING.md "Spread sites")
         // batchId is stable under replay — the ledger key that makes
         // the replayed batch a no-op
         graph.runIncremental(
-          Map("docs" -> Seq(s"batch$batchId" -> spread)), log,
+          Map("docs" -> Seq(s"batch$batchId" -> batch)), log,
           sink = out => {
             out("kept").write.mode("overwrite")
               .parquet(s"$keptDir/batch=$batchId")

@@ -56,6 +56,7 @@ class BenchSpec extends AnyFunSuite {
       assert(rec.get("sf").asText == hostile)
       assert(rec.get("mode").asText == "fork")
       assert(rec.get("warm_target").asInt == 1)
+      assert(rec.get("action").asText == "noop")
       assert(rec.get("leaked").get("q_bfs").asInt == 2)
     } finally {
       java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(detail))

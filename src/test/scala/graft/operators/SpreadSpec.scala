@@ -2,11 +2,10 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.RebalancePartitions
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobinPartitioning}
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 
@@ -55,22 +54,9 @@ class SpreadSpec extends SparkSpec {
     assertSameRows(spread, table.filter(col("k") =!= 3))
   }
 
-  test("keyed auto plans one hash exchange that the groupBy reuses") {
-    val agg = Spread.auto(table, "k").groupBy("k").agg(sum("id").as("s"))
-    val ex = exchanges(agg)
-    assert(ex.size === 1, ex)
-    ex.head.outputPartitioning match {
-      case HashPartitioning(Seq(a: Attribute), 4) => assert(a.name === "k")
-      case p => fail(s"expected hashpartitioning(k, 4), got $p")
-    }
-    assert(ex.head.shuffleOrigin === REPARTITION_BY_NUM)
-    assertSameRows(agg, table.groupBy("k").agg(sum("id").as("s")))
-  }
-
   test("auto is the identity over an aggregate") {
     val agg = table.groupBy("k").count()
     assert(Spread.auto(agg) eq agg)
-    assert(Spread.auto(agg, "k") eq agg)
   }
 
   test("auto is the identity for local and checkpointed frames") {
@@ -83,7 +69,6 @@ class SpreadSpec extends SparkSpec {
   test("auto is the identity once the file exceeds one scan split") {
     withConf(SQLConf.FILES_MAX_PARTITION_BYTES.key, (fileSize - 1).toString) {
       assert(Spread.auto(table) eq table)
-      assert(Spread.auto(table, "k") eq table)
     }
   }
 
@@ -110,15 +95,5 @@ class SpreadSpec extends SparkSpec {
   test("rebalanceForWrite always rebalances a frame of unknown size") {
     val local = Seq((1L, 1L), (2L, 2L)).toDF("id", "k")
     assert(rebalanced(Spread.rebalanceForWrite(local)).isDefined)
-  }
-
-  test("autoBatch spreads a one-partition batch and keeps a wide one") {
-    val narrow = table.localCheckpoint()
-    assert(narrow.rdd.getNumPartitions === 1)
-    val spread = Spread.autoBatch(narrow)
-    assert(spread.rdd.getNumPartitions === 4)
-    assertSameRows(spread, narrow)
-    val wide = table.repartition(4).localCheckpoint()
-    assert(Spread.autoBatch(wide) eq wide)
   }
 }
