@@ -3,8 +3,9 @@ package graft.functions
 import scala.reflect.ClassTag
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{lit, typedLit}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
@@ -12,15 +13,18 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The loops behind the graft_* expressions, each written once. Both
   * evaluation paths of an expression call the same method: `nullSafeEval`
   * directly, and the generated code through the static forwarder that
   * scalac emits for a top-level object with no companion class (the way
   * Spark's own expressions call `DateTimeUtils`). A static call with
-  * primitive and `ArrayData` arguments is one the JIT can inline into the
-  * whole-stage loop, and there is no second copy of a kernel, as Java
-  * text, to keep in step with the first. */
+  * primitive, `ArrayData` and `UTF8String` arguments is one the JIT can
+  * inline into the whole-stage loop, and there is no second copy of a
+  * kernel, as Java text, to keep in step with the first. */
 object VectorKernels {
 
   /** The class name generated code calls the kernels by. */
@@ -158,6 +162,118 @@ object VectorKernels {
       c += 1
     }
     best
+  }
+
+  // The text kernels read a UTF-8 string's bytes in place. Their tokens
+  // are `split(t, ' ')`'s: the byte runs between single ' ' bytes, empty
+  // runs included, so a text with s spaces has s + 1 tokens. ' ' is one
+  // byte that no multibyte UTF-8 sequence contains.
+
+  private def checkWidth(n: Int): Unit =
+    if (n < 1) throw new IllegalArgumentException(s"gram width must be >= 1 (got $n)")
+
+  private def spaces(t: UTF8String): Int = {
+    val base = t.getBaseObject; val off = t.getBaseOffset; val len = t.numBytes
+    var s = 0
+    var i = 0
+    while (i < len) { if (Platform.getByte(base, off + i) == ' ') s += 1; i += 1 }
+    s
+  }
+
+  /** Token i is the bytes from `starts(i)` up to, not including,
+    * `starts(i + 1) - 1`; the last entry is the text's length plus one. */
+  private def tokenStarts(t: UTF8String): Array[Int] = {
+    val base = t.getBaseObject; val off = t.getBaseOffset; val len = t.numBytes
+    val starts = new Array[Int](spaces(t) + 2)
+    var k = 1
+    var i = 0
+    while (i < len) {
+      if (Platform.getByte(base, off + i) == ' ') { starts(k) = i + 1; k += 1 }
+      i += 1
+    }
+    starts(k) = len + 1
+    starts
+  }
+
+  /** The number of word n-grams, `max(tokens - n + 1, 1)`: a text with
+    * fewer than n tokens is one gram. At n = 1 it is `size(split(t, ' '))`. */
+  def gramCount(t: UTF8String, n: Int): Int = {
+    checkWidth(n)
+    math.max(spaces(t) + 2 - n, 1)
+  }
+
+  /** The number of tokens equal to a non-null element of `words`
+    * (`size(filter(split(t, ' '), w -> w IN words))`), in one byte pass. */
+  def stopwordCount(t: UTF8String, words: ArrayData): Int = {
+    val base = t.getBaseObject; val off = t.getBaseOffset; val len = t.numBytes
+    var n = 0
+    var s = 0
+    var i = 0
+    while (i <= len) {
+      if (i == len || Platform.getByte(base, off + i) == ' ') {
+        var j = 0
+        var hit = false
+        while (!hit && j < words.numElements()) {
+          if (!words.isNullAt(j)) {
+            val w = words.getUTF8String(j)
+            hit = w.numBytes == i - s && ByteArrayMethods.arrayEquals(
+              w.getBaseObject, w.getBaseOffset, base, off + s, i - s)
+          }
+          j += 1
+        }
+        if (hit) n += 1
+        s = i + 1
+      }
+      i += 1
+    }
+    n
+  }
+
+  /** A hash of the byte slice `len` bytes long at `off` in `base`. */
+  private[functions] trait SliceHash {
+    def apply(base: AnyRef, off: Long, len: Int): Long
+  }
+
+  private val xxh64: SliceHash = (base, off, len) => XXH64.hashUnsafeBytes(base, off, len, 42L)
+
+  /** The number of distinct word n-grams, `size(array_distinct(grams))`
+    * for the grams [[gramCount]] counts. */
+  def distinctGramCount(t: UTF8String, n: Int): Int = distinctGrams(t, n, xxh64)
+
+  /** Gram g is the byte slice from token g's start to token g+n-1's end
+    * (tokens are one byte apart, so the slice is their " "-join). The
+    * grams go into an open-addressing set of gram indices, probed by
+    * `hash`; equal hashes are confirmed by comparing the bytes, so a
+    * collision never changes the count. */
+  private[functions] def distinctGrams(t: UTF8String, n: Int, hash: SliceHash): Int = {
+    checkWidth(n)
+    val starts = tokenStarts(t)
+    val grams = math.max(starts.length - n, 1)
+    if (grams == 1) return 1
+    val base = t.getBaseObject; val off = t.getBaseOffset
+    val mask = Integer.highestOneBit(grams) * 4 - 1 // load factor below 1/2
+    val slots = new Array[Int](mask + 1) // gram index + 1; 0 is empty
+    val slotHashes = new Array[Long](mask + 1)
+    var distinct = 0
+    var g = 0
+    while (g < grams) {
+      val s = starts(g); val len = starts(g + n) - 1 - s
+      val h = hash(base, off + s, len)
+      var p = (h ^ (h >>> 32)).toInt & mask
+      var found = false
+      while (!found && slots(p) != 0) {
+        val o = slots(p) - 1
+        if (slotHashes(p) == h) {
+          val os = starts(o)
+          found = starts(o + n) - 1 - os == len &&
+            ByteArrayMethods.arrayEquals(base, off + os, base, off + s, len)
+        }
+        if (!found) p = (p + 1) & mask
+      }
+      if (!found) { slots(p) = g + 1; slotHashes(p) = h; distinct += 1 }
+      g += 1
+    }
+    distinct
   }
 }
 
@@ -391,7 +507,59 @@ case class NearestCellF(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Column-API and SQL surfaces for the vector expressions. */
+/** Codegen'd word n-gram count of a string column, n the right operand:
+  * `max(tokens - n + 1, 1)` over `split(t, ' ')`'s tokens, so n = 1 is the
+  * whitespace token count. Counts spaces; builds no token array. */
+case class GramCount(left: Expression, right: Expression)
+    extends KernelExpression {
+  override protected def argTypes = (StringType, IntegerType)
+  override protected def kernel = "gramCount"
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "graft_gram_count"
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.gramCount(a.asInstanceOf[UTF8String], b.asInstanceOf[Int])
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): GramCount = copy(left = newLeft, right = newRight)
+}
+
+/** Codegen'd DISTINCT word n-gram count, the same grams as [[GramCount]]:
+  * exactly `size(array_distinct(Dedup.wordGrams(t, n)))`, from one hash
+  * set of byte slices of the text, with no gram string built. */
+case class DistinctGramCount(left: Expression, right: Expression)
+    extends KernelExpression {
+  override protected def argTypes = (StringType, IntegerType)
+  override protected def kernel = "distinctGramCount"
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "graft_distinct_gram_count"
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.distinctGramCount(a.asInstanceOf[UTF8String], b.asInstanceOf[Int])
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): DistinctGramCount = copy(left = newLeft, right = newRight)
+}
+
+/** Codegen'd count of the whitespace tokens of a string column that are
+  * in a word list (right, `array<string>`, in practice a literal):
+  * exactly `size(filter(split(t, ' '), w -> w IN words))` without the
+  * interpreted lambda or the token array. */
+case class StopwordCount(left: Expression, right: Expression)
+    extends KernelExpression {
+  override protected def argTypes = (StringType, ArrayType(StringType))
+  override protected def kernel = "stopwordCount"
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "graft_stopword_count"
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.stopwordCount(a.asInstanceOf[UTF8String], b.asInstanceOf[ArrayData])
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): StopwordCount = copy(left = newLeft, right = newRight)
+}
+
+/** Column-API and SQL surfaces for the graft_* expressions. */
 object VectorFunctions {
 
   private def call(build: (Expression, Expression) => Expression,
@@ -434,6 +602,18 @@ object VectorFunctions {
   def nearestCellF(centroids: Column, vec: Column): Column =
     call(NearestCellF, centroids, vec)
 
+  /** Codegen'd word n-gram count (n = 1: whitespace token count). */
+  def gramCount(text: Column, n: Int): Column =
+    call(GramCount, text, lit(n))
+
+  /** Codegen'd distinct word n-gram count. */
+  def distinctGramCount(text: Column, n: Int): Column =
+    call(DistinctGramCount, text, lit(n))
+
+  /** Codegen'd count of the whitespace tokens that are in `words`. */
+  def stopwordCount(text: Column, words: Seq[String]): Column =
+    call(StopwordCount, text, typedLit(words))
+
   private def fn[E <: Expression](name: String, build: (Expression, Expression) => E)(
       implicit cls: ClassTag[E]): (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
     (new FunctionIdentifier(name), new ExpressionInfo(cls.runtimeClass.getName, name),
@@ -448,7 +628,10 @@ object VectorFunctions {
     fn("graft_intersect_sorted", SortedIntersect),
     fn("graft_nearest_cell", NearestCell),
     fn("graft_nearest_dist2", NearestDist2),
-    fn("graft_nearest_cell_f", NearestCellF))
+    fn("graft_nearest_cell_f", NearestCellF),
+    fn("graft_gram_count", GramCount),
+    fn("graft_distinct_gram_count", DistinctGramCount),
+    fn("graft_stopword_count", StopwordCount))
 
   /** Register the graft_* functions in a session's function registry so
     * SQL-string pipes can call them (the library-call path needs no

@@ -95,10 +95,12 @@ object Dedup {
   /** Raw word n-grams of a whitespace-tokenized text column: contiguous
     * n-token windows joined by a single space, duplicates KEPT (a doc
     * shorter than n tokens yields its whole token sequence as one gram).
-    * Single source of truth for the gram construction — [[wordShingles]]
-    * (distinct, decontamination) and `TextAnalysis.repetitionRatio`
-    * (duplicate-fraction) both derive from it, so short-doc and
-    * empty-token edge semantics cannot drift apart.
+    * The gram construction [[wordShingles]] (distinct, decontamination)
+    * derives from. `TextAnalysis.repetitionRatio` counts the same grams
+    * without building them (the `graft_gram_count` and
+    * `graft_distinct_gram_count` kernels); DedupSpec pins both to one
+    * plain-Scala reference, so short-doc and empty-token edge semantics
+    * cannot drift apart.
     *
     * Split-once contract: the text is split exactly once per row. A
     * derived Column referenced inside a higher-order-function lambda is

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.VectorFunctions
 
 /** Text-analysis operators for training-data curation: token counting,
   * language identification, and quality scoring. All are narrow per-row
@@ -14,11 +15,13 @@ object TextAnalysis {
     * corpus vocabulary; a real deployment plugs in per-language lists). */
   val stopwords: Seq[String] = Seq("the", "a")
 
-  private def stopwordList: String =
-    stopwords.map(w => s"'$w'").mkString("(", ", ", ")")
+  /** Whitespace token count, `size(split(text, " "))`, from the codegen'd
+    * gram-count kernel at n = 1. */
+  def wsTokenCount(text: Column): Column = VectorFunctions.gramCount(text, 1)
 
-  /** Whitespace token count. */
-  def wsTokenCount(text: Column): Column = size(split(text, " "))
+  /** How many whitespace tokens are [[stopwords]] (codegen'd kernel). */
+  def stopwordCount(text: Column): Column =
+    VectorFunctions.stopwordCount(text, stopwords)
 
   /** Regex token count (BPE-ish word-piece pattern). */
   def regexTokenCount(text: Column): Column =
@@ -27,8 +30,7 @@ object TextAnalysis {
   /** Fraction of whitespace tokens that are stopwords — an integer ratio,
     * so the value is bit-identical across engines. */
   def stopwordRatio(textCol: String): Column =
-    expr(s"size(filter(split($textCol, ' '), w -> w IN $stopwordList))") /
-      wsTokenCount(col(textCol)).cast("double")
+    stopwordCount(col(textCol)) / wsTokenCount(col(textCol)).cast("double")
 
   /** N-gram-heuristic language id: stopword-ratio thresholding (the corpus
     * vocabulary is shared across langs, so this is the mechanical shape of
@@ -170,12 +172,14 @@ object TextAnalysis {
     * the Gopher-style within-document repetition signal (high value ⇒
     * boilerplate/looping text). Floor-quantized to 4 dp on the binary
     * double so the score is bit-identical across engines. Narrow per-row
-    * expression — no shuffle; the grams are built once per row. */
-  def repetitionRatio(text: Column, n: Int = 2): Column =
-    // shared gram construction, bound once for both counts
-    Dedup.let(Dedup.wordGrams(text, n))(grams =>
-      floor((lit(1.0) - size(array_distinct(grams)) / size(grams).cast("double"))
-        * 10000 + 0.5) / 10000)
+    * expression — no shuffle; both counts are codegen'd kernels over the
+    * text's bytes (the grams of [[Dedup.wordGrams]], never built as
+    * strings). A null text is one null gram, which repeats nothing: 0.0. */
+  def repetitionRatio(text: Column, n: Int = 2): Column = {
+    val ratio = lit(1.0) - VectorFunctions.distinctGramCount(text, n) /
+      VectorFunctions.gramCount(text, n).cast("double")
+    coalesce(floor(ratio * 10000 + 0.5) / 10000, lit(0.0))
+  }
 
   /** Gopher-style rule filter (Rae et al. 2021, "Scaling Language Models:
     * Methods, Analysis & Insights from Training Gopher", Appendix A1.1):
@@ -195,8 +199,7 @@ object TextAnalysis {
       (acc, x) => acc + x).cast("double") / nw.cast("double")
     val alphaFrac = size(filter(ws, w => w.rlike("^[a-z]+$"))) /
       nw.cast("double")
-    val nStop = expr(
-      s"size(filter(split($textCol, ' '), w -> w IN $stopwordList))")
+    val nStop = stopwordCount(col(textCol))
     val pass = nw.between(minWords, maxWords) &&
       mwl.between(minMwl, maxMwl) && alphaFrac >= minAlphaFrac &&
       nStop >= minStopwords
@@ -343,8 +346,7 @@ object TextAnalysis {
     val nw = size(ws).cast("double")
     val mwl = aggregate(transform(ws, w => length(w)), lit(0),
       (acc, x) => acc + x).cast("double") / nw
-    val stop = expr(
-      s"size(filter(split($textCol, ' '), w -> w IN $stopwordList))") / nw
+    val stop = stopwordCount(col(textCol)) / nw
     val uniq = size(array_distinct(ws)).cast("double") / nw
     val z = lit(bias) + lit(wLnWc) * log(nw) + lit(wMwl) * mwl +
       lit(wStop) * stop + lit(wUniq) * uniq

@@ -46,7 +46,7 @@ class VectorExpressionsSpec extends SparkSpec {
   /** Every name in the one function table resolves, by name, to the
     * expression that carries it as its `prettyName`. */
   private def resolvesEveryFunction(session: SparkSession): Unit = {
-    assert(VectorFunctions.sqlFunctions.size == 7)
+    assert(VectorFunctions.sqlFunctions.size == 10)
     VectorFunctions.sqlFunctions.foreach { case (id, _, _) =>
       val e = session.sessionState.functionRegistry
         .lookupFunction(id, Seq(Literal(null), Literal(null)))
@@ -57,24 +57,26 @@ class VectorExpressionsSpec extends SparkSpec {
   test("every graft_* function runs as generated code that calls its kernel") {
     VectorFunctions.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("kernels").toString
-    Seq((Seq(1.0f, 2.0f), Seq("a", "b"), Seq(1L, 3L))).toDF("f", "s", "l")
+    Seq((Seq(1.0f, 2.0f), Seq("a", "b"), Seq(1L, 3L), "a b a b")).toDF("f", "s", "l", "t")
       .write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir).createOrReplaceTempView("kernel_args")
     val df = spark.sql("SELECT graft_dot(f, f), graft_intersect_size(s, s), " +
       "graft_intersect_size_sorted(l, l), graft_intersect_sorted(l, l), " +
       "graft_nearest_cell(array(l), l), graft_nearest_dist2(array(l), l), " +
-      "graft_nearest_cell_f(array(f), f) FROM kernel_args")
+      "graft_nearest_cell_f(array(f), f), graft_gram_count(t, 2), " +
+      "graft_distinct_gram_count(t, 2), graft_stopword_count(t, s) FROM kernel_args")
     // no fallback: generated code that does not compile fails the query
     val r = withConfs("spark.sql.codegen.fallback" -> "false",
         "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(df.collect().head)
     assert(r.getDouble(0) == 5.0 && r.getInt(1) == 2 && r.getInt(2) == 2)
     assert(r.getSeq[Long](3) == Seq(1L, 3L))
     assert(r.getInt(4) == 0 && r.getLong(5) == 0L && r.getInt(6) == 0)
+    assert(r.getInt(7) == 3 && r.getInt(8) == 2 && r.getInt(9) == 4)
     val code = org.apache.spark.sql.execution.debug
       .codegenString(df.queryExecution.executedPlan)
     val calls = s"${java.util.regex.Pattern.quote(VectorKernels.className)}\\.(\\w+)\\("
       .r.findAllMatchIn(code).map(_.group(1)).toSet
-    assert(calls.size == 7, calls)
+    assert(calls.size == 10, calls)
   }
 
   test("codegen and interpreted paths agree") {

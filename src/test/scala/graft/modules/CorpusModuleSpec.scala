@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.engine.RunLog
 import graft.functions.MinHashAgg
 import java.nio.file.Files
+import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
 
 class CorpusModuleSpec extends SparkSpec {
   import spark.implicits._
@@ -22,6 +23,16 @@ class CorpusModuleSpec extends SparkSpec {
     assert(kept.map(_.getAs[Long]("id")).toSeq == Seq(1L)) // dup 2 and junk 3 gone
     assert(out("kept").columns.contains("quality"))
     assert(out("deduped").count() == 2) // 1 (keeper of {1,2}) and 3
+  }
+
+  test("the kept frame's optimized plan has no higher-order function") {
+    // an interpreted lambda per row on the stream's trigger path would
+    // undo the codegen'd score kernels
+    val block = docs((1L, "the cat sat on the mat", "en", 22))
+    val plan = CorpusModule.graph().run(Map("docs" -> block))("kept")
+      .queryExecution.optimizedPlan
+    val hofs = plan.flatMap(_.expressions.flatMap(_.collect { case h: HigherOrderFunction => h }))
+    assert(hofs.isEmpty, hofs.map(_.prettyName))
   }
 
   test("module pipeline with benchmark: leaked docs dropped, PII scrubbed") {

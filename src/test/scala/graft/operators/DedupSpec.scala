@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.StringSplit
+import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction, StringSplit}
 import org.apache.spark.sql.catalyst.plans.logical.Generate
 import org.apache.spark.sql.functions._
 
@@ -159,16 +159,21 @@ class DedupSpec extends SparkSpec {
   // The gram and passage kernels split each text once per row: a split
   // referenced inside a transform lambda is re-evaluated per element,
   // which makes the kernel quadratic in document length.
-  private def splitCount(c: Column): Int =
-    Seq("a b c").toDF("t").select(c).queryExecution.analyzed
-      .flatMap(_.expressions).map(_.collect { case s: StringSplit => s }.size).sum
+  private def nodeCount(c: Column)(pf: PartialFunction[Expression, Expression]): Int =
+    Seq(("a b c", 5)).toDF("t", "n_chars").select(c).queryExecution.analyzed
+      .flatMap(_.expressions).map(_.collect(pf).size).sum
+  private def splitCount(c: Column): Int = nodeCount(c) { case s: StringSplit => s }
 
   test("gram and passage kernels split the text exactly once") {
     val t = col("t")
     assert(splitCount(Dedup.wordGrams(t, 2)) == 1)
     assert(splitCount(Dedup.wordShingles(t, 5)) == 1)
-    assert(splitCount(TextAnalysis.repetitionRatio(t, 2)) == 1)
     assert(splitCount(Dedup.passages(t, 8)) == 1)
+    // the scores count over the text's bytes: no split, no lambda
+    for (c <- Seq(TextAnalysis.repetitionRatio(t, 2), TextAnalysis.qualityScore("t", "n_chars"))) {
+      assert(splitCount(c) == 0)
+      assert(nodeCount(c) { case l: LambdaFunction => l } == 0)
+    }
   }
 
   // plain-Scala references; Spark's split(t, " ") is Java's split(" ", -1)
