@@ -100,9 +100,13 @@ object VectorKernels {
     * running sum is monotone, so a cell whose partial distance already
     * reaches the best seen stops mid-coordinate without affecting the
     * argmin). Ties keep the FIRST cell. Returns the distance if `dist`,
-    * else the cell index; an empty table gives -1 / Long.MaxValue. */
+    * else the cell index; an empty table raises the named error rather
+    * than return a -1 / Long.MaxValue sentinel into downstream grouping. */
   private def nearest(cents: ArrayData, v: ArrayData, dist: Boolean): Long = {
     val k = cents.numElements()
+    if (k == 0) throw new IllegalArgumentException(
+      s"${if (dist) "graft_nearest_dist2" else "graft_nearest_cell"}: " +
+        "empty centroid table (need at least 1 centroid)")
     var best = -1
     var bestD = Long.MaxValue
     var c = 0
@@ -127,42 +131,6 @@ object VectorKernels {
 
   def nearestDist2(cents: ArrayData, v: ArrayData): Long =
     nearest(cents, v, dist = true)
-
-  /** The float nearest-centroid scan, in [[NearestCellF]]'s widening
-    * discipline; an empty table raises the named error. */
-  def nearestCellF(cents: ArrayData, v: ArrayData): Int = {
-    val k = cents.numElements()
-    if (k == 0) throw new IllegalArgumentException(
-      "graft_nearest_cell_f: empty centroid table (need at least 1 centroid)")
-    val nv = v.numElements()
-    var n2 = 0.0
-    var j = 0
-    while (j < nv) {
-      val f = v.getFloat(j); n2 += (f * f).toDouble; j += 1
-    }
-    var best = -1
-    var bestD = Double.PositiveInfinity
-    var c = 0
-    while (c < k) {
-      val ct = cents.getArray(c)
-      val nc = ct.numElements()
-      var sc2 = 0.0
-      j = 0
-      while (j < nc) {
-        val f = ct.getFloat(j); sc2 += f.toDouble * f.toDouble; j += 1
-      }
-      var dot = 0.0
-      val nd = math.min(nc, nv)
-      j = 0
-      while (j < nd) {
-        dot += (v.getFloat(j) * ct.getFloat(j)).toDouble; j += 1
-      }
-      val d = (n2 + sc2) - dot * 2.0
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
-  }
 
   // The text kernels read a UTF-8 string's bytes in place. Their tokens
   // are `split(t, ' ')`'s: the byte runs between single ' ' bytes, empty
@@ -424,7 +392,8 @@ case class SortedIntersect(left: Expression, right: Expression)
   * Semantics (pinned bit-identical to the fold in KMeansSpec): distances
   * over min(dim) coordinates, ties keep the FIRST (smallest) cell id —
   * the convention the cross-engine oracle's `ORDER BY d2, cell` mirrors.
-  * Empty centroid table → -1 (the fold's convention). */
+  * An empty centroid table raises a named error, on both evaluation
+  * paths: a -1 sentinel would flow silently into downstream grouping. */
 case class NearestCell(left: Expression, right: Expression)
     extends KernelExpression {
   override protected def argTypes = (ArrayType(ArrayType(LongType)), ArrayType(LongType))
@@ -456,54 +425,6 @@ case class NearestDist2(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): NearestDist2 =
-    copy(left = newLeft, right = newRight)
-}
-
-/** The FLOAT twin of [[NearestCell]]: argmin of squared-L2 distance from
-  * an `array<float>` vector to each row of an `array<array<float>>`
-  * centroid table — the IVF coarse-quantizer assignment scan. This is
-  * what retires [[graft.operators.Ivf]]'s 256-cell cap: the old `cellOf`
-  * inlined ONE distance expression per centroid (`norm2 + Σc² − 2·dot`
-  * over literals), so codegen size grew linearly with k and production
-  * cell counts (k ~ √n, thousands) blew the JIT budget. Here the
-  * centroid table is a single array literal and the scan is one nested
-  * primitive loop, k-independent in code size — the same move
-  * [[NearestCell]] made for the integer k-means path.
-  *
-  * Semantics are pinned BIT-IDENTICAL to the old inlined form (IvfSpec
-  * ties test; the float-Lloyd digest pin survives unchanged), which
-  * means replicating its exact widening discipline per centroid c:
-  *
-  *   d(c) = (n2 + sc2) − dot·2   where
-  *   n2  = Σ (double)(vᵢ·vᵢ)     — FLOAT product, then widened
-  *                                 ([[DotProduct]] of v with itself),
-  *   sc2 = Σ (double)cᵢ·(double)cᵢ — DOUBLE product (the driver-side
-  *                                 literal Σc² of the old form),
-  *   dot = Σ (double)(vᵢ·cᵢ)     — float product, widened, over
-  *                                 min(|v|, |c|) coordinates.
-  *
-  * Ties keep the FIRST (smallest) cell id — exactly array_position(ds,
-  * array_min(ds)) on exactly-equal doubles. An EMPTY centroid table
-  * raises a named error: the pre-r14 behavior returned the -1 sentinel,
-  * which the Column-API wrapper guarded but SQL callers of
-  * graft_nearest_cell_f could silently propagate into downstream grouping
-  * (ADVICE r13).
-  * No partial-distance early exit: d accumulates as (sc2 − 2·dot),
-  * which is not monotone in the coordinate index (unlike the integer
-  * Σ(a−b)² form), so a sound exit does not exist in this widening
-  * discipline. */
-case class NearestCellF(left: Expression, right: Expression)
-    extends KernelExpression {
-  override protected def argTypes = (ArrayType(ArrayType(FloatType)), ArrayType(FloatType))
-  override protected def kernel = "nearestCellF"
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_nearest_cell_f"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.nearestCellF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): NearestCellF =
     copy(left = newLeft, right = newRight)
 }
 
@@ -597,11 +518,6 @@ object VectorFunctions {
   def nearestDist2(centroids: Column, vec: Column): Column =
     call(NearestDist2, centroids, vec)
 
-  /** Codegen'd FLOAT nearest-centroid index (IVF coarse assignment;
-    * k-independent code size — no cell-count cap). */
-  def nearestCellF(centroids: Column, vec: Column): Column =
-    call(NearestCellF, centroids, vec)
-
   /** Codegen'd word n-gram count (n = 1: whitespace token count). */
   def gramCount(text: Column, n: Int): Column =
     call(GramCount, text, lit(n))
@@ -628,7 +544,6 @@ object VectorFunctions {
     fn("graft_intersect_sorted", SortedIntersect),
     fn("graft_nearest_cell", NearestCell),
     fn("graft_nearest_dist2", NearestDist2),
-    fn("graft_nearest_cell_f", NearestCellF),
     fn("graft_gram_count", GramCount),
     fn("graft_distinct_gram_count", DistinctGramCount),
     fn("graft_stopword_count", StopwordCount))

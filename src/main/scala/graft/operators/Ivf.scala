@@ -4,110 +4,30 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 
-/** IVF (inverted-file) approximate nearest neighbour: k coarse centroids
-  * trained by Lloyd's iterations, then search probes only the `nprobe`
-  * closest cells.
+/** IVF (inverted-file) approximate nearest neighbour: each vector gets a
+  * coarse cell, and a search ranks only the vectors in the `nprobe` cells
+  * nearest the query. Two quantizers, both oracle-checked end to end:
   *
-  * Scale shape — the classic distributed k-means split: centroids are tiny
-  * driver-side state (k × dim floats, like every k-means implementation),
-  * embedded into the plan as literals each pass; cell assignment is then a
-  * NARROW argmin over the broadcast literals (codegen'd dot products, no
-  * crossJoin, no shuffle), and the only shuffle per iteration is the
-  * k-group mean aggregation. Search touches `nprobe`/k of the data — with
-  * the cell id as a partition column that is partition pruning at the scan.
+  *   - [[fixedCellOf]]/[[searchFixed]]: fixed axis-aligned cells, no
+  *     training (q_ann_ivf_fixed);
+  *   - [[searchKMeansTrained]]: cells trained by the integer-exact
+  *     [[KMeans.train]], assigned by the codegen'd [[KMeans.cellOf]]
+  *     (q_cosine_ivf).
+  *
+  * Scale shape: cell assignment is a NARROW codegen'd scan (no crossJoin,
+  * no shuffle), the probe set is bounded state next to the query vector,
+  * and a search touches `nprobe`/cells of the data — with the cell id as a
+  * partition column that is partition pruning at the scan. Top-k is a
+  * TakeOrdered.
   */
 object Ivf {
-
-  type Centroids = Array[(Int, Array[Float])]
-
-  /** Squared L2 distance from the embedding column to a literal centroid
-    * — the per-centroid term of the REFERENCE inlined form ([[cellOfInlined]]);
-    * kept so IvfSpec can pin the codegen'd scan value-identical to it. */
-  private[operators] def dist2Lit(embCol: String, c: Array[Float]): Column = {
-    val lit2 = typedlit(c)
-    VectorFunctions.norm2(col(embCol)) +
-      lit(c.map(x => x.toDouble * x).sum) -
-      VectorFunctions.dotProduct(col(embCol), lit2) * 2
-  }
-
-  /** Nearest-cell index as a column: argmin = position of the min distance
-    * (first occurrence on ties → the smaller cell id). Cell ids are the
-    * 0-based positions of `centroids`. One codegen'd primitive scan over a
-    * single array-of-arrays literal ([[graft.functions.NearestCellF]]), so
-    * code size is k-INDEPENDENT — production coarse quantizers want
-    * k ~ √n cells (thousands-plus), which the previous one-inlined-
-    * distance-expression-per-centroid form capped at 256 before blowing
-    * the JIT/codegen budget. Values are bit-identical to that form
-    * (NearestCellF replicates its widening discipline; IvfSpec ties
-    * test + the float-Lloyd digest pin). */
-  def cellOf(centroids: Centroids, embCol: String): Column = {
-    require(centroids.nonEmpty, "cellOf needs at least one centroid")
-    VectorFunctions.nearestCellF(
-      typedlit(centroids.map(_._2.toSeq).toSeq), col(embCol))
-  }
-
-  /** The pre-round-13 inlined reference form (one literal distance
-    * expression per centroid, argmin via array_position/array_min):
-    * semantically the spec's ground truth for [[cellOf]], retired from
-    * production because its codegen grows linearly with k. */
-  private[operators] def cellOfInlined(centroids: Centroids,
-      embCol: String): Column = {
-    val ds = array(centroids.map { case (_, c) => dist2Lit(embCol, c) }: _*)
-    (array_position(ds, array_min(ds)) - 1).cast("int")
-  }
-
-  /** Train k centroids with `iters` Lloyd iterations (init: first k vectors
-    * in id order). Deterministic (the per-coordinate double averages are
-    * merge-order-sensitive at the ulp level like any distributed float
-    * mean — IvfSpec's digest pin rounds to 1e-4 before hashing for
-    * exactly this reason).
-    *
-    * Update shape: ONE partial aggregate per round whose single
-    * array-typed buffer ([[graft.functions.VecSumAgg]]: [n, Σv(1..dim)])
-    * carries the whole per-cell sum — the shuffle is still k rows ×
-    * (dim+1) doubles, never the corpus, and unlike the retired
-    * per-coordinate `avg(element_at)` spelling the PLAN no longer fans
-    * out to dim aggregate expressions (analysis/codegen were linear in
-    * dim — the janino method-size risk at the 1k–4k regime this path
-    * targets, ADVICE r13). Ragged rows are rejected BY NAME inside the
-    * aggregate instead of surfacing as an avg-null NullPointerException.
-    * (The earlier `select(cellOf, posexplode)` history is documented at
-    * [[KMeans.train]]: n·dim exploded rows AND a per-exploded-row argmin.) */
-  def train(emb: DataFrame, idCol: String, embCol: String, k: Int,
-      iters: Int): Centroids = {
-    var centroids: Centroids = emb.orderBy(col(idCol)).limit(k)
-      .select(col(embCol)).collect()
-      .map(_.getSeq[Float](0).toArray).zipWithIndex.map(_.swap)
-    require(centroids.nonEmpty, s"train: need at least 1 vector")
-    val dim = centroids(0)._2.length
-    val vecSum = udaf(new graft.functions.VecSumAgg,
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Float]]())
-    (1 to iters).foreach { _ =>
-      val stats = emb
-        .select(cellOf(centroids, embCol).as("cell"), col(embCol))
-        .groupBy("cell")
-        .agg(vecSum(col(embCol)).as("sv"))
-        .collect()
-      // re-index 0..k'-1: a cell can go empty, and cellOf maps cells by
-      // position in this array
-      centroids = stats.sortBy(_.getInt(0)).zipWithIndex.map { case (r, i) =>
-        val sv = r.getSeq[Double](1)
-        require(sv.length == dim + 1,
-          s"train: ragged corpus — cell sum has dim ${sv.length - 1}, " +
-            s"centroids have dim $dim")
-        val n = sv(0)
-        (i, Array.tabulate(dim)(j => (sv(j + 1) / n).toFloat))
-      }
-    }
-    centroids
-  }
 
   /** Fixed axis-aligned coarse cells: cell j is the unit vector along
     * dimension j (j < cells), so assignment = argmax of the first `cells`
     * coordinates (nearest unit axis = largest coordinate; ties to the
     * smallest j). No training, fully deterministic, SQL-expressible —
-    * the oracle-checkable IVF variant. Narrow and codegen'd like
-    * [[cellOf]]; [[train]]/[[search]] remain the learned-centroid path. */
+    * the oracle-checkable IVF variant. Narrow and codegen'd;
+    * [[searchKMeansTrained]] is the trained-centroid path. */
   def fixedCellOf(embCol: String, cells: Int): Column = {
     val ds = array((0 until cells).map(j =>
       expr(s"element_at($embCol, ${j + 1})")): _*)
@@ -140,9 +60,8 @@ object Ivf {
       .limit(k)
   }
 
-  /** IVF search over INTEGER-KMEANS-trained coarse cells — the trained
-    * quantizer that is also cross-engine ORACLE-EXACT end to end (the
-    * reason this exists next to [[search]]'s float-Lloyd path): train =
+  /** IVF search over INTEGER-KMEANS-trained coarse cells — a trained
+    * quantizer that is cross-engine ORACLE-EXACT end to end: train =
     * [[KMeans.train]] (bit-exact integer Lloyd), assignment = the
     * codegen'd [[KMeans.cellOf]] argmin, probe selection = integer
     * distances from the QUANTIZED query vector to the k trained
@@ -150,7 +69,7 @@ object Ivf {
     * to the smaller cell — reproducible in SQL), candidate ranking =
     * exact float cosine, ordered (cos DESC, id).
     *
-    * Same physical shape as [[search]]: narrow codegen'd assignment, the
+    * Same physical shape as [[searchFixed]]: narrow codegen'd assignment, the
     * nprobe/k probe filter prunes the candidate scan (with `cell` as a
     * partition column that is partition pruning at the scan — the
     * [[graft.sources]] bucketed-embeddings pattern), top-k is a
@@ -177,32 +96,6 @@ object Ivf {
         round(VectorFunctions.dotProduct(col(embCol), qlit) /
           (sqrt(VectorFunctions.norm2(col(embCol))) *
             lit(math.sqrt(qv.map(x => x.toDouble * x).sum))), 4).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** Assign each row its nearest cell (narrow, shuffle-free). */
-  def assign(emb: DataFrame, centroids: Centroids, embCol: String): DataFrame =
-    emb.withColumn("cell", cellOf(centroids, embCol))
-
-  /** Top-k cosine within the `nprobe` cells nearest to the query vector.
-    * Probe selection is driver-side arithmetic on the tiny centroid set. */
-  def search(emb: DataFrame, centroids: Centroids, idCol: String,
-      embCol: String, queryId: Long, k: Int, nprobe: Int): DataFrame = {
-    val q = emb.filter(col(idCol) === queryId)
-      .select(col(embCol)).collect().head.getSeq[Float](0).toArray
-    val probed = centroids
-      .map { case (cell, c) =>
-        val d2 = c.zip(q).map { case (a, b) => val d = a.toDouble - b; d * d }.sum
-        (d2, cell)
-      }.sorted.take(nprobe).map(_._2).toSeq
-    val qv = typedlit(q)
-    assign(emb, centroids, embCol)
-      .filter(col("cell").isin(probed: _*) && col(idCol) =!= queryId)
-      .select(col(idCol),
-        round(VectorFunctions.dotProduct(col(embCol), qv) /
-          (sqrt(VectorFunctions.norm2(col(embCol))) *
-            lit(math.sqrt(q.map(x => x.toDouble * x).sum))), 4).as("cos"))
       .orderBy(col("cos").desc, col(idCol))
       .limit(k)
   }

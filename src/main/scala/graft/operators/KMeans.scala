@@ -4,10 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Integer-exact Lloyd's k-means (Lloyd 1982; the MacQueen'67 batch
-  * variant) over embedding columns — the cluster-analysis primitive next
-  * to [[Ivf]]'s float centroids, built so an ITERATIVE TRAINED algorithm
-  * can carry a bit-exact cross-engine oracle (the q_pagerank / q_bpe_train
-  * discipline):
+  * variant) over embedding columns — the cluster-analysis primitive, and
+  * [[Ivf.searchKMeansTrained]]'s coarse quantizer, built so an ITERATIVE
+  * TRAINED algorithm can carry a bit-exact cross-engine oracle (the
+  * q_pagerank / q_bpe_train discipline):
   *
   *   - vectors are quantized ONCE to integer grid points
   *     (`floor(x·scale + 0.5)` — half-up on the binary value, identical in
@@ -27,9 +27,9 @@ import org.apache.spark.sql.functions._
   * reference semantics); each round's update is ONE partial
   * aggregate whose shuffle carries k·dim (cell, coord) rows, never the
   * corpus; centroids are bounded driver state (k·dim longs), the same
-  * trained-artifact pattern as [[Ivf.train]]'s float centroids and
-  * TextAnalysis.bpeTrain's merge list. At 100 TB the per-round cost is one
-  * corpus scan + one k·dim-row shuffle — Lloyd's lower bound.
+  * trained-artifact pattern as TextAnalysis.bpeTrain's merge list. At
+  * 100 TB the per-round cost is one corpus scan + one k·dim-row shuffle
+  * — Lloyd's lower bound.
   */
 object KMeans {
 
@@ -105,9 +105,8 @@ object KMeans {
     array_min(array(centroids.map(c => dist2(qCol, c)): _*))
 
   /** Train k centroids with `iters` Lloyd rounds over `emb(idCol, embCol)`.
-    * Init = the first k vectors in `idCol` order (deterministic, the
-    * [[Ivf.train]] convention). Returns the trained integer centroids,
-    * cell id = array index. */
+    * Init = the first k vectors in `idCol` order (deterministic). Returns
+    * the trained integer centroids, cell id = array index. */
   def train(emb: DataFrame, idCol: String, embCol: String, k: Int,
       iters: Int, scale: Int = 1000): Array[Array[Long]] = {
     require(k >= 1 && iters >= 0, s"need k >= 1, iters >= 0 (got $k, $iters)")

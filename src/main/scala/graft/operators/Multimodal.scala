@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * audio (WAV/AIFF PCM via javax.sound.sampled), and video (MJPEG-in-AVI
   * via [[MjpegAvi]] + ImageIO — the one video format a bare JDK can
   * decode; other codecs, e.g. H.264, still need a native library the
-  * container lacks and fail as error rows naming the handler). The only
-  * remaining stub is `stubFeatures`, a stand-in for MODEL INFERENCE
-  * (embedding extraction), which is out of engine scope by design.
+  * container lacks and fail as error rows naming the handler). Model
+  * inference (embedding extraction) is out of engine scope by design:
+  * embeddings arrive as a column and join on through [[withEmbeddings]].
   *
   * Scale: payloads never shuffle unless the caller joins/groups; feature
   * extraction is a narrow map over whatever partitioning the source has
@@ -35,39 +35,7 @@ object Multimodal {
   final case class MediaRow(id: Long, modality: String, payload: Array[Byte],
       width: Int, height: Int)
 
-  final case class MediaFeatures(id: Long, modality: String, dim: Int,
-      features: Array[Float])
-
   final case class Frame(id: Long, frameNo: Int, bytes: Array[Byte])
-
-  // ---- STUB (model inference only) -----------------------------------
-  // Real deployment: run an embedding model over the DECODED media (the
-  // decode itself is real, below). Deterministic fake: a rolling hash of
-  // the bytes seeds each feature dimension.
-  private def stubFeatures(payload: Array[Byte], dim: Int): Array[Float] = {
-    var h = 1125899906842597L
-    val out = new Array[Float](dim)
-    var i = 0
-    while (i < payload.length) { h = 31 * h + payload(i); i += 1 }
-    var d = 0
-    while (d < dim) {
-      h = h * 6364136223846793005L + 1442695040888963407L
-      out(d) = ((h >>> 40).toInt % 1000) / 1000.0f
-      d += 1
-    }
-    out
-  }
-  // --------------------------------------------------------------------
-
-  /** Decode + feature-extract each media row (stubbed codec; real batch
-    * plumbing). Partition-preserving narrow transformation. */
-  def decodeFeatures(media: Dataset[MediaRow], dim: Int): Dataset[MediaFeatures] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      // per-partition init would open the codec once, here
-      rows.map(r => MediaFeatures(r.id, r.modality, dim, stubFeatures(r.payload, dim)))
-    }
-  }
 
   /** One decoded media row: dimensions + mean luma for images, sample
     * rate/frames/RMS level for audio; `ok=false` rows carry the reason a

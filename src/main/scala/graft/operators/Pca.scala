@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * mergeable per-partition outer-product fold ([[graft.functions.GramAgg]])
   * whose shuffle carries one (2 + dim + dim²)-long buffer per map task,
   * never a re-keyed corpus row — and the dim×dim matrix is bounded driver
-  * state (the Ivf/KMeans trained-artifact pattern), so the power rounds
+  * state (the KMeans trained-artifact pattern), so the power rounds
   * cost ZERO cluster work. 100 TB = one aggregation pass, full stop.
   * (`gramViaJoin = true` keeps the previous formulation — posexplode +
   * id self-join + dim²-cell aggregate — as the small-dim fallback; it

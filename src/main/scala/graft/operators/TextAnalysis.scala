@@ -299,7 +299,7 @@ object TextAnalysis {
     * re-segment the working corpus with it. Each round is ONE pair-count
     * aggregate (word-count shape) plus a narrow replace; the trained
     * state — the merge list itself — is a handful of driver-side rows,
-    * exactly like Ivf.train's centroids. 100 TB cost: `iters` sequential
+    * exactly like KMeans.train's centroids. 100 TB cost: `iters` sequential
     * scans, each at shuffle-of-pair-counts scale, state O(iters).
     * Returns one row per learned merge: (rank, x, y, c). */
   def bpeTrain(df: DataFrame, textCol: String, iters: Int): DataFrame = {

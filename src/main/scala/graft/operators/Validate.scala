@@ -166,27 +166,6 @@ object Validate {
       .drop("__plo", "__phi")
   }
 
-  /** [[winsorize]] with SKETCHED cutpoints — the 100 TB path the exact
-    * variant's Scaladoc promises: `approx_percentile` (Greenwald–Khanna
-    * family, mergeable, one partial-agg pass, no per-group sort) replaces
-    * the exact `percentile`. Cutpoints are actual data values whose rank
-    * is within ±n/accuracy of the target (the sketch's documented
-    * guarantee — q_winsorize_approx carries that bound as a machine-
-    * checked output column); the clip itself is identical. */
-  def winsorizeApprox(df: DataFrame, groupCol: String, valCol: String,
-      lo: Double, hi: Double, accuracy: Int = 10000): DataFrame = {
-    require(lo >= 0 && hi <= 1 && lo < hi, s"need 0 <= lo < hi <= 1 (got $lo, $hi)")
-    require(accuracy > 0, s"need positive accuracy (got $accuracy)")
-    val q = df.groupBy(groupCol)
-      .agg(percentile_approx(col(valCol), lit(lo), lit(accuracy)).as("__plo"),
-        percentile_approx(col(valCol), lit(hi), lit(accuracy)).as("__phi"))
-    df.join(broadcast(q), Seq(groupCol), "left")
-      .withColumn(valCol,
-        when(col(valCol).isNull || col("__plo").isNull, col(valCol))
-          .otherwise(greatest(least(col(valCol), col("__phi")), col("__plo"))))
-      .drop("__plo", "__phi")
-  }
-
   /** Jensen–Shannon divergence between the TOKEN distributions of slice
     * pairs — the symmetric, bounded ([0, ln 2]) drift measure completing
     * the family next to [[klDrift]] (asymmetric, unbounded) and the KS

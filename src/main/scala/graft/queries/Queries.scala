@@ -877,19 +877,17 @@ object Queries {
 
   /** IVF ANN with a TRAINED coarse quantizer, probing the 2 nearest of 8
     * cells ([[operators.Ivf.searchKMeansTrained]]). The quantizer is the
-    * integer-exact [[operators.KMeans]] Lloyd training, so unlike float
-    * Lloyd (which survives as Ivf.train/search, IvfSpec-pinned) the WHOLE
+    * integer-exact [[operators.KMeans]] Lloyd training, so the WHOLE
     * train→assign→probe→rank path is bit-reproducible in SQL and this row
-    * is oracle-checked end to end — train + probe was the last ANN path
-    * without a green correctness row (no-oracle in rounds ≤ 11). */
+    * is oracle-checked end to end. */
   private[queries] val qCosineIvf: Q = (s, sf) =>
     Ivf.searchKMeansTrained(t(s, sf, "embeddings"), "vec_id", "embedding",
       queryId = 0L, k = 10, cells = 8, nprobe = 2, iters = 2)
 
   /** IVF over FIXED axis-aligned cells (8 cells, probe 2): deterministic
-    * and SQL-expressible, so unlike the Lloyd-trained q_cosine_ivf this
-    * variant is oracle-checked end to end. Same physical shape: narrow
-    * argmax assignment, probe-pruned candidates, top-k cosine. */
+    * and SQL-expressible with no training step, so oracle-checked end to
+    * end like q_cosine_ivf. Same physical shape: narrow argmax
+    * assignment, probe-pruned candidates, top-k cosine. */
   private[queries] val qAnnIvfFixed: Q = (s, sf) =>
     Ivf.searchFixed(t(s, sf, "embeddings"), "vec_id", "embedding",
       queryId = 0L, k = 10, cells = 8, nprobe = 2)
@@ -5376,7 +5374,7 @@ object Queries {
     * pins all 64 trained coordinates per cell into the hash compare.
     * Scale: per round one narrow codegen'd assignment scan + one
     * k·dim-row shuffle; centroids are bounded driver state (k·dim
-    * longs, the [[operators.Ivf.train]] pattern). */
+    * longs). */
   private[queries] val qKmeans: Q = (s, sf) => {
     val emb = t(s, sf, "embeddings")
     val cent = KMeans.train(emb, "vec_id", "embedding", k = 4, iters = 3)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** The two runtime scan-reduction mechanisms that matter most at 100 TB —
   * dynamic partition pruning (skip whole partitions of the fact scan based
   * on the dim side's filter result) and runtime bloom-filter join pruning

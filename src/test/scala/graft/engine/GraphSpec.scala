@@ -130,7 +130,7 @@ class GraphSpec extends SparkSpec {
 
   test("incremental node run: RunLog watermark bounds each pass (dags consumption loop)") {
     import graft.operators.Incremental
-    import org.apache.spark.sql.functions.{col, lit, max}
+    import org.apache.spark.sql.functions.{lit, max}
     val dir = java.nio.file.Files.createTempDirectory("graftinc").toString
     val log = new RunLog(dir)
     val events = Seq((1L, 10), (2L, 20), (3L, 30)).toDF("id", "t")

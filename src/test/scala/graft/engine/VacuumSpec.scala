@@ -1,7 +1,6 @@
 package graft.engine
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 /** Block-store retention: orphans sweep, referenced blocks survive, time

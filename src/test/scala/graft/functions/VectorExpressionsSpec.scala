@@ -46,7 +46,7 @@ class VectorExpressionsSpec extends SparkSpec {
   /** Every name in the one function table resolves, by name, to the
     * expression that carries it as its `prettyName`. */
   private def resolvesEveryFunction(session: SparkSession): Unit = {
-    assert(VectorFunctions.sqlFunctions.size == 10)
+    assert(VectorFunctions.sqlFunctions.size == 9)
     VectorFunctions.sqlFunctions.foreach { case (id, _, _) =>
       val e = session.sessionState.functionRegistry
         .lookupFunction(id, Seq(Literal(null), Literal(null)))
@@ -63,20 +63,20 @@ class VectorExpressionsSpec extends SparkSpec {
     val df = spark.sql("SELECT graft_dot(f, f), graft_intersect_size(s, s), " +
       "graft_intersect_size_sorted(l, l), graft_intersect_sorted(l, l), " +
       "graft_nearest_cell(array(l), l), graft_nearest_dist2(array(l), l), " +
-      "graft_nearest_cell_f(array(f), f), graft_gram_count(t, 2), " +
-      "graft_distinct_gram_count(t, 2), graft_stopword_count(t, s) FROM kernel_args")
+      "graft_gram_count(t, 2), graft_distinct_gram_count(t, 2), " +
+      "graft_stopword_count(t, s) FROM kernel_args")
     // no fallback: generated code that does not compile fails the query
     val r = withConfs("spark.sql.codegen.fallback" -> "false",
         "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(df.collect().head)
     assert(r.getDouble(0) == 5.0 && r.getInt(1) == 2 && r.getInt(2) == 2)
     assert(r.getSeq[Long](3) == Seq(1L, 3L))
-    assert(r.getInt(4) == 0 && r.getLong(5) == 0L && r.getInt(6) == 0)
-    assert(r.getInt(7) == 3 && r.getInt(8) == 2 && r.getInt(9) == 4)
+    assert(r.getInt(4) == 0 && r.getLong(5) == 0L)
+    assert(r.getInt(6) == 3 && r.getInt(7) == 2 && r.getInt(8) == 4)
     val code = org.apache.spark.sql.execution.debug
       .codegenString(df.queryExecution.executedPlan)
     val calls = s"${java.util.regex.Pattern.quote(VectorKernels.className)}\\.(\\w+)\\("
       .r.findAllMatchIn(code).map(_.group(1)).toSet
-    assert(calls.size == 10, calls)
+    assert(calls.size == 9, calls)
   }
 
   test("codegen and interpreted paths agree") {
@@ -224,24 +224,36 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(n == 2)
   }
 
-  test("graft_nearest_cell_f raises BY NAME on an empty centroid table, " +
-      "codegen and interpreted (no silent -1 sentinel into grouping)") {
-    val df = Seq((1L, Array(1.0f, 2.0f))).toDF("id", "v")
-    val empty = typedlit(Seq.empty[Seq[Float]])
-    def run(): Unit =
-      df.select(VectorFunctions.nearestCellF(empty, col("v"))).collect()
-    val e1 = intercept[Exception] { run() }
-    assert(e1.getMessage != null &&
-      (e1.getMessage.contains("empty centroid") ||
-        Option(e1.getCause).exists(_.getMessage.contains("empty centroid"))),
-      s"codegen path: $e1")
-    withCodegenDisabled {
-      val e2 = intercept[Exception] { run() }
-      assert(e2.getMessage != null &&
-        (e2.getMessage.contains("empty centroid") ||
-          Option(e2.getCause).exists(_.getMessage.contains("empty centroid"))),
-        s"interpreted path: $e2")
+  test("graft_nearest_cell and graft_nearest_dist2 raise BY NAME on an " +
+      "empty centroid table, codegen and interpreted (no silent -1 sentinel " +
+      "into grouping)") {
+    VectorFunctions.register(spark)
+    // a file source, not a local relation: the projection is not folded on
+    // the driver, so the codegen run is real
+    val dir = java.nio.file.Files.createTempDirectory("empty_cents").toString
+    Seq((1L, Seq(1L, 2L))).toDF("id", "v").write.mode("overwrite").parquet(dir)
+    val df = spark.read.parquet(dir)
+    df.createOrReplaceTempView("empty_cents_args")
+    val empty = typedlit(Seq.empty[Seq[Long]])
+    def raisesByName(name: String)(run: => Any): Unit = {
+      val e = intercept[Exception] { run }
+      def msgs(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+      assert(msgs(e).exists(_.contains(s"$name: empty centroid table")), s"$name: $e")
     }
+    def runAll(): Unit = {
+      raisesByName("graft_nearest_cell")(
+        df.select(VectorFunctions.nearestCell(empty, col("v"))).collect())
+      raisesByName("graft_nearest_dist2")(
+        df.select(VectorFunctions.nearestDist2(empty, col("v"))).collect())
+      Seq("graft_nearest_cell", "graft_nearest_dist2").foreach { name =>
+        raisesByName(name)(spark.sql(s"SELECT $name(" +
+          "CAST(array() AS array<array<bigint>>), v) FROM empty_cents_args").collect())
+      }
+    }
+    withConfs("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(runAll())
+    withCodegenDisabled(runAll())
   }
 
   test("graft_intersect_sorted ≡ array_sort(array_intersect) on sorted input, " +

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.operators.Multimodal.{Frame, MediaFeatures, MediaRow}
+import graft.operators.Multimodal.MediaRow
 
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
@@ -11,20 +11,6 @@ class MultimodalSpec extends SparkSpec {
     MediaRow(2L, "image", Array.tabulate(64)(_.toByte), 8, 8),  // same payload
     MediaRow(3L, "video", Array.tabulate(400)(i => (i % 7).toByte), 20, 20)
   ).toDS().repartition(3)
-
-  test("decodeFeatures: fixed dim, deterministic from payload bytes") {
-    val f = Multimodal.decodeFeatures(media, dim = 16).collect()
-      .map(x => x.id -> x).toMap
-    assert(f.values.forall(_.features.length == 16))
-    assert(f(1L).features.toSeq == f(2L).features.toSeq) // same bytes -> same features
-    assert(f(1L).features.toSeq != f(3L).features.toSeq)
-    assert(f.values.forall(_.features.forall(v => v >= -1.0f && v <= 1.0f)))
-  }
-
-  test("decodeFeatures preserves partitioning (narrow, no shuffle)") {
-    val out = Multimodal.decodeFeatures(media, dim = 4)
-    assert(out.rdd.getNumPartitions == media.rdd.getNumPartitions)
-  }
 
   test("frameSample strides chunks and keeps ids") {
     val frames = Multimodal.frameSample(media.filter(_.modality == "video"),
@@ -234,7 +220,6 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("hammingNearDups: exact recall at ham ≤ 3, cut at 4, no cartesian") {
-    import org.apache.spark.sql.functions.col
     // base hash plus planted perturbations at growing Hamming distance
     val base = 0x0123456789abcdL // 60-bit, positive
     val hashes = Seq(

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Power-iteration dominant direction: alignment on planted data,
   * determinism, fixed-point contract, degenerate guard. */

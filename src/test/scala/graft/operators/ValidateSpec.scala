@@ -125,29 +125,6 @@ class ValidateSpec extends SparkSpec {
       == rows.columns.toSeq)
   }
 
-  test("winsorizeApprox clips to DATA-VALUED cutpoints within the " +
-      "sketch's rank guarantee") {
-    // approx_percentile returns actual data values (no interpolation):
-    // on 1..100 with accuracy 10000 (exact at this n) the cutpoints are
-    // rank-exact members of the data, so min/max after the clip are the
-    // order statistics at the target ranks
-    val rows = (1 to 100).map(i => ("g", i.toDouble)).toDF("grp", "value")
-    val w = Validate.winsorizeApprox(rows, "grp", "value", 0.05, 0.95)
-      .agg(org.apache.spark.sql.functions.min("value"),
-        org.apache.spark.sql.functions.max("value"),
-        org.apache.spark.sql.functions.count("value"))
-      .collect().head
-    val (lo, hi, n) = (w.getDouble(0), w.getDouble(1), w.getLong(2))
-    assert(n == 100L)
-    // a data value whose exact rank is within ±(n/accuracy + 1) of the
-    // target rank — at n=100 that is rank 5±1 and 95±1
-    assert(lo >= 4.0 && lo <= 6.0, lo)
-    assert(hi >= 94.0 && hi <= 96.0, hi)
-    // schema preserved, like the exact variant
-    assert(Validate.winsorizeApprox(rows, "grp", "value", 0.05, 0.95)
-      .columns.toSeq == rows.columns.toSeq)
-  }
-
   test("winsorize passes NULL groups and NULL values through untouched") {
     val rows = Seq[(Option[String], Option[Double])](
       (Some("g"), Some(1.0)), (Some("g"), Some(2.0)), (Some("g"), Some(100.0)),
