@@ -82,32 +82,41 @@ object Bench {
   def repsFor(name: String): Int =
     if (roamers(name)) benchReps.max(roamerReps) else benchReps
 
+  /** Every setting of [[buildSession]]'s session; the test session
+    * (`SparkSpec`) is built from the same list. */
+  def sessionConfs(cpus: String): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> cpus,
+    "spark.sql.extensions" -> "graft.functions.GraftExtensions",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.session.timeZone" -> "UTC",
+    // default codegen cache holds 100 generated classes — a 270-query
+    // suite evicts everything long before a query's alphabetical turn,
+    // so its timed window RE-COMPILES every fragment the warmup pass
+    // already built. Generated code depends on the plan, not the data,
+    // so with a big enough cache the warmup compile is reused at the
+    // timed SF (measured as a level AND a noise reduction, r7).
+    "spark.sql.codegen.cache.maxEntries" -> "10000",
+    // the codegen cache is keyed by class loader, and with isolation on
+    // every session clone (one per streaming query) gets its own artifact
+    // class loader, so each query recompiled every generated class; graft
+    // adds no artifacts, so every session shares the default loader
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    // shuffle-file deletion is ASYNC by default: the ContextCleaner
+    // drains removals triggered by one query's System.gc() DURING the
+    // next query's timed window. Blocking mode charges each query its
+    // own cleanup inside its own pre-GC window.
+    "spark.cleaner.referenceTracking.blocking.shuffle" -> "true",
+    // per-execution status (plan graphs, metrics) otherwise accumulates
+    // in the driver for the whole run — dead GC weight
+    "spark.sql.ui.retainedExecutions" -> "4",
+    "spark.ui.retainedJobs" -> "50",
+    "spark.ui.retainedStages" -> "50",
+    "spark.ui.retainedTasks" -> "500",
+  ) ++ graft.engine.LocalFs.sessionConfs
+
   def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // default codegen cache holds 100 generated classes — a 270-query
-      // suite evicts everything long before a query's alphabetical turn,
-      // so its timed window RE-COMPILES every fragment the warmup pass
-      // already built. Generated code depends on the plan, not the data,
-      // so with a big enough cache the warmup compile is reused at the
-      // timed SF (measured as a level AND a noise reduction, r7).
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // shuffle-file deletion is ASYNC by default: the ContextCleaner
-      // drains removals triggered by one query's System.gc() DURING the
-      // next query's timed window. Blocking mode charges each query its
-      // own cleanup inside its own pre-GC window.
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      // per-execution status (plan graphs, metrics) otherwise accumulates
-      // in the driver for the whole run — dead GC weight
-      .config("spark.sql.ui.retainedExecutions", "4")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "500")
-      .getOrCreate()
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config(sessionConfs(cpus).toMap).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

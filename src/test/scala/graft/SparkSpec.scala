@@ -3,13 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (getOrCreate — one JVM-wide). */
+/** Shared local session for all suites (getOrCreate — one JVM-wide), with
+  * the bench session's settings ([[Bench.sessionConfs]]) but for
+  * `GraftExtensions`: its optimizer rule rewrites `size(array_intersect)`,
+  * the built-in reference the kernel tests compare against, so the tests
+  * of the extension install it on a session of their own. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+    .config(Bench.sessionConfs("4").filterNot(_._1 == "spark.sql.extensions").toMap)
     .getOrCreate()
 
   def sf001 = "/root/testdata/sf0.001"

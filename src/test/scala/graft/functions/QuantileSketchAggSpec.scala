@@ -2,7 +2,7 @@ package graft.functions
 
 import scala.util.Random
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** The quantile compactor's load-bearing property is its SELF-ISSUED
   * certificate: for every value x, the sketch's weighted rank of x is
@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * input value and the midpoints between them (where ≤ and < differ).
   * q_quantile_rollup then pins the same bracket per week as oracled
   * literal-TRUE values. */
-class QuantileSketchAggSpec extends AnyFunSuite {
+class QuantileSketchAggSpec extends SparkSpec {
 
   private val cap = 32
 
@@ -160,9 +160,6 @@ class QuantileSketchAggSpec extends AnyFunSuite {
     // WRITTEN as parquet and every rollup re-aggregates the file — so the
     // struct must round-trip through storage (not just the state store)
     // and the re-aggregated certificate must still hold against raw data
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, udaf}
     val rnd = new Random(47)

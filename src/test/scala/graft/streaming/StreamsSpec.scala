@@ -537,6 +537,45 @@ class StreamsSpec extends SparkSpec {
       "the re-run replay must re-mark the block consumed")
   }
 
+  test("a second corpusIngest in one session starts no OS process, " +
+      "compiles no generated class and keeps the same rows") {
+    import graft.sources.Tables
+    import graft.modules.CorpusModule
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import scala.jdk.CollectionConverters._
+    val docs = Tables.table(spark, sf001, "documents")
+    val dir = java.nio.file.Files.createTempDirectory("graftrerun").toString
+    def ingest(tag: String) = Streams.corpusIngest(docs,
+      CorpusModule.graph(minQuality = 0.5, maxRepetition = 0.9),
+      s"$dir/src", s"$dir/$tag/kept", s"$dir/$tag/ckpt", s"$dir/$tag/log")
+    def rows(kept: org.apache.spark.sql.DataFrame) =
+      kept.collect().map(_.toString).sorted.toSeq
+    val first = rows(ingest("a")._1)
+    // each streaming query runs on its own clone of the session; the
+    // second must hit the codegen cache the first filled, and neither
+    // Hadoop permission nor link calls may fork chmod/readlink
+    // Spark's process-tree metrics fork `getconf PAGESIZE` once per JVM,
+    // on the first executor-metrics poll: take that fork before recording
+    Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    rec.start()
+    val (kept, n) = try ingest("b") finally rec.stop()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    val jfr = java.nio.file.Files.createTempFile("ingest", ".jfr")
+    rec.dump(jfr)
+    rec.close()
+    val started = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+      .filter(_.getEventType.getName == "jdk.ProcessStart")
+      .map(_.getString("command"))
+    java.nio.file.Files.delete(jfr)
+    assert(n === 2L)
+    assert(started.isEmpty, s"${started.size} processes: ${started.take(3)}")
+    assert(compiles === 0L)
+    assert(rows(kept) === first)
+  }
+
   test("corpusIngest with the near-dup ladder == per-parity module runs " +
       "(the non-commutative cell: only the ledger keeps replays exact)") {
     import graft.sources.Tables
