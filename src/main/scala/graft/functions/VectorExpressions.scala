@@ -5,7 +5,7 @@ import scala.reflect.ClassTag
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{lit, typedLit}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
@@ -242,6 +242,127 @@ object VectorKernels {
       g += 1
     }
     distinct
+  }
+
+  // The PII scrub replays, over bytes, what Java's leftmost-greedy
+  // matcher does for `TextAnalysis.emailRe` and then `phoneRe` (both
+  // ASCII-only classes, so a multibyte sequence is never part of a match).
+
+  private def isLower(b: Byte): Boolean = b >= 'a' && b <= 'z'
+  private def isDigit(b: Byte): Boolean = b >= '0' && b <= '9'
+  private def isDomain(b: Byte): Boolean = isLower(b) || isDigit(b) || b == '.' || b == '-'
+  private def isLocal(b: Byte): Boolean = isDomain(b) || b == '_' || b == '%' || b == '+'
+
+  private val emailTag = "<EMAIL>".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  private val phoneTag = "<PHONE>".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  /** The scrubbed copy of a text, written as the scan finds matches. */
+  private final class Redacted(t: UTF8String) {
+    // an email match is at least 6 bytes ("a@b.co") and its tag 7, a
+    // phone 12 and its tag 7: the output is at most len + len / 6 bytes
+    private val out = new Array[Byte](t.numBytes + t.numBytes / 6)
+    private var n = 0
+    private var done = 0 // the text before `done` is in `out`
+
+    private def copyTo(until: Int): Unit = {
+      Platform.copyMemory(t.getBaseObject, t.getBaseOffset + done, out,
+        Platform.BYTE_ARRAY_OFFSET + n, until - done)
+      n += until - done
+      done = until
+    }
+
+    /** Writes `tag` in place of the text from `from` up to `until`. */
+    def replace(from: Int, until: Int, tag: Array[Byte]): Unit = {
+      copyTo(from)
+      System.arraycopy(tag, 0, out, n, tag.length)
+      n += tag.length
+      done = until
+    }
+
+    def result: UTF8String = {
+      copyTo(t.numBytes)
+      UTF8String.fromBytes(out, 0, n)
+    }
+  }
+
+  /** The end of the email whose '@' is at `at`, or -1. The domain is the
+    * longest `[a-z0-9.-]` run after the '@', cut back to its last '.'
+    * that has a domain byte before it and two lowercase letters after it;
+    * the match then takes every lowercase letter after that '.'. */
+  private def emailEnd(base: AnyRef, off: Long, len: Int, at: Int): Int = {
+    def b(i: Int) = Platform.getByte(base, off + i)
+    var e = at + 1
+    while (e < len && isDomain(b(e))) e += 1
+    var k = e - 3
+    while (k >= at + 2 && !(b(k) == '.' && isLower(b(k + 1)) && isLower(b(k + 2)))) k -= 1
+    if (k < at + 2) -1
+    else {
+      var end = k + 3
+      while (end < len && isLower(b(end))) end += 1
+      end
+    }
+  }
+
+  /** Whether `\d{3}-\d{3}-\d{4}` matches at `i`. */
+  private def isPhone(base: AnyRef, off: Long, i: Int): Boolean = {
+    var j = 0
+    while (j < 12) {
+      val b = Platform.getByte(base, off + i + j)
+      if (!(if (j == 3 || j == 7) b == '-' else isDigit(b))) return false
+      j += 1
+    }
+    true
+  }
+
+  /** Redacts the phones between `from` and `until`; `r` is null until the
+    * first match of the text. */
+  private def phones(t: UTF8String, from: Int, until: Int, r: Redacted): Redacted = {
+    var out = r
+    var i = from
+    while (i + 12 <= until) {
+      if (isPhone(t.getBaseObject, t.getBaseOffset, i)) {
+        if (out == null) out = new Redacted(t)
+        out.replace(i, i + 12, phoneTag)
+        i += 12
+      } else i += 1
+    }
+    out
+  }
+
+  /** `regexp_replace(regexp_replace(t, emailRe, "<EMAIL>"), phoneRe,
+    * "<PHONE>")` in one pass. An email starts at the first local-part
+    * byte (`[a-z0-9._%+-]`) of the run that ends at its '@'; a failed
+    * '@' fails every start in that run. Neither tag holds a digit or
+    * '-', so the phone pass over the emails' output finds exactly the
+    * phones in the gaps between the emails. A text with nothing to
+    * redact comes back as it is. Like `regexp_replace`, which reads the
+    * text as a Java `String`, a text that is not valid UTF-8 is scrubbed
+    * as its decoding, each malformed sequence replaced by U+FFFD. */
+  def scrubPii(t: UTF8String): UTF8String = {
+    val base = t.getBaseObject; val off = t.getBaseOffset; val len = t.numBytes
+    var out: Redacted = null
+    var high = false // a byte outside ASCII: the text may not be valid UTF-8
+    var gap = 0      // where the text after the last email starts
+    var run = 0      // where the local-part run that reaches i starts
+    var i = 0
+    while (i < len) {
+      val b = Platform.getByte(base, off + i)
+      val end = if (b == '@' && run < i) emailEnd(base, off, len, i) else -1
+      if (end > 0) {
+        out = phones(t, gap, run, out)
+        if (out == null) out = new Redacted(t)
+        out.replace(run, end, emailTag)
+        gap = end; run = end; i = end
+      } else {
+        high |= b < 0
+        i += 1
+        if (!isLocal(b)) run = i
+      }
+    }
+    out = phones(t, gap, len, out)
+    if (high && !t.isValid) scrubPii(UTF8String.fromString(t.toString))
+    else if (out == null) t
+    else out.result
   }
 }
 
@@ -480,6 +601,30 @@ case class StopwordCount(left: Expression, right: Expression)
       newRight: Expression): StopwordCount = copy(left = newLeft, right = newRight)
 }
 
+/** Codegen'd PII scrub of a string column: exactly
+  * `regexp_replace(regexp_replace(t, emailRe, "<EMAIL>"), phoneRe,
+  * "<PHONE>")` for [[graft.operators.TextAnalysis]]'s two regexes, in one
+  * pass over the text's bytes ([[VectorKernels.scrubPii]]) that copies
+  * nothing when there is nothing to redact. */
+case class ScrubPii(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = StringType
+  override def prettyName: String = "graft_scrub_pii"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires (string), got (${child.dataType.simpleString})")
+
+  override def nullSafeEval(t: Any): Any =
+    VectorKernels.scrubPii(t.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, t => s"${VectorKernels.className}.scrubPii($t)")
+
+  override protected def withNewChildInternal(newChild: Expression): ScrubPii =
+    copy(child = newChild)
+}
+
 /** Column-API and SQL surfaces for the graft_* expressions. */
 object VectorFunctions {
 
@@ -530,10 +675,18 @@ object VectorFunctions {
   def stopwordCount(text: Column, words: Seq[String]): Column =
     call(StopwordCount, text, typedLit(words))
 
-  private def fn[E <: Expression](name: String, build: (Expression, Expression) => E)(
+  /** Codegen'd email and phone redaction (`TextAnalysis.scrubPii`). */
+  def scrubPii(text: Column): Column =
+    ColumnBridge.column(ScrubPii(ColumnBridge.expression(text)))
+
+  private def fn[E <: Expression](name: String, build: Seq[Expression] => E)(
       implicit cls: ClassTag[E]): (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
     (new FunctionIdentifier(name), new ExpressionInfo(cls.runtimeClass.getName, name),
-      (children: Seq[Expression]) => build(children(0), children(1)))
+      (children: Seq[Expression]) => build(children))
+
+  private def fn[E <: Expression](name: String, build: (Expression, Expression) => E)(
+      implicit cls: ClassTag[E]): (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    fn(name, (c: Seq[Expression]) => build(c(0), c(1)))
 
   /** Every graft_* SQL function, by name: [[GraftExtensions]] injects them
     * at session build and [[register]] installs them in a running session. */
@@ -546,7 +699,8 @@ object VectorFunctions {
     fn("graft_nearest_dist2", NearestDist2),
     fn("graft_gram_count", GramCount),
     fn("graft_distinct_gram_count", DistinctGramCount),
-    fn("graft_stopword_count", StopwordCount))
+    fn("graft_stopword_count", StopwordCount),
+    fn("graft_scrub_pii", (c: Seq[Expression]) => ScrubPii(c(0))))
 
   /** Register the graft_* functions in a session's function registry so
     * SQL-string pipes can call them (the library-call path needs no

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
@@ -122,6 +123,21 @@ object Streams {
         TimeMode.None(), OutputMode.Update())
   }
 
+  /** `batch` marked as the one partition it is, when the source read the
+    * micro-batch as a single partition: `coalesce(1)` plans as a
+    * `CoalesceExec` whose `SinglePartition` satisfies every clustered
+    * distribution, so a keyed window or aggregate over the batch plans no
+    * exchange, and the trigger runs one stage. foreachBatch hands over a
+    * `LogicalRDD` of the planned micro-batch, so this reads only the RDD's
+    * partitions, which planning computed; a micro-batch Spark split (a
+    * multi-split file, or a large block on several cores) is returned as
+    * it is and keeps its exchange. */
+  private def keepOnePartition(batch: DataFrame): DataFrame =
+    batch.queryExecution.analyzed match {
+      case r: LogicalRDD if r.rdd.getNumPartitions == 1 => batch.coalesce(1)
+      case _ => batch
+    }
+
   /** A COMPLETE declared streaming pipeline (readStream → foreachBatch →
     * materialized state), run to completion over a file-streamed copy of
     * the events table — the continuous-ingest shape a user deploys, not
@@ -161,7 +177,8 @@ object Streams {
         // replayed partial; overwriting batch=<id> makes the write
         // idempotent, and the Hive-style dir name lets the final read
         // discover `batch` as a partition column
-        batch.groupBy(col("event_type"), to_date(col("ts")).as("dy"))
+        keepOnePartition(batch)
+          .groupBy(col("event_type"), to_date(col("ts")).as("dy"))
           .agg(count(lit(1)).as("n"),
             sum(round(col("value") * 1000).cast("long")).as("mv"))
           .write.mode("overwrite").parquet(s"$deltaDir/batch=$batchId")
@@ -353,7 +370,7 @@ object Streams {
         // batchId is stable under replay — the ledger key that makes
         // the replayed batch a no-op
         graph.runIncremental(
-          Map("docs" -> Seq(s"batch$batchId" -> batch)), log,
+          Map("docs" -> Seq(s"batch$batchId" -> keepOnePartition(batch))), log,
           sink = out => {
             out("kept").write.mode("overwrite")
               .parquet(s"$keptDir/batch=$batchId")

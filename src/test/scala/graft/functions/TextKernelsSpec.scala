@@ -1,7 +1,9 @@
 package graft.functions
 
 import graft.SparkSpec
+import graft.ScaleBench
 import graft.operators.{Dedup, TextAnalysis}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -97,5 +99,107 @@ class TextKernelsSpec extends SparkSpec {
       intercept[IllegalArgumentException](
         VectorKernels.distinctGramCount(UTF8String.fromString("a b"), n))
     }
+  }
+
+  /** The scrub as the two regex passes the kernel replaces. */
+  private def regexScrub(t: Column): Column =
+    regexp_replace(regexp_replace(t, lit(TextAnalysis.emailRe), lit("<EMAIL>")),
+      lit(TextAnalysis.phoneRe), lit("<PHONE>"))
+
+  /** (rows where graft_scrub_pii and the regex chain differ, rows the
+    * scrub changed) over `df`'s column `t`, as generated code and then
+    * interpreted; `df` must read a file, so the projection is not folded
+    * on the driver. */
+  private def scrubDiffs(df: DataFrame): Seq[(Long, Long)] = {
+    val kernel = VectorFunctions.scrubPii(col("t"))
+    def run(): (Long, Long) = {
+      val r = df.agg(count(when(!(kernel <=> regexScrub(col("t"))), 1)),
+        count(when(kernel =!= col("t"), 1))).head
+      (r.getLong(0), r.getLong(1))
+    }
+    Seq(withConfs("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(run()), withCodegenDisabled(run()))
+  }
+
+  private def viaParquet(df: DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("scrub").toString
+    df.write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("graft_scrub_pii equals the emailRe-then-phoneRe regex chain on " +
+      "300k seeded random texts, codegen and interpreted") {
+    val rnd = new scala.util.Random(17)
+    val alphabet = "abcmoxyzAQZ0123456789@.-_%+ é"
+    val pieces = Seq("ab@cd.com", "x.y+z@sub-d.co.uk", "@", ".", "..", "-", "a@b.c",
+      "555-123-4567", "12-345-6789", "1234-567-8901", "-555-", "@x.", ".co", "é@é.com")
+    def piece(): String =
+      if (rnd.nextInt(3) == 0) pieces(rnd.nextInt(pieces.size))
+      else Seq.fill(1 + rnd.nextInt(6))(alphabet(rnd.nextInt(alphabet.length))).mkString
+    val texts = (0 until 300000).map(_ => Seq.fill(rnd.nextInt(7))(piece()).mkString)
+    val diffs = scrubDiffs(viaParquet(texts.toDF("t")))
+    assert(diffs.map(_._1) === Seq(0L, 0L))
+    assert(diffs(0)._2 == diffs(1)._2 && diffs(0)._2 > 10000, diffs)
+  }
+
+  test("graft_scrub_pii equals the regex chain on a corpus in the shape of " +
+      "the stream benchmark's, whose PII rows it changes") {
+    val id = col("id")
+    val k = xxhash64(lit(1L), id)
+    val body = array_join(transform(sequence(lit(0), lit(ScaleBench.tokensPerDoc - 1)),
+      j => ScaleBench.zipfToken(k, j)), " ")
+    val docs = spark.range(2800).select(when(pmod(id, lit(25)) === 3,
+      concat(lit("user"), id.cast("string"), lit("@example.com "), body, lit(" 555-"),
+        lpad(pmod(id, lit(1000)).cast("string"), 3, "0"), lit("-"),
+        lpad(pmod(k, lit(10000)).cast("string"), 4, "0"))).otherwise(body).as("t"))
+    assert(scrubDiffs(viaParquet(docs)) === Seq((0L, 112L), (0L, 112L)))
+  }
+
+  test("graft_scrub_pii edge cases: leftmost-greedy emails, phones in the " +
+      "gaps, null, and text that is not valid UTF-8") {
+    val cases = Seq(
+      "a@b.c" -> "a@b.c",
+      "a@b.co" -> "<EMAIL>",
+      "x@y@b.com" -> "x@<EMAIL>",
+      "a@b.com.x" -> "<EMAIL>.x",
+      "a@b.cd.ef" -> "<EMAIL>",
+      "a@b..cc" -> "<EMAIL>",
+      "a@b.co1x@c.de" -> "<EMAIL><EMAIL>",
+      "Mail Ann.Lee@x-y.org." -> "Mail Ann.L<EMAIL>.",
+      "1234-567-89012" -> "1<PHONE>2",
+      "555-123-4567-890-123-4567" -> "<PHONE>-<PHONE>",
+      "555-123-4567@b.com" -> "<EMAIL>",
+      "555-12é3-4567 x" -> "555-12é3-4567 x",
+      "" -> "")
+    val df = viaParquet((cases.map(c => Option(c._1)) :+ None).toDF("t"))
+    val got = df.select(col("t"), VectorFunctions.scrubPii(col("t")),
+      regexScrub(col("t"))).collect().map(r => Option(r.getString(0)) ->
+        (Option(r.getString(1)), Option(r.getString(2)))).toMap
+    cases.foreach { case (in, want) =>
+      assert(got(Some(in)) === (Some(want), Some(want)), in)
+    }
+    assert(got(None) === (None, None))
+    // a text with nothing to redact is the input itself, not a copy
+    val plain = UTF8String.fromString("no pii here 555-12")
+    assert(VectorKernels.scrubPii(plain) eq plain)
+
+    // Not valid UTF-8: regexp_replace decodes the text to a Java String,
+    // which puts U+FFFD in place of each malformed sequence, and the
+    // kernel does the same, whether or not anything is redacted
+    val bad = Seq(Array[Byte](0xC3.toByte, '(', 'a', '@', 'b', '.', 'c', 'o'),
+      Array[Byte]('x', 0xFF.toByte, 'y'),
+      Array[Byte](0xED.toByte, 0xA0.toByte, 0x80.toByte, '5', '5', '5', '-', '1', '2', '3',
+        '-', '4', '5', '6', '7'))
+    val surrogate = new String(bad(2).take(3), java.nio.charset.StandardCharsets.UTF_8)
+    assert(surrogate.nonEmpty && surrogate.forall(_ == '\uFFFD'))
+    assert(bad.map(b => VectorKernels.scrubPii(UTF8String.fromBytes(b))) === Seq(
+      "\uFFFD(<EMAIL>", "x\uFFFDy", s"$surrogate<PHONE>").map(UTF8String.fromString))
+    val rnd = new scala.util.Random(29)
+    val bytes = Array(0x80, 0xA9, 0xBF, 0xC0, 0xC3, 0xE2, 0xED, 0xF0, 0xF4, 0xFF, 0xA0, 0x90)
+      .map(_.toByte) ++ "a.b@-5-1 ".getBytes("UTF-8")
+    val blobs = bad ++ (0 until 20000).map(_ =>
+      Array.fill(rnd.nextInt(24))(bytes(rnd.nextInt(bytes.length))))
+    val diffs = scrubDiffs(viaParquet(blobs.toDF("b")).select(col("b").cast("string").as("t")))
+    assert(diffs.map(_._1) === Seq(0L, 0L))
   }
 }

@@ -46,7 +46,7 @@ class VectorExpressionsSpec extends SparkSpec {
   /** Every name in the one function table resolves, by name, to the
     * expression that carries it as its `prettyName`. */
   private def resolvesEveryFunction(session: SparkSession): Unit = {
-    assert(VectorFunctions.sqlFunctions.size == 9)
+    assert(VectorFunctions.sqlFunctions.size == 10)
     VectorFunctions.sqlFunctions.foreach { case (id, _, _) =>
       val e = session.sessionState.functionRegistry
         .lookupFunction(id, Seq(Literal(null), Literal(null)))
@@ -64,7 +64,7 @@ class VectorExpressionsSpec extends SparkSpec {
       "graft_intersect_size_sorted(l, l), graft_intersect_sorted(l, l), " +
       "graft_nearest_cell(array(l), l), graft_nearest_dist2(array(l), l), " +
       "graft_gram_count(t, 2), graft_distinct_gram_count(t, 2), " +
-      "graft_stopword_count(t, s) FROM kernel_args")
+      "graft_stopword_count(t, s), graft_scrub_pii(t) FROM kernel_args")
     // no fallback: generated code that does not compile fails the query
     val r = withConfs("spark.sql.codegen.fallback" -> "false",
         "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(df.collect().head)
@@ -72,11 +72,12 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(r.getSeq[Long](3) == Seq(1L, 3L))
     assert(r.getInt(4) == 0 && r.getLong(5) == 0L)
     assert(r.getInt(6) == 3 && r.getInt(7) == 2 && r.getInt(8) == 4)
+    assert(r.getString(9) == "a b a b")
     val code = org.apache.spark.sql.execution.debug
       .codegenString(df.queryExecution.executedPlan)
     val calls = s"${java.util.regex.Pattern.quote(VectorKernels.className)}\\.(\\w+)\\("
       .r.findAllMatchIn(code).map(_.group(1)).toSet
-    assert(calls.size == 9, calls)
+    assert(calls.size == 10, calls)
   }
 
   test("codegen and interpreted paths agree") {

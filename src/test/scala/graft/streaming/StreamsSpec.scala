@@ -557,6 +557,14 @@ class StreamsSpec extends SparkSpec {
     // Spark's process-tree metrics fork `getconf PAGESIZE` once per JVM,
     // on the first executor-metrics poll: take that fork before recording
     Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
+    // Spark's ArtifactManager cleaner forks `rm -rf` of a session clone's
+    // artifact directory when the JVM collects the clone, so the clones
+    // that earlier streaming queries left behind fork at whatever GC
+    // comes next: collect them, and let their cleaner run, before
+    // recording. The full GC also moves the clones still held (by AQE
+    // pool threads) to the old generation, out of a young GC's reach.
+    System.gc()
+    Thread.sleep(1000)
     val rec = new jdk.jfr.Recording()
     rec.enable("jdk.ProcessStart")
     val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -574,6 +582,91 @@ class StreamsSpec extends SparkSpec {
     assert(started.isEmpty, s"${started.size} processes: ${started.take(3)}")
     assert(compiles === 0L)
     assert(rows(kept) === first)
+  }
+
+  /** Streams the sf0.001 documents through `corpusIngest` in two blocks;
+    * returns the kept rows, the Spark jobs each trigger ran (by batch id),
+    * and, per block, whether the plan of its kept write held a shuffle
+    * exchange. A marker job after the run fences the listener events. */
+  private def tracedIngest(dir: String): (Seq[String], Seq[Int], Seq[Boolean]) = {
+    import graft.sources.Tables
+    import graft.modules.CorpusModule
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    val marker = "graft.streamsspec.marker"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
+    val exchanges = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        if (p.exists(_.getProperty(marker) != null)) done.countDown()
+        p.flatMap(x => Option(x.getProperty("streaming.sql.batchId")))
+          .foreach(b => jobs.merge(b.toLong, 1, _ + _))
+      }
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        Plans.collect(qe.executedPlan) { case w: DataWritingCommandExec => w }.foreach { w =>
+          w.cmd match {
+            case i: InsertIntoHadoopFsRelationCommand
+                if i.outputPath.toString.contains(s"$dir/kept/") =>
+              exchanges.put(i.outputPath.getName,
+                Plans.find(w.child)(_.isInstanceOf[ShuffleExchangeExec]).isDefined)
+            case _ =>
+          }
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val docs = Tables.table(spark, sf001, "documents")
+    val sc = spark.sparkContext
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    val kept = try {
+      val (kept, n) = Streams.corpusIngest(docs, CorpusModule.graph(),
+        s"$dir/src", s"$dir/kept", s"$dir/ckpt", s"$dir/log")
+      assert(n === 2L)
+      sc.setLocalProperty(marker, "end")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS), "marker never arrived")
+      kept.collect().map(_.toString).sorted.toSeq
+    } finally {
+      spark.listenerManager.unregister(planListener)
+      sc.removeSparkListener(jobListener)
+    }
+    import scala.jdk.CollectionConverters._
+    (kept, jobs.asScala.toSeq.sortBy(_._1).map(_._2),
+      exchanges.asScala.toSeq.sortBy(_._1).map(_._2))
+  }
+
+  test("a one-partition micro-batch runs one job per trigger: its kept " +
+      "write plans no exchange and keeps the rows of a split micro-batch") {
+    import graft.modules.CorpusModule
+    val dir = java.nio.file.Files.createTempDirectory("graftonepart").toString
+    val (kept, jobs, exchanges) = tracedIngest(s"$dir/one")
+    assert(jobs === Seq(1, 1))
+    assert(exchanges === Seq(false, false))
+    // a block read as several splits is not marked: the dedupe window
+    // keeps its exchange (and its second stage)
+    val (keptSplit, jobsSplit, exchangesSplit) =
+      withConfs("spark.sql.files.maxPartitionBytes" -> "4096",
+        "spark.sql.files.openCostInBytes" -> "0")(tracedIngest(s"$dir/split"))
+    assert(exchangesSplit === Seq(true, true))
+    assert(jobsSplit.size == 2 && jobsSplit.forall(_ >= 2), jobsSplit)
+    assert(keptSplit === kept)
+    val docs = graft.sources.Tables.table(spark, sf001, "documents")
+    val want = (0 to 1).flatMap { par =>
+      CorpusModule.graph().run(Map("docs" -> docs.filter(col("doc_id") % 2 === par)))("kept")
+        .select("id").as[Long].collect()
+    }.sorted
+    assert(spark.read.parquet(s"$dir/one/kept").select("id").as[Long].collect()
+      .sorted.toSeq === want)
   }
 
   test("corpusIngest with the near-dup ladder == per-parity module runs " +
